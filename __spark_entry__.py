@@ -89,12 +89,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def q_convert_html(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E1 via the real pipeline UDF: deterministic HTML wrapping of documents
-    rows, extracted back out; oracle reconstructs the expected text."""
-    from article_extraction_spark.extract.udfs import to_text_udf
+    """E1 via the real pipeline extraction stage: deterministic HTML
+    wrapping of documents rows, extracted back out; oracle reconstructs the
+    expected text."""
+    from article_extraction_spark.extract.udfs import extract_stage
 
-    # r8: fan the single-split scan out — the Arrow extraction UDF otherwise
-    # runs in the scan's one task (see _spread)
+    # r8: fan the single-split scan out — the Arrow extraction stage
+    # otherwise runs in the scan's one task (see _spread)
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text", "lang"))
     payload = F.concat(
         F.lit("<header>nav</header><p>"),
@@ -103,9 +104,9 @@ def q_convert_html(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang"),
         F.lit("</p><footer>x</footer>"),
     )
-    res = docs.select(
-        "doc_id", to_text_udf(F.lit("html"), payload).alias("_r")
-    ).select("doc_id", F.col("_r.extracted_text").alias("extracted_text"))
+    res = extract_stage(
+        docs.select("doc_id", F.lit("html").alias("doc_kind"), payload.alias("text"))
+    ).select("doc_id", "extracted_text")
     return res.where(F.length("extracted_text") > 0)
 
 

@@ -1,7 +1,7 @@
 """Scalar extraction kernels (E1-E4) — the convert_to_txt semantics.
 
-These are the batch-local, genuinely-custom kernels that run inside
-pandas/Arrow UDFs (see udfs.py). Semantics match the reference's
+These are the batch-local, genuinely-custom kernels that run inside the
+Arrow extraction stage (see udfs.py). Semantics match the reference's
 ``convert_to_txt`` stage byte-for-byte (reference
 tables/paper_text_table.py:43-105):
 

@@ -24,8 +24,8 @@ writer's shape), FlateDecode or plain streams, latin-1/escape strings.
 PyMuPDF remains the full-fidelity backend when installable; this makes the
 LAYOUT math real and testable without it.
 
-Spark-side: ``pdf_layout_extract_fn`` is the per-payload kernel used by an
-Arrow-batched UDF — same binary transport/batching as extract.udfs.
+Spark-side: ``pdf_layout_extract_fn`` is the per-payload pdf kernel of
+``extract.udfs.extract_stage(pdf_mode="layout")``.
 """
 
 from __future__ import annotations
@@ -261,8 +261,9 @@ def extract_pdf_layout(data: bytes) -> str:
 
 
 def pdf_layout_extract_fn(payload) -> str | None:
-    """Per-payload kernel for the Arrow-batched UDF: base64 or raw bytes in,
-    layout text out; None for undecodable payloads (dropped upstream).
+    """Per-payload kernel of the extraction stage's layout mode: base64 or
+    raw bytes in, layout text out; None for undecodable payloads (the stage
+    turns it into an extract_error).
 
     Decoding mirrors core.to_text's pdf branch EXACTLY (JVBERi0-prefix →
     lenient b64decode): a validate=True decode rejected line-wrapped base64

@@ -125,22 +125,24 @@ _READABILITY_TYPE = T.StructType(
 )
 
 
+def readability_row(doc: str | None) -> tuple[str, int, float, float]:
+    """(main_text, n_blocks, max_block_score, link_density) of one page."""
+    if not doc:
+        return "", 0, 0.0, 0.0
+    blocks = score_blocks(doc)
+    total = sum(b["chars"] for b in blocks) or 1
+    links = sum(b["link_density"] * b["chars"] for b in blocks)
+    return (
+        readability_main_text(doc),
+        len(blocks),
+        max((b["score"] for b in blocks), default=0.0),
+        links / total,
+    )
+
+
 @F.pandas_udf(_READABILITY_TYPE)
 def readability_udf(html: pd.Series) -> pd.DataFrame:
-    rows = []
-    for doc in html:
-        if not doc:
-            rows.append(("", 0, 0.0, 0.0))
-            continue
-        blocks = score_blocks(doc)
-        total = sum(b["chars"] for b in blocks) or 1
-        links = sum(b["link_density"] * b["chars"] for b in blocks)
-        rows.append(
-            (
-                readability_main_text(doc),
-                len(blocks),
-                max((b["score"] for b in blocks), default=0.0),
-                links / total,
-            )
-        )
-    return pd.DataFrame(rows, columns=["main_text", "n_blocks", "max_block_score", "link_density"])
+    return pd.DataFrame(
+        [readability_row(doc) for doc in html],
+        columns=["main_text", "n_blocks", "max_block_score", "link_density"],
+    )

@@ -1,71 +1,45 @@
 """Vectorized (Arrow-batched) Spark surface of the extraction kernels.
 
-Per BASELINE.json ``input_hint``: pandas/Arrow UDFs only, no per-row Python
-UDFs. Classification stays entirely JVM-side (native column expressions);
-only the genuinely-custom kernels (HTML state machine, PDF parse,
-utf-8-ignore decode) cross into Python, and they do so one Arrow batch at a
-time through a single struct-returning pandas UDF (one Arrow pass for text +
-spans, E4's single-dispatch shape).
+Per BASELINE.json ``input_hint``: Arrow-batched Python only, no per-row
+Python UDFs. Classification stays entirely JVM-side (native column
+expressions); only the genuinely-custom kernels (HTML state machine, PDF
+parse, utf-8-ignore decode, readability scoring) cross into Python, and they
+do so through ONE stage, ``extract_stage``: a single ``mapInArrow`` that the
+batch pipeline, the streaming pipeline, the corpus job and the driver
+queries all share.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .core import SNIFF_PREFIX, to_text
+from .pdf_layout import pdf_layout_extract_fn
 
-_EXTRACT_RESULT_TYPE = T.StructType(
-    [
-        T.StructField("extracted_text", T.StringType(), True),
-        T.StructField(
-            "spans",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("start", T.IntegerType(), False),
-                        T.StructField("end", T.IntegerType(), False),
-                    ]
-                )
-            ),
-            True,
+_EXTRACT_FIELDS = [
+    T.StructField("extracted_text", T.StringType(), True),
+    T.StructField(
+        "spans",
+        T.ArrayType(
+            T.StructType(
+                [
+                    T.StructField("start", T.IntegerType(), False),
+                    T.StructField("end", T.IntegerType(), False),
+                ]
+            )
         ),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-
-@F.pandas_udf(_EXTRACT_RESULT_TYPE)
-def _to_text_udf_impl(doc_kind: pd.Series, payload: pd.Series) -> pd.DataFrame:
-    """E1-E4 in one Arrow pass: (kind, payload) → (text, spans, error).
-
-    Conversion failures don't fail the task: the row carries the error and
-    is dropped downstream while lineage counts it (the reference logs and
-    continues, tables/paper_text_table.py:150-152)."""
-    texts: list[str] = []
-    spans: list[list[dict[str, int]]] = []
-    errors: list[str | None] = []
-    for kind, data in zip(doc_kind, payload):
-        err = None
-        try:
-            text, sp = to_text(kind, data)
-        except Exception as exc:  # noqa: BLE001
-            text, sp, err = "", [], f"{type(exc).__name__}: {exc}"[:500]
-        texts.append(text)
-        spans.append([{"start": s, "end": e} for s, e in sp])
-        errors.append(err)
-    return pd.DataFrame({"extracted_text": texts, "spans": spans, "error": errors})
-
-
-# The extraction IS deterministic; the marking only disables filter pushdown
-# THROUGH the UDF projection. Without it, a downstream drop-empty filter is
-# pushed below the salted shuffle and Catalyst evaluates the UDF TWICE per
-# row (once pre-shuffle for the filter, once post-shuffle for the project) —
-# observed in the physical plan as two ArrowEvalPython nodes and 2× the
-# extraction cost at bench scale.
-to_text_udf = _to_text_udf_impl.asNondeterministic()
+        True,
+    ),
+    T.StructField("extract_error", T.StringType(), True),
+]
+_READABILITY_FIELDS = [
+    T.StructField("readability_text", T.StringType(), True),
+    T.StructField("link_density", T.DoubleType(), True),
+]
 
 
 def classify_payload_col(text: Column) -> Column:
@@ -100,45 +74,41 @@ def classify_payload_col(text: Column) -> Column:
     )
 
 
-# -- Arrow-native extraction stage (r8) --------------------------------------
-# The pandas-UDF path pays twice per batch: Series iteration on input and a
+# -- the extraction stage -----------------------------------------------------
+# mapInArrow consumes the record batch directly and assembles the spans column
+# from flat int arrays (one ListArray/StructArray build per batch). A pandas
+# UDF pays twice per batch instead: Series iteration on input and a
 # python-dict-per-span list on output that pandas→Arrow converts object by
-# object (measured +17 µs/row on a 22 µs/row kernel). The mapInArrow twin
-# consumes the record batch directly and assembles the spans column from flat
-# int arrays (one ListArray/StructArray build per batch, no per-span dicts).
-# Semantics are IDENTICAL: same to_text kernel, same error capture.
-
-_EXTRACT_BATCH_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), True),
-        T.StructField("turn_idx", T.IntegerType(), True),
-        T.StructField("doc_kind", T.StringType(), True),
-        T.StructField("n_source_bytes", T.LongType(), True),
-        T.StructField("extracted_text", T.StringType(), True),
-        T.StructField(
-            "spans",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("start", T.IntegerType(), False),
-                        T.StructField("end", T.IntegerType(), False),
-                    ]
-                )
-            ),
-            True,
-        ),
-        T.StructField("extract_error", T.StringType(), True),
-    ]
-)
+# object (round 8, 32-core host: +17 µs/row on a 22 µs/row kernel).
 
 
-def extract_map_in_arrow(batches):
-    """mapInArrow stage: (conv_id, turn_idx, doc_kind, n_source_bytes, text)
-    → (conv_id, turn_idx, doc_kind, n_source_bytes, extracted_text, spans,
-    extract_error). Keyed columns pass through untouched; only text is
-    consumed. Use with ``_EXTRACT_BATCH_SCHEMA``."""
+def _layout_to_text(kind: str | None, data):
+    """pdf_mode="layout": pdf payloads go through the positioned-run parser
+    (extract/pdf_layout.py — column detection, reading order, header/footer
+    removal; spans not applicable for binary sources); every other kind is
+    the simple path."""
+    if kind != "pdf":
+        return to_text(kind, data)
+    text = pdf_layout_extract_fn(data)
+    if text is None:
+        raise ValueError("undecodable PDF payload")
+    return text, []
+
+
+def extract_map_in_arrow(batches, pdf_mode: str = "simple", with_readability: bool = False):
+    """The mapInArrow body of ``extract_stage``. Consumes ``doc_kind`` and
+    ``text``; every other column passes through untouched, followed by
+    extracted_text, spans, extract_error (and readability_text,
+    link_density with ``with_readability``).
+
+    Conversion failures don't fail the task: the row carries the error and
+    is dropped downstream while lineage counts it (the reference logs and
+    continues, tables/paper_text_table.py:150-152)."""
     import pyarrow as pa
 
+    kernel = _layout_to_text if pdf_mode == "layout" else to_text
+    if with_readability:
+        from .readability import readability_row
     span_fields = [
         pa.field("start", pa.int32(), nullable=False),
         pa.field("end", pa.int32(), nullable=False),
@@ -154,7 +124,7 @@ def extract_map_in_arrow(batches):
         for kind, data in zip(kinds, texts):
             err = None
             try:
-                text, sp = to_text(kind, data)
+                text, sp = kernel(kind, data)
             except Exception as exc:  # noqa: BLE001
                 text, sp, err = "", [], f"{type(exc).__name__}: {exc}"[:500]
             out_texts.append(text)
@@ -170,56 +140,45 @@ def extract_map_in_arrow(batches):
                 fields=span_fields,
             ),
         )
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("conv_id"),
-                batch.column("turn_idx"),
-                batch.column("doc_kind"),
-                batch.column("n_source_bytes"),
-                pa.array(out_texts, pa.string()),
-                spans,
-                pa.array(errors, pa.string()),
-            ],
-            names=[
-                "conv_id", "turn_idx", "doc_kind", "n_source_bytes",
-                "extracted_text", "spans", "extract_error",
-            ],
-        )
+        names = [n for n in batch.schema.names if n != "text"]
+        columns = [batch.column(n) for n in names]
+        names += ["extracted_text", "spans", "extract_error"]
+        columns += [pa.array(out_texts, pa.string()), spans, pa.array(errors, pa.string())]
+        if with_readability:
+            # Arc90-style main-content signal for html rows only (extra
+            # columns — the equality oracle stays the <p> path)
+            rd = [
+                readability_row(data.decode("utf-8", "ignore") if isinstance(data, bytes) else data)
+                if kind == "html" else None
+                for kind, data in zip(kinds, texts)
+            ]
+            names += ["readability_text", "link_density"]
+            columns += [
+                pa.array([None if r is None else r[0] for r in rd], pa.string()),
+                pa.array([None if r is None else r[3] for r in rd], pa.float64()),
+            ]
+        yield pa.RecordBatch.from_arrays(columns, names=names)
 
 
-@F.pandas_udf(_EXTRACT_RESULT_TYPE)
-def _to_text_layout_udf_impl(doc_kind: pd.Series, payload: pd.Series) -> pd.DataFrame:
-    """Layout-analyzed variant: pdf payloads go through the positioned-run
-    parser (extract/pdf_layout.py — column detection, reading order,
-    header/footer removal; spans not applicable for binary sources), all
-    other kinds are identical to the simple path. Opt-in via
-    convert_transcripts(pdf_mode="layout") — the DEFAULT path stays
-    byte-parity with the reference's stream-order extraction."""
-    from .pdf_layout import pdf_layout_extract_fn
+def extract_stage(
+    df: DataFrame, pdf_mode: str = "simple", with_readability: bool = False
+) -> DataFrame:
+    """convert_to_txt (E1-E4) as one mapInArrow over ``df(doc_kind, text,
+    ...)``, where ``text`` is a string or binary payload column. ``text`` is
+    consumed; every other column passes through; extracted_text, spans and
+    extract_error are appended, and with ``with_readability`` also
+    readability_text and link_density (null on non-html rows).
 
-    texts: list[str] = []
-    spans: list[list[dict[str, int]]] = []
-    errors: list[str | None] = []
-    for kind, data in zip(doc_kind, payload):
-        err = None
-        sp: list = []
-        if kind == "pdf":
-            try:
-                text = pdf_layout_extract_fn(data)
-                if text is None:
-                    text, err = "", "ValueError: undecodable PDF payload"
-            except Exception as exc:  # noqa: BLE001
-                text, err = "", f"{type(exc).__name__}: {exc}"[:500]
-        else:
-            try:
-                text, sp2 = to_text(kind, data)
-                sp = sp2
-            except Exception as exc:  # noqa: BLE001
-                text, err = "", f"{type(exc).__name__}: {exc}"[:500]
-        texts.append(text)
-        spans.append([{"start": s, "end": e} for s, e in sp])
-        errors.append(err)
-    return pd.DataFrame({"extracted_text": texts, "spans": spans, "error": errors})
-
-
-to_text_layout_udf = _to_text_layout_udf_impl.asNondeterministic()
+    ``pdf_mode``: "simple" (stream-order text, byte-parity with the
+    reference's extraction) or "layout" (extract/pdf_layout.py — an
+    intentional, opt-in deviation from reference parity)."""
+    if pdf_mode not in ("simple", "layout"):
+        raise ValueError(f"pdf_mode must be 'simple' or 'layout', got {pdf_mode!r}")
+    # pass-through columns come back from Python: declare them nullable
+    fields = [T.StructField(f.name, f.dataType, True) for f in df.schema.fields if f.name != "text"]
+    fields += _EXTRACT_FIELDS + (_READABILITY_FIELDS if with_readability else [])
+    fn = functools.update_wrapper(
+        functools.partial(extract_map_in_arrow, pdf_mode=pdf_mode, with_readability=with_readability),
+        extract_map_in_arrow,
+    )
+    return df.mapInArrow(fn, T.StructType(fields))

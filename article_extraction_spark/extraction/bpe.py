@@ -181,15 +181,14 @@ def bpe_train(
     pre-tokens) so each round schedules a handful of tasks, not the
     corpus shuffle width."""
     import shutil
-    import tempfile
 
     from ..operators.dedup import _checkpoint_rdd_dirs
+    from ..session import scratch_dir
 
     spark = df.sparkSession
     sc = spark.sparkContext
     if sc.getCheckpointDir() is None:
-        base = sc.getConf().get("spark.local.dir", tempfile.gettempdir()).split(",")[0]
-        sc.setCheckpointDir(tempfile.mkdtemp(prefix="bpe-ckpt-", dir=base))
+        sc.setCheckpointDir(scratch_dir(spark, "bpe-ckpt-"))
     resolved = sc.getCheckpointDir()
 
     @F.pandas_udf(T.ArrayType(T.StringType()))

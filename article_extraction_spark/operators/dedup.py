@@ -727,19 +727,20 @@ def connected_components(
     separate contexts or checkpoint dirs.
 
     ``checkpoint_dir``: used via ``sc.setCheckpointDir`` when the context
-    has none configured; defaults to a temp dir under ``spark.local.dir``.
+    has none configured; defaults to a temp dir under the session's local
+    scratch space (session.scratch_dir).
     Returns a PERSISTED (id, component) table — callers ``.unpersist()`` it
     when done (its checkpoint files back recomputation until the Spark temp
     dirs are cleaned). Raises RuntimeError if the graph has not converged
     within ``max_iterations``."""
     import shutil
-    import tempfile
+
+    from ..session import scratch_dir
 
     sc = edges.sparkSession.sparkContext
     if sc.getCheckpointDir() is None:
         if checkpoint_dir is None:
-            base = sc.getConf().get("spark.local.dir", tempfile.gettempdir()).split(",")[0]
-            checkpoint_dir = tempfile.mkdtemp(prefix="cc-ckpt-", dir=base)
+            checkpoint_dir = scratch_dir(edges.sparkSession, "cc-ckpt-")
         sc.setCheckpointDir(checkpoint_dir)
     resolved = sc.getCheckpointDir()
 

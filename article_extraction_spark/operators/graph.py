@@ -35,12 +35,12 @@ join (tfidf precedent) — no per-iteration driver round-trip.
 from __future__ import annotations
 
 import shutil
-import tempfile
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import scratch_dir
 from .dedup import _checkpoint_rdd_dirs
 
 __all__ = ["pagerank"]
@@ -66,8 +66,7 @@ def pagerank(
     sc = edges.sparkSession.sparkContext
     if sc.getCheckpointDir() is None:
         if checkpoint_dir is None:
-            base_dir = sc.getConf().get("spark.local.dir", tempfile.gettempdir()).split(",")[0]
-            checkpoint_dir = tempfile.mkdtemp(prefix="pr-ckpt-", dir=base_dir)
+            checkpoint_dir = scratch_dir(edges.sparkSession, "pr-ckpt-")
         sc.setCheckpointDir(checkpoint_dir)
     resolved = sc.getCheckpointDir()
 

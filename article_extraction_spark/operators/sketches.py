@@ -200,7 +200,9 @@ def heavy_hitters(
         grid[r["i"]][r["bucket"]] = r["cnt"]
         seen_rows = max(seen_rows, r["i"] + 1)
     if obs is not None:
-        total = obs.get["n"]  # flushed by the cells collect above
+        # flushed by the cells collect above — unless the input was empty
+        # and the optimizer removed the observed node: no cells, no rows
+        total = obs.get["n"] if seen_rows else 0
     threshold = max(1, math.ceil(phi * total - 1e-9))
     if cells is not None and seen_rows == 0 and total > 0:
         raise ValueError(

@@ -104,7 +104,7 @@ def run_with_checkpoint(
     if done:
         src = src.where(~F.col("bucket").isin(sorted(done)))
 
-    # keep empty extractions through the UDF so lineage can count them,
+    # keep empty extractions through the stage so lineage can count them,
     # drop them at the sink (reference paper_text_table.py:153-155)
     extracted = convert_transcripts(
         src.select("conv_id", "turn_idx", "role", "text", "tool", "ts"),

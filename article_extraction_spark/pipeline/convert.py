@@ -6,7 +6,8 @@ Plan shape (all lazily composed; Catalyst prunes/pushes down):
   scan transcripts
     → classify payload kind (native expressions, codegen'd)
     → salted repartition sized by byte volume (skew handling)
-    → to_text pandas UDF (one Arrow pass: text + spans)
+    → extract_stage: one mapInArrow over the html/pdf rows (text + spans);
+      txt/json stay JVM-side
     → drop empty extractions (reference :153-155)
     → diagnostics columns
 
@@ -20,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..extract.udfs import classify_payload_col, to_text_layout_udf, to_text_udf
+from ..extract.udfs import classify_payload_col, extract_stage
 from .partitioning import byte_balanced_partitions, salted_repartition
 
 
@@ -29,29 +30,25 @@ def convert_transcripts(
     num_partitions: int | None = None,
     salt: int = 0,
     drop_empty: bool = True,
-    spread: bool = True,
     with_readability: bool = False,
     pdf_mode: str = "simple",
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → extracted turns.
 
     Output schema: EXTRACTED_TURNS_SCHEMA (conv_id, turn_idx, doc_kind,
-    extracted_text, spans, n_source_bytes, n_extracted_chars).
+    extracted_text, spans, n_source_bytes, n_extracted_chars), plus
+    readability_text and link_density with ``with_readability``.
 
-    ``spread=True`` salted-repartitions on (conv_id, turn_idx) — required
-    when the source partitioning correlates with conv_id (Iceberg
-    bucket(conv_id) tables, the 10^12-turn deployment) so mega-conversations
-    can't straggle one task. For a source already uniformly partitioned,
-    pass spread=False and save the full-payload shuffle.
+    The html/pdf rows are salted-repartitioned on (conv_id, turn_idx) before
+    extraction, so a source partitioned by conv_id (Iceberg bucket(conv_id)
+    tables, the 10^12-turn deployment) can't straggle one task on a
+    mega-conversation.
 
     ``pdf_mode``: "simple" (default — stream-order text, byte-parity with
     the reference's extraction) or "layout" (extract/pdf_layout.py —
     column detection, reading-order sort, running header/footer removal;
     an intentional, opt-in deviation from reference parity).
     """
-    if pdf_mode not in ("simple", "layout"):
-        raise ValueError(f"pdf_mode must be 'simple' or 'layout', got {pdf_mode!r}")
-    udf = to_text_udf if pdf_mode == "simple" else to_text_layout_udf
     if num_partitions is None:
         num_partitions = byte_balanced_partitions(transcripts)
 
@@ -63,6 +60,7 @@ def convert_transcripts(
     )
     base = ["conv_id", "turn_idx", "doc_kind"]
     src_bytes = F.octet_length("text").cast("long").alias("n_source_bytes")
+    rd_cols = {"readability_text": "string", "link_density": "double"} if with_readability else {}
 
     # Only html/pdf genuinely need the Python kernel. txt/json are IDENTITY
     # transforms on parquet strings (parquet strings are valid UTF-8, so
@@ -73,37 +71,20 @@ def convert_transcripts(
     needs_py = classified.where(F.col("doc_kind").isin("html", "pdf"))
     passthrough = classified.where(~F.col("doc_kind").isin("html", "pdf"))
 
-    if spread:
-        # salt-repartition ONLY the Python-bound branch: that's where task
-        # imbalance hurts (per-row parse cost), and shuffling just html/pdf
-        # payloads instead of the whole corpus cuts shuffle bytes ~3× —
-        # the shuffle is bandwidth-bound, i.e. a fixed cost that does not
-        # parallelize away. The native branch is uniform per-row cheap.
-        needs_py = salted_repartition(needs_py, num_partitions, "conv_id", "turn_idx", salt=salt)
+    # salt-repartition ONLY the Python-bound branch: that's where task
+    # imbalance hurts (per-row parse cost), and shuffling just html/pdf
+    # payloads instead of the whole corpus cuts shuffle bytes ~3× — the
+    # shuffle is bandwidth-bound, i.e. a fixed cost that does not
+    # parallelize away. The native branch is uniform per-row cheap.
+    needs_py = salted_repartition(needs_py, num_partitions, "conv_id", "turn_idx", salt=salt)
 
-    if pdf_mode == "simple" and not with_readability:
-        # r8: Arrow-native extraction stage — same to_text kernel, but the
-        # spans column is assembled from flat int arrays per batch instead
-        # of a python dict per span (the pandas-UDF path's dominant
-        # overhead; see extract/udfs.py). n_source_bytes is computed
-        # JVM-side BEFORE the map and passes through untouched.
-        from ..extract.udfs import _EXTRACT_BATCH_SCHEMA, extract_map_in_arrow
-
-        py_out = needs_py.select(
-            "conv_id", "turn_idx", "doc_kind", src_bytes, "text"
-        ).mapInArrow(extract_map_in_arrow, _EXTRACT_BATCH_SCHEMA).select(
-            *base, "extracted_text", "spans", "extract_error", "n_source_bytes"
-        )
-    else:
-        py_out = needs_py.withColumn(
-            "_res", udf(F.col("doc_kind"), F.col("text"))
-        ).select(
-            *base,
-            F.col("_res.extracted_text").alias("extracted_text"),
-            F.col("_res.spans").alias("spans"),
-            F.col("_res.error").alias("extract_error"),
-            src_bytes,
-        )
+    # n_source_bytes is computed JVM-side BEFORE the stage and passes
+    # through untouched
+    py_out = extract_stage(
+        needs_py.select("conv_id", "turn_idx", "doc_kind", src_bytes, "text"),
+        pdf_mode=pdf_mode,
+        with_readability=with_readability,
+    ).select(*base, "extracted_text", "spans", "extract_error", "n_source_bytes", *rd_cols)
 
     txt = F.coalesce(F.col("text"), F.lit(""))
     native_text = F.when(F.col("doc_kind").isin("txt", "json"), txt).otherwise(F.lit(""))
@@ -117,30 +98,9 @@ def convert_transcripts(
         native_spans.alias("spans"),
         F.lit(None).cast("string").alias("extract_error"),
         src_bytes,
+        # readability diagnostics are html-only: null on the native branch
+        *(F.lit(None).cast(t).alias(c) for c, t in rd_cols.items()),
     )
-
-    if with_readability:
-        # north-star diagnostics: Arc90-style main-content signal for html
-        # turns (extra columns only — the equality oracle stays the <p> path);
-        # same Arrow stage as the extraction UDF, masked to html rows
-        from ..extract.readability import readability_udf
-
-        is_html = F.col("doc_kind") == "html"
-        rd = readability_udf(F.when(is_html, F.col("text")).otherwise(F.lit(None)))
-        py_out = needs_py.withColumn(
-            "_res", to_text_udf(F.col("doc_kind"), F.col("text"))
-        ).withColumn("_rd", rd).select(
-            *base,
-            F.col("_res.extracted_text").alias("extracted_text"),
-            F.col("_res.spans").alias("spans"),
-            F.col("_res.error").alias("extract_error"),
-            src_bytes,
-            F.when(is_html, F.col("_rd.main_text")).alias("readability_text"),
-            F.when(is_html, F.col("_rd.link_density")).alias("link_density"),
-        )
-        nat_out = nat_out.withColumn("readability_text", F.lit(None).cast("string")).withColumn(
-            "link_density", F.lit(None).cast("double")
-        )
 
     extracted = py_out.unionByName(nat_out)
 

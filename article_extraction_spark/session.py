@@ -36,6 +36,21 @@ def make_pyfiles_zip(dest: str | None = None) -> str:
     return dest
 
 
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh temp directory under the session's local scratch space.
+
+    ``SPARK_LOCAL_DIRS`` overrides ``spark.local.dir`` inside Spark, and
+    Spark creates only the directory it actually uses, so resolve in the
+    same order and create the base if it is missing."""
+    base = (
+        os.environ.get("SPARK_LOCAL_DIRS")
+        or spark.sparkContext.getConf().get("spark.local.dir", None)
+        or tempfile.gettempdir()
+    ).split(",")[0]
+    os.makedirs(base, exist_ok=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=base)
+
+
 def get_spark(
     app_name: str = "article_extraction_spark",
     master: str | None = None,

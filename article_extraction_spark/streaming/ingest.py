@@ -7,9 +7,9 @@ offsets to the checkpoint, stop; the next run resumes from the checkpoint.
 That is exactly the reference's "resume from what's done" semantics with
 exactly-once bookkeeping handled by the engine instead of an anti-join.
 
-The extraction transformations are all per-row (classify + UDF), so the same
-plan builders work unchanged on a streaming DataFrame; windowed turn-rate
-metrics with a watermark handle late arrivals.
+The extraction transformations are all per-row (classify + the Arrow
+extraction stage), so the same plan builders work unchanged on a streaming
+DataFrame; windowed turn-rate metrics with a watermark handle late arrivals.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..extract.udfs import classify_payload_col, to_text_udf
+from ..extract.udfs import classify_payload_col, extract_stage
 from ..schemas import TRANSCRIPTS_SCHEMA
 
 
@@ -36,15 +36,11 @@ def streaming_extract(spark: SparkSession, input_dir: str) -> DataFrame:
         "text",
         classify_payload_col(F.col("text")).alias("doc_kind"),
     )
-    extracted = classified.withColumn(
-        "_res", to_text_udf(F.col("doc_kind"), F.col("text"))
-    ).select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        "doc_kind",
-        F.col("_res.extracted_text").alias("extracted_text"),
-        F.col("_res.spans").alias("spans"),
+    # every row goes through the one stage: splitting txt/json off onto the
+    # native path (as the batch plan does) would scan each micro-batch twice
+    # and double its tasks, which costs more than it saves at trigger scale
+    extracted = extract_stage(classified).select(
+        "conv_id", "turn_idx", "ts", "doc_kind", "extracted_text", "spans"
     )
     return extracted.where(F.length("extracted_text") > 0)
 

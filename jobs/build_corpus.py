@@ -33,7 +33,7 @@ def build_corpus(
     seed: int = 42,
     fetch_splits: tuple[str, ...] = ("train", "dev"),  # create_tables.py:30-31
 ) -> dict:
-    from article_extraction_spark.extract.udfs import to_text_udf
+    from article_extraction_spark.extract.udfs import extract_stage
     from article_extraction_spark.extraction.enrich import informations_from_epoch
     from article_extraction_spark.functions.urls import solve_url_col
     from article_extraction_spark.operators.split import deterministic_split
@@ -89,12 +89,13 @@ def build_corpus(
     done = spark.read.parquet(text_path) if os.path.exists(text_path) else None
     if done is not None:
         docs = docs.join(done.select("id_paper"), "id_paper", "left_anti")
-    converted = docs.withColumn(
-        # binary column passes straight through Arrow as bytes; the kernel's
-        # bytes path (decode utf-8 ignore / raw PDF) handles it natively
-        "_res",
-        to_text_udf(F.col("document_type"), F.col("document")),
-    ).select("id_paper", F.col("_res.extracted_text").alias("text"))
+    # the binary column passes straight through Arrow as bytes; the kernel's
+    # bytes path (decode utf-8 ignore / raw PDF) handles it natively
+    converted = extract_stage(
+        docs.select(
+            "id_paper", F.col("document_type").alias("doc_kind"), F.col("document").alias("text")
+        )
+    ).select("id_paper", F.col("extracted_text").alias("text"))
     converted.where(F.length("text") > 0).write.mode("append").parquet(text_path)
     stats["texts"] = spark.read.parquet(text_path).count()
 

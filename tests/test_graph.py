@@ -62,3 +62,17 @@ def test_pagerank_null_and_empty_reject(spark):
     empty = spark.createDataFrame([], "src string, dst string")
     with pytest.raises(ValueError, match="empty"):
         pagerank(empty)
+
+
+def test_scratch_dir_creates_missing_base(spark, tmp_path, monkeypatch):
+    """SPARK_LOCAL_DIRS wins over spark.local.dir (as inside Spark), and a
+    base directory Spark never created is made on demand."""
+    import os
+
+    from article_extraction_spark.session import scratch_dir
+
+    base = tmp_path / "not-yet" / "local"
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", f"{base},{tmp_path / 'second'}")
+    d = scratch_dir(spark, "t-ckpt-")
+    assert os.path.isdir(d) and os.path.dirname(d) == str(base)
+    assert os.path.basename(d).startswith("t-ckpt-")

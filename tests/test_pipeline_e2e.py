@@ -86,19 +86,14 @@ def test_doc_kind_classification_matches_python(spark):
         assert r["k"] == classify_payload(r["text"])
 
 
-def test_arrow_extraction_stage_matches_pandas_udf_path(spark):
-    """r8: the default (simple, no-readability) convert path runs the
-    Arrow-native mapInArrow extraction stage; its output — text, spans,
-    error capture, byte counts — must be row-identical to the legacy
-    pandas-UDF path (pdf_mode='layout' exercises that path's plumbing for
-    html/txt/json rows via the same to_text kernel)."""
-    from pyspark.sql import functions as F
+def test_arrow_extraction_stage_contract(spark):
+    """extract_stage consumes ``text``, passes every other column through
+    and appends text, spans and a captured (not raised) error; the stage
+    body also runs in-process on a bare Arrow batch with the same result.
+    Byte-for-byte outputs are pinned by test_extract_golden.py."""
+    import pyarrow as pa
 
-    from article_extraction_spark.extract.udfs import (
-        _EXTRACT_BATCH_SCHEMA,
-        extract_map_in_arrow,
-        to_text_udf,
-    )
+    from article_extraction_spark.extract.udfs import extract_map_in_arrow, extract_stage
 
     rows = [
         ("c1", 0, "html", "<p>alpha</p><div>skip</div><p>beta</p>"),
@@ -112,18 +107,23 @@ def test_arrow_extraction_stage_matches_pandas_udf_path(spark):
         rows, "conv_id string, turn_idx int, doc_kind string, text string"
     ).withColumn("n_source_bytes", F.octet_length("text").cast("long"))
 
-    arrow = df.mapInArrow(extract_map_in_arrow, _EXTRACT_BATCH_SCHEMA)
-    legacy = df.withColumn("_r", to_text_udf(F.col("doc_kind"), F.col("text"))).select(
-        "conv_id", "turn_idx", "doc_kind", "n_source_bytes",
-        F.col("_r.extracted_text").alias("extracted_text"),
-        F.col("_r.spans").alias("spans"),
-        F.col("_r.error").alias("extract_error"),
-    )
-    a = sorted(map(tuple, arrow.collect()))
-    b = sorted(map(tuple, legacy.collect()))
-    assert a == b
+    out = extract_stage(df)
+    names = ["conv_id", "turn_idx", "doc_kind", "n_source_bytes", "extracted_text", "spans", "extract_error"]
+    assert out.columns == names
+    a = sorted(map(tuple, out.collect()))
     # spans survive as real offsets through the arrow batch assembly
     by_key = {(r[0], r[1]): r for r in a}
     good = by_key[("c1", 0)]
     assert good[4] == "alpha\nbeta" and [tuple(s) for s in good[5]] == [(3, 8), (30, 34)]
     assert by_key[("c1", 3)][6] is not None  # error captured, not raised
+
+    batch = pa.RecordBatch.from_pylist(
+        [dict(zip(["conv_id", "turn_idx", "doc_kind", "text"], r), n_source_bytes=len(r[3])) for r in rows]
+    ).select(["conv_id", "turn_idx", "doc_kind", "n_source_bytes", "text"])
+    (local,) = list(extract_map_in_arrow(iter([batch])))
+    assert local.schema.names == names
+
+    def plain(r):  # spans as (start, end) pairs, from Rows or Arrow dicts
+        return (*r[:5], [tuple(s.values() if isinstance(s, dict) else s) for s in r[5]], r[6])
+
+    assert sorted(map(plain, a)) == sorted(plain(list(d.values())) for d in local.to_pylist())

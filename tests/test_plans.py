@@ -47,21 +47,47 @@ def test_top_k_compiles_to_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_native_branch_has_no_python(spark):
-    """txt/json passthrough must stay JVM-side; only the html/pdf branch may
-    cross into Python (the anti-scaling fix — convert.py routing)."""
+def _explain(df) -> str:
+    """The physical plan as ``explain()`` prints it (works for streaming
+    DataFrames too, which cannot be executed outside a query)."""
+    return df.sparkSession._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
+
+
+def _assert_one_extraction_stage(plan: str) -> None:
+    assert plan.count("MapInArrow") == 1, plan
+    assert plan.count("ArrowEvalPython") == 0, plan
+
+
+@pytest.mark.parametrize(
+    "mode", [{}, {"pdf_mode": "layout"}, {"with_readability": True}],
+    ids=["simple", "layout", "readability"],
+)
+def test_convert_has_one_extraction_stage(spark, mode):
+    """Every convert mode runs the html/pdf branch through the one Arrow
+    extraction stage; txt/json stay JVM-side (the anti-scaling fix —
+    convert.py routing), unioned in as a pure projection."""
     from article_extraction_spark.pipeline.convert import convert_transcripts
     from article_extraction_spark.schemas import TRANSCRIPTS_SCHEMA
 
     t = spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
-    out = convert_transcripts(t, num_partitions=2)
-    plan = _plan(out)
-    # exactly ONE python-eval operator (the html/pdf branch), none for
-    # native (r8: the default path is the Arrow-native MapInArrow stage)
-    assert plan.count("MapInArrow") == 1
-    assert plan.count("ArrowEvalPython") == 0
-    # and the union has a pure-projection second branch
+    plan = _plan(convert_transcripts(t, num_partitions=2, **mode))
+    _assert_one_extraction_stage(plan)
     assert "Union" in plan
+
+
+def test_streaming_extract_has_one_extraction_stage(spark, tmp_path):
+    from article_extraction_spark.schemas import TRANSCRIPTS_SCHEMA
+    from article_extraction_spark.streaming.ingest import streaming_extract
+
+    src = str(tmp_path / "in")
+    spark.createDataFrame([], TRANSCRIPTS_SCHEMA).write.parquet(src)
+    _assert_one_extraction_stage(_explain(streaming_extract(spark, src)))
+
+
+def test_q_convert_html_has_one_extraction_stage(spark):
+    import __spark_entry__ as E
+
+    _assert_one_extraction_stage(_plan(E.q_convert_html(spark, SF)))
 
 
 def test_ordered_output_uses_range_partitioning(spark):

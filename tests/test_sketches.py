@@ -329,3 +329,13 @@ def test_heavy_hitters_rejects_geometry_mismatch(spark):
     shallow = cm_build(df, "k", d=2, w=512)
     with pytest.raises(ValueError, match="depth"):
         heavy_hitters(df, "k", 0.1, d=4, w=512, cells=shallow, total=100)
+
+
+def test_heavy_hitters_empty_input(spark):
+    """An empty input has no sketch cells, and the optimizer removes the
+    node that counts its rows: the answer is empty, not a crash."""
+    from article_extraction_spark.operators.sketches import heavy_hitters
+
+    assert heavy_hitters(spark.createDataFrame([], "k string"), "k", 0.1).collect() == []
+    nulls = spark.createDataFrame([(None,), (None,)], "k string")
+    assert heavy_hitters(nulls, "k", 0.1).collect() == []

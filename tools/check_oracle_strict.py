@@ -1,7 +1,7 @@
 """Driver-faithful strict correctness gate (VERDICT r7 #2).
 
-Replicates the driver's comparator semantics instead of the lenient
-``check_oracle.py`` diff that hid four rounds of representation drift:
+Replicates the driver's comparator semantics instead of a lenient value
+diff (which hid four rounds of representation drift):
 
   * both sides materialize as pandas frames (``duckdb .df()`` vs Spark
     ``toPandas()``),
@@ -13,8 +13,8 @@ Replicates the driver's comparator semantics instead of the lenient
     canonicalizer crashes on unhashable cells (CORRECTNESS_r07
     ``exact_dup_groups`` err), so such a query can never score green.
 
-The lenient value diff from check_oracle.py remains available as a
-secondary diagnostic (``--explain`` prints the first differing cells).
+A lenient value diff is available as a secondary diagnostic
+(``--explain`` prints the first differing cells).
 
 Usage: python tools/check_oracle_strict.py [sf_dir] [query ...]
 """

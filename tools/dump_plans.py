@@ -77,11 +77,11 @@ def main() -> None:
     sections.append(
         (
             "convert_to_txt pipeline",
-            "Exactly ONE ArrowEvalPython (html/pdf branch, AFTER the salted "
-            "exchange); the txt/json branch is a pure JVM projection unioned in. "
-            "The extraction UDF is marked non-deterministic so the drop-empty "
-            "filter cannot be pushed below the shuffle (which would evaluate "
-            "the UDF twice).",
+            "Exactly ONE MapInArrow — the extraction stage — on the html/pdf "
+            "branch, AFTER the salted exchange, and no ArrowEvalPython; the "
+            "txt/json branch is a pure JVM projection unioned in. The "
+            "drop-empty filter reads a column the stage produces, so it stays "
+            "above the stage.",
             plan_str(convert_transcripts(t, num_partitions=4)),
         )
     )
