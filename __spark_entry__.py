@@ -28,6 +28,8 @@ _REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 if _REPO_DIR not in sys.path:
     sys.path.insert(0, _REPO_DIR)
 
+from article_extraction_spark.pipeline import fan_out_small_scan  # noqa: E402
+
 
 _SHIPPED: set[int] = set()
 
@@ -51,20 +53,6 @@ def _ensure_shipped(spark: SparkSession) -> None:
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_shipped(spark)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Scale-adaptive fan-out for CPU-dense per-row stages (r8, guide §2.5
-    "input skew"): a small parquet table is a handful of scan splits (one
-    ~6 MB file = one row group = ONE task), so regex/HOF/Arrow-UDF work
-    rooted at the scan runs nearly serially on local[32] — measured 3.1 s →
-    0.64 s (pii) and 7.8 s → 1.4 s (contamination) at sf1.0 from this alone.
-    A no-op whenever the input already plans at least core-count partitions
-    (production scale). Callers project needed columns FIRST so the
-    balancing exchange carries minimal bytes (guide §2.3)."""
-    from article_extraction_spark.pipeline.partitioning import fan_out_small_scan
-
-    return fan_out_small_scan(df)
 
 
 # ---------------------------------------------------------------------------
@@ -95,8 +83,8 @@ def q_convert_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     from article_extraction_spark.extract.udfs import extract_stage
 
     # r8: fan the single-split scan out — the Arrow extraction stage
-    # otherwise runs in the scan's one task (see _spread)
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text", "lang"))
+    # otherwise runs in the scan's one task (see fan_out_small_scan)
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text", "lang"))
     payload = F.concat(
         F.lit("<header>nav</header><p>"),
         F.col("text"),
@@ -115,7 +103,7 @@ def q_classify_kinds(spark: SparkSession, sf_dir: str) -> DataFrame:
     mix keyed by doc_id % 3."""
     from article_extraction_spark.extract.udfs import classify_payload_col
 
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     kind = F.col("doc_id") % 3
     payload = (
         F.when(kind == 0, F.concat(F.lit("<p>"), F.col("text"), F.lit("</p>")))
@@ -241,7 +229,7 @@ def q_parse_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r8: project the 3 needed columns BEFORE the balancing exchange — the
     # former whole-row repartition shuffled all 16 lineitem columns
     # (~131 MB at sf1.0) to move 3 (guide §2.3)
-    li = _spread(
+    li = fan_out_small_scan(
         _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
     )
     raw = F.concat(F.col("l_quantity").cast("int").cast("string"), F.lit("k"))
@@ -303,7 +291,7 @@ def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text analysis: whitespace token counting per document."""
     from article_extraction_spark.operators.textstats import token_count_col
 
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return docs.select("doc_id", token_count_col(F.col("text")).cast("long").alias("n_tokens"))
 
 
@@ -311,7 +299,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text analysis: punct + stopword ratios (quality-score components)."""
     from article_extraction_spark.operators.textstats import punct_ratio_col, stopword_ratio_col
 
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return docs.select(
         "doc_id",
         F.round(punct_ratio_col(F.col("text")), 6).alias("punct_ratio"),
@@ -321,7 +309,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lang_marker_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text analysis: language-ID marker-hit counts (argmax tested in pytest)."""
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
 
     def hits(markers: list[str]) -> F.Column:
@@ -340,7 +328,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text analysis: normalized md5 document fingerprint."""
     from article_extraction_spark.operators.textstats import fingerprint_col
 
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return docs.select("doc_id", fingerprint_col(F.col("text")).alias("fp"))
 
 
@@ -351,7 +339,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     # query lookup stays on the pruned scan; only the scoring side fans out
     query = emb.where(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    scored = _spread(emb.select("vec_id", "embedding"))
+    scored = fan_out_small_scan(emb.select("vec_id", "embedding"))
     top = brute_force_topk(scored, "embedding", list(query), k=20)
     return top.select("vec_id", F.round(F.col("cosine"), 5).alias("cosine_r"))
 
@@ -379,7 +367,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r8: spread the single-split scan (the feature kernel ran in 1-2 scan
     # tasks) and use the zero-copy mapInArrow twin (parity-tested; hashes
     # memoryview slices of the Arrow buffer instead of per-row bytes)
-    media = _spread(docs.select("doc_id", "text", "n_chars")).select(
+    media = fan_out_small_scan(docs.select("doc_id", "text", "n_chars")).select(
         F.col("doc_id").alias("media_id"),
         F.when(F.col("doc_id") % 3 == 0, F.lit("image"))
         .when(F.col("doc_id") % 3 == 1, F.lit("audio"))
@@ -534,7 +522,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     query = emb.where(F.col("vec_id") == 0).select("embedding").first()["embedding"]
     # r8: the assignment/centroid kernels run above the scan — fan out
-    emb_all = _spread(emb.select("vec_id", "embedding"))
+    emb_all = fan_out_small_scan(emb.select("vec_id", "embedding"))
     centroids = kmeans_fit(emb_all, "embedding", k=4, max_iter=3, seed=42)
     path = (
         f"/tmp/aes_ivf_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}"
@@ -666,7 +654,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     floored-microunits (Spark HALF_UP vs DuckDB half-even dodge)."""
     from article_extraction_spark.operators.textstats import tfidf_top_terms
 
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     top = tfidf_top_terms(docs, "doc_id", "text", k=3)
     return top.select(
         "doc_id",
@@ -681,7 +669,7 @@ def q_char_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E5: char windowing with stride, fanned out via posexplode."""
     from article_extraction_spark.extraction.windows import explode_windows
 
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return explode_windows(docs, "text", window=200, stride=100)
 
 
@@ -689,7 +677,7 @@ def q_token_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E5: token windowing (worker-cached tokenizer). Rows-only check."""
     from article_extraction_spark.extraction.windows import explode_windows
 
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return explode_windows(docs, "text", window=20, stride=10, by_chars=False)
 
 
@@ -1011,7 +999,7 @@ def q_gopher_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     bullet ratios, stopword presence) — native expressions."""
     from article_extraction_spark.operators.textstats import gopher_flags_col
 
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     g = gopher_flags_col(F.col("text"))
     return docs.select(
         "doc_id",
@@ -1027,7 +1015,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language ID: unicode-script hint + stopword markers (argmax)."""
     from article_extraction_spark.operators.textstats import lang_id_col
 
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return docs.select("doc_id", lang_id_col(F.col("text")).alias("lang_guess"))
 
 
@@ -1099,7 +1087,7 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only check (heuristic scorer)."""
     from article_extraction_spark.extract.readability import readability_udf
 
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     page = F.concat(
         F.lit("<html><body><nav><a href='/'>home</a> <a href='/x'>other</a></nav>"
               "<article><p>"),
@@ -1225,8 +1213,8 @@ def q_pack_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     # r8: token counting over the full corpus fans out of the single-split
-    # scan (see _spread) before the cheap int-only plan computation
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text")).select(
+    # scan (see fan_out_small_scan) before the cheap int-only plan computation
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text")).select(
         "doc_id", token_count_col(F.col("text")).cast("long").alias("_n")
     )
     plan = concat_chunk_plan(docs, "_n", 512, order_col="doc_id")
@@ -2398,9 +2386,9 @@ def q_corpus_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     # project the card's inputs (id, text, mixture dims) before the
-    # balancing exchange — _spread's project-first contract
+    # balancing exchange — fan_out_small_scan's project-first contract
     cols = [c for c in ("doc_id", "text", "lang", "source") if c in docs.columns]
-    return corpus_card(_spread(docs.select(*cols)))
+    return corpus_card(fan_out_small_scan(docs.select(*cols)))
 
 
 def q_near_dup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2495,8 +2483,8 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead). DuckDB replays the identical formula relationally."""
     from article_extraction_spark.operators.retrieval import bm25_scores, build_text_index
 
-    # r8: index tokenization fans out of the single-split scan (see _spread)
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    # r8: index tokenization fans out of the single-split scan (see fan_out_small_scan)
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     queries = spark.createDataFrame(
         [(1, "merge sort join"), (2, "spark filter customer"), (3, "window hash scan")],
         "query_id long, qtext string",
@@ -2815,9 +2803,8 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed relationally (explode -> count -> max/sum -> join back)."""
     from article_extraction_spark.operators.textstats import repetition_stats
 
-    return repetition_stats(
-        _spread(_t(spark, sf_dir, "documents").select("doc_id", "text")), "doc_id", "text"
-    )
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    return repetition_stats(docs, "doc_id", "text")
 
 
 def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2825,7 +2812,8 @@ def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg -> one shuffle -> TakeOrderedAndProject)."""
     from article_extraction_spark.operators.textstats import top_terms
 
-    return top_terms(_spread(_t(spark, sf_dir, "documents").select("text")), "text", k=20)
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("text"))
+    return top_terms(docs, "text", k=20)
 
 
 def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2838,9 +2826,10 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     # benchmark side stays on the pruned scan (predicate pushdown); only the
     # corpus side — where the shingle HOFs run per row — is fanned out
-    # (r8: 7.8 s → 1.4 s at sf1.0, see _spread)
+    # (r8: 7.8 s → 1.4 s at sf1.0, see fan_out_small_scan)
     benchmark = docs.where(F.col("doc_id") < 50)
-    return contamination_check(_spread(docs), benchmark, "doc_id", "text", ngram=3, threshold=1)
+    corpus = fan_out_small_scan(docs)
+    return contamination_check(corpus, benchmark, "doc_id", "text", ngram=3, threshold=1)
 
 
 def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2852,7 +2841,7 @@ def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r8: seven regex passes over the full text ran in the scan's 1-2 tasks;
     # spread to core count (3.1 s → 0.6 s at sf1.0)
-    docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     planted = docs.withColumn(
         "text",
         F.concat(

@@ -146,7 +146,6 @@ def bpe_train(
     n_merges: int,
     min_freq: int = 2,
     checkpoint_every: int = 10,
-    loop_partitions: int | None = None,
     batch_merges: int = 1,
     round_stats: dict | None = None,
 ) -> list[tuple[str, str]]:
@@ -176,10 +175,10 @@ def bpe_train(
     Loop cost is JOB OVERHEAD, not data: merge folds chain LAZILY and
     re-execute inside the next round's pair-count job (≤checkpoint_every
     folds over the vocab table — cheaper than materializing each round as
-    its own job), and the vocab table is repartitioned down to
-    ``loop_partitions`` (default: ~1 partition per 50k distinct
-    pre-tokens) so each round schedules a handful of tasks, not the
-    corpus shuffle width."""
+    its own job), and the vocab table is repartitioned down to ~1
+    partition per 50k distinct pre-tokens (at most ``defaultParallelism``)
+    so each round schedules a handful of tasks, not the corpus shuffle
+    width."""
     import shutil
 
     from ..operators.dedup import _checkpoint_rdd_dirs
@@ -202,9 +201,7 @@ def bpe_train(
     ).select("syms", "freq")
     counts = counts.persist()
     n_vocab = counts.count()
-    parts = loop_partitions or max(
-        1, min(sc.defaultParallelism, n_vocab // 50_000 + 1)
-    )
+    parts = max(1, min(sc.defaultParallelism, n_vocab // 50_000 + 1))
     anchor = counts.repartition(parts).persist()
     anchor.count()
     counts.unpersist(blocking=False)

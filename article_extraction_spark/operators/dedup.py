@@ -533,22 +533,17 @@ def simhash_near_duplicates(
     max_hamming: int = 3,
     block_bits: int = 16,
     eager: bool = True,
-    fanout_partitions: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: block on 16-bit prefixes (4 rotations) so
     any pair within hamming ≤3 shares at least one block (pigeonhole over 4
     blocks), then verify exact hamming distance within blocks.
 
     ``eager=True`` materializes the pair table and releases the simhash
-    cache (see _materialize_release). ``fanout_partitions``: repartition
-    the kernel input first — pass this when the input is a few fat splits
-    (a small parquet file is ONE split, serializing the batch kernel into
-    one worker; e.g. a single-file corpus of ≥10k docs). Left off by
-    default because at oracle scale (hundreds of docs) the extra text
-    shuffle costs more than the fanout saves, and at real scale inputs
-    already have many splits."""
-    src = df if fanout_partitions is None else df.repartition(fanout_partitions)
-    sim = src.select(
+    cache (see _materialize_release). The kernel input is not fanned out:
+    at oracle scale (hundreds of docs) the extra text shuffle costs more
+    than the fan-out saves, and at real scale inputs already have many
+    splits."""
+    sim = df.select(
         F.col(id_col).alias("_id"), simhash_col(F.col(text_col)).alias("_sh")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     blocks = sim.select(

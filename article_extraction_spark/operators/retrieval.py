@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pipeline.partitioning import fan_out_small_scan
+
 
 def build_text_index(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
@@ -287,10 +289,7 @@ class MaintainedBM25Index:
                 f"{meta['doc_id_type']!r}, this batch has {id_type!r}"
             )
         # r8: tokenization + posting fan-out runs above the scan — fan a
-        # small single-split batch out to core count first (no-op when the
-        # input already splits past the session's parallelism)
-        from ..pipeline.partitioning import fan_out_small_scan
-
+        # small single-split batch out to core count first
         batch = (
             fan_out_small_scan(
                 docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))

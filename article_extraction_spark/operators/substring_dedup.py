@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pipeline.partitioning import fan_out_small_scan
+
 # Karp–Rabin bases for the rolling-hash engine: two independent odd
 # multipliers mod 2^64. Two hashes joined as one 128-bit key keep the
 # birthday bound far past 100-TB gram counts (a single 64-bit key starts
@@ -207,13 +209,8 @@ def rolling_fingerprints(
         F.col(id_col).alias("__id"), F.col(text_col).alias("__text")
     )
     # A small parquet source arrives as 1-2 input splits, which would pin
-    # the kernel to 1-2 cores (the round-1 amplification lesson). Only
-    # widen when the source is narrower than the cluster — a real 100-TB
-    # scan already has thousands of splits and skips the shuffle.
-    target = src.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target)
-    return src.mapInPandas(gen, schema)
+    # the kernel to 1-2 cores (the round-1 amplification lesson).
+    return fan_out_small_scan(src).mapInPandas(gen, schema)
 
 
 def substring_positions(

@@ -1,19 +1,21 @@
-"""Partitioning & skew handling (north rule: salted-hash partition on conv_id,
-explicit skew handling for mega-conversations).
+"""The engine's one partitioning policy: how wide a CPU-heavy per-row stage
+runs, and whether it gets a balancing exchange, is decided here only.
 
-The extraction map is row-local, so the *finest* safe salt is per-turn: a
-mega-conversation with 10^6 turns spreads across every partition instead of
-stragglering one task. When an operator needs conv-locality (per-conv
-aggregation), salt at conv level and two-phase aggregate instead.
-
-At 100 TB these helpers are what keeps task sizes bounded:
-  * salted_repartition — hash(conv_id, turn_idx, salt) → uniform spread.
-  * byte-balanced partition count — partitions sized by *byte volume*, not
-    row count, so multi-megabyte turns don't blow task memory.
-AQE (enabled in session.py) re-splits residual skew at runtime.
+  * Keyed extraction rows: a salted hash on (conv_id, turn_idx)
+    (``salted_repartition``), as wide as the payload bytes need
+    (``byte_balanced_partitions``). The extraction map is row-local, so the
+    finest safe salt is per-turn: a mega-conversation with 10^6 turns spreads
+    across every partition instead of stragglering one task.
+  * Every other CPU-heavy per-row stage: ``fan_out_small_scan`` round-robins
+    a scan-rooted plan that has fewer splits than cores out to all cores.
+  * A plan that already shuffles is left to AQE (enabled in session.py),
+    which sizes and re-splits its partitions from runtime statistics.
 """
 
 from __future__ import annotations
+
+import os
+from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -21,6 +23,11 @@ from pyspark.sql import functions as F
 # target bytes of text payload per task — small enough that a full Arrow
 # batch of payloads plus extraction output fits executor memory comfortably
 TARGET_PARTITION_BYTES = 64 * 1024 * 1024
+MIN_PARTITIONS = 8
+MAX_PARTITIONS = 100_000
+# parquet file bytes → raw payload bytes; rounds the estimate UP
+ASSUMED_COMPRESSION = 3.0
+PAYLOAD_COL = "text"
 
 
 def bucket_col(key: Column, n_buckets: int, salt: int = 0) -> Column:
@@ -39,66 +46,63 @@ def salted_repartition(
     return df.repartition(num_partitions, F.xxhash64(*cols, F.lit(salt)))
 
 
-def byte_balanced_partitions(
-    df: DataFrame,
-    text_col: str = "text",
-    target_bytes: int = TARGET_PARTITION_BYTES,
-    min_partitions: int = 8,
-    max_partitions: int = 100_000,
-    stats_bytes: int | None = None,
-    assume_compression: float = 3.0,
-) -> int:
-    """Choose a partition count from the *byte volume* of the payload column.
+def byte_balanced_partitions(df: DataFrame) -> int:
+    """Choose a partition count from the *byte volume* of the payload column,
+    ``TARGET_PARTITION_BYTES`` per task, clamped to
+    [``MIN_PARTITIONS``, ``MAX_PARTITIONS``].
 
     Byte-volume sources, cheapest first (VERDICT r1: no extra aggregate job
     per convert run):
 
-      1. ``stats_bytes`` — caller-provided table statistics (Iceberg manifest
-         totals, lineage ``bytes_in``).
-      2. File metadata: ``df.inputFiles()`` sizes × ``assume_compression``
+      1. File metadata: ``df.inputFiles()`` sizes × ``ASSUMED_COMPRESSION``
          (driver-side stat calls, NO Spark job). Compressed parquet
          under-counts raw text, so the conservative expansion factor rounds
          the estimate UP — more, smaller partitions, never memory-unsafe.
-      3. Fallback for in-memory / transformed inputs with no file lineage:
-         one column-pruned aggregate scan of the payload column.
+      2. Fallback for in-memory / transformed inputs with no file lineage:
+         one column-pruned aggregate scan of ``PAYLOAD_COL``.
     """
-    total: int | None = stats_bytes
-    if total is None:
-        try:
-            files = df.inputFiles()
-        except Exception:  # non-file-backed plans
-            files = []
-        if files:
-            import os
-            from urllib.parse import urlparse
-
-            size = 0
-            for f in files:
-                path = urlparse(f).path or f
-                try:
-                    size += os.stat(path).st_size
-                except OSError:
-                    size = 0
-                    break  # non-local fs → fall through to the scan
-            if size:
-                total = int(size * assume_compression)
+    total: int | None = None
+    try:
+        files = df.inputFiles()
+    except Exception:  # non-file-backed plans
+        files = []
+    if files:
+        size = 0
+        for f in files:
+            path = urlparse(f).path or f
+            try:
+                size += os.stat(path).st_size
+            except OSError:
+                size = 0
+                break  # non-local fs → fall through to the scan
+        if size:
+            total = int(size * ASSUMED_COMPRESSION)
     if total is None:
         total = df.select(
-            F.sum(F.octet_length(F.col(text_col))).alias("b")
+            F.sum(F.octet_length(F.col(PAYLOAD_COL))).alias("b")
         ).first()["b"] or 0
-    return max(min_partitions, min(max_partitions, int(total // target_bytes) + 1))
+    return max(MIN_PARTITIONS, min(MAX_PARTITIONS, int(total // TARGET_PARTITION_BYTES) + 1))
 
 
-def fan_out_small_scan(df: DataFrame, parallelism: int | None = None) -> DataFrame:
-    """Scale-adaptive fan-out for CPU-dense per-row stages rooted at a scan
-    (r8, guide §2.5 "input skew"): a small parquet table plans to a handful
-    of splits (one small file = one row group = ONE task), so tokenize/
-    regex/HOF work above it runs nearly serially on a many-core session.
-    Round-robin repartitions to session parallelism ONLY when the input
-    plans fewer partitions than cores; at production scale inputs already
-    split past core count and this is a no-op (no shuffle). Project needed
-    columns BEFORE calling so the exchange carries minimal bytes."""
-    par = parallelism or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
+def fan_out_small_scan(df: DataFrame) -> DataFrame:
+    """Balance a CPU-dense per-row stage rooted at a scan (r8, guide §2.5
+    "input skew"). A small parquet table plans to a handful of splits (one
+    small file = one row group = ONE task), so regex/HOF/Arrow work above it
+    runs nearly serially on a many-core session. Round-robins to
+    ``defaultParallelism`` ONLY when the scan plans fewer splits; at
+    production scale inputs already split past core count and this adds no
+    exchange. Project the needed columns BEFORE calling, so the balancing
+    exchange carries minimal bytes (guide §2.3).
+
+    A plan that already shuffles is returned unchanged: counting its
+    partitions would execute the upstream stages, and AQE sizes them at
+    runtime anyway. AQE wraps every such plan (and every plan over a cached
+    shuffle) in an ``AdaptiveSparkPlan`` node. An exchange-free plan's split
+    count comes from file listing alone, so this starts no Spark job."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return df
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if len(plan.execute().partitions()) >= par:
         return df
     return df.repartition(par)

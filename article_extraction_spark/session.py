@@ -36,6 +36,23 @@ def make_pyfiles_zip(dest: str | None = None) -> str:
     return dest
 
 
+def host_cpus() -> int:
+    """Cores this process may use; ``SPARK_GRAFT_CPUS`` overrides."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+MEMINFO = "/proc/meminfo"
+
+
+def driver_memory() -> str:
+    """Half of physical memory; ``SPARK_DRIVER_MEMORY`` overrides."""
+    if "SPARK_DRIVER_MEMORY" in os.environ:
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    with open(MEMINFO) as fh:
+        kib = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return f"{kib // 2048}m"
+
+
 def scratch_dir(spark: SparkSession, prefix: str) -> str:
     """A fresh temp directory under the session's local scratch space.
 
@@ -59,11 +76,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard configs.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    ``shuffle_partitions`` defaults to the local core count — on a real
-    cluster you would size this to ~2-3x total executor cores instead.
+    ``master`` defaults to ``local[host_cpus()]`` and the driver heap to
+    ``driver_memory()``. ``shuffle_partitions`` defaults to the local core
+    count — on a real cluster you would size this to ~2-3x total executor
+    cores instead.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -85,14 +103,10 @@ def get_spark(
         # model caching (reference models/llm.py:43-44)
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", driver_memory())
         # binary/text payloads can be large; raise Arrow batch sanity limit
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
     )
-    # tmpfs shuffle/spill dirs when available: local-mode disk shuffle
-    # contends badly under many threads (on a real cluster: NVMe local dirs)
-    if os.path.isdir("/dev/shm"):
-        builder = builder.config("spark.local.dir", "/dev/shm/spark-local")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

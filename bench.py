@@ -1,5 +1,6 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+sf0.1) on local[N], N = session.host_cpus() ($SPARK_GRAFT_CPUS overrides
+the host's core count). Prints ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
 
 Every query is forced end-to-end through the noop sink (full computation, no
@@ -24,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from article_extraction_spark.session import get_spark  # noqa: E402
+from article_extraction_spark.session import get_spark, host_cpus  # noqa: E402
 
 
 def _force(df) -> None:
@@ -33,7 +34,7 @@ def _force(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "40"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 

@@ -28,8 +28,6 @@ def main() -> None:
     ap.add_argument("--num-partitions", type=int, default=None)
     args = ap.parse_args()
 
-    import os
-
     builder = (
         SparkSession.builder.appName("extract-transcripts")
         .config("spark.sql.adaptive.enabled", "true")
@@ -39,8 +37,6 @@ def main() -> None:
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.python.worker.reuse", "true")
     )
-    if os.path.isdir("/dev/shm"):
-        builder = builder.config("spark.local.dir", "/dev/shm/spark-local")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

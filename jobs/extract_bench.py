@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
+import tempfile
 import time
 
 from pyspark.sql import SparkSession
@@ -24,8 +26,6 @@ def main() -> None:
     ap.add_argument("--iterations", type=int, default=3)
     args = ap.parse_args()
 
-    import os
-
     builder = (
         SparkSession.builder.appName("extract-bench")
         .config("spark.sql.adaptive.enabled", "true")
@@ -35,10 +35,6 @@ def main() -> None:
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.ui.enabled", "false")
     )
-    if os.path.isdir("/dev/shm"):
-        # disk-backed shuffle contends under many local threads; tmpfs local
-        # dirs are the local-mode analog of cluster NVMe shuffle volumes
-        builder = builder.config("spark.local.dir", "/dev/shm/spark-local")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     master = spark.sparkContext.master
@@ -55,10 +51,8 @@ def main() -> None:
     # materialize the corpus as compressed parquet (the production input
     # shape — columnar scan, not an uncompressed in-memory cache whose
     # bandwidth-bound reads would dominate the timed span)
-    corpus_path = f"/dev/shm/bench_corpus_{args.reps}.parquet"
-    import os as _os
-
-    if not _os.path.exists(corpus_path):
+    corpus_path = os.path.join(tempfile.gettempdir(), f"bench_corpus_{args.reps}.parquet")
+    if not os.path.exists(corpus_path):
         # fixed file count so the scan parallelism is independent of the
         # master that happened to materialize the corpus
         amplified_transcripts(spark, args.sf_dir, reps=args.reps).repartition(64).write.mode(

@@ -90,6 +90,49 @@ def test_q_convert_html_has_one_extraction_stage(spark):
     _assert_one_extraction_stage(_plan(E.q_convert_html(spark, SF)))
 
 
+def _round_robins_above_scans(df, table: str) -> list[int]:
+    """For every scan of ``table`` in the physical plan (cached relations
+    and adaptive query stages included), the number of round-robin
+    exchanges between that scan and the root."""
+    found: list[int] = []
+
+    def walk(node, n: int) -> None:
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return walk(node.executedPlan(), n)
+        if name.endswith("QueryStage"):
+            return walk(node.plan(), n)
+        if name == "InMemoryTableScan":
+            return walk(node.relation().cachedPlan(), n)
+        partitioning = node.outputPartitioning().getClass().getSimpleName()
+        if name == "Exchange" and partitioning == "RoundRobinPartitioning":
+            n += 1
+        if name.startswith("Scan ") and f"/{table}.parquet" in str(
+            node.relation().location().rootPaths()
+        ):
+            found.append(n)
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), n)
+
+    walk(df._jdf.queryExecution().executedPlan(), 0)
+    return found
+
+
+@pytest.mark.parametrize(
+    "query, fan_outs",
+    [("pii_redaction", 1), ("substring_dup_spans", 1), ("simhash_near_dups", 0)],
+)
+def test_fan_out_policy_in_driver_plans(spark, query, fan_outs):
+    """The single-split documents scan is round-robined out exactly once
+    under the CPU-heavy per-row stages (pii regexes, substring
+    fingerprints); simhash is deliberately left unspread."""
+    import __spark_entry__ as E
+
+    counts = _round_robins_above_scans(E.queries()[query](spark, SF), "documents")
+    assert counts and set(counts) == {fan_outs}, counts
+
+
 def test_ordered_output_uses_range_partitioning(spark):
     """W1 export: rangepartitioning + per-partition sort, NOT a single-
     partition global sort."""

@@ -1,0 +1,23 @@
+"""Session defaults derive from the host, with env overrides."""
+
+from __future__ import annotations
+
+from article_extraction_spark import session
+
+
+def test_host_cpus_from_affinity_with_env_override(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    assert session.host_cpus() == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "7")
+    assert session.host_cpus() == 7
+
+
+def test_driver_memory_is_half_of_memtotal_with_env_override(monkeypatch, tmp_path):
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemTotal:       16479424 kB\nMemFree:         2048000 kB\n")
+    monkeypatch.setattr(session, "MEMINFO", str(meminfo))
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    assert session.driver_memory() == "8046m"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "6g")
+    assert session.driver_memory() == "6g"

@@ -1,4 +1,5 @@
-"""AQE skew handling evidence (north rule: AQE skew-join hints + salting).
+"""Skew handling and the partitioning policy (north rule: AQE skew-join
+hints + salting; pipeline/partitioning.py decides every fan-out).
 
 AQE's skew-join splitting triggers on runtime partition sizes; thresholds
 are lowered so the tiny fixture exhibits it, and the FINAL adaptive plan is
@@ -6,8 +7,12 @@ inspected after execution."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
+
+SF = "/root/testdata/sf0.001"
 
 _SKEW_CONFS = {
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "8KB",
@@ -69,27 +74,73 @@ def test_salting_spreads_hot_conversation(skew_spark):
     assert max(sizes) < 2 * min(sizes), sizes
 
 
-def test_byte_balanced_partitions_sources(skew_spark):
-    """Partition sizing prefers stats/file-metadata over a payload scan."""
-    from article_extraction_spark.pipeline.partitioning import byte_balanced_partitions
+def test_byte_balanced_partitions_sources(skew_spark, monkeypatch):
+    """Partition sizing prefers file metadata over a payload scan and clamps
+    to [MIN_PARTITIONS, MAX_PARTITIONS]; the module constants drive it."""
+    from article_extraction_spark.pipeline import partitioning as P
 
     spark = skew_spark
-    # 1. caller-provided stats short-circuit everything
-    df_mem = spark.createDataFrame([("c", "x" * 100)], "conv_id string, text string")
-    assert byte_balanced_partitions(df_mem, stats_bytes=0) == 8
-    assert byte_balanced_partitions(df_mem, stats_bytes=10 * 64 * 1024 * 1024) == 11
-
-    # 2. file-backed input: sized from file metadata (scaled by the
+    # 1. file-backed input: sized from file metadata (scaled by the
     #    compression assumption), no aggregate over the payload
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    lo = byte_balanced_partitions(docs, target_bytes=16 * 1024, assume_compression=1.0)
-    hi = byte_balanced_partitions(docs, target_bytes=16 * 1024, assume_compression=8.0)
-    assert hi > lo >= 8  # responds to the metadata-scaling knob → metadata path taken
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    monkeypatch.setattr(P, "TARGET_PARTITION_BYTES", 16 * 1024)
+    monkeypatch.setattr(P, "ASSUMED_COMPRESSION", 1.0)
+    lo = P.byte_balanced_partitions(docs)
+    monkeypatch.setattr(P, "ASSUMED_COMPRESSION", 8.0)
+    hi = P.byte_balanced_partitions(docs)
+    assert hi > lo >= 8  # responds to the metadata-scaling constant → metadata path taken
 
-    # 3. in-memory input falls back to the exact column scan
+    # 2. in-memory input falls back to the exact column scan
     big = spark.createDataFrame([("c", "y" * 200_000)], "conv_id string, text string")
-    assert byte_balanced_partitions(big, target_bytes=50_000) == 8  # min clamp
-    assert byte_balanced_partitions(big, target_bytes=50_000, min_partitions=1) == 5
+    monkeypatch.setattr(P, "TARGET_PARTITION_BYTES", 50_000)
+    assert P.byte_balanced_partitions(big) == 8  # min clamp
+    monkeypatch.setattr(P, "MIN_PARTITIONS", 1)
+    assert P.byte_balanced_partitions(big) == 5
+    monkeypatch.setattr(P, "MAX_PARTITIONS", 3)
+    assert P.byte_balanced_partitions(big) == 3  # max clamp
+
+
+def test_fan_out_small_scan_starts_no_job(spark):
+    """Deciding a fan-out runs no Spark job. A frame that already shuffles
+    (an aggregate) comes back unchanged for AQE to size at runtime; a
+    single-split scan is still round-robined to ``defaultParallelism``."""
+    from article_extraction_spark.pipeline.partitioning import fan_out_small_scan
+
+    sc = spark.sparkContext
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    agg = docs.groupBy("lang").count()
+    scan = docs.select("doc_id", "text")
+    group = "fan-out-decision"
+    sc.setJobGroup(group, "fan_out_small_scan on an aggregate and a scan")
+    try:
+        kept = fan_out_small_scan(agg)
+        spread = fan_out_small_scan(scan)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert kept is agg
+    assert scan.rdd.getNumPartitions() == 1
+    assert spread.rdd.getNumPartitions() == sc.defaultParallelism
+
+
+def test_partition_count_decided_in_one_module():
+    """Only pipeline/partitioning.py decides fan-out widths: no other engine
+    module, job or driver query reads a frame's partition count (which
+    can execute upstream stages under AQE)."""
+    root = Path(__file__).resolve().parent.parent
+    sources = [
+        *(root / "article_extraction_spark").rglob("*.py"),
+        root / "__spark_entry__.py",
+        *(root / "jobs").rglob("*.py"),
+    ]
+    policy = root / "article_extraction_spark" / "pipeline" / "partitioning.py"
+    offenders = [
+        str(p.relative_to(root))
+        for p in sources
+        if p != policy and "getNumPartitions(" in p.read_text()
+    ]
+    assert offenders == []
 
 
 def test_asof_join_mega_key_two_phase(spark):

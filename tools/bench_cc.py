@@ -29,13 +29,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from article_extraction_spark.session import get_spark  # noqa: E402
+from article_extraction_spark.session import get_spark, host_cpus  # noqa: E402
 
 
 def main() -> None:
     n_chains = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000
     chain_len = int(sys.argv[2]) if len(sys.argv) > 2 else 100
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     spark = get_spark(app_name="bench-cc", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
