@@ -29,29 +29,12 @@ if _REPO_DIR not in sys.path:
     sys.path.insert(0, _REPO_DIR)
 
 from article_extraction_spark.pipeline import fan_out_small_scan  # noqa: E402
-
-
-_SHIPPED: set[int] = set()
-
-
-def _ensure_shipped(spark: SparkSession) -> None:
-    """Ship the engine zip to python workers of WHATEVER session the driver
-    built (it may not use our get_spark, and its workers may not inherit a
-    PYTHONPATH that reaches this repo). Idempotent per session."""
-    key = id(spark.sparkContext)
-    if key in _SHIPPED:
-        return
-    try:
-        from article_extraction_spark.session import make_pyfiles_zip
-
-        spark.sparkContext.addPyFile(make_pyfiles_zip())
-    except Exception:  # noqa: BLE001 - already added, or non-local master quirks
-        pass
-    _SHIPPED.add(key)
+from article_extraction_spark.session import ship_package  # noqa: E402
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    _ensure_shipped(spark)
+    # the driver builds its own session, which get_spark never saw
+    ship_package(spark.sparkContext)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
@@ -66,7 +49,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from article_extraction_spark.fixtures import transcripts_from_documents
     from article_extraction_spark.pipeline import convert_transcripts, ordered_output
 
-    _ensure_shipped(spark)
+    ship_package(spark.sparkContext)
     t = transcripts_from_documents(spark, "/root/testdata/sf0.001", convs=50)
     return ordered_output(convert_transcripts(t, num_partitions=8), 8)
 
@@ -715,7 +698,6 @@ def q_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_encode_udf,
     )
 
-    _ensure_shipped(spark)
     merges = _bpe_merges(spark, sf_dir)
     docs = (
         _t(spark, sf_dir, "documents")
@@ -753,7 +735,6 @@ def q_bpe_token_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark import StorageLevel
 
-    _ensure_shipped(spark)
     merges = _bpe_merges(spark, sf_dir)
     W, S, BLOCK = 32, 24, 512
     docs = (
@@ -2688,7 +2669,6 @@ def q_charset_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from article_extraction_spark.extract.charset import detect_decode_udf
 
-    _ensure_shipped(spark)
     SUF = " — café ±15° €"
     META = '<meta charset="windows-1252">'
 

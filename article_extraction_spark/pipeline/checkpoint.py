@@ -1,7 +1,7 @@
 """Per-partition checkpoint + lineage + idempotent resume (north rule).
 
-The durable unit is a salted-hash **bucket** of conversations:
-``bucket = pmod(xxhash64(conv_id, salt), n_buckets)`` — the Spark analog of
+The durable unit is a hash **bucket** of conversations:
+``bucket = pmod(xxhash64(conv_id, 0), n_buckets)`` — the Spark analog of
 Iceberg's hidden ``bucket(N, conv_id)`` partitioning. Each run:
 
   1. reads the lineage table and skips buckets already completed
@@ -11,8 +11,11 @@ Iceberg's hidden ``bucket(N, conv_id)`` partitioning. Each run:
   2. extracts only the pending buckets,
   3. writes output with *dynamic partition overwrite* (re-running a bucket
      replaces it rather than duplicating — idempotent retries),
-  4. appends one lineage row per bucket: (partition id, input snapshot,
-     run id, rows in/out/empty/failed, bytes in, chars out).
+  4. appends one lineage row per bucket: (partition id, n_buckets, input
+     snapshot, run id, rows in/out/empty/failed, bytes in, chars out).
+
+A destination keeps one bucket layout: resuming it with a different
+``n_buckets`` is refused, since its bucket ids name other conversations.
 
 On a cluster with Iceberg jars this maps 1:1 onto snapshot-isolated commits
 (``MERGE``/``overwritePartitions``); the manifest logic here is identical,
@@ -67,7 +70,7 @@ def read_turns(spark: SparkSession, dest_root: str) -> DataFrame | None:
 
 
 def completed_buckets(
-    spark: SparkSession, dest_root: str, input_snapshot: str | None = None
+    spark: SparkSession, dest_root: str, input_snapshot: str, n_buckets: int
 ) -> set[int]:
     """Buckets already converted for a given input snapshot.
 
@@ -75,14 +78,21 @@ def completed_buckets(
     against: when the input table advances to a new snapshot, new rows may
     hash into previously completed buckets, so those buckets must be
     re-extracted (dynamic partition overwrite makes the re-run idempotent).
-    Passing ``input_snapshot=None`` keeps the legacy any-snapshot behavior.
+    Raises ``ValueError`` if the lineage was written with another
+    ``n_buckets``.
     """
     lineage = read_lineage(spark, dest_root)
     if lineage is None:
         return set()
-    if input_snapshot is not None:
-        lineage = lineage.where(F.col("input_snapshot") == input_snapshot)
-    return {r["partition_id"] for r in lineage.select("partition_id").distinct().collect()}
+    current = (F.col("input_snapshot") == input_snapshot).alias("current")
+    rows = lineage.select("partition_id", "n_buckets", current).distinct().collect()
+    written = {r["n_buckets"] for r in rows} - {n_buckets}
+    if written:
+        raise ValueError(
+            f"{dest_root} was checkpointed with n_buckets={written.pop()}; "
+            f"resuming it with n_buckets={n_buckets} would mix bucket layouts"
+        )
+    return {r["partition_id"] for r in rows if r["current"]}
 
 
 def run_with_checkpoint(
@@ -92,15 +102,14 @@ def run_with_checkpoint(
     n_buckets: int = 64,
     run_id: str = "run-0",
     input_snapshot: str = "snap-0",
-    salt: int = 0,
     num_partitions: int | None = None,
 ) -> dict:
     """Execute (or resume) the extraction job. Returns run statistics."""
     turns_path = os.path.join(dest_root, TURNS_SUBDIR)
     lineage_path = os.path.join(dest_root, LINEAGE_SUBDIR)
 
-    done = completed_buckets(spark, dest_root, input_snapshot)
-    src = transcripts.withColumn("bucket", bucket_col(F.col("conv_id"), n_buckets, salt))
+    done = completed_buckets(spark, dest_root, input_snapshot, n_buckets)
+    src = transcripts.withColumn("bucket", bucket_col(F.col("conv_id"), n_buckets))
     if done:
         src = src.where(~F.col("bucket").isin(sorted(done)))
 
@@ -109,9 +118,8 @@ def run_with_checkpoint(
     extracted = convert_transcripts(
         src.select("conv_id", "turn_idx", "role", "text", "tool", "ts"),
         num_partitions=num_partitions,
-        salt=salt,
         drop_empty=False,
-    ).withColumn("bucket", bucket_col(F.col("conv_id"), n_buckets, salt))
+    ).withColumn("bucket", bucket_col(F.col("conv_id"), n_buckets))
 
     from pyspark import StorageLevel
 
@@ -134,6 +142,7 @@ def run_with_checkpoint(
             )
             .select(
                 F.col("bucket").alias("partition_id"),
+                F.lit(n_buckets).alias("n_buckets"),
                 F.lit(input_snapshot).alias("input_snapshot"),
                 F.lit(run_id).alias("run_id"),
                 "rows_in",

@@ -28,7 +28,6 @@ from .partitioning import byte_balanced_partitions, salted_repartition
 def convert_transcripts(
     transcripts: DataFrame,
     num_partitions: int | None = None,
-    salt: int = 0,
     drop_empty: bool = True,
     with_readability: bool = False,
     pdf_mode: str = "simple",
@@ -76,7 +75,7 @@ def convert_transcripts(
     # payloads instead of the whole corpus cuts shuffle bytes ~3× — the
     # shuffle is bandwidth-bound, i.e. a fixed cost that does not
     # parallelize away. The native branch is uniform per-row cheap.
-    needs_py = salted_repartition(needs_py, num_partitions, "conv_id", "turn_idx", salt=salt)
+    needs_py = salted_repartition(needs_py, num_partitions, "conv_id", "turn_idx")
 
     # n_source_bytes is computed JVM-side BEFORE the stage and passes
     # through untouched

@@ -30,20 +30,15 @@ ASSUMED_COMPRESSION = 3.0
 PAYLOAD_COL = "text"
 
 
-def bucket_col(key: Column, n_buckets: int, salt: int = 0) -> Column:
-    """Deterministic salted hash bucket: pmod(xxhash64(key, salt), n)."""
-    return F.pmod(F.xxhash64(key, F.lit(salt)), F.lit(n_buckets)).cast("int")
+def bucket_col(key: Column, n_buckets: int) -> Column:
+    """Deterministic hash bucket: pmod(xxhash64(key, 0), n)."""
+    return F.pmod(F.xxhash64(key, F.lit(0)), F.lit(n_buckets)).cast("int")
 
 
-def salted_repartition(
-    df: DataFrame,
-    num_partitions: int,
-    *keys: str,
-    salt: int = 0,
-) -> DataFrame:
-    """Repartition on a salted hash of ``keys`` (turn-level by default)."""
+def salted_repartition(df: DataFrame, num_partitions: int, *keys: str) -> DataFrame:
+    """Repartition on a hash of ``keys`` (turn-level by default)."""
     cols = [F.col(k) for k in keys] or [F.col("conv_id"), F.col("turn_idx")]
-    return df.repartition(num_partitions, F.xxhash64(*cols, F.lit(salt)))
+    return df.repartition(num_partitions, F.xxhash64(*cols, F.lit(0)))
 
 
 def byte_balanced_partitions(df: DataFrame) -> int:

@@ -46,11 +46,12 @@ EXTRACTED_TURNS_SCHEMA = T.StructType(
     ]
 )
 
-# Per-partition checkpoint/lineage rows (north rule: partition id, input
-# snapshot, rows processed, extraction metrics).
+# Per-partition checkpoint/lineage rows (north rule: partition id, bucket
+# layout, input snapshot, rows processed, extraction metrics).
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("partition_id", T.IntegerType(), False),
+        T.StructField("n_buckets", T.IntegerType(), False),
         T.StructField("input_snapshot", T.StringType(), False),
         T.StructField("run_id", T.StringType(), False),
         T.StructField("rows_in", T.LongType(), False),

@@ -1,9 +1,12 @@
-"""SparkSession factory tuned for this engine.
+"""The engine's one SparkSession factory: every entry point gets its session
+from ``get_spark``, which alone decides the Spark configuration and how the
+package reaches the python workers.
 
-Local-mode testing runs on ``local[N]`` (single JVM); the same configs are the
-right defaults on a real cluster: AQE on (runtime skew-join splitting +
-partition coalescing), Arrow transport for every pandas UDF, UTC session time
-zone (duckdb-oracle comparability), shuffle partitions sized to parallelism
+Every session gets ``ENGINE_CONF``: AQE on (runtime skew-join splitting +
+partition coalescing), Arrow transport, UTC session time zone
+(duckdb-oracle comparability). Under spark-submit, master and sizing are
+spark-submit's; otherwise the session is ``local[host_cpus()]`` with a heap
+of ``driver_memory()``, no UI, and shuffle partitions sized to the cores
 rather than the 200 default.
 """
 
@@ -13,7 +16,25 @@ import os
 import tempfile
 import zipfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+ZIP_NAME = "article_extraction_spark.zip"
+
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # keep python workers warm so per-worker module caches (extractors,
+    # tokenizers) amortize — the Spark analog of the reference's lru_cache
+    # model caching (reference models/llm.py:43-44)
+    "spark.python.worker.reuse": "true",
+    # binary/text payloads can be large; raise Arrow batch sanity limit
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+}
 
 
 def make_pyfiles_zip(dest: str | None = None) -> str:
@@ -22,18 +43,25 @@ def make_pyfiles_zip(dest: str | None = None) -> str:
     The north rule's deployment contract: the engine ships itself to every
     python worker; nothing relies on a shared filesystem or driver cwd.
     """
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
     if dest is None:
-        dest = os.path.join(tempfile.gettempdir(), "article_extraction_spark.zip")
+        dest = os.path.join(tempfile.gettempdir(), ZIP_NAME)
     with zipfile.ZipFile(dest, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
+        for root, _dirs, files in os.walk(PKG_DIR):
             for name in files:
                 if not name.endswith(".py"):
                     continue
                 full = os.path.join(root, name)
-                rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                rel = os.path.relpath(full, os.path.dirname(PKG_DIR))
                 zf.write(full, rel)
     return dest
+
+
+def ship_package(sc: SparkContext) -> None:
+    """Add this package to the python workers of ``sc``, once per
+    SparkContext. A package imported from a zip came in with ``--py-files``
+    and is already on every worker's path, so nothing is shipped."""
+    if os.path.isdir(PKG_DIR) and ZIP_NAME not in sc._python_includes:
+        sc.addPyFile(make_pyfiles_zip())
 
 
 def host_cpus() -> int:
@@ -74,42 +102,30 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's standard configs.
+    """Build (or fetch) a SparkSession with the engine's configs, and ship
+    the package to its python workers. Under spark-submit only explicit
+    arguments are added to ``ENGINE_CONF``."""
+    conf = dict(ENGINE_CONF)
+    # spark-submit hands the Python driver its running JVM through this
+    # variable, so the check starts no JVM of its own
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        cpus = host_cpus()
+        if master is None:
+            master = f"local[{cpus}]"
+        if shuffle_partitions is None:
+            # local[N] → N; local[*] → cpu count
+            inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
+            shuffle_partitions = cpus if inner == "*" else int(inner)
+        conf["spark.ui.enabled"] = "false"
+        conf["spark.driver.memory"] = driver_memory()
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
 
-    ``master`` defaults to ``local[host_cpus()]`` and the driver heap to
-    ``driver_memory()``. ``shuffle_partitions`` defaults to the local core
-    count — on a real cluster you would size this to ~2-3x total executor
-    cores instead.
-    """
-    cpus = host_cpus()
-    if master is None:
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # local[N] → N; local[*] → cpu count
-        inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
-        shuffle_partitions = cpus if inner == "*" else int(inner)
-
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # keep python workers warm so per-worker module caches (extractors,
-        # tokenizers) amortize — the Spark analog of the reference's lru_cache
-        # model caching (reference models/llm.py:43-44)
-        .config("spark.python.worker.reuse", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", driver_memory())
-        # binary/text payloads can be large; raise Arrow batch sanity limit
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-    )
-    for k, v in (extra_conf or {}).items():
+    builder = SparkSession.builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
+    for k, v in {**conf, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # ship the engine to python workers (programmatic --py-files); idempotent
-    spark.sparkContext.addPyFile(make_pyfiles_zip())
+    ship_package(spark.sparkContext)
     return spark

@@ -5,8 +5,7 @@ the host's core count). Prints ONE JSON line:
 
 Every query is forced end-to-end through the noop sink (full computation, no
 collect overhead). The flagship extraction stage also reports turns/sec —
-the BASELINE.json metric. Scaling-efficiency evidence (local[8] vs
-local[32]) is produced by tools/bench_scaling.py and recorded in BASELINE.md.
+the BASELINE.json metric.
 
 The JSON carries two timing blocks: "queries" (min-of-3, first pass — has
 session-warmup and host-contention noise baked into round-over-round
@@ -55,7 +54,7 @@ def main() -> None:
     n_turns = transcripts.count()  # materialize input outside the timed span
 
     # min of N iterations: the shared sandbox host fluctuates ±4x; min is
-    # the standard noise-robust estimator (matches tools/bench_scaling.py)
+    # the standard noise-robust estimator
     iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITER", "3"))
     times = []
     for _ in range(iters):

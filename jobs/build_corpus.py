@@ -22,6 +22,8 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from article_extraction_spark.session import get_spark
+
 
 def build_corpus(
     spark: SparkSession,
@@ -37,7 +39,6 @@ def build_corpus(
     from article_extraction_spark.extraction.enrich import informations_from_epoch
     from article_extraction_spark.functions.urls import solve_url_col
     from article_extraction_spark.operators.split import deterministic_split
-    from article_extraction_spark.pipeline.checkpoint import resume_missing_turns
     from article_extraction_spark.sinks import create_or_replace, variant_table_path
     from article_extraction_spark.sources import (
         fetch_documents,
@@ -113,7 +114,7 @@ def main() -> None:  # pragma: no cover - CLI wrapper
     ap.add_argument("--country-csv", required=True)
     ap.add_argument("--out", required=True)
     args = ap.parse_args()
-    spark = SparkSession.builder.appName("build-corpus").getOrCreate()
+    spark = get_spark(app_name="build-corpus")
     print(build_corpus(spark, args.epoch_csv, args.hardware_csv, args.country_csv, args.out))
 
 

@@ -31,6 +31,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from article_extraction_spark.session import get_spark
+
 
 def curate_corpus(
     spark: SparkSession,
@@ -321,17 +323,7 @@ def main() -> None:
                          "run's survivors (off by default)")
     args = ap.parse_args()
 
-    # build the session BEFORE importing engine modules: under spark-submit
-    # the --py-files zip lands on the driver's sys.path only once the
-    # SparkContext starts (same pattern as jobs/extract_bench.py)
-    spark = (
-        SparkSession.builder.appName("curate_corpus")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.python.worker.reuse", "true")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="curate_corpus")
     spark.sparkContext.setLogLevel("ERROR")
     docs = spark.read.parquet(args.docs)
     benchmark = docs.where(F.col("doc_id") < args.benchmark_ids)

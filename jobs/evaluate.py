@@ -15,7 +15,13 @@ from __future__ import annotations
 import argparse
 import json
 
-from pyspark.sql import SparkSession
+from article_extraction_spark.eval_metrics import (
+    cumulative_mean_by,
+    evaluate,
+    summarize,
+    write_summary_upsert,
+)
+from article_extraction_spark.session import get_spark
 
 
 def main() -> None:
@@ -24,20 +30,8 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("evaluate")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="evaluate")
     spark.sparkContext.setLogLevel("WARN")
-
-    from article_extraction_spark.eval_metrics import (
-        cumulative_mean_by,
-        evaluate,
-        summarize,
-        write_summary_upsert,
-    )
 
     preds = spark.read.parquet(args.predictions)
     scored = evaluate(preds)

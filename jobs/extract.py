@@ -2,7 +2,7 @@
 
   spark-submit --master <cluster> --py-files article_extraction_spark.zip \
       jobs/extract.py --input /path/transcripts --output /path/dest \
-      [--n-buckets 4096] [--run-id r7] [--salt 0]
+      [--n-buckets 4096] [--run-id r7]
 
 Reads the transcripts table (parquet directory here; Iceberg on a cluster
 with the jars — identical plan), runs the convert_to_txt pipeline with
@@ -15,7 +15,8 @@ from __future__ import annotations
 import argparse
 import json
 
-from pyspark.sql import SparkSession
+from article_extraction_spark.pipeline.checkpoint import input_snapshot_id, run_with_checkpoint
+from article_extraction_spark.session import get_spark
 
 
 def main() -> None:
@@ -24,23 +25,11 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--run-id", default="run-0")
-    ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--num-partitions", type=int, default=None)
     args = ap.parse_args()
 
-    builder = (
-        SparkSession.builder.appName("extract-transcripts")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.python.worker.reuse", "true")
-    )
-    spark = builder.getOrCreate()
+    spark = get_spark(app_name="extract-transcripts")
     spark.sparkContext.setLogLevel("WARN")
-
-    from article_extraction_spark.pipeline.checkpoint import input_snapshot_id, run_with_checkpoint
 
     transcripts = spark.read.parquet(args.input)
     snapshot = input_snapshot_id(spark, args.input)
@@ -51,7 +40,6 @@ def main() -> None:
         n_buckets=args.n_buckets,
         run_id=args.run_id,
         input_snapshot=snapshot,
-        salt=args.salt,
         num_partitions=args.num_partitions,
     )
     print(json.dumps({"input_snapshot": snapshot, **stats}))

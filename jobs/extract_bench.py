@@ -15,7 +15,12 @@ import os
 import tempfile
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from article_extraction_spark.extract.udfs import extract_stage
+from article_extraction_spark.fixtures.synth import amplified_transcripts
+from article_extraction_spark.pipeline import convert_transcripts
+from article_extraction_spark.session import get_spark
 
 
 def main() -> None:
@@ -26,16 +31,7 @@ def main() -> None:
     ap.add_argument("--iterations", type=int, default=3)
     args = ap.parse_args()
 
-    builder = (
-        SparkSession.builder.appName("extract-bench")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.python.worker.reuse", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.ui.enabled", "false")
-    )
-    spark = builder.getOrCreate()
+    spark = get_spark(app_name="extract-bench")
     spark.sparkContext.setLogLevel("ERROR")
     master = spark.sparkContext.master
     cores = spark.sparkContext.defaultParallelism
@@ -43,10 +39,6 @@ def main() -> None:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
     else:
         spark.conf.set("spark.sql.shuffle.partitions", str(cores))
-
-    # imports resolve from --py-files on every worker
-    from article_extraction_spark.fixtures.synth import amplified_transcripts
-    from article_extraction_spark.pipeline import convert_transcripts
 
     # materialize the corpus as compressed parquet (the production input
     # shape — columnar scan, not an uncompressed in-memory cache whose
@@ -63,10 +55,6 @@ def main() -> None:
 
     # warm the python workers (imports of pandas/pyarrow/the engine zip)
     # outside the timed span — we measure steady-state throughput
-    from pyspark.sql import functions as F
-
-    from article_extraction_spark.extract.udfs import extract_stage
-
     extract_stage(
         spark.range(cores * 2).select(
             F.lit("html").alias("doc_kind"), F.lit("<p>warm</p>").alias("text")

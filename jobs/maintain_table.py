@@ -37,10 +37,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-# NOTE: engine imports happen inside maintain()/main() AFTER the
-# SparkSession exists — the --py-files zip lands on the driver's sys.path
-# only once the SparkContext starts (jobs/curate_corpus.py convention;
-# review r6: a module-level import broke the documented deployment)
+from article_extraction_spark.catalog import CommitConflict, ManifestTable  # noqa: E402
+from article_extraction_spark.session import get_spark  # noqa: E402
 
 
 def maintain(
@@ -58,8 +56,6 @@ def maintain(
     """Run the maintenance ladder; returns one report dict per step. A
     table with no snapshots yet (cron fired before first ingest) reports
     and exits instead of crashing — maintenance is never fatal."""
-    from article_extraction_spark.catalog import CommitConflict
-
     out: list[dict] = []
     snaps = table.snapshots()
     if not snaps:
@@ -155,9 +151,7 @@ def main() -> None:
     ap.add_argument("--dry-run", action="store_true")
     args = ap.parse_args()
 
-    spark = SparkSession.builder.appName("maintain-table").getOrCreate()
-    from article_extraction_spark.catalog import ManifestTable
-
+    spark = get_spark(app_name="maintain-table")
     table = ManifestTable(args.table)
     reports = maintain(
         spark,

@@ -2,11 +2,7 @@
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo/jobs")
 
 HARDWARE_CSV = """Hardware name,Max performance,TDP (W)
 NVIDIA A100,312,400
@@ -42,7 +38,7 @@ def _write(tmp_path, name, content):
 
 
 def test_build_corpus_end_to_end(spark, tmp_path):
-    from build_corpus import build_corpus
+    from jobs.build_corpus import build_corpus
 
     from article_extraction_spark.sources import load_country_csv, load_hardware_csv
 

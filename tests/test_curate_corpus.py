@@ -7,10 +7,7 @@ from pyspark.sql import functions as F
 
 
 def test_curate_corpus_end_to_end(spark, tmp_path):
-    import sys
-
-    sys.path.insert(0, "/root/repo/jobs")
-    from curate_corpus import curate_corpus
+    from jobs.curate_corpus import curate_corpus
 
     # gopher gate: ≥50 words, mean word length in [3, 10], ≥2 stopword hits
     # every trigram contains a stem-unique token, so distinct stems share NO
@@ -54,10 +51,7 @@ def test_curate_corpus_optional_stages(spark, tmp_path):
     """Round 3: boilerplate stripping + LM-score floor as opt-in stages.
     The banner line repeats across all docs and must be gone from the
     curated text; the LM floor drops the out-of-domain doc."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/jobs")
-    from curate_corpus import curate_corpus
+    from jobs.curate_corpus import curate_corpus
 
     def doc(prefix: str, stem: str) -> str:
         body = " ".join(f"{stem}{i:02d} the {stem}x{i:02d}" for i in range(20))
@@ -148,10 +142,7 @@ def test_funnel_substring_dedup_stage(spark, tmp_path):
     """Opt-in stage 3b: a doc that is MOSTLY a repeated passage drops
     wholesale; partial repeats get their spans stripped keep-first; the
     stage is absent (and stats key missing) by default."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/jobs")
-    from curate_corpus import curate_corpus
+    from jobs.curate_corpus import curate_corpus
 
     passage = (
         "this exact licensing paragraph is repeated verbatim across many "

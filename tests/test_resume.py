@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from article_extraction_spark.fixtures.synth import synth_transcripts, transcripts_df
@@ -107,7 +108,7 @@ def test_new_input_snapshot_reprocesses_buckets(spark, tmp_path):
     assert stats["resumed_from"] == 0
     from article_extraction_spark.pipeline.partitioning import bucket_col
 
-    n_nonempty = tdf2.select(bucket_col(F.col("conv_id"), 4, 0).alias("b")).distinct().count()
+    n_nonempty = tdf2.select(bucket_col(F.col("conv_id"), 4).alias("b")).distinct().count()
     assert stats["buckets_processed"] == n_nonempty
     # dynamic partition overwrite keeps the output exactly = full input's
     # non-empty extractions (golden), including rows added after run 1
@@ -116,6 +117,25 @@ def test_new_input_snapshot_reprocesses_buckets(spark, tmp_path):
     # re-run at the SAME snapshot is still a no-op
     stats3 = run_with_checkpoint(spark, tdf2, dest, n_buckets=4, run_id="r3", input_snapshot="s2")
     assert stats3["buckets_processed"] == 0
+
+
+def test_resume_refuses_a_different_bucket_layout(spark, tmp_path):
+    """Bucket ids of one n_buckets name other conversations under another:
+    resuming 4 buckets as 8 would skip new buckets 0-3 as done and write
+    4-7 again, duplicating their rows. The resume is refused instead."""
+    rows, golden = synth_transcripts(n_convs=50, turns_per_conv=10, seed=13, mega_conv=False)
+    tdf = transcripts_df(spark, rows)
+    dest = str(tmp_path / "out")
+    run_with_checkpoint(spark, tdf, dest, n_buckets=4, run_id="r1", input_snapshot="s1")
+    before = _snapshot(read_turns(spark, dest))
+
+    with pytest.raises(ValueError, match=r"n_buckets=4.*n_buckets=8"):
+        run_with_checkpoint(spark, tdf, dest, n_buckets=8, run_id="r2", input_snapshot="s1")
+
+    after = read_turns(spark, dest)
+    assert after.count() == after.select("conv_id", "turn_idx").distinct().count() == len(golden)
+    assert _snapshot(after) == before
+    assert {r["n_buckets"] for r in read_lineage(spark, dest).collect()} == {4}
 
 
 def test_row_granular_anti_join_resume(spark):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from article_extraction_spark import session
 
 
@@ -21,3 +23,23 @@ def test_driver_memory_is_half_of_memtotal_with_env_override(monkeypatch, tmp_pa
     assert session.driver_memory() == "8046m"
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "6g")
     assert session.driver_memory() == "6g"
+
+
+def test_sessions_built_in_one_module():
+    """Every entry point gets its session from ``session.get_spark``: no
+    engine module, job, tool, bench or driver file builds its own."""
+    root = Path(__file__).resolve().parent.parent
+    sources = [
+        *(root / "article_extraction_spark").rglob("*.py"),
+        *(root / "jobs").rglob("*.py"),
+        *(root / "tools").rglob("*.py"),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+    ]
+    factory = root / "article_extraction_spark" / "session.py"
+    offenders = [
+        str(p.relative_to(root))
+        for p in sources
+        if p != factory and "SparkSession.builder" in p.read_text()
+    ]
+    assert offenders == []

@@ -1,8 +1,9 @@
 """Two-cluster-size scaling evidence (north rule, sandbox proxy):
 
-Runs jobs/extract_bench.py via spark-submit --py-files at local[8] and
-local[32] on the same input, reports throughput at both and efficiency
-= (throughput@32 / throughput@8) / 4. Writes BENCH_scaling.json.
+Runs jobs/extract_bench.py via spark-submit --py-files at local[N/4] and
+local[N] (N = host_cpus()) on the same input, reports throughput at both and
+efficiency = (throughput@N / throughput@N/4) / 4. Writes BENCH_scaling.json
+at the checkout root.
 
 Usage: python tools/bench_scaling.py [--reps 40] [--sf-dir /root/testdata/sf0.1]
 """
@@ -13,11 +14,13 @@ import argparse
 import json
 import shutil
 import subprocess
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from article_extraction_spark.session import make_pyfiles_zip  # noqa: E402
+from article_extraction_spark.session import host_cpus, make_pyfiles_zip  # noqa: E402
 
 
 def run_once(cores: int, sf_dir: str, reps: int, zip_path: str, iterations: int) -> dict:
@@ -32,9 +35,8 @@ def run_once(cores: int, sf_dir: str, reps: int, zip_path: str, iterations: int)
         "taskset", "-c", f"0-{cores - 1}",
         spark_submit,
         "--master", f"local[{cores}]",
-        "--conf", "spark.driver.memory=24g",
         "--py-files", zip_path,
-        "/root/repo/jobs/extract_bench.py",
+        os.path.join(ROOT, "jobs", "extract_bench.py"),
         "--sf-dir", sf_dir,
         "--reps", str(reps),
         "--iterations", str(iterations),
@@ -51,15 +53,15 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--reps", type=int, default=40)
-    ap.add_argument("--small", type=int, default=8)
-    ap.add_argument("--large", type=int, default=32)
+    ap.add_argument("--small", type=int, default=max(1, host_cpus() // 4))
+    ap.add_argument("--large", type=int, default=host_cpus())
     ap.add_argument("--iterations", type=int, default=7,
                     help="timed iterations per size; min-of-K (ADVICE r2: "
                          "3 samples under +-20%% host noise cannot support "
                          "a point estimate)")
     args = ap.parse_args()
 
-    zip_path = make_pyfiles_zip("/tmp/article_extraction_spark.zip")
+    zip_path = make_pyfiles_zip()
     r_small = run_once(args.small, args.sf_dir, args.reps, zip_path, args.iterations)
     print(f"local[{args.small}]: {r_small}")
     r_large = run_once(args.large, args.sf_dir, args.reps, zip_path, args.iterations)
@@ -95,7 +97,7 @@ def main() -> None:
         ),
     }
     print(json.dumps(result))
-    with open("/root/repo/BENCH_scaling.json", "w") as f:
+    with open(os.path.join(ROOT, "BENCH_scaling.json"), "w") as f:
         json.dump(result, f, indent=2)
 
 

@@ -4,9 +4,11 @@ tests/test_plans.py asserts the same properties mechanically)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -306,7 +308,7 @@ def main() -> None:
     out = ["# PLANS — physical-plan evidence (generated by tools/dump_plans.py)\n"]
     for title, note, plan in sections:
         out.append(f"## {title}\n\n{note}\n\n```\n{plan.strip()}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 
