@@ -1336,12 +1336,10 @@ def q_pdf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF LAYOUT analysis (north rule: column detection, reading-order
     sort, header/footer removal), value-oracled: 20 deterministic two-page
     PDFs — page 1 is two-column positioned text, page 2 carries a running
-    header/footer that must be stripped — go through the Arrow-batched
-    layout kernel; the oracle derives the expected reading-order text from
-    the same id formula in pure SQL."""
-    from pyspark.sql import types as T
-
-    from article_extraction_spark.extract.pdf_layout import pdf_layout_extract_fn
+    header/footer that must be stripped — go through the one extraction
+    stage with pdf_mode="layout"; the oracle derives the expected
+    reading-order text from the same id formula in pure SQL."""
+    from article_extraction_spark.extract.udfs import extract_stage
     from article_extraction_spark.fixtures.synth import make_layout_pdf_bytes
 
     rows = []
@@ -1357,12 +1355,10 @@ def q_pdf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows.append((i, bytearray(pdf)))
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
-
-    def _kernel(p):
-        return p.map(pdf_layout_extract_fn)
-
-    layout_udf = F.pandas_udf(_kernel, T.StringType())
-    return df.select("doc_id", layout_udf("payload").alias("text"))
+    return extract_stage(
+        df.select("doc_id", F.lit("pdf").alias("doc_kind"), F.col("payload").alias("text")),
+        pdf_mode="layout",
+    ).select("doc_id", F.col("extracted_text").alias("text"))
 
 
 def q_collapse_lines(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,15 +1,15 @@
 """The convert_to_txt stage as a Spark plan (reference
 tables/paper_text_table.py:113-168, re-expressed declaratively).
 
-Plan shape (all lazily composed; Catalyst prunes/pushes down):
+Plan shape, one straight chain (all lazily composed; Catalyst prunes and
+pushes down):
 
   scan transcripts
-    → classify payload kind (native expressions, codegen'd)
-    → salted repartition sized by byte volume (skew handling)
-    → extract_stage: one mapInArrow over the html/pdf rows (text + spans);
-      txt/json stay JVM-side
-    → drop empty extractions (reference :153-155)
-    → diagnostics columns
+    → one projection: classify payload kind (native expressions,
+      codegen'd) and n_source_bytes
+    → salted repartition of every row, sized by byte volume (skew handling)
+    → extract_stage: one mapInArrow over every row (text + spans)
+    → n_extracted_chars, then drop empty extractions (reference :153-155)
 
 Stable ``(conv_id, turn_idx)`` ordering is a property of *consumption*, not
 storage: ordered_output() range-partitions + sorts for export; equality
@@ -38,7 +38,7 @@ def convert_transcripts(
     extracted_text, spans, n_source_bytes, n_extracted_chars), plus
     readability_text and link_density with ``with_readability``.
 
-    The html/pdf rows are salted-repartitioned on (conv_id, turn_idx) before
+    Every row is salted-repartitioned on (conv_id, turn_idx) before
     extraction, so a source partitioned by conv_id (Iceberg bucket(conv_id)
     tables, the 10^12-turn deployment) can't straggle one task on a
     mega-conversation.
@@ -51,60 +51,24 @@ def convert_transcripts(
     if num_partitions is None:
         num_partitions = byte_balanced_partitions(transcripts)
 
+    # n_source_bytes is computed JVM-side before the stage and passes
+    # through it untouched
     classified = transcripts.select(
         "conv_id",
         "turn_idx",
-        "text",
         classify_payload_col(F.col("text")).alias("doc_kind"),
+        F.octet_length("text").cast("long").alias("n_source_bytes"),
+        "text",
     )
-    base = ["conv_id", "turn_idx", "doc_kind"]
-    src_bytes = F.octet_length("text").cast("long").alias("n_source_bytes")
-    rd_cols = {"readability_text": "string", "link_density": "double"} if with_readability else {}
-
-    # Only html/pdf genuinely need the Python kernel. txt/json are IDENTITY
-    # transforms on parquet strings (parquet strings are valid UTF-8, so
-    # decode('utf-8','ignore') — reference paper_text_table.py:91-104 — is a
-    # no-op), and routing them through Arrow would ship the full payload to
-    # Python and back: measured serialization-bound and ANTI-scaling with
-    # worker count. Native path keeps them JVM-side, byte-identical.
-    needs_py = classified.where(F.col("doc_kind").isin("html", "pdf"))
-    passthrough = classified.where(~F.col("doc_kind").isin("html", "pdf"))
-
-    # salt-repartition ONLY the Python-bound branch: that's where task
-    # imbalance hurts (per-row parse cost), and shuffling just html/pdf
-    # payloads instead of the whole corpus cuts shuffle bytes ~3× — the
-    # shuffle is bandwidth-bound, i.e. a fixed cost that does not
-    # parallelize away. The native branch is uniform per-row cheap.
-    needs_py = salted_repartition(needs_py, num_partitions, "conv_id", "turn_idx")
-
-    # n_source_bytes is computed JVM-side BEFORE the stage and passes
-    # through untouched
-    py_out = extract_stage(
-        needs_py.select("conv_id", "turn_idx", "doc_kind", src_bytes, "text"),
+    rd_cols = ["readability_text", "link_density"] if with_readability else []
+    extracted = extract_stage(
+        salted_repartition(classified, num_partitions, "conv_id", "turn_idx"),
         pdf_mode=pdf_mode,
         with_readability=with_readability,
-    ).select(*base, "extracted_text", "spans", "extract_error", "n_source_bytes", *rd_cols)
-
-    txt = F.coalesce(F.col("text"), F.lit(""))
-    native_text = F.when(F.col("doc_kind").isin("txt", "json"), txt).otherwise(F.lit(""))
-    native_spans = F.when(
-        F.col("doc_kind").isin("txt", "json") & (F.length(txt) > 0),
-        F.array(F.struct(F.lit(0).alias("start"), F.length(txt).alias("end"))),
-    ).otherwise(F.array().cast("array<struct<start:int,end:int>>"))
-    nat_out = passthrough.select(
-        *base,
-        native_text.alias("extracted_text"),
-        native_spans.alias("spans"),
-        F.lit(None).cast("string").alias("extract_error"),
-        src_bytes,
-        # readability diagnostics are html-only: null on the native branch
-        *(F.lit(None).cast(t).alias(c) for c, t in rd_cols.items()),
-    )
-
-    extracted = py_out.unionByName(nat_out)
-
-    extracted = extracted.withColumn(
-        "n_extracted_chars", F.length("extracted_text").cast("long")
+    ).select(
+        "conv_id", "turn_idx", "doc_kind", "extracted_text", "spans", "extract_error",
+        "n_source_bytes", *rd_cols,
+        F.length("extracted_text").cast("long").alias("n_extracted_chars"),
     )
     if drop_empty:
         # empty conversions are dropped (reference paper_text_table.py:153-155);

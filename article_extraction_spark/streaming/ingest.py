@@ -36,9 +36,7 @@ def streaming_extract(spark: SparkSession, input_dir: str) -> DataFrame:
         "text",
         classify_payload_col(F.col("text")).alias("doc_kind"),
     )
-    # every row goes through the one stage: splitting txt/json off onto the
-    # native path (as the batch plan does) would scan each micro-batch twice
-    # and double its tasks, which costs more than it saves at trigger scale
+    # every row goes through the one stage, as in the batch plan
     extracted = extract_stage(classified).select(
         "conv_id", "turn_idx", "ts", "doc_kind", "extracted_text", "spans"
     )

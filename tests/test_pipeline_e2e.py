@@ -45,12 +45,11 @@ def test_mega_conversation_skew_completes_and_spreads(spark):
     rows, golden = synth_transcripts(n_convs=5, turns_per_conv=10, seed=13, mega_conv=True)
     tdf = transcripts_df(spark, rows)
     out = convert_transcripts(tdf, num_partitions=8)
-    # turn-level salting must spread the mega-conv's EXPENSIVE (python-
-    # kernel) rows across all salted partitions; txt/json rows take the
-    # native no-shuffle path and keep source partitioning by design
+    # turn-level salting must spread the mega-conv's turns of every kind
+    # across all salted partitions
     per_part = (
         out.withColumn("pid", F.spark_partition_id())
-        .where(F.col("conv_id").endswith("-mega") & F.col("doc_kind").isin("html", "pdf"))
+        .where(F.col("conv_id").endswith("-mega"))
         .groupBy("pid")
         .count()
         .collect()
@@ -70,7 +69,7 @@ def test_with_readability_columns(spark):
     out = {r["turn_idx"]: r for r in convert_transcripts(tdf, num_partitions=2, with_readability=True).collect()}
     assert "main body text" in out[0]["readability_text"]
     assert out[0]["link_density"] == 0.0
-    assert out[1]["readability_text"] is None  # native branch: diagnostics null
+    assert out[1]["readability_text"] is None  # diagnostics are html-only
     # baseline extraction unchanged
     assert out[0]["extracted_text"].startswith("main body text")
 

@@ -63,16 +63,19 @@ def _assert_one_extraction_stage(plan: str) -> None:
     ids=["simple", "layout", "readability"],
 )
 def test_convert_has_one_extraction_stage(spark, mode):
-    """Every convert mode runs the html/pdf branch through the one Arrow
-    extraction stage; txt/json stay JVM-side (the anti-scaling fix —
-    convert.py routing), unioned in as a pure projection."""
+    """Every convert mode is one straight chain: one scan, one classify
+    evaluation (``JVBERi0`` is its pdf marker, as benchmark/layers.py
+    counts it), no union, and every row through the one Arrow extraction
+    stage."""
     from article_extraction_spark.pipeline.convert import convert_transcripts
     from article_extraction_spark.schemas import TRANSCRIPTS_SCHEMA
 
     t = spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
     plan = _plan(convert_transcripts(t, num_partitions=2, **mode))
     _assert_one_extraction_stage(plan)
-    assert "Union" in plan
+    assert plan.count("Scan") == 1, plan
+    assert plan.count("JVBERi0") == 1, plan
+    assert "Union" not in plan, plan
 
 
 def test_streaming_extract_has_one_extraction_stage(spark, tmp_path):
@@ -84,10 +87,11 @@ def test_streaming_extract_has_one_extraction_stage(spark, tmp_path):
     _assert_one_extraction_stage(_explain(streaming_extract(spark, src)))
 
 
-def test_q_convert_html_has_one_extraction_stage(spark):
+@pytest.mark.parametrize("query", ["convert_html", "pdf_layout"])
+def test_driver_query_has_one_extraction_stage(spark, query):
     import __spark_entry__ as E
 
-    _assert_one_extraction_stage(_plan(E.q_convert_html(spark, SF)))
+    _assert_one_extraction_stage(_plan(getattr(E, f"q_{query}")(spark, SF)))
 
 
 def _round_robins_above_scans(df, table: str) -> list[int]:

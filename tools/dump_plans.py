@@ -79,9 +79,9 @@ def main() -> None:
     sections.append(
         (
             "convert_to_txt pipeline",
-            "Exactly ONE MapInArrow — the extraction stage — on the html/pdf "
-            "branch, AFTER the salted exchange, and no ArrowEvalPython; the "
-            "txt/json branch is a pure JVM projection unioned in. The "
+            "One straight chain: ONE scan, one classify projection, the "
+            "salted exchange of every row, then exactly ONE MapInArrow — the "
+            "extraction stage — and no ArrowEvalPython or Union. The "
             "drop-empty filter reads a column the stage produces, so it stays "
             "above the stage.",
             plan_str(convert_transcripts(t, num_partitions=4)),
