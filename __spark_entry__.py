@@ -51,7 +51,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     ship_package(spark.sparkContext)
     t = transcripts_from_documents(spark, "/root/testdata/sf0.001", convs=50)
-    return ordered_output(convert_transcripts(t, num_partitions=8), 8)
+    return ordered_output(convert_transcripts(t))
 
 
 # ---------------------------------------------------------------------------
@@ -1179,7 +1179,13 @@ def q_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.upper(F.col("text")), F.lit("!!!")).alias("text"),
     )
     corpus = docs.unionByName(copies).unionByName(shouty)
-    return exact_duplicates(corpus, "doc_id", "text")
+    # ids as one comma-joined string (already numerically sorted): a list
+    # column cannot be hashed by a row-canonicalizing comparator
+    return exact_duplicates(corpus, "doc_id", "text").select(
+        "fingerprint",
+        "n_dups",
+        F.concat_ws(",", F.col("doc_ids").cast("array<string>")).alias("doc_ids"),
+    )
 
 
 def q_pack_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4198,7 +4204,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT md5(trim(regexp_replace(regexp_replace(lower(coalesce(text, '')),
                        '[^a-z0-9]+', ' ', 'g'), '\\s+', ' ', 'g'))) AS fingerprint,
                    count(*) AS n_dups,
-                   list_sort(list(doc_id)) AS doc_ids
+                   array_to_string(list_sort(list(doc_id)), ',') AS doc_ids
             FROM corpus GROUP BY 1 HAVING count(*) > 1
         """,
         "jpeg_decode": """

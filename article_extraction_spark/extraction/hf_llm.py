@@ -256,12 +256,3 @@ def make_hf_extractor(model_id: str = DEFAULT_MODEL_ID, **kwargs):
         return hf_extract_fn(text, field, model_id=model_id, **kwargs)
 
     return _extract
-
-
-def register_hf_extractor(name: str = "hf", model_id: str = DEFAULT_MODEL_ID, **kwargs) -> None:
-    """Plug the model-backed kernel into the E9 field fan-out: afterwards
-    ``extract_fields(df, text_col, extractor=name)`` runs the HF kernel with
-    one executor-cached model per worker."""
-    from .registry import register_extractor
-
-    register_extractor(name, make_hf_extractor(model_id, **kwargs))

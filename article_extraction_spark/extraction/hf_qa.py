@@ -233,15 +233,3 @@ def hf_qa_extract_fn(
     if not answers:
         return (text or "").strip()[:max_answer_chars]  # snippet fallback (:227-229)
     return aggregate_answers_py(answers, aggregator)
-
-
-def make_hf_qa_extractor(question_map: dict[str, str], model_id: str, **kwargs):
-    """Registry-compatible ExtractorFn: the closure captures only strings;
-    the model loads lazily per worker through torch_qa_backend's lru_cache."""
-
-    def _extract(text: str, field: str):
-        return hf_qa_extract_fn(
-            text, field, question_map=question_map, model_id=model_id, **kwargs
-        )
-
-    return _extract

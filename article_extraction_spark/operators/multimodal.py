@@ -11,8 +11,8 @@ zero-dependency fallback that keeps decode real in this container.
 Out-of-scope variants for the stdlib path (CMYK/arithmetic JPEG,
 16-bit/Adam7 PNG, FLAC, ...) also route to the native backend,
 surfacing a per-row decode_error when it is absent. Round 5: the generic
-extract_media_features kernel now runs the REAL decodes too (pooled
-pixel stats / RMS features via the same dispatchers); the digest vector
+feature stage (extract_media_features_arrow) runs the REAL decodes too
+(pooled pixel stats / RMS features via the same dispatchers); the digest vector
 survives only as the per-row fallback for payloads nothing can decode,
 labeled feature_src='digest'.
 """
@@ -66,9 +66,8 @@ def _digest_feature(payload, dim: int = 8) -> list[float]:
 
 
 def _feature_kernel(payloads, kinds, mimes, widths, heights):
-    """ONE shared per-payload kernel for the pandas and Arrow twins
-    (review r4: two hand-copied loops let the 'byte-identical' twins
-    drift). Round 5: features are REAL decoded statistics —
+    """The per-payload kernel of `extract_media_features_arrow`. Round 5:
+    features are REAL decoded statistics —
 
       * image → per-channel mean + std of the decoded pixels (6) plus
         log-scaled height/width (2), via `_decode_image` (native-first,
@@ -133,39 +132,11 @@ def _feature_kernel(payloads, kinds, mimes, widths, heights):
     return n_bytes, hashes, feats, srcs
 
 
-def extract_media_features(media: DataFrame, batch_note_col: bool = False) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads: REAL decoded
-    image/audio statistics via the shared `_feature_kernel`, digest
-    fallback for rows nothing can decode (labeled in feature_src)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_bytes, hashes, feats, srcs = _feature_kernel(
-                list(pdf["payload"]),
-                list(pdf["kind"]),
-                list(pdf["mime"]),
-                list(pdf["width"]),
-                list(pdf["height"]),
-            )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": n_bytes,
-                    "content_hash": hashes,
-                    "feature": feats,
-                    "feature_src": srcs,
-                }
-            )
-
-    return media.mapInPandas(op, schema=FEATURES_SCHEMA)
-
-
 def _binary_views(arr):
     """Zero-copy memoryviews into a pa.BinaryArray's data buffer (None for
-    null slots). Hashing/sizing then never materializes python bytes —
-    the point of the Arrow twin (review r5: the old `p.as_py()` loop made
-    the 'no materialization' docstring claim false)."""
+    null slots). Hashing/sizing then never materializes python bytes
+    (review r5: the old `p.as_py()` loop made the 'no materialization'
+    docstring claim false)."""
     import numpy as np
     import pyarrow as pa
 
@@ -185,13 +156,13 @@ def _binary_views(arr):
 
 
 def extract_media_features_arrow(media: DataFrame) -> DataFrame:
-    """Arrow-native twin of `extract_media_features` via ``mapInArrow``:
-    payload sizing + sha256 run over zero-copy memoryview slices of the
-    Arrow data buffer (`_binary_views`) — no per-row python-bytes
-    materialization for the hash path, which matters when payloads are
-    megabytes each; only rows that actually DECODE convert to ``bytes``
-    once inside the decoder. Output is identical to the pandas twin
-    (parity-tested); both call the one shared `_feature_kernel`."""
+    """Feature extraction over binary payloads via ``mapInArrow``: REAL
+    decoded image/audio statistics (`_feature_kernel`), digest fallback
+    for rows nothing can decode (labeled in feature_src). Payload sizing +
+    sha256 run over zero-copy memoryview slices of the Arrow data buffer
+    (`_binary_views`) — no per-row python-bytes materialization for the
+    hash path, which matters when payloads are megabytes each; only rows
+    that actually DECODE convert to ``bytes`` once inside the decoder."""
 
     def op(batches):
         import pyarrow as pa

@@ -7,13 +7,15 @@ pushes down):
   scan transcripts
     → one projection: classify payload kind (native expressions,
       codegen'd) and n_source_bytes
-    → salted repartition of every row, sized by byte volume (skew handling)
+    → salted repartition of every row (skew handling), in whole waves of
+      cores sized from the plan's size statistic (byte_balanced_partitions)
     → extract_stage: one mapInArrow over every row (text + spans)
     → n_extracted_chars, then drop empty extractions (reference :153-155)
 
 Stable ``(conv_id, turn_idx)`` ordering is a property of *consumption*, not
-storage: ordered_output() range-partitions + sorts for export; equality
-checks always join on the key pair (SURVEY.md §7.4 determinism note).
+storage: ordered_output() range-partitions + sorts for export, with AQE
+sizing that exchange; equality checks always join on the key pair
+(SURVEY.md §7.4 determinism note).
 """
 
 from __future__ import annotations
@@ -78,14 +80,15 @@ def convert_transcripts(
     return extracted
 
 
-def ordered_output(extracted: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def ordered_output(extracted: DataFrame) -> DataFrame:
     """Range-partition + sort for stable (conv_id, turn_idx) export order.
 
     A global orderBy would funnel through one post-shuffle sort of everything;
     repartitionByRange + sortWithinPartitions gives globally ordered output
-    files with the sort parallelized per range — the scalable form.
+    files with the sort parallelized per range — the scalable form. AQE
+    sizes the range exchange and merges only adjacent ranges, so the order
+    holds at any width.
     """
-    n = num_partitions or extracted.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    return extracted.repartitionByRange(int(n), "conv_id", "turn_idx").sortWithinPartitions(
+    return extracted.repartitionByRange("conv_id", "turn_idx").sortWithinPartitions(
         "conv_id", "turn_idx"
     )

@@ -59,7 +59,7 @@ def main() -> None:
     times = []
     for _ in range(iters):
         t0 = time.perf_counter()
-        _force(convert_transcripts(transcripts, num_partitions=cpus * 2))
+        _force(convert_transcripts(transcripts))
         times.append(time.perf_counter() - t0)
     dt = min(times)
     timings["extract_transcripts"] = round(dt, 3)
@@ -258,7 +258,7 @@ def main() -> None:
         runs = []
         for _ in range(5):
             t0 = time.perf_counter()
-            _force(convert_transcripts(transcripts, num_partitions=cpus * 2))
+            _force(convert_transcripts(transcripts))
             runs.append(time.perf_counter() - t0)
         warm_min5["extract_transcripts"] = round(min(runs), 3)
         warm_spread["extract_transcripts"] = round(max(runs) / min(runs), 2)

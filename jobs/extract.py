@@ -25,7 +25,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--run-id", default="run-0")
-    ap.add_argument("--num-partitions", type=int, default=None)
     args = ap.parse_args()
 
     spark = get_spark(app_name="extract-transcripts")
@@ -40,7 +39,6 @@ def main() -> None:
         n_buckets=args.n_buckets,
         run_id=args.run_id,
         input_snapshot=snapshot,
-        num_partitions=args.num_partitions,
     )
     print(json.dumps({"input_snapshot": snapshot, **stats}))
     spark.stop()

@@ -27,7 +27,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--reps", type=int, default=40)
-    ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--iterations", type=int, default=3)
     args = ap.parse_args()
 
@@ -35,10 +34,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     master = spark.sparkContext.master
     cores = spark.sparkContext.defaultParallelism
-    if args.shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
-    else:
-        spark.conf.set("spark.sql.shuffle.partitions", str(cores))
 
     # materialize the corpus as compressed parquet (the production input
     # shape — columnar scan, not an uncompressed in-memory cache whose
@@ -66,9 +61,7 @@ def main() -> None:
     times = []
     for _ in range(args.iterations):
         t0 = time.perf_counter()
-        convert_transcripts(transcripts, num_partitions=cores * 2).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        convert_transcripts(transcripts).write.format("noop").mode("overwrite").save()
         times.append(time.perf_counter() - t0)
     dt = min(times)
 

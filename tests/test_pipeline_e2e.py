@@ -35,7 +35,7 @@ def test_per_turn_equality_rate_is_one(spark):
 
 def test_stable_ordering(spark):
     rows, _ = synth_transcripts(n_convs=10, turns_per_conv=8, seed=7, mega_conv=False)
-    out = ordered_output(convert_transcripts(transcripts_df(spark, rows), num_partitions=4), 4)
+    out = ordered_output(convert_transcripts(transcripts_df(spark, rows), num_partitions=4))
     collected = out.select("conv_id", "turn_idx").collect()
     keys = [(r["conv_id"], r["turn_idx"]) for r in collected]
     assert keys == sorted(keys)

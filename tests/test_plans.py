@@ -144,7 +144,7 @@ def test_ordered_output_uses_range_partitioning(spark):
     from article_extraction_spark.schemas import EXTRACTED_TURNS_SCHEMA
 
     df = spark.createDataFrame([], EXTRACTED_TURNS_SCHEMA)
-    plan = _plan(ordered_output(df, 4))
+    plan = _plan(ordered_output(df))
     assert "rangepartitioning(conv_id" in plan
     assert "Sort [conv_id" in plan
     assert "], false, 0" in plan  # global=false: sort is within partitions

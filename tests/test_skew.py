@@ -7,6 +7,8 @@ inspected after execution."""
 
 from __future__ import annotations
 
+import ast
+import os
 from pathlib import Path
 
 import pytest
@@ -74,30 +76,36 @@ def test_salting_spreads_hot_conversation(skew_spark):
     assert max(sizes) < 2 * min(sizes), sizes
 
 
-def test_byte_balanced_partitions_sources(skew_spark, monkeypatch):
-    """Partition sizing prefers file metadata over a payload scan and clamps
-    to [MIN_PARTITIONS, MAX_PARTITIONS]; the module constants drive it."""
+def test_byte_balanced_partitions_sources(spark, monkeypatch):
+    """The extraction width is whole waves of cores, sized from the plan's
+    own size statistic: a small file scan and an in-memory frame (whose size
+    Spark does not know) each get one wave, and deciding starts no Spark
+    job. An input needing between one and two waves gets two; the
+    ``MAX_PARTITIONS`` cap still holds."""
     from article_extraction_spark.pipeline import partitioning as P
 
-    spark = skew_spark
-    # 1. file-backed input: sized from file metadata (scaled by the
-    #    compression assumption), no aggregate over the payload
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    monkeypatch.setattr(P, "TARGET_PARTITION_BYTES", 16 * 1024)
-    monkeypatch.setattr(P, "ASSUMED_COMPRESSION", 1.0)
-    lo = P.byte_balanced_partitions(docs)
-    monkeypatch.setattr(P, "ASSUMED_COMPRESSION", 8.0)
-    hi = P.byte_balanced_partitions(docs)
-    assert hi > lo >= 8  # responds to the metadata-scaling constant → metadata path taken
+    sc = spark.sparkContext
+    wave = sc.defaultParallelism
+    path = f"{SF}/documents.parquet"
+    docs = spark.read.parquet(path)
+    mem = spark.createDataFrame([("c", "y" * 200_000)], "conv_id string, text string")
+    group = "extraction-width-decision"
+    sc.setJobGroup(group, "byte_balanced_partitions on a scan and an in-memory frame")
+    try:
+        widths = [P.byte_balanced_partitions(docs), P.byte_balanced_partitions(mem)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert widths == [wave, wave]
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
-    # 2. in-memory input falls back to the exact column scan
-    big = spark.createDataFrame([("c", "y" * 200_000)], "conv_id string, text string")
-    monkeypatch.setattr(P, "TARGET_PARTITION_BYTES", 50_000)
-    assert P.byte_balanced_partitions(big) == 8  # min clamp
-    monkeypatch.setattr(P, "MIN_PARTITIONS", 1)
-    assert P.byte_balanced_partitions(big) == 5
-    monkeypatch.setattr(P, "MAX_PARTITIONS", 3)
-    assert P.byte_balanced_partitions(big) == 3  # max clamp
+    # the scan's statistic is its file size: a target that makes it need
+    # one and a half waves of tasks rounds up to two whole waves
+    payload = int(os.path.getsize(path) * P.ASSUMED_COMPRESSION)
+    monkeypatch.setattr(P, "TARGET_PARTITION_BYTES", payload // (wave + wave // 2))
+    assert P.byte_balanced_partitions(docs) == 2 * wave
+    monkeypatch.setattr(P, "MAX_PARTITIONS", wave + 1)
+    assert P.byte_balanced_partitions(docs) == wave + 1  # max clamp
 
 
 def test_fan_out_small_scan_starts_no_job(spark):
@@ -140,6 +148,42 @@ def test_partition_count_decided_in_one_module():
         for p in sources
         if p != policy and "getNumPartitions(" in p.read_text()
     ]
+    assert offenders == []
+
+
+def test_extraction_width_decided_in_one_place():
+    """Only ``byte_balanced_partitions`` sizes the extraction exchange: no
+    engine module, job, tool, driver query or bench pins a width on
+    ``convert_transcripts``/``run_with_checkpoint`` (forwarding the
+    caller's own ``num_partitions`` is allowed) or on ``ordered_output``,
+    whose range exchange AQE sizes."""
+    root = Path(__file__).resolve().parent.parent
+    sources = [
+        *(root / "article_extraction_spark").rglob("*.py"),
+        *(root / "jobs").rglob("*.py"),
+        *(root / "tools").rglob("*.py"),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+    ]
+    # positional args beyond these counts are widths
+    max_args = {"convert_transcripts": 1, "run_with_checkpoint": 6, "ordered_output": 1}
+    offenders = []
+    for p in sources:
+        for node in ast.walk(ast.parse(p.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+            if name not in max_args:
+                continue
+            pinned = len(node.args) > max_args[name] or any(
+                kw.arg == "num_partitions"
+                and not (isinstance(kw.value, ast.Name) and kw.value.id == "num_partitions")
+                for kw in node.keywords
+            )
+            if name == "ordered_output":
+                pinned = pinned or bool(node.keywords)
+            if pinned:
+                offenders.append(f"{p.relative_to(root)}:{node.lineno}")
     assert offenders == []
 
 

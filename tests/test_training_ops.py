@@ -222,7 +222,7 @@ def test_script_lang_and_gopher(spark):
 
 
 def test_multimodal_plumbing(spark):
-    from article_extraction_spark.operators.multimodal import extract_media_features, frame_sample_plan
+    from article_extraction_spark.operators.multimodal import extract_media_features_arrow, frame_sample_plan
 
     media = spark.createDataFrame(
         [
@@ -232,11 +232,11 @@ def test_multimodal_plumbing(spark):
         ],
         "media_id long, kind string, payload binary, mime string, width int, height int, duration_ms int",
     )
-    feats = {r["media_id"]: r for r in extract_media_features(media).collect()}
+    feats = {r["media_id"]: r for r in extract_media_features_arrow(media).collect()}
     assert feats[1]["n_bytes"] == 9 and len(feats[1]["feature"]) == 8
     assert feats[3]["content_hash"] is None and feats[3]["n_bytes"] == 0
     # deterministic: same payload → same hash/feature
-    feats2 = {r["media_id"]: r for r in extract_media_features(media).collect()}
+    feats2 = {r["media_id"]: r for r in extract_media_features_arrow(media).collect()}
     assert feats2[1]["content_hash"] == feats[1]["content_hash"]
     assert list(feats2[1]["feature"]) == list(feats[1]["feature"])
 
@@ -1290,12 +1290,11 @@ def test_zorder_append_widens_domain_and_stays_correct(spark, tmp_path):
     assert got == list(range(90, 100)) + list(range(1000, 1011))
 
 
-def test_media_features_arrow_twin_parity(spark):
-    """mapInArrow twin must produce byte-identical output to the pandas
-    twin over the same media batch (nulls included)."""
+def test_media_features_real_decoded_stats(spark):
+    """The feature stage decodes raw images and audio into real
+    statistics, and a null payload gets a null hash."""
     from article_extraction_spark.operators.multimodal import (
         MEDIA_SCHEMA,
-        extract_media_features,
         extract_media_features_arrow,
     )
 
@@ -1305,12 +1304,10 @@ def test_media_features_arrow_twin_parity(spark):
         (3, "video", None, "video/mp4", None, None, 5000),
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    a = sorted(map(tuple, extract_media_features(media).collect()))
-    b = sorted(map(tuple, extract_media_features_arrow(media).collect()))
-    assert a == b
+    a = sorted(map(tuple, extract_media_features_arrow(media).collect()))
     assert len(a) == 3
     null_row = next(t for t in a if t[0] == 3)
-    assert null_row[3] is None  # null payload → null hash on both paths
+    assert null_row[3] is None  # null payload → null hash
 
     # round 5: the features are REAL decoded stats, not the digest fake
     by_id = {t[0]: t for t in a}
@@ -1333,7 +1330,7 @@ def test_media_features_digest_fallback_for_undecodable(spark):
     batch still get real features."""
     from article_extraction_spark.operators.multimodal import (
         MEDIA_SCHEMA,
-        extract_media_features,
+        extract_media_features_arrow,
     )
 
     rows = [
@@ -1342,7 +1339,7 @@ def test_media_features_digest_fallback_for_undecodable(spark):
         (3, "image", bytearray(b"\x05\x06\x07" * 4), "image/raw-rgb8", 2, 2, None),
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r["media_id"]: r for r in extract_media_features(media).collect()}
+    got = {r["media_id"]: r for r in extract_media_features_arrow(media).collect()}
     assert got[1]["feature_src"] == "digest"
     assert got[2]["feature_src"] == "digest"
     assert got[3]["feature_src"] == "image"

@@ -84,7 +84,7 @@ def main() -> None:
             "extraction stage — and no ArrowEvalPython or Union. The "
             "drop-empty filter reads a column the stage produces, so it stays "
             "above the stage.",
-            plan_str(convert_transcripts(t, num_partitions=4)),
+            plan_str(convert_transcripts(t)),
         )
     )
 
