@@ -11,8 +11,14 @@ Iceberg's hidden ``bucket(N, conv_id)`` partitioning. Each run:
   2. extracts only the pending buckets,
   3. writes output with *dynamic partition overwrite* (re-running a bucket
      replaces it rather than duplicating — idempotent retries),
-  4. appends one lineage row per bucket: (partition id, n_buckets, input
-     snapshot, run id, rows in/out/empty/failed, bytes in, chars out).
+  4. appends one lineage file of one ``schemas.LINEAGE_SCHEMA`` row per
+     bucket: (partition id, n_buckets, input snapshot, run id, rows
+     in/out/empty/failed, bytes in, chars out, rows per payload kind).
+
+State is reached only through Spark's reader and writer and the session's
+Hadoop ``FileSystem``, so resume works on any filesystem scheme. A missing
+destination reads as ``None``; a lineage directory with no committed file
+(a crashed run's ``_temporary/``) reads as empty, and the run starts over.
 
 A destination keeps one bucket layout: resuming it with a different
 ``n_buckets`` is refused, since its bucket ids name other conversations.
@@ -20,16 +26,19 @@ A destination keeps one bucket layout: resuming it with a different
 On a cluster with Iceberg jars this maps 1:1 onto snapshot-isolated commits
 (``MERGE``/``overwritePartitions``); the manifest logic here is identical,
 only the commit primitive changes. Sized for 10^12 turns: n_buckets in the
-tens of thousands, lineage stays tiny (one row per bucket per run).
+tens of thousands, lineage stays tiny (one file per run, a row per bucket).
 """
 
 from __future__ import annotations
 
-import os
+import hashlib
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 
+from ..schemas import LINEAGE_SCHEMA
 from .convert import convert_transcripts
 from .partitioning import bucket_col
 
@@ -39,34 +48,40 @@ LINEAGE_SUBDIR = "lineage"
 
 def input_snapshot_id(spark: SparkSession, input_path: str) -> str:
     """Deterministic fingerprint of the input table state: hash over the
-    (path, size, mtime) of every data file — the parquet-manifest analog of
-    an Iceberg snapshot id (on Iceberg: read the actual snapshot id)."""
-    import hashlib
-
+    (path, size, mtime) of every data file, listed through the session's
+    Hadoop ``FileSystem`` — the parquet-manifest analog of an Iceberg
+    snapshot id (on Iceberg: read the actual snapshot id)."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(input_path)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    root = len(fs.makeQualified(path).toUri().getPath())
+    files = fs.listFiles(path, True)
     entries = []
-    for root, _dirs, files in sorted(os.walk(input_path)):
-        for name in sorted(files):
-            if name.startswith(("_", ".")):
-                continue
-            full = os.path.join(root, name)
-            st = os.stat(full)
-            entries.append(f"{os.path.relpath(full, input_path)}:{st.st_size}:{int(st.st_mtime)}")
-    digest = hashlib.sha256("\n".join(entries).encode()).hexdigest()[:16]
+    while files.hasNext():
+        st = files.next()
+        if st.getPath().getName().startswith(("_", ".")):
+            continue
+        rel = st.getPath().toUri().getPath()[root:].lstrip("/")
+        entries.append((rel, st.getLen(), st.getModificationTime() // 1000))
+    lines = (f"{rel}:{size}:{mtime}" for rel, size, mtime in sorted(entries))
+    digest = hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
     return f"snap-{digest}"
 
 
+def _read_parquet(reader: DataFrameReader, path: str) -> DataFrame | None:
+    try:
+        return reader.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
+
+
 def read_lineage(spark: SparkSession, dest_root: str) -> DataFrame | None:
-    path = os.path.join(dest_root, LINEAGE_SUBDIR)
-    if not os.path.exists(path):
-        return None
-    return spark.read.parquet(path)
+    return _read_parquet(spark.read.schema(LINEAGE_SCHEMA), f"{dest_root}/{LINEAGE_SUBDIR}")
 
 
 def read_turns(spark: SparkSession, dest_root: str) -> DataFrame | None:
-    path = os.path.join(dest_root, TURNS_SUBDIR)
-    if not os.path.exists(path):
-        return None
-    return spark.read.parquet(path)
+    return _read_parquet(spark.read, f"{dest_root}/{TURNS_SUBDIR}")
 
 
 def completed_buckets(
@@ -79,20 +94,21 @@ def completed_buckets(
     hash into previously completed buckets, so those buckets must be
     re-extracted (dynamic partition overwrite makes the re-run idempotent).
     Raises ``ValueError`` if the lineage was written with another
-    ``n_buckets``.
+    ``n_buckets``. One filtered scan: the driver receives the current
+    snapshot's rows (about one per bucket) and the foreign-layout ones.
     """
     lineage = read_lineage(spark, dest_root)
     if lineage is None:
         return set()
-    current = (F.col("input_snapshot") == input_snapshot).alias("current")
-    rows = lineage.select("partition_id", "n_buckets", current).distinct().collect()
+    wanted = (F.col("input_snapshot") == input_snapshot) | (F.col("n_buckets") != n_buckets)
+    rows = lineage.where(wanted).select("partition_id", "n_buckets").collect()
     written = {r["n_buckets"] for r in rows} - {n_buckets}
     if written:
         raise ValueError(
             f"{dest_root} was checkpointed with n_buckets={written.pop()}; "
             f"resuming it with n_buckets={n_buckets} would mix bucket layouts"
         )
-    return {r["partition_id"] for r in rows if r["current"]}
+    return {r["partition_id"] for r in rows}
 
 
 def run_with_checkpoint(
@@ -105,56 +121,37 @@ def run_with_checkpoint(
     num_partitions: int | None = None,
 ) -> dict:
     """Execute (or resume) the extraction job. Returns run statistics."""
-    turns_path = os.path.join(dest_root, TURNS_SUBDIR)
-    lineage_path = os.path.join(dest_root, LINEAGE_SUBDIR)
-
     done = completed_buckets(spark, dest_root, input_snapshot, n_buckets)
-    src = transcripts.withColumn("bucket", bucket_col(F.col("conv_id"), n_buckets))
     if done:
-        src = src.where(~F.col("bucket").isin(sorted(done)))
+        transcripts = transcripts.where(~bucket_col(F.col("conv_id"), n_buckets).isin(sorted(done)))
 
     # keep empty extractions through the stage so lineage can count them,
     # drop them at the sink (reference paper_text_table.py:153-155)
     extracted = convert_transcripts(
-        src.select("conv_id", "turn_idx", "role", "text", "tool", "ts"),
-        num_partitions=num_partitions,
-        drop_empty=False,
+        transcripts, num_partitions=num_partitions, drop_empty=False
     ).withColumn("bucket", bucket_col(F.col("conv_id"), n_buckets))
-
-    from pyspark import StorageLevel
 
     extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         failed = F.col("extract_error").isNotNull()
         lineage_rows = (
-            extracted.groupBy("bucket")
+            extracted.groupBy(
+                F.col("bucket").alias("partition_id"),
+                F.lit(n_buckets).alias("n_buckets"),
+                F.lit(input_snapshot).alias("input_snapshot"),
+                F.lit(run_id).alias("run_id"),
+            )
             .agg(
                 F.count("*").alias("rows_in"),
                 F.sum((F.length("extracted_text") > 0).cast("long")).alias("rows_out"),
                 F.sum(((F.length("extracted_text") == 0) & ~failed).cast("long")).alias("rows_empty"),
                 F.sum(failed.cast("long")).alias("rows_failed"),
-                F.sum("n_source_bytes").alias("bytes_in"),
+                F.sum(F.coalesce(F.col("n_source_bytes"), F.lit(0))).alias("bytes_in"),
                 F.sum(F.coalesce(F.col("n_extracted_chars"), F.lit(0))).alias("chars_out"),
-                F.sum((F.col("doc_kind") == "html").cast("long")).alias("n_html"),
-                F.sum((F.col("doc_kind") == "pdf").cast("long")).alias("n_pdf"),
-                F.sum((F.col("doc_kind") == "txt").cast("long")).alias("n_txt"),
-                F.sum((F.col("doc_kind") == "json").cast("long")).alias("n_json"),
-            )
-            .select(
-                F.col("bucket").alias("partition_id"),
-                F.lit(n_buckets).alias("n_buckets"),
-                F.lit(input_snapshot).alias("input_snapshot"),
-                F.lit(run_id).alias("run_id"),
-                "rows_in",
-                "rows_out",
-                "rows_empty",
-                "rows_failed",
-                "bytes_in",
-                "chars_out",
-                "n_html",
-                "n_pdf",
-                "n_txt",
-                "n_json",
+                *(
+                    F.sum((F.col("doc_kind") == k).cast("long")).alias(f"n_{k}")
+                    for k in ("html", "pdf", "txt", "json")
+                ),
             )
         ).collect()  # one tiny row per bucket — driver-safe at any scale
 
@@ -166,10 +163,15 @@ def run_with_checkpoint(
             non_empty.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
-            .parquet(turns_path)
+            .parquet(f"{dest_root}/{TURNS_SUBDIR}")
         )
 
-        spark.createDataFrame(lineage_rows).write.mode("append").parquet(lineage_path)
+        # one slice, so one lineage file per run (coalescing a list's
+        # default slices costs a Python worker per slice inside one task)
+        rows = spark.sparkContext.parallelize(lineage_rows, 1)
+        spark.createDataFrame(rows, LINEAGE_SCHEMA).write.mode("append").parquet(
+            f"{dest_root}/{LINEAGE_SUBDIR}"
+        )
         return {
             "buckets_processed": len(lineage_rows),
             "rows_out": sum(r["rows_out"] for r in lineage_rows),

@@ -18,13 +18,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# target bytes of text payload per task — small enough that a full Arrow
-# batch of payloads plus extraction output fits executor memory comfortably
+# target plan bytes per extraction task. It sets the width only: what a
+# Python worker holds at once is bounded by the Arrow batch size
+# (spark.sql.execution.arrow.maxRecordsPerBatch, session.ENGINE_CONF)
 TARGET_PARTITION_BYTES = 64 * 1024 * 1024
 MAX_PARTITIONS = 100_000
-# plan size (compressed parquet bytes) → raw payload bytes; rounds the
-# estimate UP
-ASSUMED_COMPRESSION = 3.0
 
 
 def bucket_col(key: Column, n_buckets: int) -> Column:
@@ -43,9 +41,9 @@ def byte_balanced_partitions(df: DataFrame) -> int:
     them that no task carries more than ``TARGET_PARTITION_BYTES`` of
     payload, at most ``MAX_PARTITIONS``.
 
-    The payload size is the optimized plan's own ``sizeInBytes`` statistic
-    × ``ASSUMED_COMPRESSION`` — file sizes for a scan on any filesystem,
-    row sizes for a local relation — so deciding starts no Spark job. A
+    The payload size is the optimized plan's own ``sizeInBytes`` statistic,
+    taken as it is — file sizes for a scan on any filesystem, in-memory
+    sizes for a cached relation — so deciding starts no Spark job. A
     size Spark does not know (it reports ``spark.sql.defaultSizeInBytes``)
     counts as one wave. A partial last wave would leave cores idle while
     costing each extra task the Python boundary's fixed setup, so the width
@@ -55,7 +53,7 @@ def byte_balanced_partitions(df: DataFrame) -> int:
     if size >= jdf.sparkSession().sessionState().conf().defaultSizeInBytes():
         size = 0
     wave = df.sparkSession.sparkContext.defaultParallelism
-    waves = -(-int(size * ASSUMED_COMPRESSION) // (TARGET_PARTITION_BYTES * wave))
+    waves = -(-int(size) // (TARGET_PARTITION_BYTES * wave))
     return min(MAX_PARTITIONS, max(1, waves) * wave)
 
 

@@ -50,8 +50,8 @@ EXTRACTED_TURNS_SCHEMA = T.StructType(
 # layout, input snapshot, rows processed, extraction metrics).
 LINEAGE_SCHEMA = T.StructType(
     [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("n_buckets", T.IntegerType(), False),
+        T.StructField("partition_id", T.LongType(), False),
+        T.StructField("n_buckets", T.LongType(), False),
         T.StructField("input_snapshot", T.StringType(), False),
         T.StructField("run_id", T.StringType(), False),
         T.StructField("rows_in", T.LongType(), False),

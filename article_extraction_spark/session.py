@@ -99,7 +99,6 @@ def scratch_dir(spark: SparkSession, prefix: str) -> str:
 def get_spark(
     app_name: str = "article_extraction_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's configs, and ship
@@ -112,14 +111,11 @@ def get_spark(
         cpus = host_cpus()
         if master is None:
             master = f"local[{cpus}]"
-        if shuffle_partitions is None:
-            # local[N] → N; local[*] → cpu count
-            inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
-            shuffle_partitions = cpus if inner == "*" else int(inner)
+        # local[N] → N; local[*] → cpu count
+        inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
+        conf["spark.sql.shuffle.partitions"] = str(cpus if inner == "*" else int(inner))
         conf["spark.ui.enabled"] = "false"
         conf["spark.driver.memory"] = driver_memory()
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
 
     builder = SparkSession.builder.appName(app_name)
     if master is not None:

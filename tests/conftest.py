@@ -10,7 +10,6 @@ def spark():
     spark = get_spark(
         app_name="tests",
         master="local[4]",
-        shuffle_partitions=4,
         extra_conf={"spark.driver.memory": "4g"},
     )
     yield spark

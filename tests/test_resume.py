@@ -5,6 +5,8 @@ identical; lineage shows only the missing buckets reprocessed."""
 
 from __future__ import annotations
 
+import hashlib
+import os
 import shutil
 
 import pytest
@@ -12,6 +14,8 @@ from pyspark.sql import functions as F
 
 from article_extraction_spark.fixtures.synth import synth_transcripts, transcripts_df
 from article_extraction_spark.pipeline.checkpoint import (
+    completed_buckets,
+    input_snapshot_id,
     read_lineage,
     read_turns,
     resume_missing_turns,
@@ -149,3 +153,141 @@ def test_row_granular_anti_join_resume(spark):
     pend_keys = {(r["conv_id"], r["turn_idx"]) for r in pending.select("conv_id", "turn_idx").collect()}
     assert pend_keys.isdisjoint(done_keys)
     assert len(pend_keys) == len(rows) - len(done_keys)
+
+
+def test_file_uri_destination_resumes(spark, tmp_path):
+    """The checkpoint reaches its destination only through Spark, so a
+    ``file://`` destination resumes like a plain path: the second run skips
+    every bucket, and the lineage holds one row per bucket."""
+    rows, _ = synth_transcripts(n_convs=16, turns_per_conv=3, seed=17, mega_conv=False)
+    tdf = transcripts_df(spark, rows)
+    dest = (tmp_path / "out").as_uri()
+    first = run_with_checkpoint(spark, tdf, dest, n_buckets=4, run_id="r1", input_snapshot="s1")
+    assert first["buckets_processed"] == 4
+    second = run_with_checkpoint(spark, tdf, dest, n_buckets=4, run_id="r2", input_snapshot="s1")
+    assert (second["resumed_from"], second["buckets_processed"]) == (4, 0)
+    lineage = read_lineage(spark, dest)
+    assert sorted(r["partition_id"] for r in lineage.collect()) == [0, 1, 2, 3]
+
+
+def _os_walk_snapshot_id(input_path):
+    """The snapshot id as the os-module listing computed it; destinations
+    checkpointed against that id must stay current."""
+    entries = []
+    for root, _dirs, files in sorted(os.walk(input_path)):
+        for name in sorted(files):
+            if not name.startswith(("_", ".")):
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                entries.append(f"{os.path.relpath(full, input_path)}:{st.st_size}:{int(st.st_mtime)}")
+    return "snap-" + hashlib.sha256("\n".join(entries).encode()).hexdigest()[:16]
+
+
+def test_input_snapshot_id_lists_through_hadoop(spark, tmp_path):
+    """The snapshot id is the same for a plain path and its ``file://``
+    URI, keeps the os-listing id of a Spark-written (partitioned) directory,
+    changes when a file is appended, and fingerprints a single-file input
+    instead of hashing an empty listing."""
+    empty_id = "snap-" + hashlib.sha256(b"").hexdigest()[:16]
+    path = str(tmp_path / "in")
+    df = spark.range(40).selectExpr("id", "id % 3 as part")
+    df.write.partitionBy("part").parquet(path)
+    snap = input_snapshot_id(spark, path)
+    assert snap == input_snapshot_id(spark, (tmp_path / "in").as_uri()) == _os_walk_snapshot_id(path)
+    assert snap != empty_id
+
+    df.write.mode("append").partitionBy("part").parquet(path)
+    assert input_snapshot_id(spark, path) not in (snap, empty_id)
+
+    one = next(
+        os.path.join(root, f) for root, _d, files in os.walk(path) for f in files if f.endswith(".parquet")
+    )
+    assert input_snapshot_id(spark, one) != empty_id
+
+
+def test_uncommitted_lineage_directory_starts_over(spark, tmp_path):
+    """A lineage directory holding only a crashed run's ``_temporary/`` has
+    no committed row: it reads as empty, so the run processes every bucket
+    instead of failing to infer a schema."""
+    rows, _ = synth_transcripts(n_convs=16, turns_per_conv=3, seed=19, mega_conv=False)
+    tdf = transcripts_df(spark, rows)
+    dest = tmp_path / "out"
+    (dest / "lineage" / "_temporary" / "0").mkdir(parents=True)
+    stats = run_with_checkpoint(spark, tdf, str(dest), n_buckets=4, run_id="r1", input_snapshot="s1")
+    assert (stats["resumed_from"], stats["buckets_processed"]) == (0, 4)
+    assert read_lineage(spark, str(dest)).count() == 4
+
+
+def _jobs_started(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lineage_reads_start_one_job(spark, tmp_path):
+    """Reading the lineage with its declared schema starts no job (nothing
+    is inferred), and finding the completed buckets is one filtered scan."""
+    rows, _ = synth_transcripts(n_convs=16, turns_per_conv=3, seed=23, mega_conv=False)
+    dest = str(tmp_path / "out")
+    run_with_checkpoint(spark, transcripts_df(spark, rows), dest, n_buckets=4, input_snapshot="s1")
+    assert _jobs_started(spark, "lineage-read", lambda: read_lineage(spark, dest)) == 0
+    done = []
+    assert _jobs_started(
+        spark, "lineage-scan", lambda: done.append(completed_buckets(spark, dest, "s1", 4))
+    ) == 1
+    assert done == [{r["partition_id"] for r in read_lineage(spark, dest).collect()}]
+
+
+def test_all_null_bucket_counts_zero_bytes_in(spark, tmp_path):
+    """A bucket whose every text is null has read 0 source bytes: the
+    lineage records 0, not null, matching its declared non-null column."""
+    import datetime as dt
+
+    from article_extraction_spark.schemas import TRANSCRIPTS_SCHEMA
+
+    ts = dt.datetime(2024, 1, 1)
+    tdf = spark.createDataFrame([("c", i, "user", None, None, ts) for i in range(3)], TRANSCRIPTS_SCHEMA)
+    dest = str(tmp_path / "out")
+    run_with_checkpoint(spark, tdf, dest, n_buckets=1, run_id="r", input_snapshot="s")
+    lin = read_lineage(spark, dest).first()
+    assert (lin["rows_in"], lin["bytes_in"]) == (3, 0)
+
+
+def test_lineage_inferred_from_rows_still_resumes(spark, tmp_path):
+    """Lineage written from collected rows with an inferred schema (every
+    integer column a nullable long) still resumes, and new lineage files
+    append next to it."""
+    rows, golden = synth_transcripts(n_convs=24, turns_per_conv=3, seed=29, mega_conv=False)
+    tdf = transcripts_df(spark, rows)
+    dest = str(tmp_path / "out")
+    run_with_checkpoint(spark, tdf, dest, n_buckets=8, run_id="r1", input_snapshot="s1")
+    kept = read_lineage(spark, dest).where(F.col("partition_id") >= 2).collect()
+    shutil.rmtree(f"{dest}/lineage")
+    spark.createDataFrame(kept).write.parquet(f"{dest}/lineage")
+    for b in range(2):
+        shutil.rmtree(f"{dest}/turns/bucket={b}", ignore_errors=True)
+
+    stats = run_with_checkpoint(spark, tdf, dest, n_buckets=8, run_id="r2", input_snapshot="s1")
+    assert (stats["resumed_from"], stats["buckets_processed"]) == (6, 2)
+    assert read_lineage(spark, dest).count() == 8
+    assert read_turns(spark, dest).count() == len(golden)
+    again = run_with_checkpoint(spark, tdf, dest, n_buckets=8, run_id="r3", input_snapshot="s1")
+    assert (again["resumed_from"], again["buckets_processed"]) == (8, 0)
+
+
+def test_one_lineage_file_per_run(spark, tmp_path):
+    """Each run appends its lineage rows as one file, so a resume lists and
+    reads one small file per earlier run, not one per core."""
+    rows, _ = synth_transcripts(n_convs=24, turns_per_conv=3, seed=31, mega_conv=False)
+    tdf = transcripts_df(spark, rows)
+    dest = tmp_path / "out"
+    for run, snap in (("r1", "s1"), ("r2", "s2")):
+        run_with_checkpoint(spark, tdf, str(dest), n_buckets=8, run_id=run, input_snapshot=snap)
+    files = [f for f in os.listdir(dest / "lineage") if not f.startswith(("_", "."))]
+    assert len(files) == 2

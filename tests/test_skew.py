@@ -101,7 +101,7 @@ def test_byte_balanced_partitions_sources(spark, monkeypatch):
 
     # the scan's statistic is its file size: a target that makes it need
     # one and a half waves of tasks rounds up to two whole waves
-    payload = int(os.path.getsize(path) * P.ASSUMED_COMPRESSION)
+    payload = os.path.getsize(path)
     monkeypatch.setattr(P, "TARGET_PARTITION_BYTES", payload // (wave + wave // 2))
     assert P.byte_balanced_partitions(docs) == 2 * wave
     monkeypatch.setattr(P, "MAX_PARTITIONS", wave + 1)
