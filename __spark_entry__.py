@@ -1064,9 +1064,10 @@ def q_qa_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """North-star readability scoring (text/link density, tag blocklist).
+    """North-star readability scoring (text/link density, tag blocklist)
+    through the one extraction stage, every page typed html.
     Rows-only check (heuristic scorer)."""
-    from article_extraction_spark.extract.readability import readability_udf
+    from article_extraction_spark.extract.udfs import extract_stage
 
     docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     page = F.concat(
@@ -1075,11 +1076,14 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text"),
         F.lit("</p></article><footer>contact</footer></body></html>"),
     )
-    out = docs.select("doc_id", readability_udf(page).alias("r"))
+    out = extract_stage(
+        docs.select("doc_id", F.lit("html").alias("doc_kind"), page.alias("text")),
+        with_readability=True,
+    )
     return out.select(
         "doc_id",
-        F.col("r.n_blocks").alias("n_blocks"),
-        (F.col("r.max_block_score") > 25).alias("has_main_content"),
+        F.col("readability_blocks").alias("n_blocks"),
+        (F.col("readability_max_score") > 25).alias("has_main_content"),
     )
 
 

@@ -320,6 +320,19 @@ def decode_utf8_ignore(data: str | bytes) -> tuple[str, list[Span]]:
 _B64_PDF_PREFIX = "JVBERi0"  # base64 of b"%PDF-"
 
 
+def _pdf_bytes(document: str | bytes) -> bytes:
+    """A pdf payload as bytes: a string starting ``JVBERi0`` is base64
+    (lenient: line-wrapped base64 decodes), any other string is latin-1,
+    bytes pass through. Invalid base64 raises ``binascii.Error`` (a
+    ``ValueError``): it IS a conversion failure, which the caller counts in
+    lineage rows_failed (the reference logs and skips)."""
+    if isinstance(document, str):
+        if document.startswith(_B64_PDF_PREFIX):
+            return base64.b64decode(document)
+        return document.encode("latin-1", errors="ignore")
+    return bytes(document)
+
+
 def to_text(document_type: str | None, document: str | bytes | None) -> tuple[str, list[Span]]:
     """Type dispatch: pdf/html/txt/json else ``""``.
 
@@ -330,14 +343,7 @@ def to_text(document_type: str | None, document: str | bytes | None) -> tuple[st
         return "", []
     kind = (document_type or "").lower()
     if kind == "pdf":
-        if isinstance(document, str):
-            if document.startswith(_B64_PDF_PREFIX):
-                # invalid base64 IS a conversion failure (caller counts it
-                # in lineage rows_failed, reference logs-and-skips)
-                document = base64.b64decode(document)
-            else:
-                document = document.encode("latin-1", errors="ignore")
-        return extract_pdf(document)
+        return extract_pdf(_pdf_bytes(document))
     if kind == "html":
         return extract_html(document)
     if kind in ("txt", "json"):

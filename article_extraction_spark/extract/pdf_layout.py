@@ -24,14 +24,17 @@ writer's shape), FlateDecode or plain streams, latin-1/escape strings.
 PyMuPDF remains the full-fidelity backend when installable; this makes the
 LAYOUT math real and testable without it.
 
-Spark-side: ``pdf_layout_extract_fn`` is the per-payload pdf kernel of
-``extract.udfs.extract_stage(pdf_mode="layout")``.
+Spark-side: ``extract_pdf_layout`` is the pdf kernel of
+``extract.udfs.extract_stage(pdf_mode="layout")``, which decodes the payload
+with the simple path's decoder (``core._pdf_bytes``).
 """
 
 from __future__ import annotations
 
 import re
 import zlib
+
+from .core import _pdf_unescape
 
 # object streams: reuse the same boundary regex family as extract.core
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.S)
@@ -46,13 +49,6 @@ _TOKEN_RE = re.compile(
     rb"|/[^\s\[\]()<>/]*"
     rb"|[A-Za-z'\"*]+"
 )
-
-def _unescape(raw: bytes) -> str:
-    # shared single-pass unescape (see core._pdf_unescape — the sequential
-    # replace variant corrupted literal backslashes)
-    from .core import _pdf_unescape
-
-    return _pdf_unescape(raw)
 
 
 class Run:
@@ -99,7 +95,7 @@ def parse_positioned_runs(data: bytes) -> tuple[list[list[Run]], float]:
             return vals if len(vals) == n else [0.0] * n
 
         def show(parts: list[bytes]) -> None:
-            text = "".join(_unescape(p[1:-1]) for p in parts)
+            text = "".join(_pdf_unescape(p[1:-1]) for p in parts)
             if text:
                 runs.append(Run(x, y, size, text))
 
@@ -259,30 +255,3 @@ def extract_pdf_layout(data: bytes) -> str:
     pages, page_h = parse_positioned_runs(data)
     return reading_order_text(pages, page_h)
 
-
-def pdf_layout_extract_fn(payload) -> str | None:
-    """Per-payload kernel of the extraction stage's layout mode: base64 or
-    raw bytes in, layout text out; None for undecodable payloads (the stage
-    turns it into an extract_error).
-
-    Decoding mirrors core.to_text's pdf branch EXACTLY (JVBERi0-prefix →
-    lenient b64decode): a validate=True decode rejected line-wrapped base64
-    that the simple path accepts (review r3)."""
-    import base64
-    import binascii
-
-    if payload is None:
-        return None
-    data = payload
-    if isinstance(data, str):
-        if data.startswith("JVBERi0"):  # base64 of b"%PDF-" (core.to_text)
-            try:
-                data = base64.b64decode(data)
-            except (binascii.Error, ValueError):
-                return None  # invalid base64 IS a conversion failure
-        else:
-            data = data.encode("latin-1", "ignore")
-    try:
-        return extract_pdf_layout(bytes(data))
-    except (ValueError, zlib.error):
-        return None

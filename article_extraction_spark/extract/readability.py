@@ -4,8 +4,12 @@ An *additional* extraction signal alongside the exact ``<p>``-paragraph
 oracle: tag-blocklist boilerplate stripping plus text-density / link-density
 scoring per container, so real-world pages whose main content is not marked
 up with ``<p>`` still yield a main-text candidate. The per-turn equality
-contract stays with extract.core.extract_html; this module's outputs go to
-separate diagnostic columns.
+contract stays with extract.core.extract_html.
+
+Pure Python, like pdf_layout.py: Spark reaches it only through
+``extract.udfs.extract_stage(with_readability=True)``, which appends
+``readability_row``'s four values to html rows as readability_text,
+readability_blocks, readability_max_score and link_density.
 
 Public-knowledge heuristics (Arc90 readability.js, boilerpipe paper
 Kohlschütter et al., WSDM 2010): blocklisted structural tags score 0; text
@@ -15,10 +19,6 @@ blocks score by char count, comma count, and are penalized by link density.
 from __future__ import annotations
 
 from html.parser import HTMLParser
-
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 BLOCKLIST_TAGS = frozenset(
     {
@@ -109,40 +109,17 @@ def score_blocks(html: str) -> list[dict]:
     return out
 
 
-def readability_main_text(html: str, min_score: float = 25.0) -> str:
-    """Concatenate above-threshold blocks in document order."""
-    blocks = [b for b in score_blocks(html) if b["score"] >= min_score]
-    return "\n".join(b["text"] for b in blocks)
-
-
-_READABILITY_TYPE = T.StructType(
-    [
-        T.StructField("main_text", T.StringType(), True),
-        T.StructField("n_blocks", T.IntegerType(), True),
-        T.StructField("max_block_score", T.DoubleType(), True),
-        T.StructField("link_density", T.DoubleType(), True),
-    ]
-)
-
-
 def readability_row(doc: str | None) -> tuple[str, int, float, float]:
-    """(main_text, n_blocks, max_block_score, link_density) of one page."""
+    """(main_text, n_blocks, max_block_score, link_density) of one page;
+    main_text joins the blocks scoring at least 25, in document order."""
     if not doc:
         return "", 0, 0.0, 0.0
     blocks = score_blocks(doc)
     total = sum(b["chars"] for b in blocks) or 1
     links = sum(b["link_density"] * b["chars"] for b in blocks)
     return (
-        readability_main_text(doc),
+        "\n".join(b["text"] for b in blocks if b["score"] >= 25.0),
         len(blocks),
         max((b["score"] for b in blocks), default=0.0),
         links / total,
-    )
-
-
-@F.pandas_udf(_READABILITY_TYPE)
-def readability_udf(html: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame(
-        [readability_row(doc) for doc in html],
-        columns=["main_text", "n_blocks", "max_block_score", "link_density"],
     )

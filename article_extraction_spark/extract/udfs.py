@@ -3,42 +3,39 @@
 Per BASELINE.json ``input_hint``: Arrow-batched Python only, no per-row
 Python UDFs. Classification stays entirely JVM-side (native column
 expressions); only the genuinely-custom kernels (HTML state machine, PDF
-parse, utf-8-ignore decode, readability scoring) cross into Python, and they
-do so through ONE stage, ``extract_stage``: a single ``mapInArrow`` that the
-batch pipeline, the streaming pipeline, the corpus job and the driver
-queries all share.
+parse and layout analysis, utf-8-ignore decode, readability scoring) cross
+into Python, and they do so only through ONE stage, ``extract_stage``: a
+single ``mapInArrow`` that the batch pipeline, the streaming pipeline, the
+corpus job and the driver queries all share. The kernel modules (core.py,
+pdf_layout.py, readability.py) are pure Python and import no Spark.
 """
 
 from __future__ import annotations
 
 import functools
+import zlib
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .core import SNIFF_PREFIX, to_text
-from .pdf_layout import pdf_layout_extract_fn
+from ..schemas import SPAN_TYPE
+from .core import SNIFF_PREFIX, _decode_utf8_ignore, _pdf_bytes, to_text
+from .pdf_layout import extract_pdf_layout
+from .readability import readability_row
 
 _EXTRACT_FIELDS = [
     T.StructField("extracted_text", T.StringType(), True),
-    T.StructField(
-        "spans",
-        T.ArrayType(
-            T.StructType(
-                [
-                    T.StructField("start", T.IntegerType(), False),
-                    T.StructField("end", T.IntegerType(), False),
-                ]
-            )
-        ),
-        True,
-    ),
+    T.StructField("spans", SPAN_TYPE, True),
     T.StructField("extract_error", T.StringType(), True),
 ]
+# readability.readability_row's four values, in its tuple order
+READABILITY_COLUMNS = ["readability_text", "readability_blocks", "readability_max_score", "link_density"]
 _READABILITY_FIELDS = [
-    T.StructField("readability_text", T.StringType(), True),
-    T.StructField("link_density", T.DoubleType(), True),
+    T.StructField(name, dtype, True)
+    for name, dtype in zip(
+        READABILITY_COLUMNS, [T.StringType(), T.IntegerType(), T.DoubleType(), T.DoubleType()]
+    )
 ]
 
 
@@ -86,20 +83,21 @@ def _layout_to_text(kind: str | None, data):
     """pdf_mode="layout": pdf payloads go through the positioned-run parser
     (extract/pdf_layout.py — column detection, reading order, header/footer
     removal; spans not applicable for binary sources); every other kind is
-    the simple path."""
+    the simple path. A pdf payload that does not decode or parse fails as
+    "undecodable PDF payload"."""
     if kind != "pdf":
         return to_text(kind, data)
-    text = pdf_layout_extract_fn(data)
-    if text is None:
-        raise ValueError("undecodable PDF payload")
-    return text, []
+    try:
+        return extract_pdf_layout(_pdf_bytes(data)), []
+    except (TypeError, ValueError, zlib.error) as exc:  # TypeError: a null payload
+        raise ValueError("undecodable PDF payload") from exc
 
 
 def extract_map_in_arrow(batches, pdf_mode: str = "simple", with_readability: bool = False):
     """The mapInArrow body of ``extract_stage``. Consumes ``doc_kind`` and
     ``text``; every other column passes through untouched, followed by
-    extracted_text, spans, extract_error (and readability_text,
-    link_density with ``with_readability``).
+    extracted_text, spans, extract_error (and READABILITY_COLUMNS with
+    ``with_readability``).
 
     Conversion failures don't fail the task: the row carries the error and
     is dropped downstream while lineage counts it (the reference logs and
@@ -107,8 +105,6 @@ def extract_map_in_arrow(batches, pdf_mode: str = "simple", with_readability: bo
     import pyarrow as pa
 
     kernel = _layout_to_text if pdf_mode == "layout" else to_text
-    if with_readability:
-        from .readability import readability_row
     span_fields = [
         pa.field("start", pa.int32(), nullable=False),
         pa.field("end", pa.int32(), nullable=False),
@@ -148,14 +144,13 @@ def extract_map_in_arrow(batches, pdf_mode: str = "simple", with_readability: bo
             # Arc90-style main-content signal for html rows only (extra
             # columns — the equality oracle stays the <p> path)
             rd = [
-                readability_row(data.decode("utf-8", "ignore") if isinstance(data, bytes) else data)
-                if kind == "html" else None
+                readability_row(_decode_utf8_ignore(data)) if kind == "html" else None
                 for kind, data in zip(kinds, texts)
             ]
-            names += ["readability_text", "link_density"]
+            names += READABILITY_COLUMNS
             columns += [
-                pa.array([None if r is None else r[0] for r in rd], pa.string()),
-                pa.array([None if r is None else r[3] for r in rd], pa.float64()),
+                pa.array([None if r is None else r[i] for r in rd], dtype)
+                for i, dtype in enumerate([pa.string(), pa.int32(), pa.float64(), pa.float64()])
             ]
         yield pa.RecordBatch.from_arrays(columns, names=names)
 
@@ -167,7 +162,7 @@ def extract_stage(
     ...)``, where ``text`` is a string or binary payload column. ``text`` is
     consumed; every other column passes through; extracted_text, spans and
     extract_error are appended, and with ``with_readability`` also
-    readability_text and link_density (null on non-html rows).
+    READABILITY_COLUMNS (null on non-html rows).
 
     ``pdf_mode``: "simple" (stream-order text, byte-parity with the
     reference's extraction) or "layout" (extract/pdf_layout.py — an

@@ -20,6 +20,7 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.partitioning import fan_out_small_scan
 from ..schemas import TRANSCRIPTS_SCHEMA
 
 _EPOCH = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
@@ -297,8 +298,8 @@ def amplified_transcripts(
     # a small parquet is a single input split; spread BEFORE the 40× explode
     # or the whole amplified corpus lives in one partition and every
     # downstream stage starts from a serial scan
-    par = spark.sparkContext.defaultParallelism * 2
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(par, "doc_id")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = fan_out_small_scan(docs)
     fat = F.concat_ws(" ", F.array_repeat(F.col("text"), text_reps))
     exploded = docs.select(
         "doc_id", fat.alias("t"), F.explode(F.sequence(F.lit(0), F.lit(reps - 1))).alias("rep")

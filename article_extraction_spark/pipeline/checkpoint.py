@@ -17,7 +17,8 @@ Iceberg's hidden ``bucket(N, conv_id)`` partitioning. Each run:
 
 State is reached only through Spark's reader and writer and the session's
 Hadoop ``FileSystem``, so resume works on any filesystem scheme. A missing
-destination reads as ``None``; a lineage directory with no committed file
+destination reads as ``None`` (probed with ``FileSystem.exists``, so a
+fresh run starts no reader); a lineage directory with no committed file
 (a crashed run's ``_temporary/``) reads as empty, and the run starts over.
 
 A destination keeps one bucket layout: resuming it with a different
@@ -34,11 +35,11 @@ from __future__ import annotations
 import hashlib
 
 from pyspark import StorageLevel
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import LINEAGE_SCHEMA
+from ..session import hadoop_path, path_exists
 from .convert import convert_transcripts
 from .partitioning import bucket_col
 
@@ -51,8 +52,7 @@ def input_snapshot_id(spark: SparkSession, input_path: str) -> str:
     (path, size, mtime) of every data file, listed through the session's
     Hadoop ``FileSystem`` — the parquet-manifest analog of an Iceberg
     snapshot id (on Iceberg: read the actual snapshot id)."""
-    path = spark._jvm.org.apache.hadoop.fs.Path(input_path)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, path = hadoop_path(spark, input_path)
     root = len(fs.makeQualified(path).toUri().getPath())
     files = fs.listFiles(path, True)
     entries = []
@@ -67,21 +67,14 @@ def input_snapshot_id(spark: SparkSession, input_path: str) -> str:
     return f"snap-{digest}"
 
 
-def _read_parquet(reader: DataFrameReader, path: str) -> DataFrame | None:
-    try:
-        return reader.parquet(path)
-    except AnalysisException as exc:
-        if exc.getCondition() == "PATH_NOT_FOUND":
-            return None
-        raise
-
-
 def read_lineage(spark: SparkSession, dest_root: str) -> DataFrame | None:
-    return _read_parquet(spark.read.schema(LINEAGE_SCHEMA), f"{dest_root}/{LINEAGE_SUBDIR}")
+    path = f"{dest_root}/{LINEAGE_SUBDIR}"
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(path) if path_exists(spark, path) else None
 
 
 def read_turns(spark: SparkSession, dest_root: str) -> DataFrame | None:
-    return _read_parquet(spark.read, f"{dest_root}/{TURNS_SUBDIR}")
+    path = f"{dest_root}/{TURNS_SUBDIR}"
+    return spark.read.parquet(path) if path_exists(spark, path) else None
 
 
 def completed_buckets(

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..extract.udfs import classify_payload_col, extract_stage
+from ..extract.udfs import READABILITY_COLUMNS, classify_payload_col, extract_stage
 from .partitioning import byte_balanced_partitions, salted_repartition
 
 
@@ -37,8 +37,10 @@ def convert_transcripts(
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → extracted turns.
 
     Output schema: EXTRACTED_TURNS_SCHEMA (conv_id, turn_idx, doc_kind,
-    extracted_text, spans, n_source_bytes, n_extracted_chars), plus
-    readability_text and link_density with ``with_readability``.
+    extracted_text, spans, n_source_bytes, n_extracted_chars), plus the
+    readability scorer's columns with ``with_readability``: readability_text,
+    readability_blocks, readability_max_score and link_density (null on
+    non-html rows).
 
     Every row is salted-repartitioned on (conv_id, turn_idx) before
     extraction, so a source partitioned by conv_id (Iceberg bucket(conv_id)
@@ -62,7 +64,7 @@ def convert_transcripts(
         F.octet_length("text").cast("long").alias("n_source_bytes"),
         "text",
     )
-    rd_cols = ["readability_text", "link_density"] if with_readability else []
+    rd_cols = READABILITY_COLUMNS if with_readability else []
     extracted = extract_stage(
         salted_repartition(classified, num_partitions, "conv_id", "turn_idx"),
         pdf_mode=pdf_mode,

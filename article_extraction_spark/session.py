@@ -96,6 +96,23 @@ def scratch_dir(spark: SparkSession, prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
+def hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the session's Hadoop
+    configuration. A plain local path and a ``file://``, ``hdfs://`` or
+    ``s3a://`` URI all resolve to their own filesystem, where ``os.path``
+    knows only the first."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, on any filesystem scheme (``hadoop_path``).
+    Probe before ``spark.read``: a reader given a missing path logs a full
+    stack trace before it raises."""
+    fs, jpath = hadoop_path(spark, path)
+    return fs.exists(jpath)
+
+
 def get_spark(
     app_name: str = "article_extraction_spark",
     master: str | None = None,

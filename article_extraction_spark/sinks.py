@@ -17,7 +17,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .session import hadoop_path, path_exists
 
 
 def create_or_replace(df: DataFrame, path: str) -> None:
@@ -39,7 +40,7 @@ def upsert_by_key(spark: SparkSession, src: DataFrame, path: str, keys: list[str
     NOT MATCHED THEN INSERT *`` with snapshot isolation; at 100 TB pair it
     with partition pruning on the key's bucket so only touched files rewrite.
     """
-    if os.path.exists(path):
+    if path_exists(spark, path):
         dest = spark.read.parquet(path)
         merged = dest.join(src.select(*keys).distinct(), keys, "left_anti").unionByName(
             src, allowMissingColumns=True
@@ -48,15 +49,10 @@ def upsert_by_key(spark: SparkSession, src: DataFrame, path: str, keys: list[str
         tmp = path + "__staging"
         merged.write.mode("overwrite").parquet(tmp)
         spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
-        _rmtree(tmp)
+        fs, staging = hadoop_path(spark, tmp)
+        fs.delete(staging, True)
     else:
         src.write.mode("overwrite").parquet(path)
-
-
-def _rmtree(path: str) -> None:
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
 
 
 def write_csv_metrics(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -34,7 +34,6 @@ def _force(df) -> None:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = host_cpus()
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "40"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     spark = get_spark(app_name="bench", master=f"local[{cpus}]")
@@ -49,15 +48,14 @@ def main() -> None:
     extras: dict[str, float] = {}
 
     # --- flagship: extraction stage over the amplified transcript corpus ---
-    transcripts = amplified_transcripts(spark, sf_dir, reps=reps)
+    transcripts = amplified_transcripts(spark, sf_dir)
     transcripts = transcripts.persist()
     n_turns = transcripts.count()  # materialize input outside the timed span
 
     # min of N iterations: the shared sandbox host fluctuates ±4x; min is
     # the standard noise-robust estimator
-    iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITER", "3"))
     times = []
-    for _ in range(iters):
+    for _ in range(3):
         t0 = time.perf_counter()
         _force(convert_transcripts(transcripts))
         times.append(time.perf_counter() - t0)
@@ -72,7 +70,6 @@ def main() -> None:
     # min-of-N for EVERY query, not just the flagship (VERDICT r1: single-shot
     # timings on a ±20%-noise shared host made round-over-round deltas
     # meaningless — parse_numeric's 13.6 s was warmup, not the plan)
-    q_iters = int(os.environ.get("SPARK_GRAFT_BENCH_QUERY_ITER", "3"))
     qs = entry.queries()
     for name in [
         "convert_html",
@@ -92,7 +89,7 @@ def main() -> None:
         "contamination",
     ]:
         runs = []
-        for _ in range(q_iters):
+        for _ in range(3):
             t0 = time.perf_counter()
             _force(qs[name](spark, sf_dir))
             runs.append(time.perf_counter() - t0)
@@ -231,39 +228,38 @@ def main() -> None:
     # from session/host startup — BENCH_r03 vs r02 was unreadable because
     # cold first-iteration numbers carried host contention. Judges compare
     # THIS block across rounds; the cold numbers above stay for continuity.
-    # Disable with SPARK_GRAFT_BENCH_WARM=0. Per-query spread (max/min over
-    # the 5) is emitted so a noisy sample is visible instead of silent.
+    # Per-query spread (max/min over the 5) is emitted so a noisy sample is
+    # visible instead of silent.
     warm_min5: dict[str, float] = {}
     warm_spread: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_WARM", "1") != "0":
-        # operator queries first (clearCache between runs releases the
-        # dedup family's internal persists) ...
-        for name in list(timings):
-            if name == "extract_transcripts":
-                continue
-            runs = []
-            for _ in range(5):
-                t0 = time.perf_counter()
-                _force(qs[name](spark, sf_dir))
-                runs.append(time.perf_counter() - t0)
-                spark.catalog.clearCache()
-            warm_min5[name] = round(min(runs), 3)
-            warm_spread[name] = round(max(runs) / min(runs), 2)
-        # ... then the flagship LAST, with NO clearCache inside its loop:
-        # clearCache would drop the persisted transcripts input, so runs
-        # 2-5 would silently re-time corpus amplification instead of
-        # extraction (review r4 — min-of-5 was really min-of-1)
-        transcripts = transcripts.persist()
-        transcripts.count()
+    # operator queries first (clearCache between runs releases the
+    # dedup family's internal persists) ...
+    for name in list(timings):
+        if name == "extract_transcripts":
+            continue
         runs = []
         for _ in range(5):
             t0 = time.perf_counter()
-            _force(convert_transcripts(transcripts))
+            _force(qs[name](spark, sf_dir))
             runs.append(time.perf_counter() - t0)
-        warm_min5["extract_transcripts"] = round(min(runs), 3)
-        warm_spread["extract_transcripts"] = round(max(runs) / min(runs), 2)
-        transcripts.unpersist()
-        extras["extract_turns_per_sec_warm"] = round(n_turns / warm_min5["extract_transcripts"], 1)
+            spark.catalog.clearCache()
+        warm_min5[name] = round(min(runs), 3)
+        warm_spread[name] = round(max(runs) / min(runs), 2)
+    # ... then the flagship LAST, with NO clearCache inside its loop:
+    # clearCache would drop the persisted transcripts input, so runs
+    # 2-5 would silently re-time corpus amplification instead of
+    # extraction (review r4 — min-of-5 was really min-of-1)
+    transcripts = transcripts.persist()
+    transcripts.count()
+    runs = []
+    for _ in range(5):
+        t0 = time.perf_counter()
+        _force(convert_transcripts(transcripts))
+        runs.append(time.perf_counter() - t0)
+    warm_min5["extract_transcripts"] = round(min(runs), 3)
+    warm_spread["extract_transcripts"] = round(max(runs) / min(runs), 2)
+    transcripts.unpersist()
+    extras["extract_turns_per_sec_warm"] = round(n_turns / warm_min5["extract_transcripts"], 1)
 
     total = round(sum(timings.values()), 3)
     full = {

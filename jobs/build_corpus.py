@@ -17,12 +17,11 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import os
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from article_extraction_spark.session import get_spark
+from article_extraction_spark.session import get_spark, path_exists
 
 
 def build_corpus(
@@ -74,7 +73,7 @@ def build_corpus(
         .where(F.col("document_url").isNotNull())
     )
     doc_path = f"{out_dir}/paper_document"
-    existing = spark.read.parquet(doc_path) if os.path.exists(doc_path) else None
+    existing = spark.read.parquet(doc_path) if path_exists(spark, doc_path) else None
     if existing is not None:
         candidates = candidates.join(existing.select("id_paper"), "id_paper", "left_anti")
     fetched = fetch_documents(candidates, "document_url", "id_paper").where(
@@ -87,7 +86,7 @@ def build_corpus(
     # empty conversions dropped, key-level resume
     docs = spark.read.parquet(doc_path)
     text_path = f"{out_dir}/paper_text"
-    done = spark.read.parquet(text_path) if os.path.exists(text_path) else None
+    done = spark.read.parquet(text_path) if path_exists(spark, text_path) else None
     if done is not None:
         docs = docs.join(done.select("id_paper"), "id_paper", "left_anti")
     # the binary column passes straight through Arrow as bytes; the kernel's

@@ -95,6 +95,23 @@ def test_build_corpus_end_to_end(spark, tmp_path):
     assert stats2["documents"] == 2 and stats2["texts"] == 2
 
 
+def test_build_corpus_rerun_on_uri(spark, tmp_path):
+    """A re-run into a ``file://`` out dir resumes like a plain path: the
+    download and convert stages see the tables the first run wrote."""
+    from jobs.build_corpus import build_corpus
+
+    csvs = [
+        _write(tmp_path, name, content)
+        for name, content in [("ep.csv", EPOCH_CSV), ("hw.csv", HARDWARE_CSV), ("co.csv", COUNTRY_CSV)]
+    ]
+    out = (tmp_path / "corpus").as_uri()
+    for _ in range(2):
+        stats = build_corpus(
+            spark, *csvs, out, splits=(0.5, 0.25, 0.25), fetch_splits=("train", "dev", "test")
+        )
+        assert stats["documents"] == 2 and stats["texts"] == 2
+
+
 def test_fetch_error_rows_skipped(spark):
     from article_extraction_spark.sources import fetch_documents
 

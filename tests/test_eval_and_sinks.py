@@ -87,6 +87,17 @@ def test_sinks_upsert(spark, tmp_path):
     assert variant_table_path("/x", "llm") == "/x/paper_information_llm"
 
 
+def test_sinks_upsert_on_uri(spark, tmp_path):
+    """A ``file://`` destination is an existing table to merge into: the
+    keys src does not touch survive, and the staging copy is deleted."""
+    p = (tmp_path / "t").as_uri()
+    upsert_by_key(spark, spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"), p, ["k"])
+    upsert_by_key(spark, spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string"), p, ["k"])
+    got = {r["k"]: r["v"] for r in spark.read.parquet(p).collect()}
+    assert got == {1: "a", 2: "B", 3: "c"}
+    assert sorted(x.name for x in tmp_path.iterdir()) == ["t"]
+
+
 def test_summary_upsert(spark, tmp_path):
     p = str(tmp_path / "summary")
     s1 = spark.createDataFrame([("m1", "c1", 5, 0.5)], "model string, category string, n long, exact_rate double")

@@ -1,6 +1,6 @@
 """PDF layout parser (extract/pdf_layout.py): positioned-run parsing,
-column detection, reading-order sort, header/footer removal, and the Spark
-kernel wrapper."""
+column detection, reading-order sort, header/footer removal, and its
+kernel in the extraction stage (``extract_stage(pdf_mode="layout")``)."""
 
 from __future__ import annotations
 
@@ -11,9 +11,9 @@ import pytest
 from article_extraction_spark.extract.pdf_layout import (
     extract_pdf_layout,
     parse_positioned_runs,
-    pdf_layout_extract_fn,
     reading_order_text,
 )
+from article_extraction_spark.extract.udfs import _layout_to_text
 from article_extraction_spark.fixtures.synth import make_layout_pdf_bytes
 
 
@@ -101,11 +101,12 @@ def test_error_paths_and_kernel_wrapper():
     with pytest.raises(ValueError, match="content streams"):
         extract_pdf_layout(b"%PDF-1.4\nno streams here")
     pdf = make_layout_pdf_bytes(pages=[[["hello world"]]])
-    # kernel wrapper: raw bytes, base64 string, junk, None
-    assert pdf_layout_extract_fn(pdf) == "hello world\n"
-    assert pdf_layout_extract_fn(base64.b64encode(pdf).decode()) == "hello world\n"
-    assert pdf_layout_extract_fn("definitely not a pdf") is None
-    assert pdf_layout_extract_fn(None) is None
+    # the stage's layout kernel: raw bytes, base64 string, junk, None
+    assert _layout_to_text("pdf", pdf) == ("hello world\n", [])
+    assert _layout_to_text("pdf", base64.b64encode(pdf).decode()) == ("hello world\n", [])
+    for junk in ("definitely not a pdf", "JVBERi0", None):
+        with pytest.raises(ValueError, match="^undecodable PDF payload$"):
+            _layout_to_text("pdf", junk)
 
 
 def test_parse_positioned_runs_coordinates():
@@ -119,10 +120,11 @@ def test_parse_positioned_runs_coordinates():
 
 
 def test_spark_pdf_layout_udf(spark):
-    """Arrow-batched end-to-end: binary payloads through mapInPandas."""
-    import pandas as pd
+    """Arrow-batched end-to-end: binary payloads through the extraction
+    stage in layout mode; junk fails its row, not the task."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
+
+    from article_extraction_spark.extract.udfs import extract_stage
 
     pdfs = [
         (1, bytearray(make_layout_pdf_bytes(pages=[[["one L"], ["one R"]]]))),
@@ -131,16 +133,16 @@ def test_spark_pdf_layout_udf(spark):
         (3, bytearray(b"junk payload")),
     ]
     df = spark.createDataFrame(pdfs, "doc_id long, payload binary")
-
-    def _kernel(p):
-        return p.map(pdf_layout_extract_fn)
-
-    layout_udf = F.pandas_udf(_kernel, T.StringType())
-
-    got = {r["doc_id"]: r["t"] for r in df.select("doc_id", layout_udf("payload").alias("t")).collect()}
-    assert got[1] == "one L\none R\n"
-    assert got[2] == "p1\n\np2\n" and "Head" not in got[2]
-    assert got[3] is None
+    out = extract_stage(
+        df.select("doc_id", F.lit("pdf").alias("doc_kind"), F.col("payload").alias("text")),
+        pdf_mode="layout",
+    )
+    got = {r["doc_id"]: r for r in out.collect()}
+    assert got[1]["extracted_text"] == "one L\none R\n"
+    assert got[2]["extracted_text"] == "p1\n\np2\n" and "Head" not in got[2]["extracted_text"]
+    assert got[3]["extracted_text"] == ""
+    assert got[3]["extract_error"] == "ValueError: undecodable PDF payload"
+    assert got[1]["extract_error"] is None and got[1]["spans"] == []
 
 
 def test_convert_transcripts_pdf_mode_layout(spark):
@@ -204,4 +206,4 @@ def test_pdf_layout_accepts_wrapped_base64():
     pdf = make_layout_pdf_bytes(pages=[[["wrapped ok"]]])
     wrapped = b64.encodebytes(pdf).decode()  # newline every 76 chars
     assert "\n" in wrapped.strip()
-    assert pdf_layout_extract_fn(wrapped) == "wrapped ok\n"
+    assert _layout_to_text("pdf", wrapped) == ("wrapped ok\n", [])

@@ -69,7 +69,11 @@ def test_with_readability_columns(spark):
     out = {r["turn_idx"]: r for r in convert_transcripts(tdf, num_partitions=2, with_readability=True).collect()}
     assert "main body text" in out[0]["readability_text"]
     assert out[0]["link_density"] == 0.0
-    assert out[1]["readability_text"] is None  # diagnostics are html-only
+    # one scored <p> block (the <nav> is blocklisted): 54 chars, 2 commas
+    assert out[0]["readability_blocks"] == 1
+    assert out[0]["readability_max_score"] == 54 + 20 * 2
+    for col in ("readability_text", "readability_blocks", "readability_max_score", "link_density"):
+        assert out[1][col] is None  # diagnostics are html-only
     # baseline extraction unchanged
     assert out[0]["extracted_text"].startswith("main body text")
 
@@ -126,3 +130,20 @@ def test_arrow_extraction_stage_contract(spark):
         return (*r[:5], [tuple(s.values() if isinstance(s, dict) else s) for s in r[5]], r[6])
 
     assert sorted(map(plain, a)) == sorted(plain(list(d.values())) for d in local.to_pylist())
+
+
+def test_checkpoint_readers_probe_missing_destination(spark, tmp_path, monkeypatch):
+    """On a destination that does not exist yet (every fresh run) the
+    checkpoint's readers return None without starting Spark's reader, which
+    would log a FileNotFoundException stack trace before it raised."""
+    from pyspark.sql import DataFrameReader
+
+    from article_extraction_spark.pipeline.checkpoint import read_lineage, read_turns
+
+    def no_reader(*args, **kwargs):
+        raise AssertionError("DataFrameReader.parquet called on a missing path")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_reader)
+    for dest in (str(tmp_path / "missing"), (tmp_path / "missing").as_uri()):
+        assert read_lineage(spark, dest) is None
+        assert read_turns(spark, dest) is None

@@ -87,7 +87,7 @@ def test_streaming_extract_has_one_extraction_stage(spark, tmp_path):
     _assert_one_extraction_stage(_explain(streaming_extract(spark, src)))
 
 
-@pytest.mark.parametrize("query", ["convert_html", "pdf_layout"])
+@pytest.mark.parametrize("query", ["convert_html", "pdf_layout", "readability"])
 def test_driver_query_has_one_extraction_stage(spark, query):
     import __spark_entry__ as E
 
