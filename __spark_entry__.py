@@ -657,7 +657,9 @@ def q_char_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_token_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E5: token windowing (worker-cached tokenizer). Rows-only check."""
+    """E5: token windowing (worker-cached tokenizer). Value oracle: the
+    SQL recomputes every 20-word window at stride 10 from the split
+    text."""
     from article_extraction_spark.extraction.windows import explode_windows
 
     docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
@@ -913,8 +915,8 @@ def q_eval_char_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_encode_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E10: dedupe-before-encode embedding (memo cache as a join).
-    Rows-only check (fake encoder)."""
+    """E10: dedupe-before-encode embedding (memo cache as a join). Value
+    oracle: one row per document with the fake encoder's dimension 16."""
     from article_extraction_spark.extraction import encode_texts_deduped
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
@@ -1065,8 +1067,9 @@ def q_qa_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-star readability scoring (text/link density, tag blocklist)
-    through the one extraction stage, every page typed html.
-    Rows-only check (heuristic scorer)."""
+    through the one extraction stage, every page typed html. Value
+    oracle: the SQL replays the block count and the main-content
+    threshold from each document's text, the page's one scored block."""
     from article_extraction_spark.extract.udfs import extract_stage
 
     docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))

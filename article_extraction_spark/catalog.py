@@ -6,12 +6,28 @@ Semantics provided (the subset the engine relies on):
 
   * immutable data files + versioned JSON manifests — a snapshot is the
     manifest's file list; readers NEVER see a half-written commit
-  * atomic commits via exclusive-create of ``manifest-v{N}.json``
-    (``open(..., "x")``) — two concurrent writers racing for the same N: one
-    wins, the other gets CommitConflict and retries against the new state
-    (Iceberg's optimistic concurrency)
+  * one commit point: ``ManifestTable._try_commit`` creates
+    ``manifest-v{N+1}.json`` exclusively (``open(..., "x")``), so of two
+    writers racing for the same N exactly one wins (Iceberg's optimistic
+    concurrency). Every operation commits through it in one of two ways:
+
+    - validated — ``merge``, ``update_where``, ``compact``,
+      ``rewrite_deletes``, ``rollback``: one attempt against the head the
+      operation planned on; losing raises CommitConflict (a rebase could
+      resurrect rows the other writer changed — re-run the operation);
+    - rebasing — ``append``, ``overwrite``, ``commit_files``, ``delete``,
+      ``delete_positions_where``: each attempt re-plans against the new
+      head, up to five attempts, then CommitConflict.
+
+  * discard rule: an operation that wrote data or delete files and does
+    not commit them deletes them (``discard_files``) before it raises.
+    ``commit_files`` never deletes its caller's files: the writer that
+    produced them owns them (the ``manifest_table`` sink's ``abort``).
   * time travel: ``read(spark, snapshot_id=k)``
-  * append / overwrite operations with lineage (parent snapshot id)
+  * sidecars (per-commit ``_stats.json``/``_blooms.json``, the stream
+    watermarks) are replaced whole through ``write_json_atomic``
+  * a local POSIX path only: the exclusive create and the ``os`` calls
+    need one (SCALE.md §8)
 
 On a cluster with Iceberg jars, swap this class for the real catalog — the
 engine's call sites (append/overwrite/read/current_snapshot_id) map 1:1.
@@ -33,6 +49,35 @@ _MANIFEST_RE = re.compile(r"manifest-v(\d+)\.json$")
 
 class CommitConflict(Exception):
     """Another writer committed this version first — refresh and retry."""
+
+
+def discard_files(root: str, files) -> None:
+    """Best-effort removal of ``files`` (paths relative to ``root``): the
+    one discard helper — data and delete files a commit did not take,
+    files the ``manifest_table`` sink drops, a failed sidecar's temp."""
+    for f in files:
+        try:
+            os.remove(os.path.join(root, f))
+        except OSError:
+            pass
+
+
+def write_json_atomic(path: str, obj) -> None:
+    """Replace the JSON file at ``path`` whole: dump into a uniquely named
+    temp file beside it, then ``os.replace``. A crash or a failed dump
+    leaves the previous file intact, and concurrent writers never share a
+    temp file. The dot prefix hides the temp file from Spark's parquet
+    listing. Every sidecar of the table layer and of the indexes built
+    on it is written here."""
+    d, name = os.path.split(path)
+    tmp = f".{name}.{uuid.uuid4().hex[:8]}"
+    try:
+        with open(os.path.join(d, tmp), "w") as fh:
+            json.dump(obj, fh)
+        os.replace(os.path.join(d, tmp), path)
+    except BaseException:
+        discard_files(d, [tmp])
+        raise
 
 
 _STATS_NAME = "_stats.json"
@@ -148,10 +193,7 @@ def _write_commit_stats(commit_dir: str, names: list[str]) -> None:
         # footer timestamps are UTC instants). Stats files written before
         # this key existed get NO temporal pruning (see prune_files).
         stats[name] = {"rows": md.num_rows, "min": fmin, "max": fmax, "kind": fkind}
-    tmp = os.path.join(commit_dir, _STATS_NAME + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(stats, fh)
-    os.replace(tmp, os.path.join(commit_dir, _STATS_NAME))
+    write_json_atomic(os.path.join(commit_dir, _STATS_NAME), stats)
 
 
 class ManifestTable:
@@ -386,10 +428,7 @@ class ManifestTable:
                         "m": m, "k": k, "words": per_file[n],
                     }
                     written += 1
-            tmp = blooms_path + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(blooms, fh)
-            os.replace(tmp, blooms_path)
+            write_json_atomic(blooms_path, blooms)
         return written
 
     def prune_files_eq(
@@ -510,6 +549,118 @@ class ManifestTable:
             pred = clause if pred is None else (pred & clause)
         return self._pruned_read(spark, version, keep, pred)
 
+    def _try_commit(
+        self,
+        parent: int | None,
+        operation: str,
+        files: list[str],
+        schema_json: str,
+        deletes: list[dict] | None = None,
+        extra_meta: dict | None = None,
+    ) -> int | None:
+        """The table's one commit point: create ``manifest-v{parent+1}.json``
+        exclusively — a compare-and-swap on the head. Returns the new
+        snapshot id, or None when another writer took that version.
+
+        ``extra_meta`` rides on the manifest but may not override a
+        manifest key; 'deletes' is reserved even when absent, since a
+        foreign value under it would be read as MoR delete entries
+        (review r5). The record is serialized BEFORE the create, so a
+        value JSON cannot encode never leaves a truncated head behind."""
+        version = (parent or 0) + 1
+        manifest = {
+            "snapshot_id": version,
+            "parent": parent,
+            "operation": operation,
+            "files": files,
+            "schema": schema_json,
+            "ts": time.time(),
+        }
+        if deletes:
+            manifest["deletes"] = deletes
+        clash = set(extra_meta or ()) & (set(manifest) | {"deletes"})
+        if clash:
+            raise ValueError(
+                f"extra_meta may not override reserved manifest keys: {sorted(clash)}"
+            )
+        manifest.update(extra_meta or {})
+        payload = json.dumps(manifest)
+        try:
+            with open(self._manifest_path(version), "x") as fh:
+                fh.write(payload)
+        except FileExistsError:
+            return None
+        return version
+
+    def _commit_validated(
+        self,
+        parent: int | None,
+        operation: str,
+        files: list[str],
+        schema_json: str,
+        new_files: list[str],
+        deletes: list[dict] | None = None,
+        extra_meta: dict | None = None,
+    ) -> int:
+        """One attempt against the head the operation planned on. Losing
+        raises CommitConflict; ``new_files`` (the files this operation
+        wrote) are discarded first — no manifest references them, and
+        retry loops would otherwise leak a file set per conflict."""
+        version = None
+        try:
+            version = self._try_commit(parent, operation, files, schema_json, deletes, extra_meta)
+        finally:
+            if version is None:
+                discard_files(self.root, new_files)
+        if version is None:
+            raise CommitConflict(
+                f"concurrent commit during {operation} — re-run against the new head"
+            )
+        return version
+
+    def _commit_rebasing(self, operation: str, plan, new_files=(), retries: int = 5) -> int:
+        """The shared retry loop: each attempt reads the head and commits
+        ``plan(head)`` = (files, schema_json, deletes, extra_meta), which
+        re-derives everything head-dependent — a retry re-applies the
+        delta, never the stale snapshot. ``plan`` may raise CommitConflict
+        to refuse a head it cannot rebase onto. ``new_files`` are
+        discarded when the loop fails."""
+        version = None
+        try:
+            for _ in range(retries):
+                parent = self.current_snapshot_id()
+                version = self._try_commit(parent, operation, *plan(parent))
+                if version is not None:
+                    return version
+        finally:
+            if version is None:
+                discard_files(self.root, new_files)
+        raise CommitConflict(f"could not commit {operation} after {retries} attempts")
+
+    def _delta_plan(self, new_files, operation, schema_json, extra_meta):
+        """``plan`` for append/overwrite/commit_files: an append keeps the
+        head's files, its outstanding MoR delete entries (they cover only
+        their ``applies_to``, never the new files) and widens the schema
+        against it; any other operation replaces the contents wholesale.
+        Rebasing only the writer's OWN files means an append racing an
+        overwrite cannot resurrect the pre-overwrite base, and widening
+        per attempt means a retry cannot commit a schema that hides a
+        column a concurrent commit added (review r5)."""
+
+        def plan(parent):
+            if operation != "append":
+                return list(new_files), schema_json, None, extra_meta
+            head = self._load(parent) if parent is not None else {}
+            base = head.get("files", [])
+            return (
+                base + [p for p in new_files if p not in base],
+                self._widened_schema_json(schema_json, parent),
+                head.get("deletes"),
+                extra_meta,
+            )
+
+        return plan
+
     def _commit(
         self,
         new_files: list[str],
@@ -518,63 +669,10 @@ class ManifestTable:
         retries: int = 5,
         extra_meta: dict | None = None,
     ) -> int:
-        """Commit ``new_files`` under ``operation`` semantics.
-
-        ``new_files`` holds ONLY the files this writer produced. The full file
-        list is derived from the *current* head on every attempt, so an append
-        racing a concurrent overwrite rebases just its own new files onto the
-        overwrite's head instead of resurrecting the pre-overwrite base
-        (Iceberg append semantics: the retry re-applies the delta, not the
-        stale snapshot).
-        """
-        for _ in range(retries):
-            parent = self.current_snapshot_id()
-            attempt_schema = schema_json
-            deletes: list[dict] = []
-            if operation == "append":
-                parent_manifest = self._load(parent) if parent is not None else {}
-                base = parent_manifest.get("files", [])
-                files = base + [p for p in new_files if p not in base]
-                # schema widening is per-attempt state exactly like the file
-                # list: a retry's head may carry columns the first attempt's
-                # head lacked (review r5)
-                attempt_schema = self._widened_schema_json(schema_json, parent)
-                # outstanding MoR delete entries carry forward: they apply
-                # only to the files listed in their applies_to, so the
-                # newly appended files are untouched (round 5)
-                deletes = parent_manifest.get("deletes", [])
-            else:  # overwrite: replace the table contents wholesale
-                files = list(new_files)
-            version = (parent if parent is not None else 0) + 1
-            manifest = {
-                "snapshot_id": version,
-                "parent": parent,
-                "operation": operation,
-                "files": files,
-                "schema": attempt_schema,
-                "ts": time.time(),
-            }
-            if deletes:
-                manifest["deletes"] = deletes
-            if extra_meta:
-                # 'deletes' is structural even when absent from this
-                # manifest — a foreign extra_meta value under that key
-                # would be misread as MoR delete entries at read time
-                # (review r5)
-                clash = set(extra_meta) & (set(manifest) | {"deletes"})
-                if clash:
-                    raise ValueError(
-                        f"extra_meta may not override reserved manifest keys: {sorted(clash)}"
-                    )
-                manifest.update(extra_meta)
-            try:
-                # exclusive create = the atomic commit point
-                with open(self._manifest_path(version), "x") as f:
-                    json.dump(manifest, f)
-                return version
-            except FileExistsError:
-                continue  # another writer won this version — rebase and retry
-        raise CommitConflict(f"could not commit after {retries} attempts")
+        """Rebasing commit of data files this table wrote (append and
+        overwrite); they are discarded if the loop gives up."""
+        plan = self._delta_plan(new_files, operation, schema_json, extra_meta)
+        return self._commit_rebasing(operation, plan, new_files, retries)
 
     def append(self, df: DataFrame) -> int:
         return self._commit(self._write_data(df), "append", df.schema.json())
@@ -589,20 +687,15 @@ class ManifestTable:
         """Commit data files some OTHER writer already produced under this
         root (the python datasource writer: executors write parquet, the
         driver calls this — the standard transactional-sink split). Same
-        rebase-and-retry CAS as append/overwrite. ``extra_meta`` rides on
-        the manifest (the streaming sink records its identity + batch id
-        here for replay detection, the Iceberg/Delta streaming pattern).
-
-        Appends WIDEN the committed schema against the current head
-        (merge's guard, review r4): committing a narrower stream/batch
-        schema wholesale would hide existing columns from every later
-        read. A same-name field with a DIFFERENT type is rejected —
-        silently keeping either type would misread the other side's
-        files. The widening happens INSIDE the rebase-and-retry loop,
-        against each attempt's head (review r5: widening once up front
-        meant a CommitConflict retry rebased the file list but committed
-        the stale schema, hiding a column a concurrent commit added)."""
-        return self._commit(list(files), operation, schema_json, extra_meta=extra_meta)
+        rebase-and-retry loop and schema widening as append/overwrite,
+        but a failed commit never deletes ``files``: the writer owns them
+        (the sink's ``abort``). ``extra_meta`` rides on the manifest (the
+        streaming sink records its identity + batch id here for replay
+        detection, the Iceberg/Delta streaming pattern). A same-name
+        field with a DIFFERENT type is rejected — silently keeping either
+        type would misread the other side's files."""
+        plan = self._delta_plan(list(files), operation, schema_json, extra_meta)
+        return self._commit_rebasing(operation, plan)
 
     def _widened_schema_json(self, new_schema_json: str, head: int | None) -> str:
         if head is None:
@@ -709,10 +802,7 @@ class ManifestTable:
                 if marks.get(w) is None or b > marks[w]:
                     marks[w] = b
         if marks:
-            tmp = os.path.join(self.root, f".{self._WATERMARKS}.{uuid.uuid4().hex[:8]}")
-            with open(tmp, "w") as f:
-                json.dump(marks, f)
-            os.replace(tmp, os.path.join(self.root, self._WATERMARKS))
+            write_json_atomic(os.path.join(self.root, self._WATERMARKS), marks)
 
         surviving = [v for v in versions if v not in set(expiring)]
         live_files = set()
@@ -773,10 +863,7 @@ class ManifestTable:
                         ent = json.load(fh)
                     kept_ent = {n: e for n, e in ent.items() if n in live}
                     if len(kept_ent) != len(ent):
-                        tmp = path + ".tmp"
-                        with open(tmp, "w") as fh:
-                            json.dump(kept_ent, fh)
-                        os.replace(tmp, path)
+                        write_json_atomic(path, kept_ent)
                 except (OSError, ValueError):
                     pass  # sidecars are optimizations, never correctness
             if not live:
@@ -806,26 +893,10 @@ class ManifestTable:
         head = self.current_snapshot_id()
         if head == snapshot_id:
             return head
-        version = head + 1
-        out = {
-            "snapshot_id": version,
-            "parent": head,
-            "operation": "rollback",
-            "rolled_back_to": snapshot_id,
-            "files": list(target["files"]),
-            "schema": target["schema"],
-            "ts": time.time(),
-        }
-        if target.get("deletes"):
-            out["deletes"] = target["deletes"]
-        try:
-            with open(self._manifest_path(version), "x") as fh:
-                json.dump(out, fh)
-        except FileExistsError as exc:
-            raise CommitConflict(
-                "concurrent commit during rollback — re-run against the new head"
-            ) from exc
-        return version
+        return self._commit_validated(
+            head, "rollback", list(target["files"]), target["schema"], [],
+            target.get("deletes"), {"rolled_back_to": snapshot_id},
+        )
 
     def vacuum_orphans(self, grace_seconds: float = 86400.0) -> dict:
         """Remove data files referenced by NO surviving manifest (Iceberg's
@@ -1106,7 +1177,9 @@ class ManifestTable:
             # still commit with merge's strict conflict contract: a racing
             # writer must surface as CommitConflict, never a silent rebase
             new_files = self._write_data(src)
-            return self._commit_merge(parent, new_files, [], src.schema.json(), extra_meta)
+            return self._commit_validated(
+                parent, "merge", new_files, src.schema.json(), new_files, None, extra_meta
+            )
         manifest = self._load(parent)
         schema = T.StructType.fromJson(json.loads(manifest["schema"]))
         key_df = src.select(*keys).distinct()
@@ -1138,9 +1211,9 @@ class ManifestTable:
         # column read back as NULL, so widening is always safe.
         new_data = survivors.unionByName(src, allowMissingColumns=True)
         new_files = self._write_data(new_data)
-        return self._commit_merge(
-            parent, new_files, keep_files, new_data.schema.json(), extra_meta,
-            deletes=surviving_deletes,
+        return self._commit_validated(
+            parent, "merge", keep_files + new_files, new_data.schema.json(), new_files,
+            surviving_deletes, extra_meta,
         )
 
     def update_where(
@@ -1199,9 +1272,9 @@ class ManifestTable:
         )
         surviving_deletes = self._surviving_deletes(manifest, set(keep_files))
         new_files = self._write_data(updated)
-        return self._commit_merge(
-            parent, new_files, keep_files, manifest["schema"], extra_meta,
-            deletes=surviving_deletes, operation="update",
+        return self._commit_validated(
+            parent, "update", keep_files + new_files, manifest["schema"], new_files,
+            surviving_deletes, extra_meta,
         )
 
     def _matched_file_split(
@@ -1244,51 +1317,6 @@ class ManifestTable:
                 out.append({**e, "applies_to": cov})
         return out
 
-    def _commit_merge(
-        self,
-        parent: int | None,
-        new_files: list[str],
-        keep_files: list[str],
-        schema_json: str,
-        extra_meta: dict | None = None,
-        deletes: list[dict] | None = None,
-        operation: str = "merge",
-    ) -> int:
-        version = (parent if parent is not None else 0) + 1
-        out = {
-            "snapshot_id": version,
-            "parent": parent,
-            "operation": operation,
-            "files": keep_files + new_files,
-            "schema": schema_json,
-            "ts": time.time(),
-        }
-        if deletes:
-            out["deletes"] = deletes
-        if extra_meta:
-            clash = set(extra_meta) & (set(out) | {"deletes"})
-            if clash:
-                raise ValueError(
-                    f"extra_meta may not override reserved manifest keys: {sorted(clash)}"
-                )
-            out.update(extra_meta)
-        try:
-            with open(self._manifest_path(version), "x") as fh:
-                json.dump(out, fh)
-        except FileExistsError as exc:
-            # same orphan cleanup as compact (review r4): the rewritten
-            # files belong to no manifest; retry loops (e.g. the streaming
-            # dedup ingest) would otherwise leak a file set per conflict
-            for f in new_files:
-                try:
-                    os.remove(os.path.join(self.root, f))
-                except OSError:
-                    pass
-            raise CommitConflict(
-                f"concurrent commit during {operation} — re-run against the new head"
-            ) from exc
-        return version
-
     # -- reads ----------------------------------------------------------------
 
     def compact(
@@ -1329,8 +1357,6 @@ class ManifestTable:
         so box predicates over SEVERAL columns keep skipping via the
         per-commit column stats; column domains are sampled from the
         snapshot in one aggregate pass (Delta OPTIMIZE ZORDER BY's shape)."""
-        import os
-
         snap = self.current_snapshot_id()
         if snap is None:
             raise ValueError("cannot compact an empty table")
@@ -1381,31 +1407,7 @@ class ManifestTable:
         else:
             df = df.repartition(n_out)
         new_files = self._write_data(df)
-        # exclusive-create of manifest snap+1 = compare-and-swap on the head
-        version = snap + 1
-        out = {
-            "snapshot_id": version,
-            "parent": snap,
-            "operation": "compact",
-            "files": new_files,
-            "schema": manifest["schema"],
-            "ts": time.time(),
-        }
-        try:
-            with open(self._manifest_path(version), "x") as fh:
-                json.dump(out, fh)
-        except FileExistsError as exc:
-            # the rewritten data files were never referenced by any
-            # manifest — delete them or every conflicting retry leaks a
-            # full table copy in the table root (review r4)
-            for f in new_files:
-                try:
-                    os.remove(os.path.join(self.root, f))
-                except OSError:
-                    pass
-            raise CommitConflict(
-                "concurrent commit during compact — re-run against the new head"
-            ) from exc
+        version = self._commit_validated(snap, "compact", new_files, manifest["schema"], new_files)
         if bloom_cols:
             self.build_file_blooms(spark, bloom_cols, snapshot_id=version)
         return version
@@ -1687,28 +1689,9 @@ class ManifestTable:
             # delete entries that cover no file (committed onto an empty
             # table) are pure no-ops — drop them without touching data
             new_files = []
-        version = snap + 1
-        out = {
-            "snapshot_id": version,
-            "parent": snap,
-            "operation": "rewrite_deletes",
-            "files": untouched + new_files,
-            "schema": m["schema"],
-            "ts": time.time(),
-        }
-        try:
-            with open(self._manifest_path(version), "x") as fh:
-                json.dump(out, fh)
-        except FileExistsError as exc:
-            for f in new_files:  # never referenced — don't leak (compact's rule)
-                try:
-                    os.remove(os.path.join(self.root, f))
-                except OSError:
-                    pass
-            raise CommitConflict(
-                "concurrent commit during rewrite_deletes — re-run against the new head"
-            ) from exc
-        return version
+        return self._commit_validated(
+            snap, "rewrite_deletes", untouched + new_files, m["schema"], new_files
+        )
 
     def delete(
         self,
@@ -1751,44 +1734,28 @@ class ManifestTable:
         key_rows = keys_df.select(*keys).distinct()
         delete_files = self._write_data(key_rows)
         entry_schema = key_rows.schema.json()
-        for _ in range(5):
-            parent = self.current_snapshot_id()
-            pm = self._load(parent)
+
+        def plan(parent):
+            # applies_to is re-derived per attempt: the delete covers
+            # exactly the data visible when it commits
+            head = self._load(parent)
             entry = {
                 "files": delete_files,
                 "keys": list(keys),
                 "schema": entry_schema,
-                "applies_to": pm["files"],
+                "applies_to": head["files"],
             }
-            manifest = {
-                "snapshot_id": parent + 1,
-                "parent": parent,
-                "operation": "delete",
-                "files": pm["files"],
-                "schema": pm["schema"],
-                "ts": time.time(),
-                "deletes": pm.get("deletes", []) + [entry],
-            }
-            try:
-                with open(self._manifest_path(parent + 1), "x") as fh:
-                    json.dump(manifest, fh)
-                committed = parent + 1
-                if auto_rewrite_after is not None:
-                    amp = self.read_amplification(committed)
-                    if amp["delete_entries_per_data_file"] >= auto_rewrite_after:
-                        try:
-                            return self.rewrite_deletes(spark)
-                        except CommitConflict:
-                            pass  # maintenance lost a race; delete is committed
-                return committed
-            except FileExistsError:
-                continue
-        for f in delete_files:  # never referenced — don't leak (compact's rule)
-            try:
-                os.remove(os.path.join(self.root, f))
-            except OSError:
-                pass
-        raise CommitConflict("could not commit delete after 5 attempts")
+            return head["files"], head["schema"], head.get("deletes", []) + [entry], None
+
+        committed = self._commit_rebasing("delete", plan, delete_files)
+        if auto_rewrite_after is not None:
+            amp = self.read_amplification(committed)
+            if amp["delete_entries_per_data_file"] >= auto_rewrite_after:
+                try:
+                    return self.rewrite_deletes(spark)
+                except CommitConflict:
+                    pass  # maintenance lost a race; the delete is committed
+        return committed
 
     def delete_where(self, spark: SparkSession, condition, keys: list[str]) -> int:
         """Predicate convenience: delete every CURRENT row matching
@@ -1862,55 +1829,29 @@ class ManifestTable:
             matches.unpersist(blocking=False)
         entry_schema = matches.schema.json()
 
-        def _cleanup():
-            for f in delete_files:  # never referenced — don't leak
-                try:
-                    os.remove(os.path.join(self.root, f))
-                except OSError:
-                    pass
 
-        for _ in range(5):
-            parent = self.current_snapshot_id()
-            pm = self._load(parent)
-            head_basenames = {os.path.basename(f) for f in pm["files"]}
+        def plan(parent):
+            head = self._load(parent)
             # positions index SPECIFIC physical files and cannot rebase: if
             # a concurrent rewrite replaced any touched file, committing
             # would silently drop those deletions (review r6) — equality
             # deletes rebase because their keys re-apply to any head
-            if not touched <= head_basenames:
-                _cleanup()
+            if not touched <= {os.path.basename(f) for f in head["files"]}:
                 raise CommitConflict(
                     "a concurrent rewrite replaced file(s) holding deleted "
                     "positions — recompute the positional delete against "
                     "the new head"
                 )
-            covered = [f for f in pm["files"] if os.path.basename(f) in touched]
             entry = {
                 "kind": "position",
                 "files": delete_files,
                 "keys": ["__dfile", "__dpos"],
                 "schema": entry_schema,
-                "applies_to": covered,
+                "applies_to": [f for f in head["files"] if os.path.basename(f) in touched],
             }
-            out = {
-                "snapshot_id": parent + 1,
-                "parent": parent,
-                "operation": "delete",
-                "files": pm["files"],
-                "schema": pm["schema"],
-                "ts": time.time(),
-                "deletes": pm.get("deletes", []) + [entry],
-            }
-            try:
-                with open(self._manifest_path(parent + 1), "x") as fh:
-                    json.dump(out, fh)
-                return parent + 1
-            except FileExistsError:
-                continue
-        _cleanup()
-        raise CommitConflict(
-            "concurrent commits exhausted positional-delete retries — re-run"
-        )
+            return head["files"], head["schema"], head.get("deletes", []) + [entry], None
+
+        return self._commit_rebasing("delete", plan, delete_files)
 
     def diff(
         self,

@@ -43,7 +43,6 @@ the corpus-curation surface, SURVEY §2).
 from __future__ import annotations
 
 import hashlib
-import json
 import math
 import os
 
@@ -52,6 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import shingles_col
+from .index_meta import doc_id_type, open_index_meta, pin_doc_id_type
 
 __all__ = ["MaintainedMinHashIndex", "minhash_params", "MINHASH_P"]
 
@@ -79,9 +79,6 @@ def _base_hash(shingle_col) -> F.Column:
 
 
 class MaintainedMinHashIndex:
-    _META = "index_meta.json"
-    _PENDING_SUFFIX = None  # serving is append-only: no pending set needed
-
     def __init__(
         self,
         root: str,
@@ -97,26 +94,10 @@ class MaintainedMinHashIndex:
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
         self.root = root
-        cfg = {
-            "num_hashes": num_hashes,
-            "bands": bands,
-            "shingle_n": shingle_n,
-            "n_buckets": n_buckets,
-        }
-        meta_path = os.path.join(root, self._META)
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                stored = json.load(f)
-            mismatch = {k: (stored.get(k), v) for k, v in cfg.items() if stored.get(k) != v}
-            if mismatch:
-                raise ValueError(
-                    f"index at {root} was built with different parameters: {mismatch} "
-                    "— signatures/bands would disagree"
-                )
-        else:
-            os.makedirs(root, exist_ok=True)
-            with open(meta_path, "w") as f:
-                json.dump(cfg, f)
+        open_index_meta(
+            root,
+            dict(num_hashes=num_hashes, bands=bands, shingle_n=shingle_n, n_buckets=n_buckets),
+        )
         self.num_hashes = num_hashes
         self.bands = bands
         self.rows_per_band = num_hashes // bands
@@ -192,7 +173,7 @@ class MaintainedMinHashIndex:
         # validate against an existing pin always; WRITE the pin only on
         # the commit path (review r7: a crashed commit=False probe with a
         # wrongly-typed id column must not poison the empty index forever)
-        self._pin_meta("doc_id_type", id_type, write=commit)
+        pin_doc_id_type(self.root, id_type, write=commit)
 
         # r8 (VERDICT r7 #4): steady-state ingest was job-latency-bound
         # (~7 driver round-trips per batch in local mode). The batch and
@@ -356,27 +337,6 @@ class MaintainedMinHashIndex:
 
     # -- helpers --------------------------------------------------------------
 
-    def _pin_meta(self, key: str, value: str, write: bool = True) -> None:
-        meta_path = os.path.join(self.root, self._META)
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if key not in meta:
-            if not write:
-                return  # probe mode: nothing pinned yet, nothing to check
-            meta[key] = value
-            tmp = meta_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(meta, f)
-            os.replace(tmp, meta_path)
-        elif meta[key] != value:
-            raise ValueError(
-                f"index at {self.root} was built with {key}={meta[key]!r}, got {value!r}"
-            )
-
     def _read_serving(self, spark) -> DataFrame:
-        import json as _json
-
-        with open(os.path.join(self.root, self._META)) as f:
-            id_type = _json.load(f).get("doc_id_type", "bigint")
-        schema = f"band_idx int, band_key string, doc_id {id_type}, bucket int"
+        schema = f"band_idx int, band_key string, doc_id {doc_id_type(self.root)}, bucket int"
         return spark.read.schema(schema).parquet(self.serving_dir)

@@ -221,31 +221,15 @@ class MaintainedBM25Index:
     so a bucket rewrite is bounded, or ingest giant batches rarely.
     """
 
-    _META = "index_meta.json"
-
     def __init__(self, root: str, n_buckets: int = 64):
-        import json
-        import os
-
         from ..catalog import ManifestTable
         from ..rollup import IncrementalRollup
+        from .index_meta import open_index_meta
 
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
         self.root = root
-        meta_path = os.path.join(root, self._META)
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                stored = json.load(f)["n_buckets"]
-            if stored != n_buckets:
-                raise ValueError(
-                    f"index at {root} was built with n_buckets={stored}, "
-                    f"got {n_buckets} — term buckets would disagree"
-                )
-        else:
-            os.makedirs(root, exist_ok=True)
-            with open(meta_path, "w") as f:
-                json.dump({"n_buckets": n_buckets}, f)
+        open_index_meta(root, {"n_buckets": n_buckets})
         self.n_buckets = n_buckets
         self.terms = ManifestTable(f"{root}/terms")
         self.postings = ManifestTable(f"{root}/postings")
@@ -270,24 +254,9 @@ class MaintainedBM25Index:
         # derived from it, so a string-keyed index reads back correctly and
         # a type CHANGE across ingests fails here instead of corrupting the
         # serving layout (review r6)
-        import json as _json
-        import os as _os
+        from .index_meta import pin_doc_id_type
 
-        id_type = docs.schema[id_col].dataType.simpleString()
-        meta_path = _os.path.join(self.root, self._META)
-        with open(meta_path) as f:
-            meta = _json.load(f)
-        if "doc_id_type" not in meta:
-            meta["doc_id_type"] = id_type
-            tmp = meta_path + ".tmp"
-            with open(tmp, "w") as f:
-                _json.dump(meta, f)
-            _os.replace(tmp, meta_path)
-        elif meta["doc_id_type"] != id_type:
-            raise ValueError(
-                f"index at {self.root} was built with doc_id type "
-                f"{meta['doc_id_type']!r}, this batch has {id_type!r}"
-            )
+        pin_doc_id_type(self.root, docs.schema[id_col].dataType.simpleString())
         # r8: tokenization + posting fan-out runs above the scan — fan a
         # small single-split batch out to core count first
         batch = (
@@ -349,20 +318,12 @@ class MaintainedBM25Index:
             return set()
 
     def _save_pending(self, buckets: set[int]) -> None:
-        import json as _json
-        import os as _os
+        from ..catalog import discard_files, write_json_atomic
 
-        path = _os.path.join(self.root, self._PENDING)
-        if not buckets:
-            try:
-                _os.remove(path)
-            except OSError:
-                pass
-            return
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(sorted(buckets), f)
-        _os.replace(tmp, path)
+        if buckets:
+            write_json_atomic(f"{self.root}/{self._PENDING}", sorted(buckets))
+        else:
+            discard_files(self.root, [self._PENDING])
 
     def _export(self, spark, affected: list[int] | None) -> int:
         """Sync the serving layout: affected buckets only (dynamic
@@ -422,12 +383,9 @@ class MaintainedBM25Index:
         doc-id type pinned at first ingest; pass an explicit DDL string
         to override, or None to infer (small tables only)."""
         if schema == "auto":
-            import json as _json
-            import os as _os
+            from .index_meta import doc_id_type
 
-            with open(_os.path.join(self.root, self._META)) as f:
-                id_type = _json.load(f).get("doc_id_type", "bigint")
-            schema = f"term string, doc_id {id_type}, tf long, dl long"
+            schema = f"term string, doc_id {doc_id_type(self.root)}, tf long, dl long"
         probe = self.probe_buckets(spark, queries, qtext_col)
         if not probe:
             probe = [-1]  # no tokens → empty result, keep the plan shape

@@ -35,6 +35,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import write_json_atomic
+
 _SIDECAR = "_zorder_stats.json"
 
 
@@ -147,8 +149,9 @@ def write_zordered(
         mins = [min(a, b) for a, b in zip(prior["domain_min"], mins)]
         maxs = [max(a, b) for a, b in zip(prior["domain_max"], maxs)]
     sidecar = {"cols": cols, "bits": bits, "domain_min": mins, "domain_max": maxs, "files": stats}
-    with open(sidecar_path, "w") as fh:
-        json.dump(sidecar, fh)
+    # replaced whole: a crash mid-write must leave the previous sidecar
+    # loadable, or every later prune_files and append fails to parse it
+    write_json_atomic(sidecar_path, sidecar)
     return sidecar
 
 

@@ -7,11 +7,14 @@ executors stream their Arrow batches into parquet files inside a
 per-write commit directory (`DataSourceArrowWriter.write`, one file per
 non-empty partition), and the DRIVER performs the single atomic
 manifest commit over the collected file list (`commit`), with
-`ManifestTable`'s rebase-and-retry CAS handling concurrent writers.
-`abort` sweeps the commit directory, so a failed job leaves neither a
-manifest nor orphan data files. This is the same
-executors-write/driver-commits split every transactional Spark sink
-(Iceberg/Delta) uses, expressed through the public python API.
+`ManifestTable.commit_files`'s rebase-and-retry CAS handling concurrent
+writers. `commit_files` never deletes the files it is handed: the sink
+owns them, and `abort` sweeps the commit directory, so a failed job
+leaves neither a manifest nor orphan data files. Files the sink drops (a
+failed attempt's partial file, a replayed micro-batch) go through the
+table layer's one discard helper, `catalog.discard_files`. This is the
+same executors-write/driver-commits split every transactional Spark
+sink (Iceberg/Delta) uses, expressed through the public python API.
 
     spark.dataSource.register(ManifestTableDataSource)
     df.write.format("manifest_table").option("root", path).mode("append").save()
@@ -40,20 +43,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from ..catalog import ManifestTable, discard_files
+
 
 class _FilesMessage(WriterCommitMessage):
     def __init__(self, files: list[str]):
         self.files = files
-
-
-def _remove_files(root: str, files) -> None:
-    """Best-effort removal of relative data files (shared by the batch
-    write-failure path, the stream replay path, and stream abort)."""
-    for f in files:
-        try:
-            os.remove(os.path.join(root, f))
-        except OSError:
-            pass
 
 
 class _ManifestWriter(DataSourceArrowWriter):
@@ -86,19 +81,17 @@ class _ManifestWriter(DataSourceArrowWriter):
             if writer is not None:
                 writer.close()
                 writer = None
-            _remove_files(self.root, [out_rel])
+            discard_files(self.root, [out_rel])
             raise
         if writer is not None:
             writer.close()
         if n == 0:
             if writer is not None:  # batches arrived but carried 0 rows
-                _remove_files(self.root, [out_rel])
+                discard_files(self.root, [out_rel])
             return _FilesMessage([])
         return _FilesMessage([out_rel])
 
     def commit(self, messages):
-        from ..catalog import ManifestTable
-
         files = [f for m in messages if m is not None for f in m.files]
         ManifestTable(self.root).commit_files(
             files, self.schema_json, "overwrite" if self.overwrite else "append"
@@ -162,8 +155,6 @@ class ManifestTableDataSource(DataSource):
         return "manifest_table"
 
     def _table(self):
-        from ..catalog import ManifestTable
-
         root = self.options.get("root")
         if not root:
             raise ValueError("manifest_table requires .option('root', <table root>)")
@@ -249,16 +240,14 @@ class _ManifestStreamWriter(_ManifestWriter, DataSourceStreamArrowWriter):
         self.writer_id = writer_id
 
     def commit(self, messages, batchId: int) -> None:
-        from ..catalog import ManifestTable
-
         t = ManifestTable(self.root)
         files = [f for m in messages if m is not None for f in m.files]
         last = t.last_stream_batch(self.writer_id)
         if last is not None and batchId <= last:
-            _remove_files(self.root, files)  # replay: already committed
+            discard_files(self.root, files)  # replay: already committed
             return
-        # operation MUST be the literal "append": _commit's rebase keeps
-        # the head's files only for that operation and treats any other
+        # operation MUST be the literal "append": the rebase keeps the
+        # head's files only for that operation and treats any other
         # string as a wholesale overwrite (the identity lives in the
         # manifest metadata, not the operation name)
         t.commit_files(
@@ -269,6 +258,6 @@ class _ManifestStreamWriter(_ManifestWriter, DataSourceStreamArrowWriter):
         )
 
     def abort(self, messages, batchId: int) -> None:
-        _remove_files(
+        discard_files(
             self.root, [f for m in messages if m is not None for f in m.files]
         )

@@ -1478,3 +1478,177 @@ def test_file_blooms_probe_tinyint_smallint_columns(spark, tmp_path):
         assert total == 4 and 1 <= len(keep) <= 2, f"{col} bloom not probed"
         got = sorted(r[col] for r in t.read_eq(spark, {col: 37}).collect())
         assert got == [37]
+
+
+def _data_parquet(t: ManifestTable) -> set[str]:
+    """Every parquet file under the table's data/ dir, relative to its root."""
+    out = set()
+    for d, _dirs, names in os.walk(os.path.join(t.root, "data")):
+        out.update(
+            os.path.relpath(os.path.join(d, n), t.root) for n in names if n.endswith(".parquet")
+        )
+    return out
+
+
+@pytest.mark.parametrize("operation", ["append", "overwrite"])
+def test_write_conflict_discards_its_data_files(spark, tmp_path, operation):
+    """append and overwrite delete the data files they wrote when their
+    retry loop gives up — a lost commit must not leave parquet that no
+    manifest references (the same discard rule as every other writer)."""
+    t = ManifestTable(str(tmp_path / "tbl"))
+    t.append(spark.createDataFrame([(1,)], "k int"))
+    schema = t._load(1)["schema"]
+
+    class Stubborn(ManifestTable):
+        def current_snapshot_id(self):
+            real = super().current_snapshot_id()
+            with open(self._manifest_path(real + 1), "x") as f:
+                json.dump({"snapshot_id": real + 1, "parent": real,
+                           "operation": "append", "files": [], "schema": schema}, f)
+            return real
+
+    before = _data_parquet(t)
+    with pytest.raises(CommitConflict):
+        getattr(Stubborn(t.root), operation)(spark.createDataFrame([(2,), (3,)], "k int"))
+    referenced = {f for v in t.snapshots() for f in t._load(v)["files"]}
+    assert _data_parquet(t) - before - referenced == set()
+
+
+def test_one_commit_point_and_one_atomic_writer():
+    """Every snapshot is created by the one exclusive-create open in
+    ManifestTable._try_commit, and every sidecar is replaced through
+    catalog.write_json_atomic — no other os.replace in the package."""
+    import ast
+    import pathlib
+
+    import article_extraction_spark
+
+    pkg = pathlib.Path(article_extraction_spark.__file__).parent
+
+    def sites(path: pathlib.Path, match) -> list[str]:
+        """Qualified name of the function around each call ``match`` accepts."""
+        out = []
+
+        def walk(node, scope):
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.ClassDef)):
+                    walk(child, scope + [child.name])
+                    continue
+                if isinstance(child, ast.Call) and match(child):
+                    out.append(".".join(scope))
+                walk(child, scope)
+
+        walk(ast.parse(path.read_text()), [])
+        return out
+
+    def exclusive_open(call) -> bool:
+        mode = call.args[1] if len(call.args) > 1 else None
+        mode = next((k.value for k in call.keywords if k.arg == "mode"), mode)
+        return (
+            isinstance(call.func, ast.Name)
+            and call.func.id == "open"
+            and isinstance(mode, ast.Constant)
+            and "x" in str(mode.value)
+        )
+
+    def os_replace(call) -> bool:
+        f = call.func
+        return (
+            isinstance(f, ast.Attribute)
+            and f.attr == "replace"
+            and isinstance(f.value, ast.Name)
+            and f.value.id in ("os", "_os")
+        )
+
+    assert sites(pkg / "catalog.py", exclusive_open) == ["ManifestTable._try_commit"]
+    replaced = {
+        (str(p.relative_to(pkg)), s) for p in pkg.rglob("*.py") for s in sites(p, os_replace)
+    }
+    assert replaced == {("catalog.py", "write_json_atomic")}
+
+
+def test_manifest_layout_of_every_operation(spark, tmp_path):
+    """Pins what each operation writes into its manifest: the key set and
+    the operation, parent, files and deletes values. A file is named by
+    the order in which its commit dir first appears ("d0", "d1", ...), so
+    the pin does not depend on the random dir names or on how many part
+    files one write produced."""
+    t = ManifestTable(str(tmp_path / "tbl"))
+
+    def rows(*ks):
+        return spark.createDataFrame([(k, f"v{k}") for k in ks], "k long, v string").coalesce(1)
+
+    t.append(rows(1, 2))  # 1
+    t.append(rows(3, 4))  # 2
+    t.delete(spark, rows(1), ["k"])  # 3
+    t.append(rows(5))  # 4
+    t.merge(spark, rows(2), ["k"])  # 5: rewrites the file holding k=2
+    t.update_where(spark, "k = 5", {"v": "'five'"})  # 6
+    t.delete_positions_where(spark, "k = 3")  # 7
+    t.rewrite_deletes(spark)  # 8
+    t.compact(spark)  # 9
+    streamed = t._write_data(rows(6))
+    t.commit_files(  # 10
+        streamed, t._load(9)["schema"],
+        extra_meta={"stream_writer": "w", "stream_batch": 0},
+    )
+    t.overwrite(rows(9))  # 11
+    t.rollback(7)  # 12: back to the positional delete
+
+    labels: dict[str, str] = {}
+
+    def names(files):
+        dirs = [os.path.dirname(f) for f in files]
+        for d in dirs:
+            labels.setdefault(d, f"d{len(labels)}")
+        return list(dict.fromkeys(labels[d] for d in dirs))
+
+    got = {}
+    for v in t.snapshots():
+        m = t._load(v)
+        files = names(m["files"])
+        deletes = [
+            (sorted(e), e.get("kind"), e["keys"], names(e["files"]), names(e["applies_to"]))
+            for e in m.get("deletes", [])
+        ]
+        got[v] = (sorted(m), m["operation"], m["parent"], files, deletes)
+    base = ["files", "operation", "parent", "schema", "snapshot_id", "ts"]
+    with_deletes = sorted(base + ["deletes"])
+    eq_keys = ["applies_to", "files", "keys", "schema"]
+    eq_entry = (eq_keys, None, ["k"], ["d2"], ["d0", "d1"])
+    eq_entry_on_d1 = (eq_keys, None, ["k"], ["d2"], ["d1"])
+    pos_entry = (sorted(eq_keys + ["kind"]), "position", ["__dfile", "__dpos"], ["d6"], ["d1"])
+    assert got == {
+        1: (base, "append", None, ["d0"], []),
+        2: (base, "append", 1, ["d0", "d1"], []),
+        3: (with_deletes, "delete", 2, ["d0", "d1"], [eq_entry]),
+        4: (with_deletes, "append", 3, ["d0", "d1", "d3"], [eq_entry]),
+        5: (with_deletes, "merge", 4, ["d1", "d3", "d4"], [eq_entry_on_d1]),
+        6: (with_deletes, "update", 5, ["d1", "d4", "d5"], [eq_entry_on_d1]),
+        7: (with_deletes, "delete", 6, ["d1", "d4", "d5"], [eq_entry_on_d1, pos_entry]),
+        8: (base, "rewrite_deletes", 7, ["d4", "d5", "d7"], []),
+        9: (base, "compact", 8, ["d8"], []),
+        10: (sorted(base + ["stream_batch", "stream_writer"]), "append", 9, ["d8", "d9"], []),
+        11: (base, "overwrite", 10, ["d10"], []),
+        12: (
+            sorted(base + ["deletes", "rolled_back_to"]), "rollback", 11,
+            ["d1", "d4", "d5"], [eq_entry_on_d1, pos_entry],
+        ),
+    }
+    assert t._load(12)["rolled_back_to"] == 7
+    assert (t._load(10)["stream_writer"], t._load(10)["stream_batch"]) == ("w", 0)
+
+
+def test_unencodable_extra_meta_leaves_the_head_readable(tmp_path):
+    """The manifest is serialized before its exclusive create: a value
+    JSON cannot encode raises without leaving a truncated manifest that
+    would become the unreadable head of the table."""
+    from pyspark.sql import types as T
+
+    t = ManifestTable(str(tmp_path / "tbl"))
+    schema = T.StructType([T.StructField("k", T.IntegerType())]).json()
+    assert t.commit_files([], schema) == 1
+    with pytest.raises(TypeError):
+        t.commit_files([], schema, extra_meta={"bad": object()})
+    assert t.current_snapshot_id() == 1
+    assert t.commit_files([], schema) == 2

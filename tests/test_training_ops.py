@@ -1151,6 +1151,39 @@ def test_zorder_box_prunes_and_matches_full_scan(spark, tmp_path):
         spark.read.parquet(path).count()
 
 
+def test_zorder_sidecar_survives_failed_append(spark, tmp_path, monkeypatch):
+    """The z-order sidecar is replaced whole: a dump that fails during an
+    append leaves the previous sidecar loadable (prune_files keeps
+    working on the files it describes) and no temp file behind."""
+    import json
+    import os
+
+    import pytest
+
+    from article_extraction_spark.operators.zorder import prune_files, write_zordered
+
+    path = str(tmp_path / "z")
+    df = spark.createDataFrame(
+        [(float(i), float(i % 7)) for i in range(64)], "x double, y double"
+    )
+    before = write_zordered(df, path, ["x", "y"], n_files=4)
+    real_dump = json.dump
+
+    def failing_dump(obj, fh, *args, **kwargs):
+        if isinstance(obj, dict) and "domain_min" in obj:
+            raise OSError("disk full")
+        return real_dump(obj, fh, *args, **kwargs)
+
+    monkeypatch.setattr(json, "dump", failing_dump)
+    with pytest.raises(OSError, match="disk full"):
+        write_zordered(df, path, ["x", "y"], n_files=2, mode="append")
+    monkeypatch.undo()
+    with open(os.path.join(path, "_zorder_stats.json")) as fh:
+        assert json.load(fh) == before
+    assert len(prune_files(path, {"x": (0.0, 63.0)})) == len(before["files"])
+    assert not [n for n in os.listdir(path) if n.startswith("._zorder_stats")]
+
+
 def test_zorder_degenerate_and_empty_box(spark, tmp_path):
     from article_extraction_spark.operators.zorder import (
         read_zordered,
