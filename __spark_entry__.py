@@ -1011,8 +1011,8 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_time_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling time-window aggregation (batch twin of the streaming
-    windowed metrics): hourly per-type event counts + exact cent sums."""
+    """Tumbling time-window aggregation: hourly per-type event counts +
+    exact cent sums."""
     e = _t(spark, sf_dir, "events")
     return e.groupBy(
         F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:00").alias("hour"),

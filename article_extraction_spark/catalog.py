@@ -15,17 +15,15 @@ Semantics provided (the subset the engine relies on):
       ``rewrite_deletes``, ``rollback``: one attempt against the head the
       operation planned on; losing raises CommitConflict (a rebase could
       resurrect rows the other writer changed — re-run the operation);
-    - rebasing — ``append``, ``overwrite``, ``commit_files``, ``delete``,
+    - rebasing — ``append``, ``overwrite``, ``delete``,
       ``delete_positions_where``: each attempt re-plans against the new
       head, up to five attempts, then CommitConflict.
 
   * discard rule: an operation that wrote data or delete files and does
     not commit them deletes them (``discard_files``) before it raises.
-    ``commit_files`` never deletes its caller's files: the writer that
-    produced them owns them (the ``manifest_table`` sink's ``abort``).
   * time travel: ``read(spark, snapshot_id=k)``
-  * sidecars (per-commit ``_stats.json``/``_blooms.json``, the stream
-    watermarks) are replaced whole through ``write_json_atomic``
+  * sidecars (per-commit ``_stats.json``/``_blooms.json``) are replaced
+    whole through ``write_json_atomic``
   * a local POSIX path only: the exclusive create and the ``os`` calls
     need one (SCALE.md §8)
 
@@ -54,7 +52,7 @@ class CommitConflict(Exception):
 def discard_files(root: str, files) -> None:
     """Best-effort removal of ``files`` (paths relative to ``root``): the
     one discard helper — data and delete files a commit did not take,
-    files the ``manifest_table`` sink drops, a failed sidecar's temp."""
+    a failed sidecar's temp."""
     for f in files:
         try:
             os.remove(os.path.join(root, f))
@@ -637,15 +635,23 @@ class ManifestTable:
                 discard_files(self.root, new_files)
         raise CommitConflict(f"could not commit {operation} after {retries} attempts")
 
-    def _delta_plan(self, new_files, operation, schema_json, extra_meta):
-        """``plan`` for append/overwrite/commit_files: an append keeps the
-        head's files, its outstanding MoR delete entries (they cover only
-        their ``applies_to``, never the new files) and widens the schema
-        against it; any other operation replaces the contents wholesale.
-        Rebasing only the writer's OWN files means an append racing an
-        overwrite cannot resurrect the pre-overwrite base, and widening
-        per attempt means a retry cannot commit a schema that hides a
-        column a concurrent commit added (review r5)."""
+    def _commit(
+        self,
+        new_files: list[str],
+        operation: str,
+        schema_json: str,
+        retries: int = 5,
+        extra_meta: dict | None = None,
+    ) -> int:
+        """Rebasing commit of data files this table wrote (append and
+        overwrite); they are discarded if the loop gives up. An append
+        keeps the head's files, its outstanding MoR delete entries (they
+        cover only their ``applies_to``, never the new files) and widens
+        the schema against it; an overwrite replaces the contents
+        wholesale. Rebasing only the writer's OWN files means an append
+        racing an overwrite cannot resurrect the pre-overwrite base, and
+        widening per attempt means a retry cannot commit a schema that
+        hides a column a concurrent commit added (review r5)."""
 
         def plan(parent):
             if operation != "append":
@@ -659,43 +665,10 @@ class ManifestTable:
                 extra_meta,
             )
 
-        return plan
-
-    def _commit(
-        self,
-        new_files: list[str],
-        operation: str,
-        schema_json: str,
-        retries: int = 5,
-        extra_meta: dict | None = None,
-    ) -> int:
-        """Rebasing commit of data files this table wrote (append and
-        overwrite); they are discarded if the loop gives up."""
-        plan = self._delta_plan(new_files, operation, schema_json, extra_meta)
         return self._commit_rebasing(operation, plan, new_files, retries)
 
     def append(self, df: DataFrame) -> int:
         return self._commit(self._write_data(df), "append", df.schema.json())
-
-    def commit_files(
-        self,
-        files: list[str],
-        schema_json: str,
-        operation: str = "append",
-        extra_meta: dict | None = None,
-    ) -> int:
-        """Commit data files some OTHER writer already produced under this
-        root (the python datasource writer: executors write parquet, the
-        driver calls this — the standard transactional-sink split). Same
-        rebase-and-retry loop and schema widening as append/overwrite,
-        but a failed commit never deletes ``files``: the writer owns them
-        (the sink's ``abort``). ``extra_meta`` rides on the manifest (the
-        streaming sink records its identity + batch id here for replay
-        detection, the Iceberg/Delta streaming pattern). A same-name
-        field with a DIFFERENT type is rejected — silently keeping either
-        type would misread the other side's files."""
-        plan = self._delta_plan(list(files), operation, schema_json, extra_meta)
-        return self._commit_rebasing(operation, plan)
 
     def _widened_schema_json(self, new_schema_json: str, head: int | None) -> str:
         if head is None:
@@ -717,41 +690,7 @@ class ManifestTable:
         ]
         return T.StructType(merged).json()
 
-    def last_stream_batch(self, writer_id: str) -> int | None:
-        """Latest ``stream_batch`` committed by ``writer_id``, or None.
-
-        Walks the parent chain from the head and STOPS at the first
-        manifest carrying this writer's id — batch ids are monotonic per
-        writer, so the most recent entry answers any replay question in
-        one hit; only other writers' interleaved commits are skipped
-        (review r4: a full-chain scan per commit was O(history²)).
-
-        The walk ends at the expiry horizon (`expire_snapshots` deletes
-        old manifests); writers whose entries were ALL expired are
-        answered from the stream-watermark file expiry folds their
-        latest batch ids into — exactly-once survives history cleanup
-        (round 5)."""
-        version = self.current_snapshot_id()
-        while version is not None:
-            try:
-                manifest = self._load(version)
-            except FileNotFoundError:
-                break  # expired history — fall through to the watermarks
-            if manifest.get("stream_writer") == writer_id:
-                return manifest.get("stream_batch")
-            version = manifest.get("parent")
-        return self._stream_watermarks().get(writer_id)
-
     # -- history management (round 5) -----------------------------------------
-
-    _WATERMARKS = "stream-watermarks.json"
-
-    def _stream_watermarks(self) -> dict[str, int]:
-        try:
-            with open(os.path.join(self.root, self._WATERMARKS)) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
 
     def expire_snapshots(
         self,
@@ -759,20 +698,12 @@ class ManifestTable:
         older_than_ts: float | None = None,
     ) -> dict:
         """Iceberg-style snapshot expiry: delete old manifests and any data
-        file no SURVIVING snapshot references, keeping history (and the
-        replay-guard chain walk) bounded for long-running streaming tables
-        that commit one snapshot per micro-batch.
+        file no SURVIVING snapshot references, keeping history bounded for
+        tables that commit often.
 
         A snapshot expires when it is NOT among the ``keep_last`` newest
         AND (when ``older_than_ts`` is given) its commit ts is older. The
-        current head never expires. Before deleting manifests, each
-        expiring streaming commit's (writer, batch) is folded max-wise
-        into ``stream-watermarks.json`` (atomic tmp+rename) so the
-        exactly-once replay guard keeps answering for writers whose whole
-        history aged out — deleting the guard's evidence without the
-        watermark would re-admit a replayed batch as new data (data
-        duplication). Crash between watermark write and manifest delete
-        is safe: watermarks only ever raise the floor.
+        current head never expires.
 
         Like ``compact``, run this as the single maintenance job for the
         table (Iceberg's own expire_snapshots contract).
@@ -792,17 +723,6 @@ class ManifestTable:
             expiring.append(v)
         if not expiring:
             return {"expired": [], "deleted_files": 0, "kept": versions}
-
-        # fold expiring stream commits into the watermark file FIRST
-        marks = self._stream_watermarks()
-        for v in expiring:
-            m = self._load(v)
-            w, b = m.get("stream_writer"), m.get("stream_batch")
-            if w is not None and b is not None:
-                if marks.get(w) is None or b > marks[w]:
-                    marks[w] = b
-        if marks:
-            write_json_atomic(os.path.join(self.root, self._WATERMARKS), marks)
 
         surviving = [v for v in versions if v not in set(expiring)]
         live_files = set()
@@ -828,7 +748,7 @@ class ManifestTable:
                 pass
         # ADVICE r7 low: prune the removed files' _stats.json/_blooms.json
         # entries and drop commit dirs left holding only sidecar JSON —
-        # otherwise streaming ingest + scheduled expiry accretes unbounded
+        # otherwise frequent commits + scheduled expiry accrete unbounded
         # orphan metadata (stat/bloom entries for files that no longer
         # exist are never consulted, but never freed either).
         self._prune_sidecars({os.path.dirname(f) for f in dead_files})
@@ -1337,9 +1257,8 @@ class ManifestTable:
         the new head) — a rebasing overwrite here would silently DROP the
         concurrent writer's rows (review r3). Returns the new snapshot id.
 
-        Streaming ingest (run_available_now_merge) commits one file set per
-        micro-batch, so long-running tables accrete small files — schedule
-        this like any table-maintenance job.
+        Frequent small appends accrete small files — schedule this like
+        any table-maintenance job.
 
         ``sort_by`` (VERDICT r6 #3): re-cluster during the rewrite
         (repartitionByRange + sortWithinPartitions) so a sorted-ingest or

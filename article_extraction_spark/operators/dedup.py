@@ -109,8 +109,8 @@ def incremental_exact_dedup(
     commit: bool = True,
 ) -> DataFrame:
     """Ingestion-time exact dedup against the accumulated fingerprint
-    INDEX of everything already ingested (round 4) — the streaming/batch
-    pipeline version of `exact_duplicates`, which assumes the whole
+    INDEX of everything already ingested (round 4) — the ingest-time
+    version of `exact_duplicates`, which assumes the whole
     corpus is in front of you. At 10^12 docs you never re-fingerprint
     the corpus per batch; you keep a (fingerprint, first_seen_id) table
     and dedup each arriving batch against it.

@@ -145,7 +145,6 @@ class MaintainedMinHashIndex:
         id_col: str = "doc_id",
         text_col: str = "text",
         threshold: float = 0.5,
-        on_pairs=None,
         commit: bool = True,
     ) -> dict:
         """Index a batch; returns ``{"pairs": DataFrame (persisted),
@@ -155,16 +154,7 @@ class MaintainedMinHashIndex:
         fresh docs — (id_a, id_b, n_matches) with id_a < id_b and
         n_matches ≥ ceil(threshold · num_hashes). Docs whose text yields
         no shingles can never collide in a band and are skipped. Callers
-        ``.unpersist()`` the pairs frame when done.
-
-        ``on_pairs``: optional callback invoked with the materialized
-        pairs BEFORE the index commits. Load-bearing for streaming
-        (the exact-dedup twin's append-before-merge lesson): once the
-        index commits, a replayed batch is a no-op and returns EMPTY
-        pairs — a sink writing pairs only after ingest returns would
-        lose them forever on a crash between the two. Writing inside
-        the callback makes the pairs sink at-least-once instead
-        (re-appended on replay; readers dedup on (id_a, id_b))."""
+        ``.unpersist()`` the pairs frame when done."""
         if not 0.0 < threshold <= 1.0:
             raise ValueError(f"threshold must be in (0, 1], got {threshold}")
         min_matches = math.ceil(threshold * self.num_hashes - 1e-9)
@@ -205,15 +195,13 @@ class MaintainedMinHashIndex:
         fresh = fresh.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             return self._ingest_fresh(
-                spark, fresh, existing_ids, n_in, n_fresh, min_matches,
-                on_pairs, commit,
+                spark, fresh, existing_ids, n_in, n_fresh, min_matches, commit
             )
         finally:
             fresh.unpersist(blocking=False)
 
     def _ingest_fresh(
-        self, spark, fresh, existing_ids, n_in, n_fresh, min_matches,
-        on_pairs=None, commit=True,
+        self, spark, fresh, existing_ids, n_in, n_fresh, min_matches, commit=True
     ) -> dict:
         # one md5 pass per shingle, materialized once (HOF no-CSE rule).
         # Tokenless docs are dropped FIRST: shingles_col maps an empty
@@ -308,11 +296,9 @@ class MaintainedMinHashIndex:
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         try:
+            # BEFORE the commits: the pairs plan reads the serving layout
+            # and signature table those commits change
             pairs.count()
-            if on_pairs is not None:
-                # BEFORE the commits: a replayed batch returns empty pairs
-                # (see ingest docstring), so late sinks would lose these
-                on_pairs(pairs)
             if n_new and commit:
                 # serving FIRST: a crash before the sig merge leaves orphan
                 # band rows the retry dedups; sig-first would drop the batch

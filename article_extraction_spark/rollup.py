@@ -80,9 +80,8 @@ def fold_partials(
     """Fold already-aggregated partials into a rollup table: affected
     keys' existing rows outer-join the partials, per-aggregate combine,
     copy-on-write MERGE (``extra_meta`` rides the commit — the refresh
-    cursor / stream batch id). Bootstrap (empty rollup) merges the
-    partials directly. Shared by the batch refresher and the streaming
-    twin. Returns the number of keys written.
+    cursor). Bootstrap (empty rollup) merges the partials directly.
+    Returns the number of keys written.
 
     ``sweep_flag=(manifest_key, count_col)``: stamp ``manifest_key`` on
     the commit ONLY when the folded state actually contains
@@ -138,68 +137,6 @@ def fold_partials(
     return n
 
 
-def run_available_now_rollup(
-    df: DataFrame,
-    rollup_root: str,
-    checkpoint_dir: str,
-    keys: list[str],
-    aggs: dict[str, tuple[str, str | None]],
-    writer_id: str,
-    query_name: str = "stream-rollup",
-) -> None:
-    """Streaming materialized rollup: each micro-batch's partial
-    aggregates fold into a ManifestTable rollup via foreachBatch.
-
-    Exactly-once needs MORE than checkpoint replay here: folding sums is
-    NOT idempotent (re-folding a replayed batch double-counts), so every
-    fold commit records (stream_writer, stream_batch) on its manifest
-    and a batch id at or below the writer's recorded watermark is
-    SKIPPED — the same replayed-batch guard the ``manifest_table``
-    streaming sink uses (sources/manifest_source.py), keyed on writer
-    identity so two pipelines rolling into one table can't eat each
-    other's batch 0.
-
-    CONTRACT (review r5): ``writer_id`` must be 1:1 with the streaming
-    CHECKPOINT — use the checkpoint path. Batch ids are only meaningful
-    within one checkpoint; re-using a writer_id with a DIFFERENT
-    checkpoint makes the guard treat the new checkpoint's batch 0 as a
-    replay and silently skip it (never-folded data lost), while a fresh
-    checkpoint AND fresh writer_id re-folds all input the source
-    re-reads (double counts). Neither failure is detectable from batch
-    ids alone — this is inherent to per-checkpoint epoch numbering
-    (Delta/Iceberg idempotent sinks carry the same caveat)."""
-    if not writer_id:
-        raise ValueError("writer_id is required (stable per pipeline — e.g. the checkpoint path)")
-
-    def _roll(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        rollup = ManifestTable(rollup_root)
-        last = rollup.last_stream_batch(writer_id)
-        if last is not None and batch_id <= last:
-            return  # replayed micro-batch: already folded
-        partial = batch_df.groupBy(*keys).agg(*_agg_exprs(aggs))
-        fold_partials(
-            spark,
-            rollup,
-            partial,
-            keys,
-            aggs,
-            extra_meta={"stream_writer": writer_id, "stream_batch": batch_id},
-        )
-
-    q = (
-        df.writeStream.foreachBatch(_roll)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .queryName(query_name)
-        .start()
-    )
-    q.awaitTermination()
-
-
 class IncrementalRollup:
     """Maintains ``rollup`` = ``source.groupBy(keys).agg(aggs)``.
 
@@ -245,8 +182,8 @@ class IncrementalRollup:
 
     def cursor(self) -> int | None:
         """Source snapshot the rollup currently reflects: the nearest
-        manifest on the rollup's parent chain carrying the cursor key
-        (same walk as the streaming replay guard). None → never
+        manifest on the rollup's parent chain carrying the cursor key.
+        None → never
         refreshed (or history expired past every cursor) → full
         recompute."""
         try:

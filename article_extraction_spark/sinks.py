@@ -65,25 +65,3 @@ def variant_table_path(base_dir: str, variant: str) -> str:
     """S12: named table variants of a fixed schema (reference
     _get_variant_table :359-363 — ``paper_information_<variant>``)."""
     return os.path.join(base_dir, f"paper_information_{variant}")
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    keys: list[str],
-    n_buckets: int,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed co-location (the 100 TB join strategy): pay the shuffle ONCE
-    at write time — every later equi-join or aggregation on ``keys`` between
-    tables bucketed with the same (keys, n_buckets) runs EXCHANGE-FREE
-    (verified by tests/test_plans.py::test_bucketed_join_has_no_exchange).
-    Spark's ``bucketBy`` is the warehouse analog of Iceberg's
-    ``bucket(N, key)`` hidden-partition transform the checkpoint layer uses
-    (pipeline/partitioning.bucket_col); sortBy additionally lets the join
-    skip its sort."""
-    w = df.write.format("parquet").mode(mode).bucketBy(n_buckets, *keys)
-    if sort:
-        w = w.sortBy(*keys)
-    w.saveAsTable(table_name)

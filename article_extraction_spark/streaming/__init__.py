@@ -1,8 +1,1 @@
-from .ingest import (  # noqa: F401
-    run_available_now,
-    run_available_now_minhash_ingest,
-    streaming_dedup,
-    streaming_extract,
-    streaming_turn_metrics,
-)
-from .stateful import streaming_sessionize  # noqa: F401
+from .ingest import run_available_now, streaming_extract  # noqa: F401

@@ -122,8 +122,7 @@ def curate_corpus(
     # growing input only pay for genuinely new content. The index
     # records processed fingerprints, and the MERGE happens AFTER the
     # stage-6 write (review r4): committing here would make a crash in
-    # stages 3-6 permanently suppress documents no run ever emitted —
-    # the same merge-before-write loss the streaming ingest documents.
+    # stages 3-6 permanently suppress documents no run ever emitted.
     # Stage 2 already computed each doc's fingerprint, so this stage is
     # one anti-join on the existing column — no re-hash, no window.
     index = None

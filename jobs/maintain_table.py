@@ -1,7 +1,7 @@
 """Scheduled table-maintenance job for ManifestTable — the spark-submit
 analog of Iceberg's maintenance actions (rewrite_data_files,
 rewrite_position_delete_files, expire_snapshots), plus the engine's own
-read-path index builds. A 100 TB table under continuous streaming ingest
+read-path index builds. A 100 TB table under continuous ingest
 accretes small files, merge-on-read delete entries and stale snapshots;
 this job is the one cron entry that keeps the read path healthy:
 
@@ -10,7 +10,7 @@ this job is the one cron entry that keeps the read path healthy:
                  exceeds --rewrite-deletes-over (covered files only)
   3. COMPACT     small-file rewrite when mean file size < --compact-under-mb
   4. EXPIRE      drop snapshots beyond --keep-last / --older-than-hours
-                 (orphan data + delete files swept, stream watermarks folded)
+                 (orphan data + delete files swept)
   5. VACUUM      remove data files referenced by NO manifest (crashed
                  writes) older than --vacuum-orphans-hours
   6. BLOOMS      build per-file key blooms for --bloom-cols (incremental —

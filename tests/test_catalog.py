@@ -303,7 +303,7 @@ def test_retry_rewidens_schema_against_new_head(spark, tmp_path):
 
     r = RaceOnce(str(tmp_path / "tbl"))
     narrow = T.StructType([T.StructField("k", T.IntegerType())]).json()
-    v = r.commit_files([], narrow, operation="append")
+    v = r._commit([], "append", narrow)
     committed = T.StructType.fromJson(json.loads(r._load(v)["schema"]))
     assert [f.name for f in committed.fields] == ["k", "b", "c"]
 
@@ -349,47 +349,6 @@ def test_expire_older_than_ts_filter(spark, tmp_path):
     # cutoff after every commit → count policy alone decides
     res = t.expire_snapshots(keep_last=2, older_than_ts=first_ts + 1e9)
     assert res["expired"] == [1]
-
-
-def test_expire_preserves_stream_replay_guard(spark, tmp_path):
-    """Expiring ALL of a writer's streaming commits must not reopen the
-    exactly-once window: the watermark file answers for expired history
-    (review r5 design note — without it a replayed batch would re-commit
-    as new data)."""
-    from article_extraction_spark.sources.manifest_source import (
-        _FilesMessage,
-        _ManifestStreamWriter,
-    )
-
-    root = str(tmp_path / "tbl")
-    schema = spark.createDataFrame([(1,)], "k long").schema
-    w = _ManifestStreamWriter(root, schema, writer_id="pipe-A")
-
-    def fake_files(tag):
-        rel = f"data/commit-{tag}/{tag}.parquet"
-        os.makedirs(os.path.join(root, f"data/commit-{tag}"), exist_ok=True)
-        spark.createDataFrame([(1,)], "k long").toPandas().to_parquet(
-            os.path.join(root, rel)
-        )
-        return [rel]
-
-    for b in range(4):
-        w.commit([_FilesMessage(fake_files(f"b{b}"))], batchId=b)
-    t = ManifestTable(root)
-    # plain append on top so the head carries NO pipe-A metadata
-    t.append(spark.createDataFrame([(99,)], "k long"))
-    res = t.expire_snapshots(keep_last=1)
-    assert len(res["expired"]) == 4
-    assert t.last_stream_batch("pipe-A") == 3  # from the watermark file
-    # a replay of batch 3 after expiry must be dropped, not re-committed
-    n_before = t.read(spark).count()
-    dup = fake_files("replay3")
-    w.commit([_FilesMessage(dup)], batchId=3)
-    assert t.read(spark).count() == n_before
-    assert not os.path.exists(os.path.join(root, dup[0]))
-    # batch 4 is genuinely new
-    w.commit([_FilesMessage(fake_files("b4"))], batchId=4)
-    assert t.read(spark).count() == n_before + 1
 
 
 def test_read_incremental_appends(spark, tmp_path):
@@ -1587,10 +1546,9 @@ def test_manifest_layout_of_every_operation(spark, tmp_path):
     t.delete_positions_where(spark, "k = 3")  # 7
     t.rewrite_deletes(spark)  # 8
     t.compact(spark)  # 9
-    streamed = t._write_data(rows(6))
-    t.commit_files(  # 10
-        streamed, t._load(9)["schema"],
-        extra_meta={"stream_writer": "w", "stream_batch": 0},
+    t._commit(  # 10
+        t._write_data(rows(6)), "append", t._load(9)["schema"],
+        extra_meta={"rollup_source_snapshot": 4},
     )
     t.overwrite(rows(9))  # 11
     t.rollback(7)  # 12: back to the positional delete
@@ -1628,7 +1586,7 @@ def test_manifest_layout_of_every_operation(spark, tmp_path):
         7: (with_deletes, "delete", 6, ["d1", "d4", "d5"], [eq_entry_on_d1, pos_entry]),
         8: (base, "rewrite_deletes", 7, ["d4", "d5", "d7"], []),
         9: (base, "compact", 8, ["d8"], []),
-        10: (sorted(base + ["stream_batch", "stream_writer"]), "append", 9, ["d8", "d9"], []),
+        10: (sorted(base + ["rollup_source_snapshot"]), "append", 9, ["d8", "d9"], []),
         11: (base, "overwrite", 10, ["d10"], []),
         12: (
             sorted(base + ["deletes", "rolled_back_to"]), "rollback", 11,
@@ -1636,7 +1594,7 @@ def test_manifest_layout_of_every_operation(spark, tmp_path):
         ),
     }
     assert t._load(12)["rolled_back_to"] == 7
-    assert (t._load(10)["stream_writer"], t._load(10)["stream_batch"]) == ("w", 0)
+    assert t._load(10)["rollup_source_snapshot"] == 4
 
 
 def test_unencodable_extra_meta_leaves_the_head_readable(tmp_path):
@@ -1647,8 +1605,8 @@ def test_unencodable_extra_meta_leaves_the_head_readable(tmp_path):
 
     t = ManifestTable(str(tmp_path / "tbl"))
     schema = T.StructType([T.StructField("k", T.IntegerType())]).json()
-    assert t.commit_files([], schema) == 1
+    assert t._commit([], "append", schema) == 1
     with pytest.raises(TypeError):
-        t.commit_files([], schema, extra_meta={"bad": object()})
+        t._commit([], "append", schema, extra_meta={"bad": object()})
     assert t.current_snapshot_id() == 1
-    assert t.commit_files([], schema) == 2
+    assert t._commit([], "append", schema) == 2

@@ -136,58 +136,3 @@ def test_streaming_available_now_resume(spark, tmp_path):
     out = spark.read.parquet(out_dir)
     assert out.count() == 3  # only c2 turn 0 added; empty extraction dropped
     assert {r["extracted_text"] for r in out.collect()} == {"hello", "plain", "late"}
-
-
-def test_streaming_windowed_metrics(spark, tmp_path):
-    import datetime as dt
-
-    from article_extraction_spark.schemas import TRANSCRIPTS_SCHEMA
-    from article_extraction_spark.streaming import streaming_extract, streaming_turn_metrics
-
-    in_dir = str(tmp_path / "in2")
-    rows = [
-        ("c", i, "user", f"<p>t{i}</p>", None, dt.datetime(2024, 1, 1, 0, i)) for i in range(10)
-    ]
-    spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA).write.parquet(in_dir)
-    metrics = streaming_turn_metrics(streaming_extract(spark, in_dir))
-    q = (
-        metrics.writeStream.format("memory")
-        .queryName("turn_metrics")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT doc_kind, sum(n_turns) AS n FROM turn_metrics GROUP BY 1").collect()
-    assert {r["doc_kind"]: r["n"] for r in got} == {"html": 10}
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """Streaming exact dedup keeps the first occurrence per content
-    fingerprint with watermark-bounded state (dropDuplicatesWithinWatermark
-    — state does not grow with stream length)."""
-    import datetime as dt
-
-    from article_extraction_spark.schemas import TRANSCRIPTS_SCHEMA
-    from article_extraction_spark.streaming import streaming_dedup, streaming_extract
-
-    in_dir = str(tmp_path / "in3")
-    ts = dt.datetime(2024, 1, 1)
-    rows = [
-        ("c1", 0, "user", "<p>same text</p>", None, ts),
-        ("c2", 0, "user", "<p>same text</p>", None, ts),        # duplicate content
-        ("c3", 0, "user", "<p>other text</p>", None, ts),
-        ("c1", 0, "user", "<p>same text</p>", None, ts),        # duplicate key+content
-    ]
-    spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA).write.parquet(in_dir)
-    deduped = streaming_dedup(streaming_extract(spark, in_dir), by_content=True)
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT extracted_text FROM dedup_stream").collect()
-    assert sorted(r["extracted_text"] for r in got) == ["other text", "same text"]

@@ -149,44 +149,6 @@ def test_parameter_and_type_pins(spark, tmp_path):
         MaintainedMinHashIndex(str(tmp_path / "mh2"), num_hashes=10, bands=4)
 
 
-def test_available_now_minhash_ingest(spark, tmp_path):
-    """Streaming twin (round 7): micro-batches index into the persistent
-    MinHash index, verified pairs append to the output dir; re-running
-    over the same corpus emits nothing new (the index IS the replay
-    guard), and cross-batch near-dups are found."""
-    from article_extraction_spark.streaming.ingest import (
-        run_available_now_minhash_ingest,
-    )
-
-    in_dir, pairs_dir, idx_root, ckpt = (
-        str(tmp_path / "in"), str(tmp_path / "pairs"),
-        str(tmp_path / "idx"), str(tmp_path / "ckpt"),
-    )
-    schema = "doc_id long, text string"
-
-    def stream():
-        return spark.readStream.schema(schema).format("parquet").load(in_dir)
-
-    spark.createDataFrame(DOCS[:3], schema).coalesce(1).write.mode("append").parquet(in_dir)
-    run_available_now_minhash_ingest(stream(), pairs_dir, idx_root, ckpt)
-    p1 = {(r["id_a"], r["id_b"]) for r in spark.read.parquet(pairs_dir).collect()}
-    assert (0, 1) in p1  # within-batch near-dup
-
-    # second batch: doc 4 is a near-dup of batch-1's doc 0 (cross-batch)
-    spark.createDataFrame(DOCS[3:6], schema).coalesce(1).write.mode("append").parquet(in_dir)
-    run_available_now_minhash_ingest(stream(), pairs_dir, idx_root, ckpt)
-    p2 = {(r["id_a"], r["id_b"]) for r in spark.read.parquet(pairs_dir).collect()}
-    assert (0, 4) in p2 and (3, 5) in p2
-
-    # full result equals the batch-mode twin over the whole corpus
-    want = set(_py_pairs(DOCS[:6], 16, 8, 8))
-    assert p2 == want
-
-    # replay: fresh checkpoint over the SAME input emits nothing new
-    run_available_now_minhash_ingest(stream(), pairs_dir, idx_root, str(tmp_path / "ckpt2"))
-    assert {(r["id_a"], r["id_b"]) for r in spark.read.parquet(pairs_dir).collect()} == want
-
-
 def test_probe_mode_does_not_pin_meta(spark, tmp_path):
     """Review r7: a commit=False probe must not mutate the index — a
     crashed probe with a wrongly-typed id column used to pin

@@ -171,31 +171,6 @@ def test_scan_count_minhash_single_signature_pass(spark):
     assert "InMemoryTableScan" in _plan(pairs)
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the same (key, n) join with ZERO Exchange
-    nodes — the pre-shuffle was paid once at write time. At 100 TB this is
-    the difference between an 800 GB shuffle per join and none."""
-    from article_extraction_spark.sinks import write_bucketed_table
-
-    orders = spark.read.parquet(f"{SF}/orders.parquet").select("o_custkey", "o_totalprice")
-    cust = spark.read.parquet(f"{SF}/customer.parquet").select(
-        F.col("c_custkey").alias("o_custkey"), "c_name"
-    )
-    write_bucketed_table(orders, "b_orders", ["o_custkey"], 8)
-    write_bucketed_table(cust, "b_cust", ["o_custkey"], 8)
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ
-        j = spark.table("b_orders").join(spark.table("b_cust"), "o_custkey")
-        plan = _plan(j)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert j.count() > 0
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_cust")
-
-
 def test_top_terms_plan_partial_agg_and_take_ordered(spark):
     from article_extraction_spark.operators.textstats import top_terms
 

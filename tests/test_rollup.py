@@ -170,62 +170,6 @@ def test_cursor_survives_foreign_commits(spark, tmp_path):
     assert got["zz"] == (0, 0, 0, 0)  # foreign row untouched
 
 
-def test_streaming_rollup_exactly_once(spark, tmp_path):
-    """Streaming materialized rollup: run 1 folds the initial files;
-    run 2 folds only the new files; a FRESH checkpoint replaying the
-    same input hits the (writer, batch) guard and folds nothing — sums
-    are not idempotent, so replay protection is load-bearing."""
-    from article_extraction_spark.catalog import ManifestTable
-    from article_extraction_spark.rollup import run_available_now_rollup
-
-    in_dir, root, ck1 = str(tmp_path / "in"), str(tmp_path / "roll"), str(tmp_path / "ck1")
-    schema = "k string, v long"
-    aggs = {"n": ("count", None), "s": ("sum", "v")}
-    spark.createDataFrame([("a", 1), ("a", 2), ("b", 10)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(in_dir)
-
-    def run(ck):
-        stream = spark.readStream.schema(schema).parquet(in_dir)
-        run_available_now_rollup(stream, root, ck, ["k"], aggs, writer_id="w1")
-
-    run(ck1)
-    t = ManifestTable(root)
-    got = {r["k"]: (r["n"], r["s"]) for r in t.read(spark).collect()}
-    assert got == {"a": (2, 3), "b": (1, 10)}
-
-    # new files fold incrementally
-    spark.createDataFrame([("a", 5), ("c", 7)], schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(in_dir)
-    run(ck1)
-    got = {r["k"]: (r["n"], r["s"]) for r in ManifestTable(root).read(spark).collect()}
-    assert got == {"a": (3, 8), "b": (1, 10), "c": (1, 7)}
-
-    # a FRESH checkpoint re-reads everything as batch 0 — the writer
-    # watermark (batch 1 committed) must skip it: no double counting
-    run(str(tmp_path / "ck2"))
-    got = {r["k"]: (r["n"], r["s"]) for r in ManifestTable(root).read(spark).collect()}
-    assert got == {"a": (3, 8), "b": (1, 10), "c": (1, 7)}
-
-    # a DIFFERENT writer with its own checkpoint is a different pipeline:
-    # its batch 0 is NOT a replay and folds on top (documented semantics)
-    stream = spark.readStream.schema(schema).parquet(in_dir)
-    from article_extraction_spark.rollup import run_available_now_rollup as rar
-
-    rar(stream, root, str(tmp_path / "ck3"), ["k"], aggs, writer_id="w2")
-    got = {r["k"]: (r["n"], r["s"]) for r in ManifestTable(root).read(spark).collect()}
-    assert got == {"a": (6, 16), "b": (2, 20), "c": (2, 14)}
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="writer_id"):
-        run_available_now_rollup(
-            spark.readStream.schema(schema).parquet(in_dir), root, str(tmp_path / "ck4"),
-            ["k"], aggs, writer_id="",
-        )
-
-
 SUM_AGGS = {"n": ("count", None), "sum_v": ("sum", "v")}
 
 

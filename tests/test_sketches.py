@@ -222,47 +222,6 @@ def test_maintained_cm_incremental_equals_single_pass(spark, tmp_path):
     assert e_got == e_want
 
 
-def test_maintained_hll_tracks_streaming_appends(spark, tmp_path):
-    """Streaming composition (round 6): the manifest_table streaming sink
-    commits append-only snapshots, so the maintained sketch refreshes
-    INCREMENTALLY off each drained stream run — distinct counts stay
-    fresh under continuous ingest with no corpus rescan."""
-    from article_extraction_spark.catalog import ManifestTable
-    from article_extraction_spark.operators.sketches import hll_registers, maintained_hll
-    from article_extraction_spark.sources.manifest_source import ManifestTableDataSource
-    from article_extraction_spark.sources.transcript_source import (
-        SyntheticTranscriptsDataSource,
-    )
-
-    spark.dataSource.register(SyntheticTranscriptsDataSource)
-    spark.dataSource.register(ManifestTableDataSource)
-    root, ck = str(tmp_path / "tbl"), str(tmp_path / "ck")
-
-    def drain():
-        q = (
-            spark.readStream.format("synthetic_transcripts")
-            .option("n_convs", 30).option("turns_per_conv", 2)
-            .option("convs_per_batch", 15).load()
-            .writeStream.format("manifest_table")
-            .option("root", root).option("checkpointLocation", ck)
-            .option("writer_id", ck)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-
-    drain()  # first 15 convs
-    src = ManifestTable(root)
-    regs = ManifestTable(str(tmp_path / "regs"))
-    mh = maintained_hll(src, regs, "conv_id", b=8)
-    assert mh.refresh(spark)["mode"] == "full"
-    drain()  # next 15 convs append-only
-    r = mh.refresh(spark)
-    assert r["mode"] == "incremental"
-    got = sorted(map(tuple, regs.read(spark).select("register", "max_rho").collect()))
-    want = sorted(map(tuple, hll_registers(src.read(spark), "conv_id", b=8).collect()))
-    assert got == want
-
-
 def test_heavy_hitters_exact_and_pruned(spark):
     """heavy_hitters == the plain GROUP BY ... HAVING query exactly (the
     exact confirm removes collision survivors, count-min's one-sided

@@ -1,54 +1,7 @@
-"""Stateful streaming sessionizer: state must carry ACROSS micro-batches
-(a session straddling two batches keeps its id; a later gap opens a new one)."""
+"""The extraction stream's checkpointed resume: an AvailableNow restart
+processes only the files added since the last commit."""
 
 from __future__ import annotations
-
-import datetime as dt
-
-from article_extraction_spark.streaming.stateful import streaming_sessionize
-
-SCHEMA = "user_id long, ts timestamp, value double"
-
-
-def _run_batch(spark, in_dir, out_dir, ckpt):
-    stream = spark.readStream.schema(SCHEMA).parquet(in_dir)
-    q = (
-        streaming_sessionize(stream, gap_minutes=30)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def _ts(minute):
-    return dt.datetime(2024, 1, 1, minute // 60, minute % 60)
-
-
-def test_state_carries_across_batches(spark, tmp_path):
-    in_dir, out_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    batch1 = [(1, _ts(0), 1.0), (1, _ts(10), 1.0), (2, _ts(0), 1.0)]
-    spark.createDataFrame(batch1, SCHEMA).write.mode("append").parquet(in_dir)
-    _run_batch(spark, in_dir, out_dir, ckpt)
-
-    # batch 2: user 1 event at minute 25 (gap 15 ≤ 30 → SAME session),
-    # then minute 90 (gap 65 > 30 → new session); user 2 at minute 100 → new
-    batch2 = [(1, _ts(25), 1.0), (1, _ts(90), 1.0), (2, _ts(100), 1.0)]
-    spark.createDataFrame(batch2, SCHEMA).write.mode("append").parquet(in_dir)
-    _run_batch(spark, in_dir, out_dir, ckpt)
-
-    rows = spark.read.parquet(out_dir).collect()
-    got = {(r["user_id"], r["ts"].hour * 60 + r["ts"].minute): (r["session_id"], r["n_in_session"]) for r in rows}
-    assert got[(1, 0)] == (1, 1)
-    assert got[(1, 10)] == (1, 2)
-    assert got[(1, 25)] == (1, 3)   # continues the batch-1 session
-    assert got[(1, 90)] == (2, 1)   # gap → new session
-    assert got[(2, 0)] == (1, 1)
-    assert got[(2, 100)] == (2, 1)
 
 
 def test_available_now_stop_restart_exactly_once(spark, tmp_path):
@@ -89,185 +42,3 @@ def test_available_now_stop_restart_exactly_once(spark, tmp_path):
     # a third restart with nothing new appends nothing
     run_available_now(streaming_extract(spark, in_dir), out_dir, ckpt)
     assert spark.read.parquet(out_dir).count() == len(out2)
-
-
-def test_available_now_merge_upserts_into_manifest_table(spark, tmp_path):
-    """foreachBatch MERGE sink: run 1 inserts; run 2 (new input files with
-    overlapping keys) UPDATES matched rows and inserts new ones — table
-    state converges with no duplicate keys across restarts."""
-    from article_extraction_spark.catalog import ManifestTable
-    from article_extraction_spark.streaming.ingest import run_available_now_merge
-
-    in_dir, root, ckpt = str(tmp_path / "in"), str(tmp_path / "tbl"), str(tmp_path / "ck")
-    schema = "conv_id string, turn_idx int, extracted_text string"
-    spark.createDataFrame(
-        [("c1", 0, "v1"), ("c1", 1, "v1"), ("c2", 0, "v1")], schema
-    ).coalesce(1).write.mode("append").parquet(in_dir)
-
-    stream = spark.readStream.schema(schema).parquet(in_dir)
-    run_available_now_merge(stream, root, ckpt, keys=["conv_id", "turn_idx"])
-    t = ManifestTable(root)
-    got = {(r["conv_id"], r["turn_idx"]): r["extracted_text"]
-           for r in t.read(spark).collect()}
-    assert got == {("c1", 0): "v1", ("c1", 1): "v1", ("c2", 0): "v1"}
-    first_snapshot = t.current_snapshot_id()
-
-    # second batch: update (c1,0), insert (c3,0)
-    spark.createDataFrame([("c1", 0, "v2"), ("c3", 0, "v2")], schema).coalesce(
-        1
-    ).write.mode("append").parquet(in_dir)
-    stream = spark.readStream.schema(schema).parquet(in_dir)
-    run_available_now_merge(stream, root, ckpt, keys=["conv_id", "turn_idx"])
-    t = ManifestTable(root)
-    got = {(r["conv_id"], r["turn_idx"]): r["extracted_text"]
-           for r in t.read(spark).collect()}
-    assert got == {
-        ("c1", 0): "v2", ("c1", 1): "v1", ("c2", 0): "v1", ("c3", 0): "v2",
-    }
-    # no-new-input restart: no table change
-    before = t.current_snapshot_id()
-    stream = spark.readStream.schema(schema).parquet(in_dir)
-    run_available_now_merge(stream, root, ckpt, keys=["conv_id", "turn_idx"])
-    assert ManifestTable(root).current_snapshot_id() == before
-    # time travel still sees run-1 state
-    old = {(r["conv_id"], r["turn_idx"]): r["extracted_text"]
-           for r in ManifestTable(root).read(spark, snapshot_id=first_snapshot).collect()}
-    assert old[("c1", 0)] == "v1" and ("c3", 0) not in old
-
-
-def test_available_now_dedup_ingest(spark, tmp_path):
-    """round 4: foreachBatch incremental dedup — each run's micro-batch is
-    fingerprint-deduped against the PERSISTENT index, so re-sent content
-    (same text, new conv) never lands twice across restarts."""
-    from pyspark.sql import functions as F
-
-    from article_extraction_spark.catalog import ManifestTable
-    from article_extraction_spark.streaming.ingest import (
-        run_available_now_dedup_ingest,
-    )
-
-    in_dir, out_dir, idx, ckpt = (
-        str(tmp_path / "in"), str(tmp_path / "out"),
-        str(tmp_path / "idx"), str(tmp_path / "ckpt"),
-    )
-    schema = "conv_id string, turn_idx int, ts timestamp, extracted_text string"
-
-    def stream():
-        return (
-            spark.readStream.schema(schema).format("parquet").load(in_dir)
-        )
-
-    b1 = [
-        ("c1", 0, None, "unique alpha content"),
-        ("c1", 1, None, "unique beta content"),
-        ("c2", 0, None, "Unique ALPHA content!"),  # normalized dup of c1/0
-    ]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(in_dir)
-    run_available_now_dedup_ingest(stream(), out_dir, idx, ckpt)
-    out1 = spark.read.parquet(out_dir).collect()
-    assert len(out1) == 2  # the in-batch normalized dup collapsed
-    assert {r["conv_id"] for r in out1} == {"c1"}
-    assert ManifestTable(idx).read(spark).count() == 2
-
-    # restart with new files: one cross-batch dup + one genuinely new row
-    b2 = [
-        ("c3", 0, None, "unique beta content"),   # dup of batch 1
-        ("c3", 1, None, "fresh gamma content"),
-    ]
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(in_dir)
-    run_available_now_dedup_ingest(stream(), out_dir, idx, ckpt)
-    out2 = spark.read.parquet(out_dir).collect()
-    assert len(out2) == 3, sorted((r["conv_id"], r["turn_idx"]) for r in out2)
-    assert ("c3", 1) in {(r["conv_id"], r["turn_idx"]) for r in out2}
-    assert ManifestTable(idx).read(spark).count() == 3
-    # every surviving row carries its fingerprint for reader-side dedup
-    assert all(len(r["fingerprint"]) == 32 for r in spark.read.parquet(out_dir).collect())
-
-    # third run, nothing new: no appends, index unchanged
-    run_available_now_dedup_ingest(stream(), out_dir, idx, ckpt)
-    assert spark.read.parquet(out_dir).count() == 3
-    assert ManifestTable(idx).read(spark).count() == 3
-
-
-def test_streaming_interval_join_matches_batch(spark, tmp_path):
-    """round 4: the watermarked stream-stream interval join produces
-    exactly the batch interval join's rows over the same files (inner
-    join, [ts, ts+5 minutes] window, per-conv key)."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from article_extraction_spark.streaming.ingest import streaming_interval_join
-
-    def ts(minute):
-        return dt.datetime(2026, 1, 1, 10, minute)
-
-    turns = [
-        ("c1", 0, ts(0)), ("c1", 1, ts(10)), ("c2", 0, ts(0)),
-    ]
-    tools = [
-        ("c1", "search", ts(2)),     # joins c1/0 (within 5m)
-        ("c1", "browse", ts(7)),     # joins nothing (5m after turn 0, 3m before turn 1)
-        ("c1", "code", ts(12)),      # joins c1/1
-        ("c2", "search", ts(20)),    # outside every window
-    ]
-    t_dir, e_dir, out, ckpt = (
-        str(tmp_path / "t"), str(tmp_path / "e"),
-        str(tmp_path / "out"), str(tmp_path / "ck"),
-    )
-    t_schema = "conv_id string, turn_idx int, ts timestamp"
-    e_schema = "conv_id string, tool string, ts timestamp"
-    spark.createDataFrame(turns, t_schema).coalesce(1).write.parquet(t_dir)
-    spark.createDataFrame(tools, e_schema).coalesce(1).write.parquet(e_dir)
-
-    joined = streaming_interval_join(
-        spark.readStream.schema(t_schema).parquet(t_dir),
-        spark.readStream.schema(e_schema).parquet(e_dir),
-        key="conv_id", max_delay="5 minutes",
-    )
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["conv_id"], r["turn_idx"], r["tool_r"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got == {("c1", 0, "search"), ("c1", 1, "code")}, got
-
-    # batch twin over identical frames → identical pairs
-    bt = spark.createDataFrame(turns, t_schema).alias("l")
-    be = spark.createDataFrame(tools, e_schema).alias("r")
-    batch = bt.join(
-        be,
-        (F.col("l.conv_id") == F.col("r.conv_id"))
-        & (F.col("r.ts") >= F.col("l.ts"))
-        & (F.col("r.ts") <= F.col("l.ts") + F.expr("INTERVAL 5 minutes")),
-    ).select("l.conv_id", "l.turn_idx", "r.tool")
-    assert {tuple(r) for r in batch.collect()} == got
-
-    # shared column names must come back suffixed, not ambiguous
-    t2 = "conv_id string, ts timestamp, text string"
-    spark.createDataFrame([("c1", ts(0), "turn text")], t2).coalesce(1).write.parquet(
-        str(tmp_path / "t2")
-    )
-    spark.createDataFrame([("c1", ts(1), "tool text")], t2).coalesce(1).write.parquet(
-        str(tmp_path / "e2")
-    )
-    j2 = streaming_interval_join(
-        spark.readStream.schema(t2).parquet(str(tmp_path / "t2")),
-        spark.readStream.schema(t2).parquet(str(tmp_path / "e2")),
-        key="conv_id", max_delay="5 minutes",
-    )
-    assert sorted(j2.columns) == ["conv_id", "text", "text_r", "ts", "ts_r"], j2.columns
-    q2 = (
-        j2.writeStream.format("parquet")
-        .option("path", str(tmp_path / "out2"))
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q2.awaitTermination()
-    rows2 = spark.read.parquet(str(tmp_path / "out2")).collect()
-    assert [(r["text"], r["text_r"]) for r in rows2] == [("turn text", "tool text")]
