@@ -18,3 +18,9 @@ Design principles (see SURVEY.md):
 """
 
 __version__ = "0.1.0"
+
+from . import _zipimport
+
+# every Python worker that unpickles an engine function imports this
+# package first, so its later tasks skip the per-task zip directory re-reads
+_zipimport.install()

@@ -60,22 +60,29 @@ def discard_files(root: str, files) -> None:
             pass
 
 
-def write_json_atomic(path: str, obj) -> None:
-    """Replace the JSON file at ``path`` whole: dump into a uniquely named
-    temp file beside it, then ``os.replace``. A crash or a failed dump
-    leaves the previous file intact, and concurrent writers never share a
+def write_atomic(path: str, write, mode: str = "w") -> None:
+    """Replace the file at ``path`` whole: ``write(fh)`` into a uniquely
+    named temp file beside it, then ``os.replace``. A crash or a failed
+    write leaves the previous file intact, readers see the old file or the
+    new one, never a partial one, and concurrent writers never share a
     temp file. The dot prefix hides the temp file from Spark's parquet
-    listing. Every sidecar of the table layer and of the indexes built
-    on it is written here."""
+    listing. The package's one atomic writer."""
     d, name = os.path.split(path)
     tmp = f".{name}.{uuid.uuid4().hex[:8]}"
     try:
-        with open(os.path.join(d, tmp), "w") as fh:
-            json.dump(obj, fh)
+        with open(os.path.join(d, tmp), mode) as fh:
+            write(fh)
         os.replace(os.path.join(d, tmp), path)
     except BaseException:
         discard_files(d, [tmp])
         raise
+
+
+def write_json_atomic(path: str, obj) -> None:
+    """Replace the JSON file at ``path`` whole (``write_atomic``). Every
+    sidecar of the table layer and of the indexes built on it is written
+    here."""
+    write_atomic(path, lambda fh: json.dump(obj, fh))
 
 
 _STATS_NAME = "_stats.json"

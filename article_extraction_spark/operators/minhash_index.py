@@ -176,13 +176,16 @@ class MaintainedMinHashIndex:
         batch = docs.select(
             F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
         ).dropDuplicates(["doc_id"])
+        # one row per stored doc_id: a doc stored twice would otherwise
+        # duplicate its batch row in the marking join, inflating n_in, and
+        # its rows in the pairs' signature lookup
         try:
-            existing_ids = self.sigs.read(spark).select("doc_id")
+            stored = self.sigs.read(spark).select("doc_id", "sig").dropDuplicates(["doc_id"])
         except FileNotFoundError:
-            existing_ids = None
-        if existing_ids is not None:
+            stored = None
+        if stored is not None:
             marked = batch.join(
-                existing_ids.withColumn("_old", F.lit(1)), "doc_id", "left"
+                stored.select("doc_id").withColumn("_old", F.lit(1)), "doc_id", "left"
             )
             row = marked.agg(
                 F.count(F.lit(1)).alias("n_in"), F.count("_old").alias("n_old")
@@ -195,13 +198,13 @@ class MaintainedMinHashIndex:
         fresh = fresh.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             return self._ingest_fresh(
-                spark, fresh, existing_ids, n_in, n_fresh, min_matches, commit
+                spark, fresh, stored, n_in, n_fresh, min_matches, commit
             )
         finally:
             fresh.unpersist(blocking=False)
 
     def _ingest_fresh(
-        self, spark, fresh, existing_ids, n_in, n_fresh, min_matches, commit=True
+        self, spark, fresh, stored, n_in, n_fresh, min_matches, commit=True
     ) -> dict:
         # one md5 pass per shingle, materialized once (HOF no-CSE rule).
         # Tokenless docs are dropped FIRST: shingles_col maps an empty
@@ -277,8 +280,8 @@ class MaintainedMinHashIndex:
         # signature lookup: fresh sigs (this batch) + the stored table;
         # disjoint by construction (fresh anti-joined the stored ids)
         lookup = sig_df.select("doc_id", "sig")
-        if existing_ids is not None:
-            lookup = lookup.unionByName(self.sigs.read(spark).select("doc_id", "sig"))
+        if stored is not None:
+            lookup = lookup.unionByName(stored)
         match_cnt = F.size(
             F.filter(
                 F.zip_with(F.col("_sig_a"), F.col("_sig_b"), lambda x, y: x == y),

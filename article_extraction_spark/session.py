@@ -19,6 +19,8 @@ import zipfile
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
+from .catalog import write_atomic
+
 PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 ZIP_NAME = "article_extraction_spark.zip"
 
@@ -30,7 +32,9 @@ ENGINE_CONF = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # keep python workers warm so per-worker module caches (extractors,
     # tokenizers) amortize — the Spark analog of the reference's lru_cache
-    # model caching (reference models/llm.py:43-44)
+    # model caching (reference models/llm.py:43-44). A reused worker also
+    # keeps the package's zipimporter refresh (_zipimport.py), so its later
+    # tasks skip re-reading pyspark.zip and the spark-core jar
     "spark.python.worker.reuse": "true",
     # binary/text payloads can be large; raise Arrow batch sanity limit
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
@@ -42,17 +46,26 @@ def make_pyfiles_zip(dest: str | None = None) -> str:
 
     The north rule's deployment contract: the engine ships itself to every
     python worker; nothing relies on a shared filesystem or driver cwd.
+
+    The zip is built beside ``dest`` and renamed over it
+    (``catalog.write_atomic``), so another process reading ``dest`` (a
+    second driver sharing ``TMPDIR``) sees the old zip or the new one,
+    never a half-written one.
     """
     if dest is None:
         dest = os.path.join(tempfile.gettempdir(), ZIP_NAME)
-    with zipfile.ZipFile(dest, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(PKG_DIR):
-            for name in files:
-                if not name.endswith(".py"):
-                    continue
-                full = os.path.join(root, name)
-                rel = os.path.relpath(full, os.path.dirname(PKG_DIR))
-                zf.write(full, rel)
+
+    def build(fh) -> None:
+        with zipfile.ZipFile(fh, "w", zipfile.ZIP_DEFLATED) as zf:
+            for root, _dirs, files in os.walk(PKG_DIR):
+                for name in files:
+                    if not name.endswith(".py"):
+                        continue
+                    full = os.path.join(root, name)
+                    rel = os.path.relpath(full, os.path.dirname(PKG_DIR))
+                    zf.write(full, rel)
+
+    write_atomic(dest, build, "wb")
     return dest
 
 

@@ -1475,8 +1475,9 @@ def test_write_conflict_discards_its_data_files(spark, tmp_path, operation):
 
 def test_one_commit_point_and_one_atomic_writer():
     """Every snapshot is created by the one exclusive-create open in
-    ManifestTable._try_commit, and every sidecar is replaced through
-    catalog.write_json_atomic — no other os.replace in the package."""
+    ManifestTable._try_commit, and every whole-file replace (the JSON
+    sidecars, the --py-files zip) goes through catalog.write_atomic — no
+    other os.replace in the package."""
     import ast
     import pathlib
 
@@ -1523,7 +1524,7 @@ def test_one_commit_point_and_one_atomic_writer():
     replaced = {
         (str(p.relative_to(pkg)), s) for p in pkg.rglob("*.py") for s in sites(p, os_replace)
     }
-    assert replaced == {("catalog.py", "write_json_atomic")}
+    assert replaced == {("catalog.py", "write_atomic")}
 
 
 def test_manifest_layout_of_every_operation(spark, tmp_path):

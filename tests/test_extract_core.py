@@ -8,6 +8,9 @@ from __future__ import annotations
 
 import base64
 import json
+import os
+import subprocess
+import sys
 
 import pytest
 
@@ -224,3 +227,17 @@ def test_fallback_pdf_parity_with_real_fitz():
             with fitz.open(stream=data, filetype="pdf") as doc:
                 real = "\n".join(page.get_text() for page in doc)
             assert _fallback_pdf_text(data) == real, (lines, compress)
+
+
+def test_kernels_import_without_spark_pandas_or_arrow():
+    """A fresh interpreter imports the kernels, and with them the package
+    ``__init__``, without loading pyspark, pandas or pyarrow."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = (
+        "import sys, article_extraction_spark.extract.core; "
+        "print(sorted({m.split('.')[0] for m in sys.modules} & {'pyspark', 'pandas', 'pyarrow'}))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=root, capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "[]"

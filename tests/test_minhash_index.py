@@ -123,6 +123,24 @@ def test_crash_between_serving_and_sigs_self_heals(spark, tmp_path):
     s["pairs"].unpersist()
 
 
+def test_doc_stored_twice_counts_once(spark, tmp_path):
+    """A signature table holding one doc_id twice counts that doc once in
+    the batch and yields each of its verified pairs once."""
+    from pyspark.sql import functions as F
+
+    idx = MaintainedMinHashIndex(str(tmp_path / "mh"), num_hashes=16, bands=8)
+    idx.ingest(spark, _df(spark, DOCS[:3]))["pairs"].unpersist()
+    idx.sigs.append(idx.sigs.read(spark).where(F.col("doc_id") == 0))
+    assert idx.sigs.read(spark).where(F.col("doc_id") == 0).count() == 2
+
+    s = idx.ingest(spark, _df(spark, DOCS))
+    # docs 0-2 are stored; doc 6 is tokenless, so never stored
+    assert s["skipped_existing"] == 3 and s["new_docs"] == 3
+    keys = [(r["id_a"], r["id_b"]) for r in s["pairs"].collect()]
+    assert len(keys) == len(set(keys)) and (0, 4) in keys
+    s["pairs"].unpersist()
+
+
 def test_probe_scan_is_partition_pruned(spark, tmp_path):
     """The vs-index candidate join reads the serving layout with a
     planning-time bucket filter (PartitionFilters), the BM25 pattern."""

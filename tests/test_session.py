@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import zipfile
 from pathlib import Path
 
 from article_extraction_spark import session
@@ -23,6 +24,30 @@ def test_driver_memory_is_half_of_memtotal_with_env_override(monkeypatch, tmp_pa
     assert session.driver_memory() == "8046m"
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "6g")
     assert session.driver_memory() == "6g"
+
+
+def test_pyfiles_zip_is_never_half_written(monkeypatch, tmp_path):
+    """While a second build runs, the destination stays the first build's
+    complete zip: a driver that ships it meanwhile never reads a truncated
+    archive. The build leaves no temp file behind."""
+    dest = str(tmp_path / session.ZIP_NAME)
+    session.make_pyfiles_zip(dest)
+    names = zipfile.ZipFile(dest).namelist()
+    real_write, writes = zipfile.ZipFile.write, []
+
+    def checked_write(self, *args, **kwargs):
+        assert zipfile.is_zipfile(dest)
+        assert zipfile.ZipFile(dest).namelist() == names
+        writes.append(args[0])
+        return real_write(self, *args, **kwargs)
+
+    monkeypatch.setattr(zipfile.ZipFile, "write", checked_write)
+    assert session.make_pyfiles_zip(dest) == dest
+    monkeypatch.undo()
+    assert len(writes) == len(names)
+    assert zipfile.ZipFile(dest).namelist() == names
+    assert "article_extraction_spark/_zipimport.py" in names
+    assert sorted(p.name for p in tmp_path.iterdir()) == [session.ZIP_NAME]
 
 
 def test_sessions_built_in_one_module():
