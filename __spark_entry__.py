@@ -810,8 +810,8 @@ def q_bpe_token_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_extract_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E7/E9: registry extractor over planted key:value text, one Arrow pass
-    for all fields, numeric coercion per reference (parse_numeric → int)."""
+    """E7/E9: the regex extractor over planted key:value text, one Arrow
+    pass for all fields, numeric coercion per reference (parse_numeric → int)."""
     from article_extraction_spark.extraction import extract_fields
 
     o = _t(spark, sf_dir, "orders")
@@ -823,7 +823,7 @@ def q_extract_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(" hardware: HW "), (F.col("o_orderkey") % 5).cast("string"), F.lit("."),
     )
     df = o.select("o_orderkey", planted.alias("text"))
-    out = extract_fields(df, "text", extractor="regex")
+    out = extract_fields(df, "text")
     return out.select(
         "o_orderkey",
         F.col("extracted.model").alias("model"),

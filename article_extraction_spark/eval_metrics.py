@@ -14,47 +14,6 @@ from .functions.textnorm import normalise_cell_col
 from .sinks import upsert_by_key
 
 
-def load_results_json(spark: SparkSession, path: str) -> DataFrame:
-    """S7: the reference's nested all_results.json (model → category →
-    {true: [...], predicted: [...]}) flattened to rows (reference
-    scores.py:297-332 load_results + validation): spark.read.json with the
-    nested maps exploded, length-mismatched pairs skipped, list elements
-    zipped into (model, category, idx, true, predicted) rows."""
-    raw = spark.read.option("multiLine", True).json(path)
-    # model names are top-level fields; categories nested fields → melt via
-    # stack over the inferred schema (schema-driven, no hardcoding)
-    rows = []
-    for model_field in raw.schema.fields:
-        model = model_field.name
-        for cat_field in model_field.dataType.fields:
-            cat = cat_field.name
-            rows.append(
-                F.struct(
-                    F.lit(model).alias("model"),
-                    F.lit(cat).alias("category"),
-                    F.col(f"`{model}`.`{cat}`.true").alias("true_list"),
-                    F.col(f"`{model}`.`{cat}`.predicted").alias("pred_list"),
-                )
-            )
-    melted = raw.select(F.explode(F.array(*rows)).alias("e")).select("e.*")
-    valid = melted.where(
-        F.col("true_list").isNotNull()
-        & F.col("pred_list").isNotNull()
-        & (F.size("true_list") == F.size("pred_list"))  # mismatches skipped (:323-335)
-    )
-    return valid.select(
-        "model",
-        "category",
-        F.posexplode(F.arrays_zip(F.col("true_list"), F.col("pred_list"))).alias("idx", "pair"),
-    ).select(
-        "model",
-        "category",
-        "idx",
-        F.col("pair.true_list").cast("string").alias("true"),
-        F.col("pair.pred_list").cast("string").alias("predicted"),
-    )
-
-
 def per_turn_equality(extracted: DataFrame, golden: DataFrame) -> DataFrame:
     """Per-turn byte-equality vs golden outputs under (conv_id, turn_idx)
     keys — the BASELINE.json correctness metric. Full outer join so both
@@ -70,13 +29,6 @@ def per_turn_equality(extracted: DataFrame, golden: DataFrame) -> DataFrame:
         "equal",
         F.coalesce(F.col("extracted_text") == F.col("expected_text"), F.lit(False)),
     )
-
-
-def equality_rate(extracted: DataFrame, golden: DataFrame) -> float:
-    row = per_turn_equality(extracted, golden).agg(
-        F.avg(F.col("equal").cast("double")).alias("rate")
-    ).first()
-    return float(row["rate"] or 0.0)
 
 
 def char_metrics(df: DataFrame, pred: str, truth: str) -> DataFrame:

@@ -1,5 +1,4 @@
-"""E10/E11: embedding encode with dedupe-before-encode, token counting with a
-worker-cached tokenizer.
+"""E10: embedding encode with dedupe-before-encode.
 
 The reference memoizes embeddings in a dict (scores.py:61, 105-123) — at
 cluster scale the cache becomes a JOIN: distinct texts → encode once → join
@@ -48,27 +47,3 @@ def encode_texts_deduped(
     encoded = uniq.select("_tkey", encoder(F.col(text_col)).alias(out_col))
     return keyed.join(encoded, "_tkey", "left").drop("_tkey")
 
-
-# E11: token counting with a worker-cached tokenizer (reference
-# diagnosis/nb_token_papers.py:42-60). The "tokenizer" is the BPE-ish regex
-# splitter cached at module scope (one compile per python worker).
-_TOKENIZER_CACHE: dict[str, object] = {}
-
-
-def _get_tokenizer(name: str):
-    if name not in _TOKENIZER_CACHE:
-        import re
-
-        _TOKENIZER_CACHE[name] = re.compile(r"[A-Za-z]+|[0-9]|[^\sA-Za-z0-9]")
-    return _TOKENIZER_CACHE[name]
-
-
-def token_count_udf(tokenizer_name: str = "bpe-ish"):
-    @F.pandas_udf(T.IntegerType())
-    def _count(texts: pd.Series) -> pd.Series:
-        tok = _get_tokenizer(tokenizer_name)
-        return pd.Series(
-            [len(tok.findall(t)) if t else 0 for t in texts], dtype="int32"
-        )
-
-    return _count

@@ -1,10 +1,9 @@
-"""The run.py extraction query as one Spark plan (reference run.py:27-38 →
-paper_information_table.py:200-272 extract_informations_from_text_per_cell +
+"""Structured enrichment as Spark plans (reference
+paper_information_table.py: load_from_epoch :100-148 and
 complete_informations :275-354).
 
-Reference shape: row-at-a-time, per-cell commits. Engine shape: one
-extraction pass (struct UDF), one fuzzy hardware broadcast join (threshold
-0.90), one country join, then physics completion as guarded column
+Reference shape: row-at-a-time, per-cell commits. Engine shape: the fuzzy
+country and hardware joins, then physics completion as guarded column
 arithmetic — all lazily composed, written once.
 """
 
@@ -15,40 +14,6 @@ from pyspark.sql import functions as F
 
 from ..functions.physics import co2eq_col, energy_kwh_col, training_time_hours_col
 from ..operators.joins import fuzzy_match_country, fuzzy_match_hardware
-from .registry import extract_fields
-
-
-def extract_informations(
-    texts: DataFrame,
-    hardware_dim: DataFrame | None = None,
-    country_dim: DataFrame | None = None,
-    extractor: str = "regex",
-    id_col: str = "id_paper",
-    text_col: str = "text",
-    window_tokens: int = 0,
-    stride_tokens: int = 0,
-) -> DataFrame:
-    """texts(id, text) → paper_information-shaped rows.
-
-    Fields (model, parameters, h_number, year, hardware_text) in one UDF
-    pass; hardware_text then drives the J4 fuzzy join (reference :248-267),
-    country (when a country column is present post-extraction) the J3 join.
-    """
-    extracted = extract_fields(
-        texts, text_col, extractor=extractor, window_tokens=window_tokens, stride_tokens=stride_tokens
-    ).select(
-        F.col(id_col),
-        F.col("extracted.model").alias("model"),
-        F.col("extracted.parameters").alias("parameters"),
-        F.col("extracted.h_number").cast("int").alias("h_number"),
-        F.col("extracted.year").cast("int").alias("year"),
-        F.col("extracted.hardware_text").alias("hardware_text"),
-    )
-    if hardware_dim is not None:
-        extracted = fuzzy_match_hardware(extracted, "hardware_text", hardware_dim)
-    if country_dim is not None:
-        extracted = fuzzy_match_country(extracted, "model", country_dim)
-    return extracted
 
 
 def informations_from_epoch(

@@ -1,23 +1,16 @@
-"""E7/E9: the extraction-function registry and field fan-out.
+"""E9: field fan-out with the deterministic regex extractor.
 
-The reference's single extension point is ``extract_fn(text, field) ->
+The reference's extraction contract is ``extract_fn(text, field) ->
 Optional[str|number]`` (models/llm.py:188-260, models/qa_squad.py:164-241,
-curried in run.py:16-24, stubbed in create_tables.py:53-58). Spark surface:
-a registry of named extractors consumed by ONE struct-returning pandas UDF —
-one Arrow pass extracts every field (E9 "single inference pass per window"),
-with first-non-empty-window-wins semantics (llm.py:247-259) inside the batch
-kernel.
-
-Extractors must be picklable module-level callables; model-backed extractors
-initialize their model lazily at module scope per python worker
-(``spark.python.worker.reuse`` keeps it warm — the lru_cache analog).
+curried in run.py:16-24). Spark surface: ``regex_extractor`` behind ONE
+struct-returning pandas UDF — one Arrow pass extracts every field (E9
+"single inference pass per window"), with first-non-empty-window-wins
+semantics (llm.py:247-259) inside the batch kernel.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -25,16 +18,8 @@ from pyspark.sql import types as T
 
 from .windows import iter_token_windows
 
-ExtractorFn = Callable[[str, str], object]
-
 FIELDS = ("model", "parameters", "h_number", "year", "hardware_text")
 NUMERIC_TARGETS = frozenset({"parameters", "h_number", "year"})  # reference :211
-
-
-def stub_extractor(text: str, field: str):
-    """Deterministic stub (reference create_tables.py:53-58): type-appropriate
-    constants so the pipeline runs without any model."""
-    return "0" if field in ("model", "hardware_text") else 0
 
 
 _PATTERNS = {
@@ -54,20 +39,6 @@ def regex_extractor(text: str, field: str):
         return None
     m = pat.search(text or "")
     return m.group(1).strip() if m else None
-
-
-_REGISTRY: dict[str, ExtractorFn] = {
-    "stub": stub_extractor,
-    "regex": regex_extractor,
-}
-
-
-def register_extractor(name: str, fn: ExtractorFn) -> None:
-    _REGISTRY[name] = fn
-
-
-def get_extractor(name: str) -> ExtractorFn:
-    return _REGISTRY[name]
 
 
 def _coerce(raw, field: str):
@@ -118,7 +89,6 @@ EXTRACTED_FIELDS_TYPE = T.StructType(
 def extract_fields(
     df: DataFrame,
     text_col: str,
-    extractor: str = "regex",
     window_tokens: int = 0,
     stride_tokens: int = 0,
     out_col: str = "extracted",
@@ -129,8 +99,6 @@ def extract_fields(
     FIRST non-empty answer per field wins (early return). window_tokens<=0 ⇒
     whole text in one window.
     """
-    fn = get_extractor(extractor)
-
     @F.pandas_udf(EXTRACTED_FIELDS_TYPE)
     def _extract(texts: pd.Series) -> pd.DataFrame:
         rows = []
@@ -141,10 +109,10 @@ def extract_fields(
             for field in FIELDS:
                 raw = None
                 if tokens is None:
-                    raw = fn(text, field)
+                    raw = regex_extractor(text, field)
                 else:
                     for win in iter_token_windows(tokens, window_tokens, stride_tokens):
-                        raw = fn(" ".join(win), field)
+                        raw = regex_extractor(" ".join(win), field)
                         if raw is not None and str(raw).strip() != "":
                             break  # first non-empty window wins (llm.py:247-259)
                 values[field] = _coerce(raw, field)

@@ -3,9 +3,7 @@ from .casts import (  # noqa: F401
     parse_numeric_col,
     to_boolean_col,
     to_date_col,
-    to_float_col,
     to_float_comma_col,
-    to_int_col,
     to_int_comma_col,
     to_timestamp_col,
     to_year_col,

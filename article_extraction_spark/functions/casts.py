@@ -35,16 +35,6 @@ def to_boolean_col(c: Column) -> Column:
     )
 
 
-def to_float_col(c: Column) -> Column:
-    """F3: numeric coerce-else-NULL (reference convert.py:43-53)."""
-    return c.cast("string").try_cast("double")
-
-
-def to_int_col(c: Column) -> Column:
-    """F3: int coerce-else-NULL via float (reference convert.py:56-64)."""
-    return to_float_col(c).cast("long")
-
-
 def clean_value_col(c: Column) -> Column:
     """F4: strip; empty→NULL (reference paper_information_table.py:371-379)."""
     return F.nullif(F.trim(c.cast("string")), F.lit(""))

@@ -1,7 +1,6 @@
 from .split import deterministic_split  # noqa: F401
 from .aggregates import (  # noqa: F401
     cumulative_mean,
-    descriptive_stats,
     latest_per_group,
     top_k,
 )

@@ -22,40 +22,10 @@ def latest_per_group(df: DataFrame, group: str, order: str) -> DataFrame:
     )
 
 
-def descriptive_stats(df: DataFrame, value: str) -> DataFrame:
-    """A4: count/mean/median/stddev(pop)/min/max + p90/p95 (reference
-    scores.py:35-44; diagnosis/nb_token_papers.py:63-74)."""
-    c = F.col(value)
-    return df.agg(
-        F.count(c).alias("n"),
-        F.avg(c).alias("mean"),
-        F.median(c).alias("median"),
-        F.stddev_pop(c).alias("std_pop"),
-        F.min(c).alias("min"),
-        F.max(c).alias("max"),
-        F.percentile_approx(c, 0.9).alias("p90_approx"),
-        F.percentile_approx(c, 0.95).alias("p95_approx"),
-    )
-
-
 def top_k(df: DataFrame, order: Column, k: int) -> DataFrame:
     """W4/A5: global top-k — orderBy+limit compiles to TakeOrderedAndProject
     (per-partition heaps, no global sort)."""
     return df.orderBy(order.desc()).limit(k)
-
-
-def top_k_per_group(df: DataFrame, group: str, order: Column, k: int) -> DataFrame:
-    w = Window.partitionBy(group).orderBy(order.desc())
-    return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= k).drop("_rn")
-
-
-def best_answer_per_group(df: DataFrame, group: str, answer: str, score: str) -> DataFrame:
-    """A5/A6 'best': keep the max-score answer per group (reference
-    qa_squad.py:40-48, 155-161)."""
-    return df.groupBy(group).agg(
-        F.max_by(F.col(answer), F.col(score)).alias("answer"),
-        F.max(F.col(score)).alias("score"),
-    )
 
 
 def aggregate_answers(

@@ -59,6 +59,10 @@ __all__ = ["MaintainedMinHashIndex", "minhash_params", "MINHASH_P"]
 # exact in any 64-bit-integer engine.
 MINHASH_P = (1 << 31) - 1
 
+# the batch's band rows are broadcast to the candidate joins up to this
+# many cached bytes; a row carries its doc_id, so long ids weigh in
+BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+
 
 def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     """Deterministic (a_k, b_k) per hash from md5("mh-<k>") — shared by
@@ -237,14 +241,16 @@ class MaintainedMinHashIndex:
         n_new = sig_df.count()
 
         # r8: for normally-sized batches, hint the truly batch-bounded side
-        # of the candidate joins as a broadcast: banded is ≤ n_fresh × bands
-        # rows BY CONSTRUCTION, so the gate on the known n_fresh is exact.
+        # of the candidate joins as a broadcast. banded is materialized by
+        # the probe above, so its plan's size statistic is the cached bytes,
+        # doc_ids included — the gate reads it and starts no job.
         # The candidate set itself is NOT hinted — its size depends on band
         # collisions against the existing index (a hot near-dup cluster can
         # explode it), so a forced broadcast there could hard-fail where a
         # shuffle join survives by spilling; the planner/AQE keeps choosing
         # for those joins from runtime sizes.
-        small_batch = n_fresh * self.bands <= 2_000_000
+        banded_bytes = banded._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        small_batch = int(banded_bytes) <= BROADCAST_MAX_BYTES
         bj = F.broadcast if small_batch else (lambda df: df)
 
         cand_parts = []

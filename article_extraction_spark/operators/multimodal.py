@@ -202,19 +202,6 @@ def extract_media_features_arrow(media: DataFrame) -> DataFrame:
     return media.mapInArrow(op, schema=FEATURES_SCHEMA)
 
 
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plan: one output row per sampled timestamp —
-    posexplode of a native sequence (the decode itself would fill `frame`).
-    Partitioning: rows fan out ~duration/every_ms, so repartition by
-    byte-volume upstream for balance."""
-    return media.where(F.col("kind") == "video").select(
-        "media_id",
-        F.posexplode(
-            F.sequence(F.lit(0), F.greatest(F.coalesce(F.col("duration_ms"), F.lit(0)) - 1, F.lit(0)), F.lit(every_ms))
-        ).alias("frame_idx", "ts_ms"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # REAL decode kernels (rounds 2-3): raw payloads (mime="image/raw-rgb8" =
 # uint8 RGB width*height*3 bytes; "audio/pcm16" = mono int16 LE) plus
@@ -239,17 +226,6 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
         T.StructField("decode_error", T.StringType(), True),
     ]
 )
-
-AUDIO_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("n_samples", T.LongType(), True),
-        T.StructField("rms", T.DoubleType(), True),
-        T.StructField("peak", T.DoubleType(), True),
-        T.StructField("decode_error", T.StringType(), True),
-    ]
-)
-
 
 def decode_raw_rgb8(payload: bytes, width: int, height: int):
     """Raw uint8 RGB bytes → (height, width, 3) array; validates length."""
@@ -447,29 +423,3 @@ def _decode_audio(mime, payload):
             return _soundfile_decode(mime, payload)
     return _soundfile_decode(mime, payload)
 
-
-def audio_pcm_stats(media: DataFrame) -> DataFrame:
-    """RMS/peak over decoded samples (`_decode_audio`: native-first,
-    stdlib-``wave`` fallback) — real sample math."""
-    import numpy as np
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, mime, payload in zip(pdf["media_id"], pdf["mime"], pdf["payload"]):
-                try:
-                    pcm = _decode_audio(mime, payload)
-                    rows.append(
-                        (
-                            mid,
-                            int(pcm.size),
-                            float(np.sqrt((pcm**2).mean())) if pcm.size else 0.0,
-                            float(np.abs(pcm).max()) if pcm.size else 0.0,
-                            None,
-                        )
-                    )
-                except Exception as exc:  # noqa: BLE001
-                    rows.append((mid, None, None, None, f"{type(exc).__name__}: {exc}"[:300]))
-            yield pd.DataFrame(rows, columns=["media_id", "n_samples", "rms", "peak", "decode_error"])
-
-    return media.where(F.col("kind") == "audio").mapInPandas(op, schema=AUDIO_STATS_SCHEMA)

@@ -7,7 +7,7 @@ on the entity key.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -181,15 +181,6 @@ def _sessionize_two_phase(
     )
     out._retained_cache = df  # type: ignore[attr-defined]
     return out
-
-
-def session_stats(sessions: DataFrame, user_col: str = "user_id", session_col: str = "session_id") -> DataFrame:
-    return sessions.groupBy(user_col, session_col).agg(
-        F.count("*").alias("n_events"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.sum("value").alias("session_value"),
-    )
 
 
 def asof_join(

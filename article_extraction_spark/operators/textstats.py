@@ -33,19 +33,6 @@ def token_count_col(c: Column) -> Column:
     return F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
 
 
-def bpe_ish_token_count_col(c: Column) -> Column:
-    """BPE-ish subword proxy: count word-pieces + digits + punctuation runs
-    (a GPT-2-style pre-tokenizer regex, public knowledge)."""
-    t = F.coalesce(c, F.lit(""))
-    pieces = F.regexp_extract_all(t, F.lit(r"[A-Za-z]+|[0-9]|[^\sA-Za-z0-9]"), 0)
-    # long words split roughly every 4 chars (subword proxy)
-    return F.aggregate(
-        pieces,
-        F.lit(0),
-        lambda acc, p: acc + F.ceil(F.length(p) / F.lit(4.0)).cast("int"),
-    )
-
-
 def punct_ratio_col(c: Column) -> Column:
     t = F.coalesce(c, F.lit(""))
     n = F.length(t)
@@ -59,17 +46,6 @@ def stopword_ratio_col(c: Column, stopwords: list[str] | None = None) -> Column:
     hits = F.size(F.filter(words, lambda w: F.array_contains(sw, w)))
     total = F.size(words)
     return F.when(total == 0, F.lit(0.0)).otherwise(hits.cast("double") / total)
-
-
-def quality_score_col(c: Column) -> Column:
-    """Composite [0,1] quality heuristic: penalize extreme length, high punct
-    density, and stopword-free (non-linguistic) text. Deterministic, native."""
-    n = F.length(F.coalesce(c, F.lit("")))
-    length_score = F.when(n < 20, n / F.lit(20.0)).when(n > 20000, F.lit(0.5)).otherwise(F.lit(1.0))
-    punct_pen = F.lit(1.0) - F.least(F.lit(1.0), punct_ratio_col(c) * 4)
-    sw = stopword_ratio_col(c)
-    sw_score = F.when(sw > 0.15, F.lit(1.0)).otherwise(sw / F.lit(0.15))
-    return F.round(length_score * punct_pen * (F.lit(0.5) + F.lit(0.5) * sw_score), 6)
 
 
 def lang_guess_col(c: Column) -> Column:

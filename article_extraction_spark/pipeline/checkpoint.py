@@ -174,13 +174,3 @@ def run_with_checkpoint(
     finally:
         extracted.unpersist()
 
-
-def resume_missing_turns(
-    transcripts: DataFrame, existing: DataFrame | None
-) -> DataFrame:
-    """Row-granular resume: anti-join candidates against already-converted
-    keys (exact reference semantics, J2/P3 — paper_text_table.py:131-138)."""
-    if existing is None:
-        return transcripts
-    done_keys = existing.select("conv_id", "turn_idx")
-    return transcripts.join(done_keys, ["conv_id", "turn_idx"], "left_anti")

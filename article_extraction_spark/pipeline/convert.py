@@ -23,56 +23,48 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..extract.udfs import READABILITY_COLUMNS, classify_payload_col, extract_stage
+from ..extract.udfs import classify_payload_col, extract_stage
 from .partitioning import byte_balanced_partitions, salted_repartition
 
 
-def convert_transcripts(
-    transcripts: DataFrame,
-    num_partitions: int | None = None,
-    drop_empty: bool = True,
-    with_readability: bool = False,
-    pdf_mode: str = "simple",
-) -> DataFrame:
-    """transcripts(conv_id, turn_idx, role, text, tool, ts) → extracted turns.
-
-    Output schema: EXTRACTED_TURNS_SCHEMA (conv_id, turn_idx, doc_kind,
-    extracted_text, spans, n_source_bytes, n_extracted_chars), plus the
-    readability scorer's columns with ``with_readability``: readability_text,
-    readability_blocks, readability_max_score and link_density (null on
-    non-html rows).
-
-    Every row is salted-repartitioned on (conv_id, turn_idx) before
-    extraction, so a source partitioned by conv_id (Iceberg bucket(conv_id)
-    tables, the 10^12-turn deployment) can't straggle one task on a
-    mega-conversation.
-
-    ``pdf_mode``: "simple" (default — stream-order text, byte-parity with
-    the reference's extraction) or "layout" (extract/pdf_layout.py —
-    column detection, reading-order sort, running header/footer removal;
-    an intentional, opt-in deviation from reference parity).
-    """
-    if num_partitions is None:
-        num_partitions = byte_balanced_partitions(transcripts)
-
-    # n_source_bytes is computed JVM-side before the stage and passes
-    # through it untouched
-    classified = transcripts.select(
+def classify_turns(transcripts: DataFrame) -> DataFrame:
+    """The projection in front of the extraction stage: the payload kind
+    and ``n_source_bytes``, both computed JVM-side and passed through the
+    stage untouched."""
+    return transcripts.select(
         "conv_id",
         "turn_idx",
         classify_payload_col(F.col("text")).alias("doc_kind"),
         F.octet_length("text").cast("long").alias("n_source_bytes"),
         "text",
     )
-    rd_cols = READABILITY_COLUMNS if with_readability else []
+
+
+def convert_transcripts(
+    transcripts: DataFrame,
+    num_partitions: int | None = None,
+    drop_empty: bool = True,
+) -> DataFrame:
+    """transcripts(conv_id, turn_idx, role, text, tool, ts) → extracted turns.
+
+    Output schema: EXTRACTED_TURNS_SCHEMA (conv_id, turn_idx, doc_kind,
+    extracted_text, spans, n_source_bytes, n_extracted_chars).
+
+    Every row is salted-repartitioned on (conv_id, turn_idx) before
+    extraction, so a source partitioned by conv_id (Iceberg bucket(conv_id)
+    tables, the 10^12-turn deployment) can't straggle one task on a
+    mega-conversation. PDFs extract in stream order ("simple" mode,
+    byte-parity with the reference); the layout parser and the readability
+    columns are ``extract_stage`` options.
+    """
+    if num_partitions is None:
+        num_partitions = byte_balanced_partitions(transcripts)
+
     extracted = extract_stage(
-        salted_repartition(classified, num_partitions, "conv_id", "turn_idx"),
-        pdf_mode=pdf_mode,
-        with_readability=with_readability,
+        salted_repartition(classify_turns(transcripts), num_partitions, "conv_id", "turn_idx")
     ).select(
         "conv_id", "turn_idx", "doc_kind", "extracted_text", "spans", "extract_error",
-        "n_source_bytes", *rd_cols,
-        F.length("extracted_text").cast("long").alias("n_extracted_chars"),
+        "n_source_bytes", F.length("extracted_text").cast("long").alias("n_extracted_chars"),
     )
     if drop_empty:
         # empty conversions are dropped (reference paper_text_table.py:153-155);

@@ -341,10 +341,3 @@ class IncrementalRollup:
             self._sweep_tombstones(spark, count_out)
         return {"mode": "incremental", "from": cur, "to": head, "keys_updated": n}
 
-
-def with_mean(df: DataFrame, mean_col: str, sum_col: str, count_col: str) -> DataFrame:
-    """Derive a mean column from maintained sum+count (means are not
-    directly decomposable; this is the standard read-time derivation)."""
-    return df.withColumn(
-        mean_col, F.col(sum_col) / F.nullif(F.col(count_col), F.lit(0))
-    )

@@ -30,11 +30,9 @@ ENGINE_CONF = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # keep python workers warm so per-worker module caches (extractors,
-    # tokenizers) amortize — the Spark analog of the reference's lru_cache
-    # model caching (reference models/llm.py:43-44). A reused worker also
-    # keeps the package's zipimporter refresh (_zipimport.py), so its later
-    # tasks skip re-reading pyspark.zip and the spark-core jar
+    # a reused Python worker keeps the package's zipimporter refresh
+    # (_zipimport.py), so its later tasks skip re-reading pyspark.zip and
+    # the spark-core jar
     "spark.python.worker.reuse": "true",
     # binary/text payloads can be large; raise Arrow batch sanity limit
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",

@@ -179,9 +179,10 @@ def test_wav_8bit_and_garbage():
 def test_spark_png_wav_media_features(spark):
     """The compressed-codec branch through the real mapInPandas operators:
     PNG rows decode (channel means match the source pixels), WAV rows get
-    RMS/peak, junk rows surface decode_error instead of failing the task."""
+    RMS/peak, junk rows surface decode_error or the digest feature instead
+    of failing the task."""
     from article_extraction_spark.operators.multimodal import (
-        audio_pcm_stats,
+        extract_media_features_arrow,
         image_pixel_features,
     )
 
@@ -208,13 +209,16 @@ def test_spark_png_wav_media_features(spark):
     assert len(imgs[1]["thumb"]) == 8 * 8 * 3
     assert imgs[2]["decode_error"] is not None and imgs[2]["channel_mean"] is None
 
-    auds = {r["media_id"]: r for r in audio_pcm_stats(media).collect()}
-    assert auds[3]["decode_error"] is None and auds[3]["n_samples"] == 800
+    auds = {r["media_id"]: r for r in extract_media_features_arrow(media).collect()}
+    assert auds[3]["feature_src"] == "audio"
     # 16-bit quantization: match direct numpy stats on the quantized signal
+    # (the feature vector is float32)
     q = np.round(tone * 32767.0) / 32768.0
-    assert abs(auds[3]["rms"] - float(np.sqrt((q**2).mean()))) < 1e-9
-    assert abs(auds[3]["peak"] - float(np.abs(q).max())) < 1e-9
-    assert auds[4]["decode_error"] is not None
+    rms, peak = auds[3]["feature"][:2]
+    assert abs(rms - float(np.sqrt((q**2).mean()))) < 1e-6
+    assert abs(peak - float(np.abs(q).max())) < 1e-6
+    assert abs(auds[3]["feature"][5] - np.log1p(800) / 20.0) < 1e-6  # 800 samples
+    assert auds[4]["feature_src"] == "digest"
 
 
 def test_jpeg_roundtrip_and_structure():

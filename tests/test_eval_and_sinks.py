@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 from article_extraction_spark.eval_metrics import (
     char_metrics,
     cumulative_mean_by,
-    equality_rate,
     evaluate,
+    per_turn_equality,
     summarize,
     write_summary_upsert,
 )
@@ -27,7 +27,8 @@ def test_equality_rate_full_outer(spark):
         "conv_id string, turn_idx int, expected_text string",
     )
     # 4 joined keys: 1 equal, 1 diff, 1 missing, 1 extra
-    assert math.isclose(equality_rate(ext, gold), 0.25)
+    equal = [r["equal"] for r in per_turn_equality(ext, gold).collect()]
+    assert len(equal) == 4 and sum(equal) == 1
 
 
 def test_char_metrics_and_summary(spark):
@@ -45,28 +46,6 @@ def test_char_metrics_and_summary(spark):
 
     summary = summarize(scored, ["model", "category"]).first()
     assert summary["n"] == 3 and math.isclose(summary["exact_rate"], 2 / 3)
-
-
-def test_load_results_json(spark, tmp_path):
-    import json
-
-    from article_extraction_spark.eval_metrics import load_results_json
-
-    data = {
-        "model-a": {
-            "cat1": {"true": ["x", "y"], "predicted": ["x", "z"]},
-            "cat2": {"true": ["1"], "predicted": ["1", "extra"]},  # mismatch → skipped
-        },
-        "model-b": {"cat1": {"true": [], "predicted": []}},
-    }
-    p = tmp_path / "all_results.json"
-    p.write_text(json.dumps(data))
-    rows = load_results_json(spark, str(p)).collect()
-    got = {(r["model"], r["category"], r["idx"]): (r["true"], r["predicted"]) for r in rows}
-    assert got == {
-        ("model-a", "cat1", 0): ("x", "x"),
-        ("model-a", "cat1", 1): ("y", "z"),
-    }
 
 
 def test_cumulative_mean_by(spark):

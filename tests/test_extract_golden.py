@@ -5,7 +5,7 @@ checkout).
 ``golden/extract_snapshot.json`` holds ``extracted_text``, ``spans`` and
 ``extract_error`` (plus byte/char counts and the readability columns) for
 the synthetic fixtures, the FIXTURES.md §3 edge cases and a few binary
-payloads, in each convert mode. It was written by the engine as it stood
+payloads, in each extraction mode. It was written by the engine as it stood
 before its extraction paths were unified; a kernel change that is meant to
 alter outputs regenerates it, from the root of the repository, with
 
@@ -28,8 +28,10 @@ from article_extraction_spark.fixtures.synth import (
 )
 
 SNAPSHOT = os.path.join(os.path.dirname(__file__), "golden", "extract_snapshot.json")
+# extract_stage options over convert's classify projection; "simple" is
+# convert_transcripts itself
 MODES = {
-    "simple": {},
+    "simple": None,
     "layout": {"pdf_mode": "layout"},
     "readability": {"with_readability": True},
 }
@@ -99,12 +101,19 @@ def _canon(row) -> dict:
     return d
 
 
-def convert_snapshot(spark, **mode) -> list[dict]:
-    from article_extraction_spark.pipeline.convert import convert_transcripts
+def convert_snapshot(spark, mode) -> list[dict]:
+    from pyspark.sql import functions as F
 
-    out = convert_transcripts(
-        transcripts_df(spark, transcript_rows()), num_partitions=4, drop_empty=False, **mode
-    )
+    from article_extraction_spark.extract.udfs import extract_stage
+    from article_extraction_spark.pipeline.convert import classify_turns, convert_transcripts
+
+    t = transcripts_df(spark, transcript_rows())
+    if mode is None:
+        out = convert_transcripts(t, num_partitions=4, drop_empty=False)
+    else:
+        out = extract_stage(classify_turns(t), **mode).withColumn(
+            "n_extracted_chars", F.length("extracted_text").cast("long")
+        )
     return sorted((_canon(r) for r in out.collect()), key=lambda d: (d["conv_id"], d["turn_idx"]))
 
 
@@ -124,7 +133,7 @@ def _load() -> dict:
 def test_convert_modes_match_snapshot(spark):
     golden = _load()
     for mode, kwargs in MODES.items():
-        got = convert_snapshot(spark, **kwargs)
+        got = convert_snapshot(spark, kwargs)
         assert len(got) == len(golden[mode]), mode
         for g, want in zip(got, golden[mode]):
             assert g == want, (mode, g["conv_id"], g["turn_idx"])
@@ -159,7 +168,7 @@ if __name__ == "__main__":  # pragma: no cover - regenerates the snapshot
     from article_extraction_spark.session import get_spark
 
     session = get_spark(master="local[2]")
-    snap = {mode: convert_snapshot(session, **kw) for mode, kw in MODES.items()}
+    snap = {mode: convert_snapshot(session, kw) for mode, kw in MODES.items()}
     snap["binary"] = binary_snapshot(session)
     os.makedirs(os.path.dirname(SNAPSHOT), exist_ok=True)
     with open(SNAPSHOT, "w") as fh:

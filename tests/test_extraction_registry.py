@@ -1,4 +1,4 @@
-"""Tests for E5-E11: windowing, extractor registry, enrichment, encoding."""
+"""Tests for E5-E10: windowing, field extraction, enrichment, encoding."""
 
 from __future__ import annotations
 
@@ -11,9 +11,7 @@ from article_extraction_spark.extraction import (
     complete_informations,
     encode_texts_deduped,
     extract_fields,
-    extract_informations,
     iter_token_windows,
-    stub_extractor,
 )
 from article_extraction_spark.extraction.windows import explode_windows
 
@@ -67,7 +65,7 @@ def test_explode_windows(spark):
     ]
 
 
-def test_extract_fields_regex_and_stub(spark):
+def test_extract_fields_regex(spark):
     df = spark.createDataFrame(
         [
             (1, "We trained model: GPT-X with parameters: 1.5b on gpus: 2,048 in year: 2023. hardware: NVIDIA A100; more."),
@@ -76,7 +74,7 @@ def test_extract_fields_regex_and_stub(spark):
         ],
         "id int, text string",
     )
-    got = {r["id"]: r["extracted"] for r in extract_fields(df, "text", "regex").collect()}
+    got = {r["id"]: r["extracted"] for r in extract_fields(df, "text").collect()}
     assert got[1]["model"] == "GPT-X"
     assert got[1]["parameters"] == 1_500_000_000
     assert got[1]["h_number"] == 2048
@@ -85,31 +83,13 @@ def test_extract_fields_regex_and_stub(spark):
     assert all(v is None for v in got[2].asDict().values())
     assert all(v is None for v in got[3].asDict().values())
 
-    stub = extract_fields(df, "text", "stub").select("extracted").first()["extracted"]
-    assert stub["model"] == "0" and stub["parameters"] == 0  # create_tables.py:53-58
-    assert stub_extractor("x", "year") == 0
-
 
 def test_extract_fields_windowed_first_wins(spark):
     # field appears only in the second window; first-non-empty wins overall
     text = " ".join(["filler"] * 30) + " year: 1999 " + " ".join(["pad"] * 30) + " year: 2024"
     df = spark.createDataFrame([(1, text)], "id int, text string")
-    got = extract_fields(df, "text", "regex", window_tokens=20, stride_tokens=20).first()["extracted"]
+    got = extract_fields(df, "text", window_tokens=20, stride_tokens=20).first()["extracted"]
     assert got["year"] == 1999
-
-
-HARDWARE = [(7, "NVIDIA A100 SXM4 80GB", 312.0, 0.4), (8, "Google TPU v4", 275.0, 0.192)]
-
-
-def test_extract_informations_with_fuzzy_hardware(spark):
-    texts = spark.createDataFrame(
-        [(1, "model: m1 parameters: 2k gpus: 8 year: 2020 hardware: nvidia a100.")],
-        "id_paper int, text string",
-    )
-    dim = spark.createDataFrame(HARDWARE, "id_hardware int, hardware string, compute double, power double")
-    row = extract_informations(texts, hardware_dim=dim).first()
-    assert row["parameters"] == 2000 and row["h_number"] == 8 and row["year"] == 2020
-    assert row["id_hardware"] == 7 and row["h_compute"] == 312.0
 
 
 def test_complete_informations_physics(spark):

@@ -25,7 +25,6 @@ from article_extraction_spark.functions import (
     split_tokens_col,
     to_boolean_col,
     to_float_comma_col,
-    to_int_col,
     to_year_col,
     training_time_hours_col,
     watts_to_kilowatts_col,
@@ -44,7 +43,6 @@ def test_to_boolean(spark):
 
 def test_numeric_coercions(spark):
     assert _vals(spark, to_float_comma_col, ["1,234", " 2,000.5 ", "x", None]) == [1234.0, 2000.5, None, None]
-    assert _vals(spark, to_int_col, ["7", "3.9", "bad"]) == [7, 3, None]
     assert _vals(spark, clean_value_col, ["  x ", "   ", "", None]) == ["x", None, None, None]
 
 

@@ -187,3 +187,24 @@ def test_probe_mode_does_not_pin_meta(spark, tmp_path):
     idx.ingest(spark, sdocs)["pairs"].unpersist()
     with open(os.path.join(idx.root, "index_meta.json")) as f:
         assert json.load(f)["doc_id_type"] == "string"
+
+
+def test_broadcast_gate_counts_doc_id_bytes(spark, tmp_path, monkeypatch):
+    """The broadcast hint on the batch's band rows is gated on their cached
+    bytes, not their row count: eight docs with 20 kB ids make 64 band rows
+    of about 1.3 MB, over a lowered 256 kB limit, so no join is hinted;
+    under the default limit the same batch is."""
+    from article_extraction_spark.operators import minhash_index
+
+    rows = [("x" * 20_000 + str(i), f"the quick brown fox jumps over dog {i}") for i in range(8)]
+
+    def hinted(name: str) -> bool:
+        idx = MaintainedMinHashIndex(str(tmp_path / name), num_hashes=16, bands=8)
+        s = idx.ingest(spark, spark.createDataFrame(rows, "doc_id string, text string"))
+        plan = s["pairs"]._jdf.queryExecution().analyzed().toString()
+        s["pairs"].unpersist()
+        return "strategy=broadcast" in plan
+
+    assert hinted("default")
+    monkeypatch.setattr(minhash_index, "BROADCAST_MAX_BYTES", 256 * 1024)
+    assert not hinted("lowered")

@@ -8,14 +8,13 @@ from pyspark.sql import functions as F
 
 from article_extraction_spark.operators import (
     cumulative_mean,
-    descriptive_stats,
     deterministic_split,
     fuzzy_match_country,
     fuzzy_match_hardware,
     latest_per_group,
     top_k,
 )
-from article_extraction_spark.operators.aggregates import aggregate_answers, top_k_per_group
+from article_extraction_spark.operators.aggregates import aggregate_answers
 
 
 def test_deterministic_split_exact_counts_and_stability(spark):
@@ -39,21 +38,10 @@ def test_latest_per_group(spark):
     assert got == {"fr": (2023, 40.0), "de": (2021, 300.0)}
 
 
-def test_descriptive_stats(spark):
-    df = spark.createDataFrame([(float(i),) for i in range(1, 11)], "v double")
-    row = descriptive_stats(df, "v").first()
-    assert row["n"] == 10 and row["mean"] == 5.5 and row["median"] == 5.5
-    assert row["min"] == 1.0 and row["max"] == 10.0
-    assert math.isclose(row["std_pop"], 2.8722813232690143)
-
-
-def test_top_k_and_per_group(spark):
+def test_top_k(spark):
     df = spark.createDataFrame([(g, v) for g in "ab" for v in range(10)], "g string, v int")
     top = top_k(df, F.col("v"), 3).collect()
     assert sorted(r["v"] for r in top) == [8, 9, 9]
-    per = top_k_per_group(df, "g", F.col("v"), 2)
-    assert per.count() == 4
-    assert {r["v"] for r in per.collect()} == {8, 9}
 
 
 def test_aggregate_answers_modes(spark):

@@ -145,14 +145,16 @@ def test_spark_pdf_layout_udf(spark):
     assert got[1]["extract_error"] is None and got[1]["spans"] == []
 
 
-def test_convert_transcripts_pdf_mode_layout(spark):
-    """Pipeline opt-in: pdf_mode='layout' routes PDF turns through the
-    layout parser (columns in reading order), default mode keeps the
-    stream-order fallback; both leave html/txt turns identical."""
+def test_extract_stage_pdf_mode_layout(spark):
+    """Over the pipeline's classify projection, pdf_mode='layout' routes
+    PDF turns through the layout parser (columns in reading order), the
+    default mode keeps the stream-order fallback; both leave html/txt
+    turns identical."""
     import base64
     import datetime as dt
 
-    from article_extraction_spark.pipeline import convert_transcripts
+    from article_extraction_spark.extract.udfs import extract_stage
+    from article_extraction_spark.pipeline.convert import classify_turns
 
     pdf = make_layout_pdf_bytes(pages=[[["colA x", "colA y"], ["colB x"]]])
     ts = dt.datetime(2024, 1, 1)
@@ -161,16 +163,16 @@ def test_convert_transcripts_pdf_mode_layout(spark):
         ("c1", 1, "assistant", "<p>hello html</p>", None, ts),
         ("c1", 2, "tool", "plain text", None, ts),
     ]
-    t = spark.createDataFrame(
+    t = classify_turns(spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    )
+    ))
     layout = {r["turn_idx"]: r["extracted_text"]
-              for r in convert_transcripts(t, pdf_mode="layout").collect()}
+              for r in extract_stage(t, pdf_mode="layout").collect()}
     assert layout[0] == "colA x\ncolA y\ncolB x\n"
     assert layout[1] == "hello html" and layout[2] == "plain text"
 
     simple = {r["turn_idx"]: r["extracted_text"]
-              for r in convert_transcripts(t).collect()}
+              for r in extract_stage(t).collect()}
     # default path: stream-order Tj scrape (same content, no column sort
     # guarantees; here stream order equals layout order)
     assert "colA x" in simple[0]
@@ -179,7 +181,7 @@ def test_convert_transcripts_pdf_mode_layout(spark):
     import pytest
 
     with pytest.raises(ValueError, match="pdf_mode"):
-        convert_transcripts(t, pdf_mode="bogus")
+        extract_stage(t, pdf_mode="bogus")
 
 
 def test_pdf_string_unescape_single_pass():

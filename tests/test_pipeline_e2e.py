@@ -11,7 +11,8 @@ from article_extraction_spark.fixtures.synth import (
     synth_transcripts,
     transcripts_df,
 )
-from article_extraction_spark.pipeline.convert import convert_transcripts, ordered_output
+from article_extraction_spark.extract.udfs import extract_stage
+from article_extraction_spark.pipeline.convert import classify_turns, convert_transcripts, ordered_output
 
 
 def test_per_turn_equality_rate_is_one(spark):
@@ -66,7 +67,7 @@ def test_with_readability_columns(spark):
         ("c", 1, "user", "plain text turn", None, None),
     ]
     tdf = spark.createDataFrame(rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp")
-    out = {r["turn_idx"]: r for r in convert_transcripts(tdf, num_partitions=2, with_readability=True).collect()}
+    out = {r["turn_idx"]: r for r in extract_stage(classify_turns(tdf), with_readability=True).collect()}
     assert "main body text" in out[0]["readability_text"]
     assert out[0]["link_density"] == 0.0
     # one scored <p> block (the <nav> is blocklisted): 54 chars, 2 commas
@@ -96,7 +97,7 @@ def test_arrow_extraction_stage_contract(spark):
     Byte-for-byte outputs are pinned by test_extract_golden.py."""
     import pyarrow as pa
 
-    from article_extraction_spark.extract.udfs import extract_map_in_arrow, extract_stage
+    from article_extraction_spark.extract.udfs import extract_map_in_arrow
 
     rows = [
         ("c1", 0, "html", "<p>alpha</p><div>skip</div><p>beta</p>"),

@@ -59,19 +59,25 @@ def _assert_one_extraction_stage(plan: str) -> None:
 
 
 @pytest.mark.parametrize(
-    "mode", [{}, {"pdf_mode": "layout"}, {"with_readability": True}],
+    "mode", [None, {"pdf_mode": "layout"}, {"with_readability": True}],
     ids=["simple", "layout", "readability"],
 )
 def test_convert_has_one_extraction_stage(spark, mode):
-    """Every convert mode is one straight chain: one scan, one classify
-    evaluation (``JVBERi0`` is its pdf marker, as benchmark/layers.py
-    counts it), no union, and every row through the one Arrow extraction
-    stage."""
-    from article_extraction_spark.pipeline.convert import convert_transcripts
+    """convert_transcripts, and the extraction stage in each of its modes
+    over the same classify projection, is one straight chain: one scan,
+    one classify evaluation (``JVBERi0`` is its pdf marker, as
+    benchmark/layers.py counts it), no union, and every row through the
+    one Arrow extraction stage."""
+    from article_extraction_spark.extract.udfs import extract_stage
+    from article_extraction_spark.pipeline.convert import classify_turns, convert_transcripts
     from article_extraction_spark.schemas import TRANSCRIPTS_SCHEMA
 
     t = spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
-    plan = _plan(convert_transcripts(t, num_partitions=2, **mode))
+    if mode is None:
+        out = convert_transcripts(t, num_partitions=2)
+    else:
+        out = extract_stage(classify_turns(t), **mode)
+    plan = _plan(out)
     _assert_one_extraction_stage(plan)
     assert plan.count("Scan") == 1, plan
     assert plan.count("JVBERi0") == 1, plan
@@ -148,16 +154,6 @@ def test_ordered_output_uses_range_partitioning(spark):
     assert "rangepartitioning(conv_id" in plan
     assert "Sort [conv_id" in plan
     assert "], false, 0" in plan  # global=false: sort is within partitions
-
-
-def test_anti_join_resume_plan(spark):
-    from article_extraction_spark.pipeline.checkpoint import resume_missing_turns
-
-    a = spark.range(10).select(
-        F.col("id").cast("string").alias("conv_id"), F.lit(0).alias("turn_idx")
-    )
-    pending = resume_missing_turns(a, a.limit(3))
-    assert "LeftAnti" in _optimized(pending)
 
 
 def test_scan_count_minhash_single_signature_pass(spark):

@@ -18,7 +18,6 @@ from article_extraction_spark.pipeline.checkpoint import (
     input_snapshot_id,
     read_lineage,
     read_turns,
-    resume_missing_turns,
     run_with_checkpoint,
 )
 
@@ -140,19 +139,6 @@ def test_resume_refuses_a_different_bucket_layout(spark, tmp_path):
     assert after.count() == after.select("conv_id", "turn_idx").distinct().count() == len(golden)
     assert _snapshot(after) == before
     assert {r["n_buckets"] for r in read_lineage(spark, dest).collect()} == {4}
-
-
-def test_row_granular_anti_join_resume(spark):
-    rows, golden = synth_transcripts(n_convs=8, turns_per_conv=6, seed=11, mega_conv=False)
-    tdf = transcripts_df(spark, rows)
-    from article_extraction_spark.pipeline.convert import convert_transcripts
-
-    done = convert_transcripts(tdf, num_partitions=4).limit(10)
-    done_keys = [(r["conv_id"], r["turn_idx"]) for r in done.select("conv_id", "turn_idx").collect()]
-    pending = resume_missing_turns(tdf, done)
-    pend_keys = {(r["conv_id"], r["turn_idx"]) for r in pending.select("conv_id", "turn_idx").collect()}
-    assert pend_keys.isdisjoint(done_keys)
-    assert len(pend_keys) == len(rows) - len(done_keys)
 
 
 def test_file_uri_destination_resumes(spark, tmp_path):

@@ -2,7 +2,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from article_extraction_spark.operators.sessions import asof_join, session_stats, sessionize
+from article_extraction_spark.operators.sessions import asof_join, sessionize
 
 
 def _ts(minute):
@@ -18,7 +18,8 @@ def test_sessionize_gap(spark):
     out = sessionize(df, gap_minutes=30)
     got = {(r["user_id"], r["ts"].minute + r["ts"].hour * 60): r["session_id"] for r in out.collect()}
     assert got == {(1, 0): 1, (1, 10): 1, (1, 60): 2, (2, 5): 1}
-    stats = {(r["user_id"], r["session_id"]): r["n_events"] for r in session_stats(out).collect()}
+    per_session = out.groupBy("user_id", "session_id").count().collect()
+    stats = {(r["user_id"], r["session_id"]): r["count"] for r in per_session}
     assert stats == {(1, 1): 2, (1, 2): 1, (2, 1): 1}
 
 
