@@ -519,34 +519,32 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_zorder_box(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-dimensional data skipping (round 4): lineitem written
-    z-ordered on (l_quantity, l_extendedprice) with a file-stats sidecar;
-    a box query must return exactly the plain-filter rows (oracle) while
-    touching only the files whose stats intersect the box — the
+    """Multi-dimensional data skipping (round 4): lineitem written to a
+    ManifestTable z-ordered on (l_quantity, l_extendedprice); a box read
+    must return exactly the plain-filter rows (oracle) while touching
+    only the files whose ``_stats.json`` min/max intersect the box — the
     `pruned_some` column bakes the skipping evidence into the hashed
     result, and the corrupt-unselected-files proof lives in
     tests/test_training_ops.py."""
-    import os
+    import shutil
+    import tempfile
 
-    from article_extraction_spark.operators.zorder import (
-        prune_files,
-        read_zordered,
-        write_zordered,
-    )
+    from article_extraction_spark.catalog import ManifestTable
+    from article_extraction_spark.operators.zorder import zorder_clustered
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
     )
-    path = f"/tmp/aes_zorder_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}"
-    write_zordered(li, path, ["l_quantity", "l_extendedprice"], n_files=16)
+    root = f"{tempfile.gettempdir()}/aes_zorder_{os.path.basename(os.path.normpath(sf_dir))}"
+    shutil.rmtree(root, ignore_errors=True)
+    t = ManifestTable(root)
+    t.overwrite(zorder_clustered(li, ["l_quantity", "l_extendedprice"], 16))
     box = {"l_quantity": (10.0, 20.0), "l_extendedprice": (20000.0, 40000.0)}
-    hit = read_zordered(spark, path, box)
-    n_selected = len(prune_files(path, box))
-    n_total = len(prune_files(path, {}))
-    return hit.select(
+    keep, total = t.prune_files(box)
+    return t.read_pruned(spark, box).select(
         "l_orderkey",
         "l_linenumber",
-        F.lit(bool(n_selected < n_total)).alias("pruned_some"),
+        F.lit(bool(len(keep) < total)).alias("pruned_some"),
     )
 
 
@@ -1811,8 +1809,8 @@ def q_bloom_point_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in range(4):
         t.append(docs.where(F.col("doc_id") % 4 == r).coalesce(1))
     t.build_file_blooms(spark, ["doc_id"], bits_per_key=10)
-    keep, total = t.prune_files_eq({"doc_id": 137})
-    out = t.read_eq(spark, {"doc_id": 137})
+    keep, total = t.prune_files({"doc_id": (137, 137)})
+    out = t.read_pruned(spark, {"doc_id": (137, 137)})
     return out.select(
         "doc_id",
         "lang",

@@ -24,6 +24,8 @@ Semantics provided (the subset the engine relies on):
   * time travel: ``read(spark, snapshot_id=k)``
   * sidecars (per-commit ``_stats.json``/``_blooms.json``) are replaced
     whole through ``write_json_atomic``
+  * one file-skipping planner: ``prune_files``/``read_pruned`` over the
+    ``_stats.json`` min/max, plus the blooms for a point bound (lo == hi)
   * a local POSIX path only: the exclusive create and the ``os`` calls
     need one (SCALE.md §8)
 
@@ -83,6 +85,16 @@ def write_json_atomic(path: str, obj) -> None:
     sidecar of the table layer and of the indexes built on it is written
     here."""
     write_atomic(path, lambda fh: json.dump(obj, fh))
+
+
+def _load_sidecar(path: str) -> dict:
+    """A table sidecar's JSON, or {} when it is missing or unreadable —
+    sidecars are optimizations: without one, every file is scanned."""
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return {}
 
 
 _STATS_NAME = "_stats.json"
@@ -248,7 +260,7 @@ class ManifestTable:
     # point lookup over unclustered data (every file's [min, max] straddles
     # any popular key domain). The Iceberg-puffin / parquet-bloom answer:
     # an opt-in maintenance pass stores one small bloom bitmap per (file,
-    # column) beside the stats, and equality reads drop every file whose
+    # column) beside the stats, and point bounds drop every file whose
     # bloom rejects the probe value. Hashing is md5 arithmetic (the
     # sketches.py convention) so the DRIVER probes in pure python and an
     # oracle engine can replay membership; bitmaps are built DISTRIBUTED
@@ -334,11 +346,7 @@ class ManifestTable:
         written = 0
         for d, names in by_dir.items():
             blooms_path = os.path.join(self.root, d, self._BLOOMS_NAME)
-            try:
-                with open(blooms_path) as fh:
-                    blooms = json.load(fh)
-            except (OSError, ValueError):
-                blooms = {}
+            blooms = _load_sidecar(blooms_path)
             # review r6: per-COLUMN work lists — a file already holding
             # this column's bloom is never rescanned for it
             col_todo = {
@@ -347,12 +355,7 @@ class ManifestTable:
             all_todo = sorted({n for ns in col_todo.values() for n in ns})
             if not all_todo:
                 continue
-            stats_path = os.path.join(self.root, d, _STATS_NAME)
-            try:
-                with open(stats_path) as fh:
-                    stats = json.load(fh)
-            except (OSError, ValueError):
-                stats = {}
+            stats = _load_sidecar(os.path.join(self.root, d, _STATS_NAME))
             rows_by_name: dict[str, int] = {
                 n: stats[n]["rows"]
                 for n in all_todo
@@ -435,124 +438,6 @@ class ManifestTable:
                     written += 1
             write_json_atomic(blooms_path, blooms)
         return written
-
-    def prune_files_eq(
-        self,
-        eq: dict[str, object],
-        snapshot_id: int | None = None,
-        tz: str | None = None,
-    ) -> tuple[list[str], int]:
-        """Point-lookup scan planning: drop files whose per-file bloom
-        rejects any probe value, composed with range-stats pruning for
-        the same values (``tz`` forwarded to it — pass the session zone
-        when the values also feed a Spark filter; ``read_eq`` does).
-        Files without a bloom (or stats) for a column are kept. Bloom
-        membership applies ONLY to int/str probe values (see
-        ``_bloom_probe_str`` — other types' string forms can't be
-        reproduced driver-side, and a mismatch would be a false
-        negative); other values fall through to stats + residual."""
-        version = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
-        if version is None:
-            raise FileNotFoundError(f"no snapshots in {self.root}")
-        stat_keep, total = self.prune_files(
-            {c: (v, v) for c, v in eq.items() if _stat_bound(v, tz) is not None},
-            snapshot_id=version,
-            tz=tz,
-        )
-        # ADVICE r7 low: a probe is bloomable only when its python type
-        # matches the COLUMN's Spark type — an int probe against a string
-        # column bloom-hashes "5" while the residual `col == 5` casts the
-        # column to int and matches "05": a false negative that silently
-        # drops files. Mismatched probes fall through to stats + residual.
-        col_types = {
-            f.name: f.dataType.simpleString()
-            for f in T.StructType.fromJson(
-                json.loads(self._load(version)["schema"])
-            ).fields
-        }
-        # simpleString() names: tinyint/smallint for 8/16-bit ints (the old
-        # "byte"/"short" entries could never match — ADVICE r7: blooms over
-        # such columns were silently never probed, losing skipping power)
-        int_types = ("tinyint", "smallint", "int", "integer", "bigint", "long")
-        probes = {}
-        for c, v in eq.items():
-            s = self._bloom_probe_str(v)
-            if s is None:
-                continue
-            t = col_types.get(c)
-            if (isinstance(v, str) and t == "string") or (
-                isinstance(v, int) and not isinstance(v, bool) and t in int_types
-            ):
-                probes[c] = s
-        dir_blooms: dict[str, dict] = {}
-        keep = []
-        for f in stat_keep:
-            d, name = os.path.split(f)
-            if d not in dir_blooms:
-                try:
-                    with open(os.path.join(self.root, d, self._BLOOMS_NAME)) as fh:
-                        dir_blooms[d] = json.load(fh)
-                except (OSError, ValueError):
-                    dir_blooms[d] = {}
-            ent = dir_blooms[d].get(name, {})
-            drop = False
-            for col, pstr in probes.items():
-                b = ent.get(col)
-                if b is None:
-                    continue
-                words = b["words"]
-                for i in range(b["k"]):
-                    p = self._bloom_positions_py(pstr, i, b["m"])
-                    if not (words.get(str(p // 64), 0) >> (p % 64)) & 1:
-                        drop = True
-                        break
-                if drop:
-                    break
-            if not drop:
-                keep.append(f)
-        return keep, total
-
-    def _pruned_read(
-        self, spark: SparkSession, version: int, keep: list[str], pred
-    ) -> DataFrame:
-        """Shared tail of the pruned read paths: kept files through the
-        MoR-delete view plus a residual predicate (review r6 — the two
-        copies had already diverged once, on tz handling)."""
-        manifest = self._load(version)
-        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-        if not keep:
-            return spark.createDataFrame([], schema)
-        sub = dict(manifest)
-        sub["files"] = keep
-        out = self._read_with_deletes(spark, sub, schema)
-        return out if pred is None else out.where(pred)
-
-    def read_eq(
-        self,
-        spark: SparkSession,
-        eq: dict[str, object],
-        snapshot_id: int | None = None,
-    ) -> DataFrame:
-        """Equality read with bloom + stats file skipping; MoR deletes and
-        the residual equality predicate still apply — equivalent to
-        ``read(...).where(col = value AND ...)`` by construction (a bloom
-        has no false negatives for int/str probes, and any other probe
-        type skips the bloom rather than risking one)."""
-        from pyspark.sql import functions as F
-
-        version = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
-        if version is None:
-            raise FileNotFoundError(f"no snapshots in {self.root}")
-        # naive temporal values: the residual filter is session-local, so
-        # the stats pruning inside prune_files_eq must be too (review r6 —
-        # the same bug read_pruned fixed, re-introduced on this path)
-        session_tz = spark.conf.get("spark.sql.session.timeZone", None)
-        keep, _total = self.prune_files_eq(eq, snapshot_id=version, tz=session_tz)
-        pred = None
-        for col, value in eq.items():
-            clause = F.col(col) == F.lit(value)
-            pred = clause if pred is None else (pred & clause)
-        return self._pruned_read(spark, version, keep, pred)
 
     def _try_commit(
         self,
@@ -898,7 +783,6 @@ class ManifestTable:
         spark: SparkSession,
         from_snapshot: int,
         to_snapshot: int | None = None,
-        on_non_append: str = "error",
     ) -> DataFrame:
         """CDC-style incremental scan (the Iceberg incremental-read analog):
         rows ADDED strictly after ``from_snapshot`` up to and including
@@ -912,15 +796,12 @@ class ManifestTable:
         bookkeeping needed); ``compact`` rewrites the same rows into new
         files and contributes nothing. ``merge``/``overwrite`` rewrite
         rows in place, which a file-level delta cannot express —
-        ``on_non_append="error"`` (default) raises;
-        ``"skip"`` ignores them (documented under-count, Iceberg's
+        the read raises ValueError (Iceberg's
         incremental scan refuses the same way). Raises if ``from`` is not
         an ancestor of ``to`` or the chain crosses expired history.
 
         Reads with ``to``'s schema: files written before a widening are
         NULL-aligned exactly like a full read."""
-        if on_non_append not in ("error", "skip"):
-            raise ValueError("on_non_append must be 'error' or 'skip'")
         to = to_snapshot if to_snapshot is not None else self.current_snapshot_id()
         if to is None:
             raise FileNotFoundError(f"no snapshots in {self.root}")
@@ -948,11 +829,10 @@ class ManifestTable:
                 added[:0] = [f for f in manifest["files"] if f not in base]
             elif op == "compact":
                 pass  # same rows, new files — nothing added
-            elif on_non_append == "error":
+            else:
                 raise ValueError(
                     f"snapshot {version} is {op!r}: a file-level incremental "
-                    "read cannot express rewrites — re-read the full table or "
-                    "pass on_non_append='skip'"
+                    "read cannot express rewrites — re-read the full table"
                 )
             version, manifest = parent, parent_manifest
         schema = T.StructType.fromJson(json.loads(to_manifest["schema"]))
@@ -1272,7 +1152,7 @@ class ManifestTable:
         z-ordered table KEEPS its file-skipping power — a plain
         round-robin repartition scatters every key range across every
         output file, and one scheduled compaction silently turns
-        read_pruned/read_eq into full scans. ``_stats.json`` for the new
+        read_pruned into a full scan. ``_stats.json`` for the new
         files is written by ``_write_data`` as always; pass ``bloom_cols``
         to rebuild per-file key blooms for the new files in the same
         maintenance action (blooms are sidecars: a crash before they're
@@ -1309,27 +1189,9 @@ class ManifestTable:
         if sort_by:
             df = df.repartitionByRange(n_out, *sort_by).sortWithinPartitions(*sort_by)
         elif zorder_by:
-            from pyspark.sql import functions as F
+            from .operators.zorder import zorder_clustered
 
-            from .operators.zorder import zvalue_col
-
-            bounds = df.agg(
-                *[F.min(c).cast("double").alias(f"__lo_{c}") for c in zorder_by],
-                *[F.max(c).cast("double").alias(f"__hi_{c}") for c in zorder_by],
-            ).collect()[0]
-            mins = [bounds[f"__lo_{c}"] for c in zorder_by]
-            maxs = [bounds[f"__hi_{c}"] for c in zorder_by]
-            if any(v is None for v in mins + maxs):
-                raise ValueError(
-                    f"zorder_by columns {zorder_by} must be non-NULL numerics"
-                )
-            z = zvalue_col(zorder_by, mins, maxs)
-            df = (
-                df.withColumn("__z", z)
-                .repartitionByRange(n_out, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
+            df = zorder_clustered(df, zorder_by, n_out)
         else:
             df = df.repartition(n_out)
         new_files = self._write_data(df)
@@ -1364,14 +1226,27 @@ class ManifestTable:
         numbers, dates or datetimes (see ``_stat_bound``). ``tz``: zone
         for naive datetime/date bounds — pass the Spark session timezone
         when the same bounds also feed a Spark filter (``read_pruned``
-        does this automatically); None = UTC."""
+        does this automatically); None = UTC. A point bound (lo == hi)
+        also drops files whose bloom rejects it, when its python type
+        matches the column's (an int probe hashes "5"; the residual casts
+        a string column and matches "05"). String points: blooms only."""
         version = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
         if version is None:
             raise FileNotFoundError(f"no snapshots in {self.root}")
+        manifest = self._load(version)
+        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
         bounds = {}
+        probes = {}
         for col, (lo, hi) in box.items():
+            t = schema[col].dataType.simpleString() if col in schema.names else None
+            if lo == hi and t in self._BLOOMABLE_SPARK_TYPES:
+                s = self._bloom_probe_str(lo)
+                if s is not None and (t == "string") == isinstance(lo, str):
+                    probes[col] = s
             blo, bhi = _stat_bound(lo, tz), _stat_bound(hi, tz)
             if blo is None or bhi is None:
+                if lo == hi:
+                    continue  # a point of a stats-less kind: blooms only
                 raise TypeError(
                     f"box bound for {col!r} is not a prunable kind "
                     "(number / bool / date / datetime)"
@@ -1386,17 +1261,14 @@ class ManifestTable:
                 "utc": (_stat_bound(lo, None), _stat_bound(hi, None)),
                 "kinds": (_temporal_kind(lo), _temporal_kind(hi)),
             }
-        files = self._load(version)["files"]
+        files = manifest["files"]
         dir_stats: dict[str, dict] = {}
+        dir_blooms: dict[str, dict] = {}
         keep = []
         for f in files:
             d, name = os.path.split(f)
             if d not in dir_stats:
-                try:
-                    with open(os.path.join(self.root, d, _STATS_NAME)) as fh:
-                        dir_stats[d] = json.load(fh)
-                except (OSError, ValueError):
-                    dir_stats[d] = {}
+                dir_stats[d] = _load_sidecar(os.path.join(self.root, d, _STATS_NAME))
             ent = dir_stats[d].get(name)
             drop = False
             if ent is not None:
@@ -1417,9 +1289,25 @@ class ManifestTable:
                     ):
                         drop = True
                         break
+            if not drop and probes:
+                if d not in dir_blooms:
+                    dir_blooms[d] = _load_sidecar(os.path.join(self.root, d, self._BLOOMS_NAME))
+                drop = self._bloom_rejects(dir_blooms[d].get(name, {}), probes)
             if not drop:
                 keep.append(f)
         return keep, len(files)
+
+    @classmethod
+    def _bloom_rejects(cls, blooms: dict, probes: dict[str, str]) -> bool:
+        """True when one file's bloom for some probed column lacks the
+        probe; a column without a bloom rejects nothing."""
+        for col, pstr in probes.items():
+            b = blooms.get(col, {"k": 0})
+            for i in range(b["k"]):
+                p = cls._bloom_positions_py(pstr, i, b["m"])
+                if not (b["words"].get(str(p // 64), 0) >> (p % 64)) & 1:
+                    return True
+        return False
 
     @staticmethod
     def _stat_cmp_bounds(col_kind: str | None, b: dict) -> tuple | None:
@@ -1466,6 +1354,7 @@ class ManifestTable:
         path: manifest column stats prune the file list BEFORE any data
         file is opened, then the residual predicate applies within kept
         files — parquet row-group pushdown still applies under it).
+        Point bounds also prune on the file blooms (``prune_files``).
         Outstanding MoR delete entries are applied exactly as in
         ``read``; restricting the file list never changes which entries
         cover a kept file. Equivalent to
@@ -1480,11 +1369,14 @@ class ManifestTable:
         # in the SESSION timezone, so pruning must too (review r6)
         session_tz = spark.conf.get("spark.sql.session.timeZone", None)
         keep, _total = self.prune_files(box, snapshot_id=version, tz=session_tz)
-        pred = None
+        manifest = self._load(version)
+        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+        if not keep:
+            return spark.createDataFrame([], schema)
+        out = self._read_with_deletes(spark, {**manifest, "files": keep}, schema)
         for col, (lo, hi) in box.items():
-            clause = F.col(col).between(F.lit(lo), F.lit(hi))
-            pred = clause if pred is None else (pred & clause)
-        return self._pruned_read(spark, version, keep, pred)
+            out = out.where(F.col(col).between(F.lit(lo), F.lit(hi)))
+        return out
 
     def _read_with_deletes(
         self,
@@ -1682,12 +1574,6 @@ class ManifestTable:
                 except CommitConflict:
                     pass  # maintenance lost a race; the delete is committed
         return committed
-
-    def delete_where(self, spark: SparkSession, condition, keys: list[str]) -> int:
-        """Predicate convenience: delete every CURRENT row matching
-        ``condition`` by its key tuple (evaluated against the
-        delete-applied head, so already-deleted rows don't re-enter)."""
-        return self.delete(spark, self.read(spark).where(condition), keys)
 
     def delete_positions_where(self, spark: SparkSession, condition) -> int:
         """Merge-on-read POSITIONAL delete (round 6 — Iceberg v2's second

@@ -608,24 +608,13 @@ def embedding_near_duplicates(
     # must not leak on the error path)
     if probe_hamming > 2:
         raise ValueError("probe_hamming supports 0, 1, or 2 (key count grows O(n_planes^h))")
-    import numpy as np
-
     if dim is None:
         first = df.select(F.size(vec_col).alias("d")).first()
         dim = int(first["d"])
-    rng = np.random.RandomState(seed)
-    planes = rng.randn(dim, n_planes).astype("float64")
-    bc = df.sparkSession.sparkContext.broadcast(planes)
-
-    @F.pandas_udf(T.LongType())
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
-        pl = bc.value
-        mat = np.vstack([np.asarray(v, dtype="float64") for v in vecs])
-        signs = (mat @ pl) > 0
-        keys = (signs * (1 << np.arange(pl.shape[1]))).sum(axis=1)
-        return pd.Series(keys, dtype="int64")
-
     from ..functions.similarity import cosine_similarity_col
+    from .similarity_search import hyperplane_bucket_udf
+
+    bucket_udf = hyperplane_bucket_udf(dim, n_planes, seed, df.sparkSession)
 
     bucketed = df.select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"), bucket_udf(F.col(vec_col)).alias("_bk")

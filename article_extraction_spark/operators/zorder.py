@@ -1,43 +1,23 @@
-"""Multi-dimensional data skipping: z-order clustering + a file-stats
-pruning index (round 4).
+"""Multi-dimensional clustering: z-order (round 4).
 
 Partition pruning (lsh/ivf layouts) skips directories on ONE key. Range
 queries over several numeric columns need a different layout: interleave
 the columns' bits into a space-filling z-value, range-partition and sort
-the table by it, and record each output file's per-column min/max in a
-sidecar. Files then cover tight axis-aligned boxes, so a box predicate
-touches only the few files whose stats intersect it — the mechanism
+the table by it. Written through a ``ManifestTable``, each file's
+``_stats.json`` box is then tight, so ``read_pruned`` touches only the
+few files whose stats intersect a box predicate — the mechanism
 behind Delta/Iceberg data skipping (public: Morton 1966 z-curves; the
-OPTIMIZE ZORDER BY pattern), built here from plain parquet + a JSON
-sidecar so it works anywhere.
+OPTIMIZE ZORDER BY pattern).
 
 Everything is native expressions: the z-value is a sum of shift/mask
-terms (whole-stage codegen'd), the write is repartitionByRange +
-sortWithinPartitions, and the read path intersects the sidecar stats
-driver-side (bytes, not rows) then scans only the matching files —
-predicate pushdown still applies within them.
-
-``write_zordered(mode="append")`` stays CORRECT: pruning trusts only
-per-file boxes read from actual parquet footers — files appended under a
-different value domain just prune less tightly (re-cluster with a fresh
-overwrite when locality degrades; the OPTIMIZE pattern). Since round 5
-the sidecar merge is INCREMENTAL: files already described by a
-cols-compatible prior sidecar keep their entries and only the new
-batch's footers are read — O(batch) driver work per append, not
-O(table).
+terms (whole-stage codegen'd), the layout is repartitionByRange +
+sortWithinPartitions.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..catalog import write_json_atomic
-
-_SIDECAR = "_zorder_stats.json"
 
 
 def zvalue_col(cols: list[str], mins: list[float], maxs: list[float], bits: int = 16):
@@ -68,22 +48,11 @@ def zvalue_col(cols: list[str], mins: list[float], maxs: list[float], bits: int 
     return z
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 16,
-    bits: int = 16,
-    mode: str = "overwrite",
-) -> dict:
-    """Write ``df`` z-ordered on ``cols`` with a file-stats sidecar.
-
-    One agg computes the columns' min/max (the ranking domain, also
-    persisted in the sidecar so readers re-derive nothing), then
-    repartitionByRange on the z-value gives each of ``n_files`` output
-    files a contiguous z-range — which is a TIGHT box in column space —
-    and a post-write pyarrow footer pass records each file's per-column
-    min/max. Returns the sidecar dict."""
+def zorder_clustered(df: DataFrame, cols: list[str], n_files: int) -> DataFrame:
+    """``df`` laid out in z-order on ``cols``: one aggregate computes the
+    columns' min/max (the ranking domain), then repartitionByRange on the
+    z-value gives each of ``n_files`` partitions a contiguous z-range —
+    a TIGHT box in column space — sorted within the partition."""
     agg = df.agg(
         *[F.min(F.col(c).cast("double")).alias(f"mn_{i}") for i, c in enumerate(cols)],
         *[F.max(F.col(c).cast("double")).alias(f"mx_{i}") for i, c in enumerate(cols)],
@@ -92,113 +61,9 @@ def write_zordered(
     maxs = [agg[f"mx_{i}"] for i in range(len(cols))]
     if any(v is None for v in mins + maxs):
         raise ValueError("z-order columns contain only NULLs (no min/max domain)")
-    z = zvalue_col(cols, mins, maxs, bits)
-    (
-        df.withColumn("_z", z)
+    return (
+        df.withColumn("_z", zvalue_col(cols, mins, maxs))
         .repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
-        .write.mode(mode)
-        .parquet(path)
     )
-
-    import pyarrow.parquet as pq
-
-    # incremental sidecar merge (VERDICT r4 nit): on append, files already
-    # described by a cols-compatible prior sidecar keep their entries —
-    # only the NEW files' footers are read, so append cost is O(batch
-    # files), not O(table files). A cols-mismatched prior is discarded
-    # wholesale (its boxes describe different columns).
-    prior = None
-    sidecar_path = os.path.join(path, _SIDECAR)
-    if mode == "append" and os.path.exists(sidecar_path):
-        with open(sidecar_path) as fh:
-            prior = json.load(fh)
-        if prior.get("cols") != cols:
-            prior = None
-    known = {e["file"]: e for e in prior["files"]} if prior else {}
-
-    files = sorted(
-        f for f in os.listdir(path) if f.endswith(".parquet") and not f.startswith("_")
-    )
-    stats = []
-    for fname in files:
-        if fname in known:
-            stats.append(known[fname])
-            continue
-        md = pq.ParquetFile(os.path.join(path, fname)).metadata
-        schema_names = [md.schema.column(i).name for i in range(md.num_columns)]
-        fmin: dict[str, float] = {}
-        fmax: dict[str, float] = {}
-        for rg in range(md.num_row_groups):
-            for ci, name in enumerate(schema_names):
-                if name not in cols:
-                    continue
-                st = md.row_group(rg).column(ci).statistics
-                if st is None or not st.has_min_max:
-                    continue
-                lo, hi = float(st.min), float(st.max)
-                fmin[name] = min(fmin.get(name, lo), lo)
-                fmax[name] = max(fmax.get(name, hi), hi)
-        stats.append({"file": fname, "min": fmin, "max": fmax})
-    # on append, the persisted ranking domain must describe the WHOLE
-    # table, not just this batch — widen against the prior sidecar
-    # (per-file pruning never reads the domain, so this is purely for
-    # consumers that rank query points against it; review r4)
-    if prior is not None:
-        mins = [min(a, b) for a, b in zip(prior["domain_min"], mins)]
-        maxs = [max(a, b) for a, b in zip(prior["domain_max"], maxs)]
-    sidecar = {"cols": cols, "bits": bits, "domain_min": mins, "domain_max": maxs, "files": stats}
-    # replaced whole: a crash mid-write must leave the previous sidecar
-    # loadable, or every later prune_files and append fails to parse it
-    write_json_atomic(sidecar_path, sidecar)
-    return sidecar
-
-
-def prune_files(path: str, box: dict[str, tuple[float, float]]) -> list[str]:
-    """File paths whose sidecar stats intersect the box (driver-side,
-    reads only the JSON sidecar). A file missing stats for a predicate
-    column is kept (never prune on missing information)."""
-    with open(os.path.join(path, _SIDECAR)) as fh:
-        sidecar = json.load(fh)
-    keep = []
-    for entry in sidecar["files"]:
-        hit = True
-        for col, (lo, hi) in box.items():
-            if col in entry["min"] and (entry["max"][col] < lo or entry["min"][col] > hi):
-                hit = False
-                break
-        if hit:
-            keep.append(os.path.join(path, entry["file"]))
-    return keep
-
-
-def read_zordered(
-    spark: SparkSession,
-    path: str,
-    box: dict[str, tuple[float, float]],
-    schema=None,
-) -> DataFrame:
-    """Box query over a write_zordered table: sidecar-prune the file
-    list, scan only those files, apply the residual predicate (rows in
-    kept files but outside the box). Empty prune result → empty frame
-    with the right schema (requires ``schema`` or one sample file).
-    Pass ``schema`` on large tables to skip footer inference."""
-    files = prune_files(path, box)
-    pred = None
-    for col, (lo, hi) in box.items():
-        clause = (F.col(col) >= lo) & (F.col(col) <= hi)
-        pred = clause if pred is None else (pred & clause)
-    if not files:
-        if schema is not None:
-            return spark.createDataFrame([], schema)
-        all_files = prune_files(path, {})
-        if not all_files:
-            raise ValueError(
-                "z-ordered table has no data files and no schema was given "
-                "— pass schema= to get an empty frame"
-            )
-        return spark.read.parquet(*all_files).where(F.lit(False))
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    out = reader.parquet(*files)
-    return out if pred is None else out.where(pred)

@@ -373,12 +373,10 @@ def test_read_incremental_compact_merge_expiry(spark, tmp_path):
     v3 = t.append(spark.createDataFrame([(3, "c")], "k int, v string"))
     # compact rewrites rows, adds none
     assert {r["k"] for r in t.read_incremental(spark, v1).collect()} == {3}
-    # merge in the window: error by default, skip drops its rewrites
+    # merge in the window: a file-level delta cannot express it
     t.merge(spark, spark.createDataFrame([(2, "B"), (4, "d")], "k int, v string"), ["k"])
     with pytest.raises(ValueError, match="incremental"):
         t.read_incremental(spark, v1)
-    skipped = {r["k"] for r in t.read_incremental(spark, v1, on_non_append="skip").collect()}
-    assert skipped == {3}
     # expired history inside the window → clear error
     v5 = t.append(spark.createDataFrame([(5, "e")], "k int, v string"))
     t.expire_snapshots(keep_last=2)
@@ -420,7 +418,7 @@ def test_mor_delete_reinsert_and_where(spark, tmp_path):
 
     t = ManifestTable(str(tmp_path / "t"))
     t.append(spark.createDataFrame([(i, i * 10) for i in range(6)], "id long, v long"))
-    t.delete_where(spark, "v >= 30", ["id"])
+    t.delete(spark, t.read(spark).where("v >= 30"), ["id"])
     assert sorted(r["id"] for r in t.read(spark).collect()) == [0, 1, 2]
     # re-insert id=4: the old delete never covers the new file
     t.append(spark.createDataFrame([(4, 999)], "id long, v long"))
@@ -484,8 +482,8 @@ def test_mor_delete_expiry_keeps_referenced_delete_files(spark, tmp_path):
 
 def test_mor_delete_incremental_read_refuses(spark, tmp_path):
     """Row removal is inexpressible as a file-level delta: crossing a
-    delete snapshot errors (or skips on request), same contract as
-    merge/overwrite; validation errors stay crisp."""
+    delete snapshot errors, same contract as merge/overwrite; validation
+    errors stay crisp."""
     import pytest as _pytest
 
     from article_extraction_spark.catalog import ManifestTable
@@ -496,8 +494,6 @@ def test_mor_delete_incremental_read_refuses(spark, tmp_path):
     t.append(spark.createDataFrame([(3,)], "id long"))
     with _pytest.raises(ValueError, match="delete"):
         t.read_incremental(spark, v1)
-    skipped = t.read_incremental(spark, v1, on_non_append="skip")
-    assert sorted(r["id"] for r in skipped.collect()) == [3]
     with _pytest.raises(KeyError, match="not in table schema"):
         t.delete(spark, spark.createDataFrame([(1,)], "nope long"), ["nope"])
     with _pytest.raises(ValueError, match="at least one key"):
@@ -809,13 +805,13 @@ def test_file_blooms_point_lookup_skips_unsorted_files(spark, tmp_path):
     assert len(stat_keep) == total == 4
     n = t.build_file_blooms(spark, ["id"])
     assert n == 4
-    keep, total = t.prune_files_eq({"id": 1234})
+    keep, total = t.prune_files({"id": (1234, 1234)})
     assert total == 4 and 1 <= len(keep) <= 2  # true file + rare fp
     for f in t._load(t.current_snapshot_id())["files"]:
         if f not in keep:
             with open(os.path.join(t.root, f), "wb") as fh:
                 fh.write(b"garbage")
-    got = [(r["id"], r["s"]) for r in t.read_eq(spark, {"id": 1234}).collect()]
+    got = [(r["id"], r["s"]) for r in t.read_pruned(spark, {"id": (1234, 1234)}).collect()]
     assert got == [(1234, "s1234")]
 
 
@@ -830,7 +826,7 @@ def test_file_blooms_incremental_and_equivalence(spark, tmp_path):
     assert t.build_file_blooms(spark, ["id"]) == 1
     assert t.build_file_blooms(spark, ["id"]) == 0  # idempotent
     for probe in (0, 1, 77, 498, 9999):
-        got = sorted(r["id"] for r in t.read_eq(spark, {"id": probe}).collect())
+        got = sorted(r["id"] for r in t.read_pruned(spark, {"id": (probe, probe)}).collect())
         want = sorted(r["id"] for r in t.read(spark).where(f"id = {probe}").collect())
         assert got == want, probe
 
@@ -843,12 +839,12 @@ def test_file_blooms_with_mor_delete_and_missing_bloom(spark, tmp_path):
     t.build_file_blooms(spark, ["id"])
     # a post-bloom append has NO bloom -> its file is always scanned
     t.append(spark.createDataFrame([(42,), (500,)], "id long").coalesce(1))
-    keep, total = t.prune_files_eq({"id": 500})
+    keep, total = t.prune_files({"id": (500, 500)})
     assert total == 2 and len(keep) >= 1
-    got = sorted(r["id"] for r in t.read_eq(spark, {"id": 42}).collect())
+    got = sorted(r["id"] for r in t.read_pruned(spark, {"id": (42, 42)}).collect())
     assert got == [42, 42]
     t.delete(spark, spark.createDataFrame([(42,)], "id long"), ["id"])
-    assert t.read_eq(spark, {"id": 42}).count() == 0  # deletes apply
+    assert t.read_pruned(spark, {"id": (42, 42)}).count() == 0  # deletes apply
 
 
 def test_file_blooms_reject_unbloomable_types_and_skip_bad_probes(spark, tmp_path):
@@ -870,16 +866,16 @@ def test_file_blooms_reject_unbloomable_types_and_skip_bad_probes(spark, tmp_pat
         t.build_file_blooms(spark, ["v"])
     t.build_file_blooms(spark, ["id"])
     # bool probe on a bloomed table: bloom skipped, result still correct
-    got = [(r["id"], r["flag"]) for r in t.read_eq(spark, {"flag": True}).collect()]
+    got = [(r["id"], r["flag"]) for r in t.read_pruned(spark, {"flag": (True, True)}).collect()]
     assert got == [(1, True)]
     # mixed probe: int goes through bloom, float through stats+residual
-    got2 = [r["id"] for r in t.read_eq(spark, {"id": 2, "v": 2.5}).collect()]
+    got2 = [r["id"] for r in t.read_pruned(spark, {"id": (2, 2), "v": (2.5, 2.5)}).collect()]
     assert got2 == [2]
 
 
-def test_read_eq_respects_session_timezone(spark, tmp_path):
-    """Review r6 second pass: the equality path interprets naive temporal
-    probe values session-locally, same as its residual filter."""
+def test_point_box_respects_session_timezone(spark, tmp_path):
+    """Review r6 second pass: a point box interprets a naive temporal
+    probe value session-locally, same as its residual filter."""
     import datetime
 
     from article_extraction_spark.catalog import ManifestTable
@@ -890,7 +886,7 @@ def test_read_eq_respects_session_timezone(spark, tmp_path):
         t = ManifestTable(str(tmp_path / "t"))
         ts = datetime.datetime(2026, 1, 1, 22, 30)  # written session-local
         t.append(spark.createDataFrame([(1, ts)], "id long, ts timestamp").coalesce(1))
-        got = [r["id"] for r in t.read_eq(spark, {"ts": ts}).collect()]
+        got = [r["id"] for r in t.read_pruned(spark, {"ts": (ts, ts)}).collect()]
         assert got == [1]
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
@@ -926,7 +922,7 @@ def test_maintain_table_job_ladder(spark, tmp_path):
         j for j in range(60) if j not in (5, 15)
     ]
     # post-maintenance read path: blooms built on the compacted file
-    got = [r["id"] for r in t.read_eq(spark, {"id": 42}).collect()]
+    got = [r["id"] for r in t.read_pruned(spark, {"id": (42, 42)}).collect()]
     assert got == [42]
     assert len(t.snapshots()) <= 3
 
@@ -1197,20 +1193,21 @@ def test_stats_prune_legacy_statsfile_without_kind(spark, tmp_path):
 
 def test_bloom_probe_type_must_match_column_type(spark, tmp_path):
     """ADVICE r7 low: an int probe against a STRING column bloom-hashed
-    "5" while the residual `col == 5` casts the column and matches "05" —
-    a bloom false negative silently dropping files. Mismatched probe
-    types now skip the bloom and fall through to stats + residual."""
+    "5" while the residual casts the column and matches "05" — a bloom
+    false negative silently dropping files. Mismatched probe types now
+    skip the bloom and fall through to stats + residual."""
     t = ManifestTable(str(tmp_path / "t"))
     t.append(spark.createDataFrame([("05", 1), ("7", 2)], "code string, id long").coalesce(1))
     t.build_file_blooms(spark, ["code", "id"])
     # int probe on string column: bloom skipped, cast semantics preserved
-    got = sorted(r["id"] for r in t.read_eq(spark, {"code": 5}).collect())
+    got = sorted(r["id"] for r in t.read_pruned(spark, {"code": (5, 5)}).collect())
     assert got == [1]
     # str probe on int column: bloom skipped too ("02" vs Spark's "2")
-    got2 = sorted(r["code"] for r in t.read_eq(spark, {"id": 2}).collect())
+    got2 = sorted(r["code"] for r in t.read_pruned(spark, {"id": (2, 2)}).collect())
     assert got2 == ["7"]
-    # matched types still go through the bloom and prune
-    keep, total = t.prune_files_eq({"code": "zzz"})
+    # matched types still go through the bloom and prune; a string point
+    # has no stats kind, so only the bloom decides
+    keep, total = t.prune_files({"code": ("zzz", "zzz")})
     assert total == 1 and keep == []
 
 
@@ -1284,9 +1281,9 @@ def test_compact_sort_by_keeps_skipping_power(spark, tmp_path):
     assert t.read_pruned(spark, box).count() == 201
     # blooms were rebuilt for the NEW files in the same action
     assert t.build_file_blooms(spark, ["id"], snapshot_id=v) == 0  # nothing left to do
-    keep_eq, _ = t.prune_files_eq({"id": 1234})
+    keep_eq, _ = t.prune_files({"id": (1234, 1234)})
     assert len(keep_eq) <= 2
-    assert [r["id"] for r in t.read_eq(spark, {"id": 1234}).collect()] == [1234]
+    assert [r["id"] for r in t.read_pruned(spark, {"id": (1234, 1234)}).collect()] == [1234]
 
     with pytest.raises(KeyError, match="sort_by"):
         t.compact(spark, sort_by=["nope"])
@@ -1368,7 +1365,7 @@ def test_vacuum_orphans(spark, tmp_path):
     assert not os.path.exists(orphan_dir)  # sidecar-only dir swept
     # the live table is untouched and fully readable
     assert t.read(spark).count() == 50
-    assert [r["id"] for r in t.read_eq(spark, {"id": 7}).collect()] == [7]
+    assert [r["id"] for r in t.read_pruned(spark, {"id": (7, 7)}).collect()] == [7]
     # idempotent
     assert t.vacuum_orphans(grace_seconds=3600)["removed"] == 0
 
@@ -1433,9 +1430,9 @@ def test_file_blooms_probe_tinyint_smallint_columns(spark, tmp_path):
         t.append(df.coalesce(1))
     assert t.build_file_blooms(spark, ["sk", "tk"]) > 0
     for col in ("sk", "tk"):
-        keep, total = t.prune_files_eq({col: 37})
+        keep, total = t.prune_files({col: (37, 37)})
         assert total == 4 and 1 <= len(keep) <= 2, f"{col} bloom not probed"
-        got = sorted(r[col] for r in t.read_eq(spark, {col: 37}).collect())
+        got = sorted(r[col] for r in t.read_pruned(spark, {col: (37, 37)}).collect())
         assert got == [37]
 
 
@@ -1473,35 +1470,41 @@ def test_write_conflict_discards_its_data_files(spark, tmp_path, operation):
     assert _data_parquet(t) - before - referenced == set()
 
 
-def test_one_commit_point_and_one_atomic_writer():
-    """Every snapshot is created by the one exclusive-create open in
-    ManifestTable._try_commit, and every whole-file replace (the JSON
-    sidecars, the --py-files zip) goes through catalog.write_atomic — no
-    other os.replace in the package."""
+def _package_sites(match) -> set[tuple[str, str]]:
+    """(file relative to the package, qualified name of the enclosing
+    function) of every AST node in the package that ``match`` accepts."""
     import ast
     import pathlib
 
     import article_extraction_spark
 
     pkg = pathlib.Path(article_extraction_spark.__file__).parent
+    out = set()
 
-    def sites(path: pathlib.Path, match) -> list[str]:
-        """Qualified name of the function around each call ``match`` accepts."""
-        out = []
+    def walk(node, rel, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.ClassDef)):
+                walk(child, rel, scope + [child.name])
+                continue
+            if match(child):
+                out.add((rel, ".".join(scope)))
+            walk(child, rel, scope)
 
-        def walk(node, scope):
-            for child in ast.iter_child_nodes(node):
-                if isinstance(child, (ast.FunctionDef, ast.ClassDef)):
-                    walk(child, scope + [child.name])
-                    continue
-                if isinstance(child, ast.Call) and match(child):
-                    out.append(".".join(scope))
-                walk(child, scope)
+    for path in pkg.rglob("*.py"):
+        walk(ast.parse(path.read_text()), str(path.relative_to(pkg)), [])
+    return out
 
-        walk(ast.parse(path.read_text()), [])
-        return out
+
+def test_one_commit_point_and_one_atomic_writer():
+    """Every snapshot is created by the one exclusive-create open in
+    ManifestTable._try_commit, and every whole-file replace (the JSON
+    sidecars, the --py-files zip) goes through catalog.write_atomic — no
+    other os.replace in the package."""
+    import ast
 
     def exclusive_open(call) -> bool:
+        if not isinstance(call, ast.Call):
+            return False
         mode = call.args[1] if len(call.args) > 1 else None
         mode = next((k.value for k in call.keywords if k.arg == "mode"), mode)
         return (
@@ -1512,7 +1515,7 @@ def test_one_commit_point_and_one_atomic_writer():
         )
 
     def os_replace(call) -> bool:
-        f = call.func
+        f = call.func if isinstance(call, ast.Call) else None
         return (
             isinstance(f, ast.Attribute)
             and f.attr == "replace"
@@ -1520,11 +1523,46 @@ def test_one_commit_point_and_one_atomic_writer():
             and f.value.id in ("os", "_os")
         )
 
-    assert sites(pkg / "catalog.py", exclusive_open) == ["ManifestTable._try_commit"]
-    replaced = {
-        (str(p.relative_to(pkg)), s) for p in pkg.rglob("*.py") for s in sites(p, os_replace)
-    }
-    assert replaced == {("catalog.py", "write_atomic")}
+    assert _package_sites(exclusive_open) == {("catalog.py", "ManifestTable._try_commit")}
+    assert _package_sites(os_replace) == {("catalog.py", "write_atomic")}
+
+
+def test_one_parquet_footer_reader():
+    """Column stats come from one place: the per-commit ``_stats.json``
+    that catalog._write_commit_stats builds from the parquet footers. No
+    other module opens parquet through pyarrow (a second stats source is a
+    second file-skipping planner)."""
+    import ast
+
+    def imports_pyarrow_parquet(node) -> bool:
+        if isinstance(node, ast.Import):
+            return any(a.name == "pyarrow.parquet" for a in node.names)
+        if isinstance(node, ast.ImportFrom):
+            return node.module == "pyarrow.parquet" or (
+                node.module == "pyarrow" and any(a.name == "parquet" for a in node.names)
+            )
+        return False
+
+    assert _package_sites(imports_pyarrow_parquet) == {("catalog.py", "_write_commit_stats")}
+
+
+def test_write_atomic_failure_keeps_the_previous_file(tmp_path):
+    """A writer that raises part-way through leaves the previous file
+    byte-identical and no ``.<name>.*`` temp file behind."""
+    from article_extraction_spark.catalog import write_atomic, write_json_atomic
+
+    path = tmp_path / "side.json"
+    write_json_atomic(str(path), {"v": 1})
+    before = path.read_bytes()
+
+    def failing(fh):
+        fh.write('{"v": 2, "partial"')
+        raise OSError("disk full")
+
+    with pytest.raises(OSError, match="disk full"):
+        write_atomic(str(path), failing)
+    assert path.read_bytes() == before
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["side.json"]
 
 
 def test_manifest_layout_of_every_operation(spark, tmp_path):

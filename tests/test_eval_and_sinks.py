@@ -4,10 +4,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from article_extraction_spark.eval_metrics import (
-    char_metrics,
     cumulative_mean_by,
     evaluate,
     per_turn_equality,

@@ -351,25 +351,23 @@ def test_ivf_probe_prunes_partitions(spark, tmp_path):
 
 
 def test_zorder_residual_predicate_is_pushed_down(spark, tmp_path):
-    """Within the files the sidecar keeps, the box predicate must reach
+    """Within the files the stats keep, the box predicate must reach
     the parquet scan as PushedFilters — the files are z-sorted, so
     parquet row-group min/max stats make the pushed predicate skip row
     groups too (free within-file skipping)."""
     import numpy as np
 
-    from article_extraction_spark.operators.zorder import (
-        read_zordered,
-        write_zordered,
-    )
+    from article_extraction_spark.catalog import ManifestTable
+    from article_extraction_spark.operators.zorder import zorder_clustered
 
     rng = np.random.RandomState(4)
     df = spark.createDataFrame(
         [(i, float(rng.uniform(0, 100)), float(rng.uniform(0, 100))) for i in range(5000)],
         "id long, x double, y double",
     )
-    path = str(tmp_path / "z")
-    write_zordered(df, path, ["x", "y"], n_files=8)
-    q = read_zordered(spark, path, {"x": (10.0, 30.0), "y": (40.0, 60.0)})
+    t = ManifestTable(str(tmp_path / "z"))
+    t.overwrite(zorder_clustered(df, ["x", "y"], 8))
+    q = t.read_pruned(spark, {"x": (10.0, 30.0), "y": (40.0, 60.0)})
     plan = _plan(q)
     pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
     # the formatted plan truncates long filter lists with "..." — assert

@@ -1098,21 +1098,17 @@ def test_zorder_zvalue_interleave_known_bits(spark):
 
 
 def test_zorder_box_prunes_and_matches_full_scan(spark, tmp_path):
-    """Data-skipping proof, same shape as the IVF/LSH tests: the box
-    query equals the full-scan filter, touches a minority of files, and
-    still works after every NON-selected file is corrupted (so the
-    pruned files are provably never opened)."""
-    import glob
+    """Data-skipping proof, same shape as the IVF/LSH tests: a z-ordered
+    ManifestTable's box read equals the full-scan filter, touches a
+    minority of files, and still works after every NON-selected file is
+    corrupted (so the pruned files are provably never opened)."""
     import os
 
     import numpy as np
     import pytest
 
-    from article_extraction_spark.operators.zorder import (
-        prune_files,
-        read_zordered,
-        write_zordered,
-    )
+    from article_extraction_spark.catalog import ManifestTable
+    from article_extraction_spark.operators.zorder import zorder_clustered
 
     rng = np.random.RandomState(13)
     rows = [
@@ -1120,83 +1116,46 @@ def test_zorder_box_prunes_and_matches_full_scan(spark, tmp_path):
         for i in range(20_000)
     ]
     df = spark.createDataFrame(rows, "id long, x double, y double")
-    path = str(tmp_path / "ztab")
-    write_zordered(df, path, ["x", "y"], n_files=16)
+    t = ManifestTable(str(tmp_path / "ztab"))
+    t.overwrite(zorder_clustered(df, ["x", "y"], 16))
 
     box = {"x": (10.0, 25.0), "y": (60.0, 80.0)}
     expected = sorted(
         r[0] for r in rows if 10.0 <= r[1] <= 25.0 and 60.0 <= r[2] <= 80.0
     )
-    got = sorted(r["id"] for r in read_zordered(spark, path, box).collect())
+    got = sorted(r["id"] for r in t.read_pruned(spark, box).collect())
     assert got == expected and got
 
-    selected = set(prune_files(path, box))
-    total = prune_files(path, {})
-    assert len(total) == 16
-    assert len(selected) <= len(total) // 2, (len(selected), len(total))
+    selected, total = t.prune_files(box)
+    assert total == 16
+    assert len(selected) <= total // 2, (len(selected), total)
 
     # corrupt every non-selected file: pruned read unaffected, full scan dies
-    for f in total:
+    for f in t._load(t.current_snapshot_id())["files"]:
         if f not in selected:
-            with open(f, "wb") as fh:
+            with open(os.path.join(t.root, f), "wb") as fh:
                 fh.write(b"not a parquet file")
-    again = sorted(r["id"] for r in read_zordered(spark, path, box).collect())
+    again = sorted(r["id"] for r in t.read_pruned(spark, box).collect())
     assert again == expected
     with pytest.raises(Exception):
-        spark.read.parquet(path).count()
-
-
-def test_zorder_sidecar_survives_failed_append(spark, tmp_path, monkeypatch):
-    """The z-order sidecar is replaced whole: a dump that fails during an
-    append leaves the previous sidecar loadable (prune_files keeps
-    working on the files it describes) and no temp file behind."""
-    import json
-    import os
-
-    import pytest
-
-    from article_extraction_spark.operators.zorder import prune_files, write_zordered
-
-    path = str(tmp_path / "z")
-    df = spark.createDataFrame(
-        [(float(i), float(i % 7)) for i in range(64)], "x double, y double"
-    )
-    before = write_zordered(df, path, ["x", "y"], n_files=4)
-    real_dump = json.dump
-
-    def failing_dump(obj, fh, *args, **kwargs):
-        if isinstance(obj, dict) and "domain_min" in obj:
-            raise OSError("disk full")
-        return real_dump(obj, fh, *args, **kwargs)
-
-    monkeypatch.setattr(json, "dump", failing_dump)
-    with pytest.raises(OSError, match="disk full"):
-        write_zordered(df, path, ["x", "y"], n_files=2, mode="append")
-    monkeypatch.undo()
-    with open(os.path.join(path, "_zorder_stats.json")) as fh:
-        assert json.load(fh) == before
-    assert len(prune_files(path, {"x": (0.0, 63.0)})) == len(before["files"])
-    assert not [n for n in os.listdir(path) if n.startswith("._zorder_stats")]
+        t.read(spark).count()
 
 
 def test_zorder_degenerate_and_empty_box(spark, tmp_path):
-    from article_extraction_spark.operators.zorder import (
-        read_zordered,
-        write_zordered,
-    )
+    from article_extraction_spark.catalog import ManifestTable
+    from article_extraction_spark.operators.zorder import zorder_clustered
 
     # constant column: span 0 must not divide by zero
     df = spark.createDataFrame(
         [(i, 5.0, float(i)) for i in range(100)], "id long, x double, y double"
     )
-    path = str(tmp_path / "zc")
-    write_zordered(df, path, ["x", "y"], n_files=4)
-    got = read_zordered(spark, path, {"x": (0.0, 10.0), "y": (10.0, 19.0)}).collect()
+    t = ManifestTable(str(tmp_path / "zc"))
+    t.overwrite(zorder_clustered(df, ["x", "y"], 4))
+    got = t.read_pruned(spark, {"x": (0.0, 10.0), "y": (10.0, 19.0)}).collect()
     assert sorted(r["id"] for r in got) == list(range(10, 20))
     # a box that intersects no file stats → empty result, not an error
-    assert read_zordered(
-        spark, path, {"y": (1e6, 2e6)}, schema="id long, x double, y double"
-    ).count() == 0
+    assert t.prune_files({"y": (1e6, 2e6)})[0] == []
+    assert t.read_pruned(spark, {"y": (1e6, 2e6)}).count() == 0
 
 
 def test_ngram_jaccard_random_sweep_vs_bruteforce(spark):
@@ -1282,19 +1241,12 @@ def test_zorder_zvalue_random_sweep_vs_python_morton(spark):
     assert got == [morton(x, y) for x, y in pts]
 
 
-def test_zorder_append_widens_domain_and_stays_correct(spark, tmp_path):
-    """review r4: appending a batch from a different value domain must
-    widen the sidecar's persisted domain to cover the whole table, and
-    box queries over both batches stay exact (pruning only ever uses
-    per-file footer stats, so correctness never depended on the domain)."""
-    import json
-    import os
-
-    from article_extraction_spark.operators.zorder import (
-        _SIDECAR,
-        read_zordered,
-        write_zordered,
-    )
+def test_zorder_append_other_domain_stays_correct(spark, tmp_path):
+    """review r4: a batch from a different value domain, clustered against
+    its own domain and appended, keeps box reads over both batches exact,
+    and a box inside the new domain scans only the appended files."""
+    from article_extraction_spark.catalog import ManifestTable
+    from article_extraction_spark.operators.zorder import zorder_clustered
 
     b1 = spark.createDataFrame(
         [(i, float(i), float(i)) for i in range(100)], "id long, x double, y double"
@@ -1303,16 +1255,17 @@ def test_zorder_append_widens_domain_and_stays_correct(spark, tmp_path):
         [(1000 + i, 500.0 + i, 500.0 + i) for i in range(100)],
         "id long, x double, y double",
     )
-    path = str(tmp_path / "zt")
-    write_zordered(b1, path, ["x", "y"], n_files=4)
-    write_zordered(b2, path, ["x", "y"], n_files=4, mode="append")
-    sc = json.load(open(os.path.join(path, _SIDECAR)))
-    assert sc["domain_min"] == [0.0, 0.0] and sc["domain_max"] == [599.0, 599.0]
+    t = ManifestTable(str(tmp_path / "zt"))
+    v1 = t.append(zorder_clustered(b1, ["x", "y"], 4))
+    t.append(zorder_clustered(b2, ["x", "y"], 4))
+    first = set(t._load(v1)["files"])
+    keep, _total = t.prune_files({"x": (550.0, 599.0)})
+    assert keep and not first & set(keep)
 
     got = sorted(
         r["id"]
-        for r in read_zordered(
-            spark, path, {"x": (90.0, 510.0), "y": (90.0, 510.0)}
+        for r in t.read_pruned(
+            spark, {"x": (90.0, 510.0), "y": (90.0, 510.0)}
         ).collect()
     )
     assert got == list(range(90, 100)) + list(range(1000, 1011))
@@ -1375,21 +1328,29 @@ def test_media_features_digest_fallback_for_undecodable(spark):
 
 
 def test_zorder_append_sidecar_is_incremental(spark, tmp_path):
-    """Round 5 (VERDICT r4 note): appending must read footers only for
-    the NEW batch's files — prior sidecar entries are reused — while
-    pruning over the combined table stays exact."""
-    import pyarrow.parquet as pq
+    """Round 5 (VERDICT r4 note): appending to a z-ordered table reads
+    footers only for the NEW batch's files — the stats of earlier commits
+    are left as they are — while pruning over the combined table stays
+    exact."""
+    import os
     from unittest import mock
 
-    from article_extraction_spark.operators.zorder import read_zordered, write_zordered
+    import pyarrow.parquet as pq
+
+    from article_extraction_spark.catalog import ManifestTable
+    from article_extraction_spark.operators.zorder import zorder_clustered
 
     df1 = spark.createDataFrame(
         [(i, float(i % 50), float(i // 50)) for i in range(500)],
         "id long, x double, y double",
     )
-    path = str(tmp_path / "zi")
-    side1 = write_zordered(df1, path, ["x", "y"], n_files=6)
-    n1 = len(side1["files"])
+    t = ManifestTable(str(tmp_path / "zi"))
+    v1 = t.append(zorder_clustered(df1, ["x", "y"], 6))
+    first = t._load(v1)["files"]
+    (first_dir,) = {os.path.dirname(f) for f in first}
+    stats_path = os.path.join(t.root, first_dir, "_stats.json")
+    with open(stats_path, "rb") as fh:
+        first_stats = fh.read()
 
     df2 = spark.createDataFrame(
         [(1000 + i, float(60 + i % 20), float(i // 20)) for i in range(200)],
@@ -1403,23 +1364,19 @@ def test_zorder_append_sidecar_is_incremental(spark, tmp_path):
         return real_pf(p, *a, **kw)
 
     with mock.patch.object(pq, "ParquetFile", side_effect=counting_pf):
-        side2 = write_zordered(df2, path, ["x", "y"], n_files=4, mode="append")
-    assert len(side2["files"]) > n1
-    # footer reads happened ONLY for files not in the prior sidecar
-    assert 0 < len(read_files) == len(side2["files"]) - n1
-    # prior entries survive verbatim
-    prior_by_name = {e["file"]: e for e in side1["files"]}
-    for e in side2["files"]:
-        if e["file"] in prior_by_name:
-            assert e == prior_by_name[e["file"]]
+        v2 = t.append(zorder_clustered(df2, ["x", "y"], 4))
+    added = set(t._load(v2)["files"]) - set(first)
+    # footer reads happened ONLY for the appended files
+    assert 0 < len(read_files) == len(added)
+    # the first commit's stats survive verbatim
+    with open(stats_path, "rb") as fh:
+        assert fh.read() == first_stats
     # pruning over the combined table is still exact: x>=60 lives only in
     # the appended batch
-    got = read_zordered(spark, path, {"x": (60.0, 100.0)}).collect()
-    assert sorted(r["id"] for r in got) == sorted(
-        1000 + i for i in range(200) if 60 + i % 20 >= 60
-    )
-    # domain widened to cover both batches
-    assert side2["domain_min"][0] == 0.0 and side2["domain_max"][0] == 79.0
+    keep, _total = t.prune_files({"x": (60.0, 100.0)})
+    assert set(keep) <= added
+    got = t.read_pruned(spark, {"x": (60.0, 100.0)}).collect()
+    assert sorted(r["id"] for r in got) == sorted(1000 + i for i in range(200))
 
 
 def test_prune_near_duplicates_keep_one(spark, tmp_path):

@@ -242,27 +242,26 @@ def main() -> None:
         )
     )
 
-    from article_extraction_spark.operators.zorder import (
-        read_zordered,
-        write_zordered,
-    )
+    from article_extraction_spark.catalog import ManifestTable
+    from article_extraction_spark.operators.zorder import zorder_clustered
 
     li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
         "l_orderkey", "l_quantity", "l_extendedprice"
     )
-    z_dir = tempfile.mkdtemp(prefix="plans_zorder_")
-    write_zordered(li, z_dir, ["l_quantity", "l_extendedprice"], n_files=8)
-    zq = read_zordered(
-        spark, z_dir, {"l_quantity": (10.0, 20.0), "l_extendedprice": (20000.0, 40000.0)}
+    z_table = ManifestTable(tempfile.mkdtemp(prefix="plans_zorder_"))
+    z_table.overwrite(zorder_clustered(li, ["l_quantity", "l_extendedprice"], 8))
+    zq = z_table.read_pruned(
+        spark, {"l_quantity": (10.0, 20.0), "l_extendedprice": (20000.0, 40000.0)}
     )
     sections.append(
         (
             "Z-order box query (round 4)",
-            "File-stats data skipping: the scan's file list is already "
-            "sidecar-pruned to the files whose min/max boxes intersect the "
-            "predicate (driver-side, before planning), and the residual box "
-            "lands as PushedFilters — z-sorted files give parquet row-group "
-            "stats real selectivity within each kept file.",
+            "File-stats data skipping: the table is a ManifestTable written "
+            "from zorder_clustered, and read_pruned has already cut the "
+            "scan's file list to the files whose _stats.json min/max boxes "
+            "intersect the predicate (driver-side, before planning); the "
+            "residual box lands as PushedFilters — z-sorted files give "
+            "parquet row-group stats real selectivity within each kept file.",
             plan_str(zq),
         )
     )
