@@ -38,6 +38,19 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _scratch_root(sf_dir: str, name: str) -> str:
+    """A query's scratch directory at one scale: ``aes_<name>_<scale>``
+    under the system temp dir, emptied first, so every run reuses the
+    same path instead of leaving a new one behind."""
+    import shutil
+    import tempfile
+
+    scale = os.path.basename(os.path.normpath(sf_dir))
+    root = os.path.join(tempfile.gettempdir(), f"aes_{name}_{scale}")
+    shutil.rmtree(root, ignore_errors=True)
+    return root
+
+
 # ---------------------------------------------------------------------------
 # flagship
 # ---------------------------------------------------------------------------
@@ -464,8 +477,6 @@ def q_lsh_topk_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning (lsh_topk_bucketed — only probed bucket= dirs are opened;
     plan-audited in tests/test_plans.py). Same planted-copy recall oracle
     as lsh_topk: top-10 must be exactly {query, 9 copies} at cosine 1.0."""
-    import os
-
     from article_extraction_spark.operators.similarity_search import (
         lsh_topk_bucketed,
         write_lsh_bucketed,
@@ -478,7 +489,7 @@ def q_lsh_topk_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
     )
     corpus = emb.select("vec_id", "embedding").unionByName(planted)
-    path = f"/tmp/aes_ann_bucketed_{os.path.basename(os.path.normpath(sf_dir))}"
+    path = _scratch_root(sf_dir, "ann_bucketed")
     write_lsh_bucketed(corpus, path, "embedding", n_planes=8, seed=42)
     top = lsh_topk_bucketed(
         spark, path, "embedding", list(query), k=10, probe_hamming=1,
@@ -494,8 +505,6 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters (exhaustive ⇒ exactly the brute-force top-10, which DuckDB
     replicates); the nprobe<k recall + pruning proofs live in
     tests/test_training_ops.py."""
-    import os
-
     from article_extraction_spark.operators.similarity_search import (
         ivf_topk,
         kmeans_fit,
@@ -507,9 +516,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r8: the assignment/centroid kernels run above the scan — fan out
     emb_all = fan_out_small_scan(emb.select("vec_id", "embedding"))
     centroids = kmeans_fit(emb_all, "embedding", k=4, max_iter=3, seed=42)
-    path = (
-        f"/tmp/aes_ivf_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}"
-    )
+    path = _scratch_root(sf_dir, "ivf")
     write_ivf(emb_all, path, "embedding", centroids)
     top = ivf_topk(
         spark, path, "embedding", list(query), centroids, k=10, nprobe=len(centroids),
@@ -526,17 +533,13 @@ def q_zorder_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     `pruned_some` column bakes the skipping evidence into the hashed
     result, and the corrupt-unselected-files proof lives in
     tests/test_training_ops.py."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.catalog import ManifestTable
     from article_extraction_spark.operators.zorder import zorder_clustered
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
     )
-    root = f"{tempfile.gettempdir()}/aes_zorder_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "zorder")
     t = ManifestTable(root)
     t.overwrite(zorder_clustered(li, ["l_quantity", "l_extendedprice"], 16))
     box = {"l_quantity": (10.0, 20.0), "l_extendedprice": (20000.0, 40000.0)}
@@ -556,9 +559,6 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     must lose the within-batch min-id race). Survivors = the batch minus
     index hits minus within-batch dups; the oracle replays the same
     relational dedup in DuckDB."""
-    import os
-    import shutil
-
     from article_extraction_spark.catalog import ManifestTable
     from article_extraction_spark.operators.dedup import incremental_exact_dedup
     from article_extraction_spark.operators.textstats import fingerprint_col
@@ -570,8 +570,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(10150).alias("doc_id"), F.upper(F.col("text")).alias("text")
         )
     )
-    root = f"/tmp/aes_dedup_idx_{os.path.basename(os.path.normpath(sf_dir))}_{os.getpid()}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "dedup_idx")
     index = ManifestTable(root)
     index.append(
         prior.select(
@@ -1065,10 +1064,12 @@ def q_qa_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-star readability scoring (text/link density, tag blocklist)
-    through the one extraction stage, every page typed html. Value
-    oracle: the SQL replays the block count and the main-content
-    threshold from each document's text, the page's one scored block."""
-    from article_extraction_spark.extract.udfs import extract_stage
+    through the one extraction stage. Every page is typed READABILITY_ONLY,
+    so the stage scores it without the <p> extraction this query would
+    drop. Value oracle: the SQL replays the block count and the
+    main-content threshold from each document's text, the page's one
+    scored block."""
+    from article_extraction_spark.extract.udfs import READABILITY_ONLY, extract_stage
 
     docs = fan_out_small_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     page = F.concat(
@@ -1078,7 +1079,7 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("</p></article><footer>contact</footer></body></html>"),
     )
     out = extract_stage(
-        docs.select("doc_id", F.lit("html").alias("doc_kind"), page.alias("text")),
+        docs.select("doc_id", F.lit(READABILITY_ONLY).alias("doc_kind"), page.alias("text")),
         with_readability=True,
     )
     return out.select(
@@ -1487,15 +1488,9 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the returned rows come from re-READING every sink, so format or schema
     drift in any leg breaks the hash match. The oracle recomputes the
     expected union relationally (never touches the files)."""
-    import os
-    import shutil
-    import tempfile
-
     from article_extraction_spark.sinks import append, create_or_replace, write_csv_metrics
 
-    base = tempfile.gettempdir()
-    root = os.path.join(base, f"aes_sinks_{os.path.basename(os.path.normpath(sf_dir))}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "sinks")
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
 
     pq = os.path.join(root, "pq")
@@ -1659,13 +1654,9 @@ def q_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically) → head read. Time travel to the pre-delete snapshot
     still sees all 100 rows. DuckDB replays the surviving row set
     relationally."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.catalog import ManifestTable
 
-    root = f"{tempfile.gettempdir()}/aes_mordel_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "mordel")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     t = ManifestTable(root)
     v1 = t.append(docs.where(F.col("doc_id") < 100))
@@ -1742,13 +1733,9 @@ def q_positional_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     Files are written coalesce(1) + sortWithinPartitions(doc_id), so
     row ordinals are the doc_id rank — which is how DuckDB replays the
     deleted positions (row_number over the same sort)."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.catalog import ManifestTable
 
-    root = f"{tempfile.gettempdir()}/aes_posdel_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "posdel")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     t = ManifestTable(root)
     t.append(docs.coalesce(1).sortWithinPartitions("doc_id"))
@@ -1769,13 +1756,9 @@ def q_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     range — exactly the untouched files carry by reference (flag hashed
     into every row), matches get the SET, file-mates survive. DuckDB
     replays the row results as a CASE projection."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.catalog import ManifestTable
 
-    root = f"{tempfile.gettempdir()}/aes_updw_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "updw")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     t = ManifestTable(root)
     for lo, hi in ((0, 100), (100, 200), (200, 10**9)):
@@ -1797,13 +1780,9 @@ def q_bloom_point_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom membership — per-slice m/k sizing, every key's md5 positions,
     coverage of all probe positions — so the scanned-file count in the
     hashed result is cross-engine derived, not trusted."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.catalog import ManifestTable
 
-    root = f"{tempfile.gettempdir()}/aes_bloompt_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "bloompt")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     t = ManifestTable(root)
     for r in range(4):
@@ -1826,14 +1805,10 @@ def q_cm_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     CDC-incremental over the new rows only. Estimates for every distinct
     customer from the MAINTAINED cells; DuckDB replays the sketch over
     the union plus the refresh-mode sequence."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.catalog import ManifestTable
     from article_extraction_spark.operators.sketches import cm_estimate, maintained_cm
 
-    root = f"{tempfile.gettempdir()}/aes_cminc_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "cminc")
     orders = _t(spark, sf_dir, "orders").select("o_custkey")
     src = ManifestTable(f"{root}/src")
     cells = ManifestTable(f"{root}/cells")
@@ -1875,14 +1850,10 @@ def q_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta). The observed refresh-mode sequence rides in the hashed
     result; DuckDB replays the final register table and estimate over
     the union of both appends."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.catalog import ManifestTable
     from article_extraction_spark.operators.sketches import hll_estimate, maintained_hll
 
-    root = f"{tempfile.gettempdir()}/aes_hllinc_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "hllinc")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     src = ManifestTable(f"{root}/src")
     regs = ManifestTable(f"{root}/regs")
@@ -1930,15 +1901,11 @@ def q_stats_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ride IN the hashed result (r4 trick), and DuckDB replays them from
     the same quartile slice stats relationally; the row set must equal
     the plain filtered read."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     from article_extraction_spark.catalog import ManifestTable
 
-    root = f"{tempfile.gettempdir()}/aes_statspr_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "statspr")
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     sliced = orders.withColumn(
         "slice", F.ntile(4).over(Window.orderBy("o_orderkey"))
@@ -2066,9 +2033,6 @@ def q_ivfadc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual codebooks from embeddings 2-5, query = embedding 7),
     nprobe=1. DuckDB replays coarse assignment, residual codes, the ADC
     candidate cut AND the exact re-rank in the same fold order."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.operators.similarity_search import (
         ivfadc_rerank_topk,
         nearest_centroid_col,
@@ -2091,8 +2055,7 @@ def q_ivfadc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     query = [float(x) for x in head[7]["embedding"]]
     from pyspark.sql import Window
 
-    path = f"{tempfile.gettempdir()}/aes_ivfadc_r_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_root(sf_dir, "ivfadc_r")
     staged = emb.withColumn("cluster", nearest_centroid_col("embedding", coarse)).withColumn(
         "codes", pq_code_col("embedding", books, coarse_centroids=coarse, cluster_col="cluster")
     )
@@ -2117,13 +2080,9 @@ def q_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-deletes emit nothing). changelog(v1) must contain exactly the
     50-99 inserts and the 10-19 deletes; DuckDB replays both sides
     relationally."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.catalog import ManifestTable
 
-    root = f"{tempfile.gettempdir()}/aes_changelog_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "changelog")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     t = ManifestTable(root)
     v1 = t.append(docs.where(F.col("doc_id") < 50))
@@ -2201,9 +2160,6 @@ def q_hist_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstone-sweep, and the quantiles equal a from-scratch histogram of
     the surviving rows, which DuckDB replays with the same closed-form
     interpolation. Modes folded into the hashed result."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.catalog import ManifestTable
     from article_extraction_spark.operators.histogram import (
         hist_quantiles,
@@ -2211,8 +2167,7 @@ def q_hist_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     lo, hi, bins = 0.0, 400.0, 200
-    root = f"{tempfile.gettempdir()}/aes_mhist_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "mhist")
     ev = _t(spark, sf_dir, "events").select("event_id", "value")
     source = ManifestTable(f"{root}/src")
     rollup = ManifestTable(f"{root}/roll")
@@ -2271,13 +2226,9 @@ def q_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     must read docs <50 minus 10-19 (files AND delete entries restored),
     while the overwritten state stays time-travelable (nothing is
     deleted by a rollback). Both properties fold into the hashed rows."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.catalog import ManifestTable
 
-    root = f"{tempfile.gettempdir()}/aes_rollback_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "rollback")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     t = ManifestTable(root)
     t.append(docs.where(F.col("doc_id") < 50))
@@ -2410,13 +2361,9 @@ def q_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     100-119 — diff(v1 → head) must classify exactly the changed/
     removed/added rows with NULL-safe value comparison. DuckDB replays
     the expected classification relationally."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.catalog import ManifestTable
 
-    root = f"{tempfile.gettempdir()}/aes_tdiff_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "tdiff")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     t = ManifestTable(root)
     v1 = t.append(docs.where(F.col("doc_id") < 100))
@@ -2498,13 +2445,9 @@ def q_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     also pins that the incremental path ran and that the probe touches
     a strict subset of buckets (DuckDB re-derives the count from the
     same md5 arithmetic)."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.operators.retrieval import MaintainedBM25Index
 
-    root = f"{tempfile.gettempdir()}/aes_bm25idx_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "bm25idx")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     idx = MaintainedBM25Index(root, n_buckets=16)
     s1 = idx.ingest(spark, docs.where(F.col("doc_id") < 40))
@@ -2535,14 +2478,10 @@ def q_rollup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles) plus the observed refresh modes folded in, so the oracle
     hash pins BOTH the values and that the incremental path actually ran;
     DuckDB recomputes the aggregates relationally from the same rows."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.catalog import ManifestTable
     from article_extraction_spark.rollup import IncrementalRollup
 
-    root = f"{tempfile.gettempdir()}/aes_rollup_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "rollup")
     # floored-micros BEFORE aggregation: integer sums are exact, so the
     # incremental fold order cannot drift a ulp from DuckDB's one-pass sum
     ev = _t(spark, sf_dir, "events").select(
@@ -2621,19 +2560,16 @@ def q_rollup_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC-style incremental scan over the snapshot catalog (round 5,
     VERDICT r4 #3): append docs 0-99, append 100-149, compact, append
-    150-199 — ``read_incremental(v1)`` must return EXACTLY docs 100-199
-    (the compaction rewrites rows but adds none). Then
+    150-199 — the appended half of ``read_incremental_changes(v1)`` must
+    return EXACTLY docs 100-199 (the compaction rewrites rows but adds
+    none; no delete in the window, so the deleted half is None). Then
     ``expire_snapshots(keep_last=2)`` ages out the early history and two
     properties are folded into every hashed row: the head still reads all
     200 docs, and the surviving-window delta (v3→v4) still returns docs
     150-199. DuckDB replays the delta relationally."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.catalog import ManifestTable
 
-    root = f"{tempfile.gettempdir()}/aes_increread_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "increread")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     t = ManifestTable(root)
     v1 = t.append(docs.where(F.col("doc_id") < 100))
@@ -2641,14 +2577,14 @@ def q_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     v3 = t.compact(spark, target_bytes=1 << 30)
     v4 = t.append(docs.where((F.col("doc_id") >= 150) & (F.col("doc_id") < 200)))
 
-    delta = t.read_incremental(spark, v1).select("doc_id", "text")
+    delta = t.read_incremental_changes(spark, v1)[0].select("doc_id", "text")
     # materialize OFF the table's files before expiry deletes the ones the
     # delta read (cache eviction would otherwise recompute against them)
     delta_rows = spark.createDataFrame(delta.collect(), delta.schema)
 
     t.expire_snapshots(keep_last=2)
     head_ok = t.read(spark).count() == 200
-    surv = t.read_incremental(spark, v3, v4)
+    surv = t.read_incremental_changes(spark, v3, v4)[0]
     surv_ok = (
         surv.agg(
             F.count("*").alias("n"), F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
@@ -2714,13 +2650,9 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     v for k ≤ 10, insert two new keys), then read BOTH snapshots — the
     union tagged by snapshot must match the oracle's relational replay.
     Exercises the commit protocol, copy-on-write MERGE, and time travel."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.catalog import ManifestTable
 
-    root = f"{tempfile.gettempdir()}/aes_catalog_{__import__('os').path.basename(__import__('os').path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "catalog")
     orders = _t(spark, sf_dir, "orders")
     base = orders.where(F.col("o_orderkey") <= 20).select(
         F.col("o_orderkey").alias("k"), F.col("o_totalprice").alias("v")
@@ -2857,13 +2789,9 @@ def q_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     must be a no-op, folded into the hashed result as replay_new_docs=0.
     Hashing is md5 arithmetic end to end, so DuckDB replays signatures,
     bands, buckets, candidates and the verification counts exactly."""
-    import shutil
-    import tempfile
-
     from article_extraction_spark.operators.minhash_index import MaintainedMinHashIndex
 
-    root = f"{tempfile.gettempdir()}/aes_mhidx_{os.path.basename(os.path.normpath(sf_dir))}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_root(sf_dir, "mhidx")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     batch1 = docs.where(F.col("doc_id") < 40)
     batch2 = docs.where((F.col("doc_id") >= 40) & (F.col("doc_id") < 60)).unionByName(

@@ -21,7 +21,12 @@ Semantics provided (the subset the engine relies on):
 
   * discard rule: an operation that wrote data or delete files and does
     not commit them deletes them (``discard_files``) before it raises.
-  * time travel: ``read(spark, snapshot_id=k)``
+  * time travel: ``read(spark, snapshot_id=k)``; every read resolves its
+    snapshot through ``_snapshot`` and every walk of the parent chain goes
+    through ``history``
+  * one incremental read: ``read_incremental_changes`` returns the rows
+    appended and deleted in a snapshot window (``changelog`` and the
+    rollups build on it)
   * sidecars (per-commit ``_stats.json``/``_blooms.json``) are replaced
     whole through ``write_json_atomic``
   * one file-skipping planner: ``prune_files``/``read_pruned`` over the
@@ -239,6 +244,38 @@ class ManifestTable:
         with open(self._manifest_path(version)) as f:
             return json.load(f)
 
+    def _snapshot(self, snapshot_id: int | None = None) -> tuple[int, dict, "T.StructType"]:
+        """``(version, manifest, schema)`` of ``snapshot_id``, default the
+        head: the table's one snapshot resolver. Raises FileNotFoundError
+        for an empty table or an expired snapshot."""
+        version = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
+        if version is None:
+            raise FileNotFoundError(f"no snapshots in {self.root}")
+        manifest = self._load(version)
+        return version, manifest, T.StructType.fromJson(json.loads(manifest["schema"]))
+
+    def history(self, snapshot_id: int | None = None):
+        """Yield the manifests from ``snapshot_id`` (default the head; none
+        for an empty table) down its parent chain, newest first: the
+        table's one chain walk. Raises FileNotFoundError when the chain
+        reaches an expired snapshot."""
+        version = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
+        while version is not None:
+            manifest = self._load(version)
+            yield manifest
+            version = manifest.get("parent")
+
+    def _referenced_files(self, versions) -> set[str]:
+        """Every data and MoR delete file the manifests of ``versions``
+        reference."""
+        out: set[str] = set()
+        for v in versions:
+            m = self._load(v)
+            out.update(m["files"])
+            for e in m.get("deletes", []):
+                out.update(e["files"])
+        return out
+
     # -- commits --------------------------------------------------------------
 
     def _write_data(self, df: DataFrame) -> list[str]:
@@ -326,11 +363,7 @@ class ManifestTable:
 
         from .operators.sketches import _hex_to_long
 
-        version = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
-        if version is None:
-            raise FileNotFoundError(f"no snapshots in {self.root}")
-        manifest = self._load(version)
-        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+        _version, manifest, schema = self._snapshot(snapshot_id)
         for c in cols:
             kind = schema[c].dataType.simpleString()
             if kind not in self._BLOOMABLE_SPARK_TYPES:
@@ -565,7 +598,7 @@ class ManifestTable:
     def _widened_schema_json(self, new_schema_json: str, head: int | None) -> str:
         if head is None:
             return new_schema_json
-        head_schema = T.StructType.fromJson(json.loads(self._load(head)["schema"]))
+        head_schema = self._snapshot(head)[2]
         new_schema = T.StructType.fromJson(json.loads(new_schema_json))
         by_name = {f.name: f for f in new_schema.fields}
         for f in head_schema.fields:
@@ -617,19 +650,8 @@ class ManifestTable:
             return {"expired": [], "deleted_files": 0, "kept": versions}
 
         surviving = [v for v in versions if v not in set(expiring)]
-        live_files = set()
-        for v in surviving:
-            m = self._load(v)
-            live_files.update(m["files"])
-            for e in m.get("deletes", []):  # MoR delete files are live too
-                live_files.update(e["files"])
-        dead_files = set()
-        for v in expiring:
-            m = self._load(v)
-            dead_files.update(m["files"])
-            for e in m.get("deletes", []):
-                dead_files.update(e["files"])
-        dead_files -= live_files
+        # MoR delete files stay live while a surviving manifest references them
+        dead_files = self._referenced_files(expiring) - self._referenced_files(surviving)
 
         deleted = 0
         for f in sorted(dead_files):
@@ -723,12 +745,7 @@ class ManifestTable:
         eligible. Never pass 0 on a live table. Sidecar entries for the
         removed files are pruned too. Returns
         ``{"removed": n, "scanned": n_disk, "referenced": n_refs}``."""
-        referenced: set[str] = set()
-        for v in self.snapshots():
-            m = self._load(v)
-            referenced.update(m["files"])
-            for e in m.get("deletes", []):
-                referenced.update(e["files"])
+        referenced = self._referenced_files(self.snapshots())
         data_root = os.path.join(self.root, "data")
         cutoff = time.time() - grace_seconds
         removed = 0
@@ -774,187 +791,104 @@ class ManifestTable:
         from pyspark.sql import functions as F
 
         added, deleted = self.read_incremental_changes(spark, from_snapshot, to_snapshot)
-        return added.withColumn("_change_type", F.lit("insert")).unionByName(
-            deleted.withColumn("_change_type", F.lit("delete"))
-        )
-
-    def read_incremental(
-        self,
-        spark: SparkSession,
-        from_snapshot: int,
-        to_snapshot: int | None = None,
-    ) -> DataFrame:
-        """CDC-style incremental scan (the Iceberg incremental-read analog):
-        rows ADDED strictly after ``from_snapshot`` up to and including
-        ``to_snapshot`` (default head) — downstream curation consumes only
-        the delta instead of rescanning the table (pairs with
-        incremental_exact_dedup).
-
-        Walks the parent chain ``to → from``; every APPEND snapshot
-        contributes exactly the files it added over its parent (manifests
-        carry full file lists, so the delta is a set diff — no row-level
-        bookkeeping needed); ``compact`` rewrites the same rows into new
-        files and contributes nothing. ``merge``/``overwrite`` rewrite
-        rows in place, which a file-level delta cannot express —
-        the read raises ValueError (Iceberg's
-        incremental scan refuses the same way). Raises if ``from`` is not
-        an ancestor of ``to`` or the chain crosses expired history.
-
-        Reads with ``to``'s schema: files written before a widening are
-        NULL-aligned exactly like a full read."""
-        to = to_snapshot if to_snapshot is not None else self.current_snapshot_id()
-        if to is None:
-            raise FileNotFoundError(f"no snapshots in {self.root}")
-        if from_snapshot > to:
-            raise ValueError(f"from_snapshot {from_snapshot} is newer than {to}")
-        to_manifest = self._load(to)
-        added: list[str] = []
-        version, manifest = to, to_manifest
-        while version != from_snapshot:
-            parent = manifest.get("parent")
-            if parent is None:
-                raise ValueError(
-                    f"snapshot {from_snapshot} is not an ancestor of {to}"
-                )
-            try:
-                parent_manifest = self._load(parent)
-            except FileNotFoundError as exc:
-                raise ValueError(
-                    f"cannot read incrementally across expired snapshot {parent} "
-                    f"(run from a surviving ancestor)"
-                ) from exc
-            op = manifest["operation"]
-            if op == "append":
-                base = set(parent_manifest["files"])
-                added[:0] = [f for f in manifest["files"] if f not in base]
-            elif op == "compact":
-                pass  # same rows, new files — nothing added
-            else:
-                raise ValueError(
-                    f"snapshot {version} is {op!r}: a file-level incremental "
-                    "read cannot express rewrites — re-read the full table"
-                )
-            version, manifest = parent, parent_manifest
-        schema = T.StructType.fromJson(json.loads(to_manifest["schema"]))
-        if not added:
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(
-            *[os.path.join(self.root, f) for f in added]
-        )
+        out = added.withColumn("_change_type", F.lit("insert"))
+        if deleted is None:
+            return out
+        return out.unionByName(deleted.withColumn("_change_type", F.lit("delete")))
 
     def read_incremental_changes(
         self,
         spark: SparkSession,
         from_snapshot: int,
         to_snapshot: int | None = None,
-    ) -> tuple[DataFrame, DataFrame]:
-        """CDC with row-level delete deltas (round 7, VERDICT r6 #4):
-        returns ``(added, deleted)`` — the rows appended strictly after
-        ``from_snapshot`` and the rows REMOVED by equality-delete
-        snapshots in the same window. Net table state = state(from) +
-        added − deleted (as multisets), which is what lets a
-        sum-decomposable rollup stay incremental under MoR deletes
-        instead of degenerating to full rebuilds.
+    ) -> tuple[DataFrame, DataFrame | None]:
+        """CDC-style incremental scan (the Iceberg incremental-read
+        analog) with row-level delete deltas: returns ``(added, deleted)``
+        — the rows appended strictly after ``from_snapshot`` up to and
+        including ``to_snapshot`` (default head), and the rows REMOVED by
+        equality-delete snapshots in the same window, or None when the
+        window holds no delete snapshot. Net table state = state(from) +
+        added − deleted (as multisets), so downstream curation consumes
+        only the delta instead of rescanning the table, and a
+        sum-decomposable rollup stays incremental under MoR deletes.
 
-        Each delete snapshot's removed rows are computed against its OWN
-        parent: the covered data files read through the parent's
-        outstanding delete entries (bounded by ``applies_to``, never a
-        table scan), inner-semi-joined with the new entry's key file.
-        Deleting an already-deleted key therefore contributes nothing
-        (no double subtraction), and a row appended and deleted inside
-        the window appears once on each side (net zero).
+        Walks the parent chain ``to → from`` (``history``). Every
+        ``append`` contributes exactly the files it added over its parent
+        (manifests carry full file lists, so the delta is a set diff);
+        ``compact`` and ``rewrite_deletes`` are row-preserving and
+        contribute nothing. Each delete snapshot's removed rows are
+        computed against its OWN parent: the covered data files read
+        through the parent's outstanding delete entries (bounded by
+        ``applies_to``, never a table scan), inner-semi-joined with the
+        new entry's key file. Deleting an already-deleted key therefore
+        contributes nothing (no double subtraction), and a row appended
+        and deleted inside the window appears once on each side.
 
-        ``append`` contributes added files; ``compact`` and
-        ``rewrite_deletes`` are row-preserving and contribute nothing.
-        Raises ValueError for rewrites a row-level delta cannot express:
-        merge / overwrite / update, and POSITIONAL delete snapshots
-        (their ordinals are relative to the physical file, and the same
-        logical row can't be re-keyed after any rewrite — Iceberg's
-        changelog scan punts on them the same way)."""
+        Raises ValueError when ``from`` is newer than or not an ancestor
+        of ``to``, when the chain crosses expired history, and for
+        rewrites a row-level delta cannot express: merge / overwrite /
+        update, and POSITIONAL delete snapshots (their ordinals are
+        relative to the physical file — Iceberg's changelog scan punts on
+        them the same way).
+
+        Both sides read with ``to``'s schema. Inside a valid window the
+        schema only widens (append), so a column a file predates reads as
+        NULL, exactly like a full read."""
+        from functools import reduce
+
         from pyspark.sql import functions as F
 
-        to = to_snapshot if to_snapshot is not None else self.current_snapshot_id()
-        if to is None:
-            raise FileNotFoundError(f"no snapshots in {self.root}")
+        to, _head, schema = self._snapshot(to_snapshot)
         if from_snapshot > to:
             raise ValueError(f"from_snapshot {from_snapshot} is newer than {to}")
-        to_manifest = self._load(to)
+
+        def read(paths: list[str], file_schema: "T.StructType") -> DataFrame:
+            return spark.read.schema(file_schema).parquet(
+                *[os.path.join(self.root, p) for p in paths]
+            )
+
         added: list[str] = []
         deleted_parts: list[DataFrame] = []
-        version, manifest = to, to_manifest
-        while version != from_snapshot:
-            parent = manifest.get("parent")
-            if parent is None:
-                raise ValueError(f"snapshot {from_snapshot} is not an ancestor of {to}")
+        chain = self.history(to)
+        manifest = next(chain)
+        while manifest["snapshot_id"] != from_snapshot:
             try:
-                parent_manifest = self._load(parent)
+                parent = next(chain)
+            except StopIteration:
+                raise ValueError(f"snapshot {from_snapshot} is not an ancestor of {to}") from None
             except FileNotFoundError as exc:
                 raise ValueError(
-                    f"cannot read incrementally across expired snapshot {parent} "
-                    f"(run from a surviving ancestor)"
+                    f"cannot read incrementally across expired snapshot "
+                    f"{os.path.basename(exc.filename)} (run from a surviving ancestor)"
                 ) from exc
             op = manifest["operation"]
             if op == "append":
-                base = set(parent_manifest["files"])
+                base = set(parent["files"])
                 added[:0] = [f for f in manifest["files"] if f not in base]
-            elif op in ("compact", "rewrite_deletes"):
-                pass  # row-preserving rewrites
             elif op == "delete":
-                parent_entries = {
-                    tuple(e["files"]) for e in parent_manifest.get("deletes", [])
-                }
-                new_entries = [
-                    e
-                    for e in manifest.get("deletes", [])
-                    if tuple(e["files"]) not in parent_entries
-                ]
-                pschema = T.StructType.fromJson(json.loads(parent_manifest["schema"]))
-                for e in new_entries:
+                parent_entries = {tuple(e["files"]) for e in parent.get("deletes", [])}
+                for e in manifest.get("deletes", []):
+                    if tuple(e["files"]) in parent_entries:
+                        continue
                     if e.get("kind") == "position":
                         raise ValueError(
-                            f"snapshot {version} holds a positional delete: row "
-                            "ordinals cannot be re-keyed as a logical delta — "
+                            f"snapshot {manifest['snapshot_id']} holds a positional delete: "
+                            "row ordinals cannot be re-keyed as a logical delta — "
                             "re-read the full table"
                         )
-                    sub = dict(parent_manifest)
-                    sub["files"] = list(e["applies_to"])
-                    covered = self._read_with_deletes(spark, sub, pschema)
-                    kschema = T.StructType.fromJson(json.loads(e["schema"]))
-                    key_df = spark.read.schema(kschema).parquet(
-                        *[os.path.join(self.root, p) for p in e["files"]]
+                    covered = self._read_with_deletes(
+                        spark, {**parent, "files": e["applies_to"]}, schema
                     )
-                    deleted_parts.append(
-                        covered.join(F.broadcast(key_df), e["keys"], "left_semi")
-                    )
-            else:
+                    key_df = read(e["files"], T.StructType.fromJson(json.loads(e["schema"])))
+                    deleted_parts.append(covered.join(F.broadcast(key_df), e["keys"], "left_semi"))
+            elif op not in ("compact", "rewrite_deletes"):  # row-preserving rewrites pass
                 raise ValueError(
-                    f"snapshot {version} is {op!r}: a row-level incremental read "
-                    "cannot express rewrites — re-read the full table"
+                    f"snapshot {manifest['snapshot_id']} is {op!r}: a row-level incremental "
+                    "read cannot express rewrites — re-read the full table"
                 )
-            version, manifest = parent, parent_manifest
-        schema = T.StructType.fromJson(json.loads(to_manifest["schema"]))
-        added_df = (
-            spark.read.schema(schema).parquet(
-                *[os.path.join(self.root, f) for f in added]
-            )
-            if added
-            else spark.createDataFrame([], schema)
-        )
-        # NULL-align deleted parts to TO's schema (a window may widen the
-        # schema between a part's parent snapshot and the head)
-        aligned = []
-        for part in deleted_parts:
-            have = set(part.columns)
-            part = part.select(
-                *[
-                    F.col(f.name) if f.name in have else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in schema.fields
-                ]
-            )
-            aligned.append(part)
-        deleted_df = aligned[0] if aligned else spark.createDataFrame([], schema)
-        for part in aligned[1:]:
-            deleted_df = deleted_df.unionByName(part)
+            manifest = parent
+        added_df = read(added, schema) if added else spark.createDataFrame([], schema)
+        deleted_df = reduce(DataFrame.unionByName, deleted_parts) if deleted_parts else None
         return added_df, deleted_df
 
     def overwrite(self, df: DataFrame, extra_meta: dict | None = None) -> int:
@@ -987,8 +921,7 @@ class ManifestTable:
             return self._commit_validated(
                 parent, "merge", new_files, src.schema.json(), new_files, None, extra_meta
             )
-        manifest = self._load(parent)
-        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+        _parent, manifest, schema = self._snapshot(parent)
         key_df = src.select(*keys).distinct()
 
         # ONE pass over the whole table: tag rows with their source file,
@@ -1043,17 +976,13 @@ class ManifestTable:
         ``condition``: Column or SQL string. ``set_exprs``: {column →
         Column | SQL string}; only EXISTING columns may be set, and each
         assignment is cast back to the column's declared type so the
-        table schema never drifts. ``read_incremental`` refuses to cross
-        an ``update`` snapshot (row rewrites are inexpressible as a
-        file-level delta) — same contract as merge/overwrite, so
+        table schema never drifts. ``read_incremental_changes`` refuses to
+        cross an ``update`` snapshot (row rewrites are inexpressible as a
+        row-level delta) — same contract as merge/overwrite, so
         incrementally-maintained rollups fall back to a full recompute."""
         from pyspark.sql import functions as F
 
-        parent = self.current_snapshot_id()
-        if parent is None:
-            raise FileNotFoundError(f"no snapshots in {self.root}")
-        manifest = self._load(parent)
-        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+        parent, manifest, schema = self._snapshot()
         names = {f.name: f.dataType for f in schema.fields}
         bad = [c for c in set_exprs if c not in names]
         if bad:
@@ -1168,14 +1097,10 @@ class ManifestTable:
             raise ValueError("cannot compact an empty table")
         if sort_by and zorder_by:
             raise ValueError("pass sort_by or zorder_by, not both")
-        manifest = self._load(snap)
+        _snap, manifest, schema = self._snapshot(snap)
         for label, cols in (("sort_by", sort_by), ("zorder_by", zorder_by)):
             if cols:
-                schema_names = {
-                    f.name
-                    for f in T.StructType.fromJson(json.loads(manifest["schema"])).fields
-                }
-                bad = [c for c in cols if c not in schema_names]
+                bad = [c for c in cols if c not in schema.names]
                 if bad:
                     raise KeyError(f"compact {label} column(s) {bad} not in table schema")
         total = 0
@@ -1201,11 +1126,7 @@ class ManifestTable:
         return version
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
-        version = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
-        if version is None:
-            raise FileNotFoundError(f"no snapshots in {self.root}")
-        manifest = self._load(version)
-        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+        _version, manifest, schema = self._snapshot(snapshot_id)
         if not manifest["files"]:
             return spark.createDataFrame([], schema)
         return self._read_with_deletes(spark, manifest, schema)
@@ -1230,11 +1151,13 @@ class ManifestTable:
         also drops files whose bloom rejects it, when its python type
         matches the column's (an int probe hashes "5"; the residual casts
         a string column and matches "05"). String points: blooms only."""
-        version = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
-        if version is None:
-            raise FileNotFoundError(f"no snapshots in {self.root}")
-        manifest = self._load(version)
-        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+        _version, manifest, schema = self._snapshot(snapshot_id)
+        return self._prune(manifest, schema, box, tz)
+
+    def _prune(
+        self, manifest: dict, schema: "T.StructType", box: dict[str, tuple], tz: str | None
+    ) -> tuple[list[str], int]:
+        """``prune_files`` over an already-resolved snapshot."""
         bounds = {}
         probes = {}
         for col, (lo, hi) in box.items():
@@ -1362,15 +1285,11 @@ class ManifestTable:
         only drops files whose recorded ranges provably miss the box."""
         from pyspark.sql import functions as F
 
-        version = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
-        if version is None:
-            raise FileNotFoundError(f"no snapshots in {self.root}")
+        _version, manifest, schema = self._snapshot(snapshot_id)
         # naive temporal bounds: the residual filter below interprets them
         # in the SESSION timezone, so pruning must too (review r6)
         session_tz = spark.conf.get("spark.sql.session.timeZone", None)
-        keep, _total = self.prune_files(box, snapshot_id=version, tz=session_tz)
-        manifest = self._load(version)
-        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+        keep, _total = self._prune(manifest, schema, box, session_tz)
         if not keep:
             return spark.createDataFrame([], schema)
         out = self._read_with_deletes(spark, {**manifest, "files": keep}, schema)
@@ -1456,10 +1375,7 @@ class ManifestTable:
         * ``max_delete_entries_per_file`` — the worst reader's join count;
         * ``n_delete_entries`` / ``n_delete_files`` / ``covered_data_files``.
         """
-        snap = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
-        if snap is None:
-            raise FileNotFoundError(f"no snapshots in {self.root}")
-        m = self._load(snap)
+        _snap, m, _schema = self._snapshot(snapshot_id)
         deletes = m.get("deletes", [])
         applies = [set(e["applies_to"]) for e in deletes]
         per_file = {f: sum(f in s for s in applies) for f in m["files"]}
@@ -1490,7 +1406,7 @@ class ManifestTable:
         snap = self.current_snapshot_id()
         if snap is None:
             raise ValueError("cannot rewrite deletes on an empty table")
-        m = self._load(snap)
+        _snap, m, schema = self._snapshot(snap)
         deletes = m.get("deletes", [])
         if not deletes:
             return snap
@@ -1498,10 +1414,7 @@ class ManifestTable:
         covered = [f for f in m["files"] if any(f in s for s in applies)]
         untouched = [f for f in m["files"] if not any(f in s for s in applies)]
         if covered:
-            schema = T.StructType.fromJson(json.loads(m["schema"]))
-            sub = dict(m)
-            sub["files"] = covered
-            cleaned = self._read_with_deletes(spark, sub, schema)
+            cleaned = self._read_with_deletes(spark, {**m, "files": covered}, schema)
             new_files = self._write_data(cleaned)
         else:
             # delete entries that cover no file (committed onto an empty
@@ -1527,9 +1440,8 @@ class ManifestTable:
         outstanding deletes. Rebase-and-retry like append: a retry
         recomputes ``applies_to`` against the new head, so the delete
         always covers exactly the data visible when it commits.
-        ``read_incremental`` refuses to cross a delete snapshot (row
-        removal is inexpressible as a file-level delta) — same contract
-        as merge/overwrite.
+        ``read_incremental_changes`` returns the removed rows as its
+        ``deleted`` half.
 
         ``auto_rewrite_after``: opt-in hygiene threshold — after the
         delete commits, if ``delete_entries_per_data_file`` (see
@@ -1540,12 +1452,7 @@ class ManifestTable:
         later), the delete commit is never at risk."""
         if not keys:
             raise ValueError("delete needs at least one key column")
-        head = self.current_snapshot_id()
-        if head is None:
-            raise FileNotFoundError(f"no snapshots in {self.root}")
-        table_cols = {
-            f.name for f in T.StructType.fromJson(json.loads(self._load(head)["schema"])).fields
-        }
+        table_cols = self._snapshot()[2].names
         missing = [k for k in keys if k not in table_cols]
         if missing:
             raise KeyError(f"delete key column(s) {missing} not in table schema")
@@ -1601,11 +1508,7 @@ class ManifestTable:
         carry) fails loudly rather than silently diverging."""
         from pyspark.sql import functions as F
 
-        head = self.current_snapshot_id()
-        if head is None:
-            raise FileNotFoundError(f"no snapshots in {self.root}")
-        manifest = self._load(head)
-        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+        head, manifest, schema = self._snapshot()
         if not manifest["files"]:
             return head
         from pyspark import StorageLevel
@@ -1678,7 +1581,7 @@ class ManifestTable:
         the ``to`` side's values, removed rows the ``from`` side's.
         Unchanged rows are excluded.
 
-        This is the COMPLEMENT of ``read_incremental``: it compares
+        This is the COMPLEMENT of ``read_incremental_changes``: it compares
         materialized states, so it works across ANY operation mix
         (merge, overwrite, MoR delete, compact) at the cost of reading
         both snapshots — a full-outer join on the keys, NULL-safe struct

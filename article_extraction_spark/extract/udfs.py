@@ -37,6 +37,10 @@ _READABILITY_FIELDS = [
         READABILITY_COLUMNS, [T.StringType(), T.IntegerType(), T.DoubleType(), T.DoubleType()]
     )
 ]
+# an html payload typed this way is scored by ``with_readability`` but left
+# unextracted (``to_text`` returns "" for a kind it does not know): for
+# callers that read only the readability columns
+READABILITY_ONLY = "html_readability_only"
 
 
 def classify_payload_col(text: Column) -> Column:
@@ -144,7 +148,9 @@ def extract_map_in_arrow(batches, pdf_mode: str = "simple", with_readability: bo
             # Arc90-style main-content signal for html rows only (extra
             # columns — the equality oracle stays the <p> path)
             rd = [
-                readability_row(_decode_utf8_ignore(data)) if kind == "html" else None
+                readability_row(_decode_utf8_ignore(data))
+                if kind in ("html", READABILITY_ONLY)
+                else None
                 for kind, data in zip(kinds, texts)
             ]
             names += READABILITY_COLUMNS
@@ -162,7 +168,8 @@ def extract_stage(
     ...)``, where ``text`` is a string or binary payload column. ``text`` is
     consumed; every other column passes through; extracted_text, spans and
     extract_error are appended, and with ``with_readability`` also
-    READABILITY_COLUMNS (null on non-html rows).
+    READABILITY_COLUMNS (null on rows whose kind is neither html nor
+    READABILITY_ONLY).
 
     ``pdf_mode``: "simple" (stream-order text, byte-parity with the
     reference's extraction) or "layout" (extract/pdf_layout.py — an

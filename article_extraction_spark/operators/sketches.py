@@ -358,8 +358,9 @@ def maintained_hll(source, registers, key_col: str, b: int = 8, group_cols=None)
     ``IncrementalRollup`` whose group keys are (…, register) and whose
     single aggregate is max(rho) — max is decomposable, so each refresh
     folds ONLY the new rows' register partials into the stored register
-    table (CDC delta via ``read_incremental``; source rewrites fall back
-    to a full recompute automatically). Estimate any time with
+    table (the appended half of ``read_incremental_changes``; source
+    rewrites and deletes fall back to a full recompute automatically, as
+    a max cannot subtract a deleted row). Estimate any time with
     ``hll_estimate(registers.read(spark))``. The per-row hashing rides in
     the rollup's ``prepare`` hook, so the source table never stores
     register/rho columns.

@@ -7,25 +7,27 @@ counts, per-source token sums, quality-score extrema) next to the raw
 corpus; recomputing them from scratch after every ingest batch rescans
 the world. ``IncrementalRollup`` instead consumes the CDC delta between
 the last-refreshed source snapshot and the head
-(``ManifestTable.read_incremental``, round 5), aggregates ONLY the new
+(``ManifestTable.read_incremental_changes``), aggregates ONLY the new
 rows, and folds the partials into the rollup table with a copy-on-write
 MERGE. The maintenance cursor (the source snapshot the rollup now
 reflects) rides on that same merge commit's manifest (``extra_meta``),
 so state + cursor are ONE atomic commit: a crash between them is
-impossible, and re-running a completed refresh is a no-op.
+impossible, and re-running a completed refresh is a no-op. The cursor
+and the sweep flag are found by walking the rollup's
+``ManifestTable.history``.
 
 Soundness: the supported aggregates (count / sum / min / max, mean as
-sum÷count at read time) are decomposable under APPEND-ONLY deltas, which
-is exactly what read_incremental can express — compaction contributes
-nothing, and a source merge/overwrite (rows rewritten in place) raises
-there, which this module catches and answers with a FULL recompute
-committed as an overwrite (cursor still atomic). Round 7 extends the
-incremental path to MoR equality DELETES for count/sum rollups: the
-removed rows (``read_incremental_changes``) fold as NEGATIVE partials,
-and groups whose last row was deleted are tombstone-swept (count==0) so
-the rollup still equals a full recompute row-for-row. min/max stay on
-the full-recompute path under deletes — a deleted row may BE the
-extremum, which no decomposable summary can recover.
+sum÷count at read time) are decomposable under APPEND deltas —
+``compact`` and ``rewrite_deletes`` contribute nothing, and a source
+merge/overwrite/update (rows rewritten in place) makes the window read
+raise, which this module answers with a FULL recompute committed as an
+overwrite (cursor still atomic). Under MoR equality DELETES count/sum
+rollups stay incremental: the removed rows (the read's ``deleted`` half)
+fold as NEGATIVE partials, and groups whose last row was deleted are
+tombstone-swept (count==0) so the rollup still equals a full recompute
+row-for-row. min/max recompute in full when the window holds a delete —
+a deleted row may BE the extremum, which no decomposable summary can
+recover.
 
 Scale shape: the delta aggregation is one groupBy over new rows only;
 the fold touches only affected keys (left-semi the rollup against the
@@ -187,14 +189,11 @@ class IncrementalRollup:
         refreshed (or history expired past every cursor) → full
         recompute."""
         try:
-            v = self.rollup.current_snapshot_id()
-            while v is not None:
-                m = self.rollup._load(v)
+            for m in self.rollup.history():
                 if _CURSOR_KEY in m:
                     return m[_CURSOR_KEY]
-                v = m.get("parent")
         except FileNotFoundError:
-            return None
+            pass
         return None
 
     # -- aggregation pieces ---------------------------------------------------
@@ -240,18 +239,15 @@ class IncrementalRollup:
         delete-aware fold and the flag shipped in the same round, so no
         such history exists in practice)."""
         try:
-            v = self.rollup.current_snapshot_id()
-            while v is not None:
-                m = self.rollup._load(v)
+            for m in self.rollup.history():
                 if m.get("operation") == "delete":
                     return False  # the sweep itself was the last word
                 if _SWEEP_KEY in m:
                     return True
                 if _CURSOR_KEY in m:
                     return False  # a newer clean fold supersedes
-                v = m.get("parent")
         except FileNotFoundError:
-            return False
+            pass
         return False
 
     def _sweep_tombstones(self, spark: SparkSession, count_out: str) -> None:
@@ -272,8 +268,8 @@ class IncrementalRollup:
 
         Delete-aware (round 7, VERDICT r6 #4): when the window contains
         MoR equality-delete snapshots and every aggregate is count/sum,
-        the deleted rows fold as NEGATIVE partials
-        (``read_incremental_changes``) — a maintained sketch or index
+        the deleted rows fold as NEGATIVE partials (the ``deleted`` half
+        of ``read_incremental_changes``) — a maintained sketch or index
         over a table under delete churn no longer degenerates to full
         rebuilds. min/max (or a missing count output) still answer
         deletes with a full recompute; merge/overwrite/update and
@@ -288,20 +284,14 @@ class IncrementalRollup:
         if cur == head:
             return {"mode": "noop", "from": cur, "to": head, "keys_updated": 0}
 
-        delta = None
-        deleted = None
+        delta = deleted = None
         if cur is not None:
             try:
-                delta = self.source.read_incremental(spark, cur, head)
+                delta, deleted = self.source.read_incremental_changes(spark, cur, head)
             except ValueError:
-                delta = None  # rewrite in source history
-                if count_out is not None:
-                    try:
-                        delta, deleted = self.source.read_incremental_changes(
-                            spark, cur, head
-                        )
-                    except ValueError:
-                        delta = None  # true rewrite → full recompute
+                pass  # a rewrite in source history → full recompute
+            if deleted is not None and count_out is None:
+                delta = None  # deleted rows cannot be folded → full recompute
 
         if delta is None:
             rows = self._full_rows(spark, head)
@@ -331,13 +321,9 @@ class IncrementalRollup:
         n = fold_partials(
             spark, self.rollup, partial, self.keys, self.aggs,
             extra_meta={_CURSOR_KEY: head},
-            sweep_flag=(
-                (_SWEEP_KEY, count_out)
-                if deleted is not None and count_out is not None
-                else None
-            ),
+            sweep_flag=(_SWEEP_KEY, count_out) if deleted is not None else None,
         )
-        if deleted is not None and count_out is not None and self._sweep_needed():
+        if deleted is not None and self._sweep_needed():
             self._sweep_tombstones(spark, count_out)
         return {"mode": "incremental", "from": cur, "to": head, "keys_updated": n}
 

@@ -351,19 +351,27 @@ def test_expire_older_than_ts_filter(spark, tmp_path):
     assert res["expired"] == [1]
 
 
+def _added_keys(t, spark, *window) -> set:
+    """The ``k`` values of the appended half of an incremental read; an
+    append-only window has no deleted half."""
+    added, deleted = t.read_incremental_changes(spark, *window)
+    assert deleted is None
+    return {r["k"] for r in added.collect()}
+
+
 def test_read_incremental_appends(spark, tmp_path):
     t = ManifestTable(str(tmp_path / "tbl"))
     v1 = t.append(spark.createDataFrame([(1,), (2,)], "k int"))
     v2 = t.append(spark.createDataFrame([(3,)], "k int"))
     v3 = t.append(spark.createDataFrame([(4,), (5,)], "k int"))
-    assert {r["k"] for r in t.read_incremental(spark, v1).collect()} == {3, 4, 5}
-    assert {r["k"] for r in t.read_incremental(spark, v1, v2).collect()} == {3}
-    assert {r["k"] for r in t.read_incremental(spark, v2, v3).collect()} == {4, 5}
-    assert t.read_incremental(spark, v3).count() == 0
+    assert _added_keys(t, spark, v1) == {3, 4, 5}
+    assert _added_keys(t, spark, v1, v2) == {3}
+    assert _added_keys(t, spark, v2, v3) == {4, 5}
+    assert _added_keys(t, spark, v3) == set()
     with pytest.raises(ValueError, match="newer"):
-        t.read_incremental(spark, v3, v1)
+        t.read_incremental_changes(spark, v3, v1)
     with pytest.raises(ValueError, match="not an ancestor"):
-        t.read_incremental(spark, 0, v3)
+        t.read_incremental_changes(spark, 0, v3)
 
 
 def test_read_incremental_compact_merge_expiry(spark, tmp_path):
@@ -372,30 +380,34 @@ def test_read_incremental_compact_merge_expiry(spark, tmp_path):
     v2 = t.compact(spark, target_bytes=1 << 30)
     v3 = t.append(spark.createDataFrame([(3, "c")], "k int, v string"))
     # compact rewrites rows, adds none
-    assert {r["k"] for r in t.read_incremental(spark, v1).collect()} == {3}
-    # merge in the window: a file-level delta cannot express it
+    assert _added_keys(t, spark, v1) == {3}
+    # merge in the window: a row-level delta cannot express it
     t.merge(spark, spark.createDataFrame([(2, "B"), (4, "d")], "k int, v string"), ["k"])
     with pytest.raises(ValueError, match="incremental"):
-        t.read_incremental(spark, v1)
+        t.read_incremental_changes(spark, v1)
     # expired history inside the window → clear error
     v5 = t.append(spark.createDataFrame([(5, "e")], "k int, v string"))
     t.expire_snapshots(keep_last=2)
     with pytest.raises(ValueError, match="expired"):
-        t.read_incremental(spark, v1)
+        t.read_incremental_changes(spark, v1)
     # within surviving history it still works
-    assert {r["k"] for r in t.read_incremental(spark, v5 - 1, v5).collect()} == {5}
+    assert _added_keys(t, spark, v5 - 1, v5) == {5}
 
 
 def test_read_incremental_null_aligns_prewidening_files(spark, tmp_path):
     """A file appended before a widening reads back through the delta with
-    the widened schema (missing column → NULL), same as full reads."""
+    the widened schema (missing column → NULL), same as full reads; so
+    does a row deleted before the widening."""
     t = ManifestTable(str(tmp_path / "tbl"))
     v1 = t.append(spark.createDataFrame([(0,)], "k int"))
     t.append(spark.createDataFrame([(1,)], "k int"))
+    t.delete(spark, spark.createDataFrame([(0,)], "k int"), ["k"])
     t.append(spark.createDataFrame([(2, 20.0)], "k int, extra double"))
-    rows = {r["k"]: r for r in t.read_incremental(spark, v1).collect()}
+    added, deleted = t.read_incremental_changes(spark, v1)
+    rows = {r["k"]: r for r in added.collect()}
     assert set(rows) == {1, 2}
     assert rows[1]["extra"] is None and rows[2]["extra"] == 20.0
+    assert [tuple(r) for r in deleted.collect()] == [(0, None)]
 
 
 def test_mor_delete_basic_and_time_travel(spark, tmp_path):
@@ -480,10 +492,10 @@ def test_mor_delete_expiry_keeps_referenced_delete_files(spark, tmp_path):
     assert not any(os.path.exists(os.path.join(t.root, f)) for f in dfiles)
 
 
-def test_mor_delete_incremental_read_refuses(spark, tmp_path):
-    """Row removal is inexpressible as a file-level delta: crossing a
-    delete snapshot errors, same contract as merge/overwrite; validation
-    errors stay crisp."""
+def test_mor_delete_incremental_read_returns_deleted_rows(spark, tmp_path):
+    """An incremental read across a delete snapshot returns the deleted
+    row in its ``deleted`` half and the later append in its ``added``
+    half; delete's validation errors stay crisp."""
     import pytest as _pytest
 
     from article_extraction_spark.catalog import ManifestTable
@@ -492,8 +504,9 @@ def test_mor_delete_incremental_read_refuses(spark, tmp_path):
     v1 = t.append(spark.createDataFrame([(1,), (2,)], "id long"))
     t.delete(spark, spark.createDataFrame([(1,)], "id long"), ["id"])
     t.append(spark.createDataFrame([(3,)], "id long"))
-    with _pytest.raises(ValueError, match="delete"):
-        t.read_incremental(spark, v1)
+    added, deleted = t.read_incremental_changes(spark, v1)
+    assert [r["id"] for r in added.collect()] == [3]
+    assert [r["id"] for r in deleted.collect()] == [1]
     with _pytest.raises(KeyError, match="not in table schema"):
         t.delete(spark, spark.createDataFrame([(1,)], "nope long"), ["nope"])
     with _pytest.raises(ValueError, match="at least one key"):
@@ -1544,6 +1557,54 @@ def test_one_parquet_footer_reader():
         return False
 
     assert _package_sites(imports_pyarrow_parquet) == {("catalog.py", "_write_commit_stats")}
+
+
+def _reads_parent(node) -> bool:
+    """``m["parent"]`` or ``m.get("parent")``: a read of the manifest's
+    parent key (the dict literal ``_try_commit`` writes is not a read)."""
+    import ast
+
+    if isinstance(node, ast.Subscript):
+        return isinstance(node.slice, ast.Constant) and node.slice.value == "parent"
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "get"
+        and bool(node.args)
+        and isinstance(node.args[0], ast.Constant)
+        and node.args[0].value == "parent"
+    )
+
+
+def test_one_chain_walk_and_one_snapshot_resolver():
+    """The parent chain is walked only by ManifestTable.history, and the
+    empty-table error is raised only by ManifestTable._snapshot: every
+    snapshot-window read, cursor lookup and default-to-head read goes
+    through those two instead of a copy of them."""
+    import ast
+
+    def raises_no_snapshots(node) -> bool:
+        return isinstance(node, ast.Raise) and any(
+            isinstance(c, ast.Constant) and isinstance(c.value, str) and "no snapshots in" in c.value
+            for c in ast.walk(node)
+        )
+
+    assert _package_sites(_reads_parent) == {("catalog.py", "ManifestTable.history")}
+    assert _package_sites(raises_no_snapshots) == {("catalog.py", "ManifestTable._snapshot")}
+
+
+def test_rollup_reads_manifests_only_through_history():
+    """rollup.py neither loads a manifest itself nor follows its parent
+    key: the manifest format stays behind ManifestTable."""
+    import ast
+
+    def loads_manifest(node) -> bool:
+        return isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and (
+            node.func.attr == "_load"
+        )
+
+    sites = _package_sites(lambda n: loads_manifest(n) or _reads_parent(n))
+    assert not {s for s in sites if s[0] == "rollup.py"}, sites
 
 
 def test_write_atomic_failure_keeps_the_previous_file(tmp_path):

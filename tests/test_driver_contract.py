@@ -46,3 +46,16 @@ def test_entry_runs_and_returns_rows(spark):
     df = E.entry(spark)
     assert df.count() > 0
     assert {"conv_id", "turn_idx", "extracted_text"} <= set(df.columns)
+
+
+def test_queries_use_one_fixed_scratch_root():
+    """Every scratch table goes through ``_scratch_root``: a fixed name
+    under the system temp dir, emptied first. A hard-coded ``/tmp/`` or a
+    per-process (``getpid``) name leaves a directory behind on every run."""
+    src = inspect.getsource(E).splitlines()
+    bad = [
+        f"{i}: {line.strip()}"
+        for i, line in enumerate(src, 1)
+        if "/tmp/" in line or "getpid" in line
+    ]
+    assert not bad, bad

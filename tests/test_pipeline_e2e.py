@@ -79,6 +79,27 @@ def test_with_readability_columns(spark):
     assert out[0]["extracted_text"].startswith("main body text")
 
 
+def test_readability_only_kind_is_scored_but_not_extracted():
+    """A page typed READABILITY_ONLY gets the readability columns of the
+    same page typed html, and no <p> extraction (empty text, no error)."""
+    import pyarrow as pa
+
+    from article_extraction_spark.extract.udfs import (
+        READABILITY_COLUMNS,
+        READABILITY_ONLY,
+        extract_map_in_arrow,
+    )
+
+    page = "<p>main body text, long enough to score well, with commas</p><nav>menu</nav>"
+    batch = pa.RecordBatch.from_pydict({"doc_kind": ["html", READABILITY_ONLY], "text": [page] * 2})
+    (out,) = extract_map_in_arrow([batch], with_readability=True)
+    html, only = out.to_pylist()
+    assert html["extracted_text"].startswith("main body text")
+    assert (only["extracted_text"], only["spans"], only["extract_error"]) == ("", [], None)
+    assert html["readability_blocks"] == 1
+    assert [only[c] for c in READABILITY_COLUMNS] == [html[c] for c in READABILITY_COLUMNS]
+
+
 def test_doc_kind_classification_matches_python(spark):
     rows, _ = synth_transcripts(n_convs=20, turns_per_conv=10, seed=99, mega_conv=False)
     from article_extraction_spark.extract.core import classify_payload

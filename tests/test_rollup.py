@@ -231,6 +231,23 @@ def test_minmax_rollup_full_recomputes_on_delete(spark, tmp_path):
     assert _got(spark, rollup) == _expect(spark, source)
 
 
+def test_refresh_across_rewrite_deletes_stays_incremental(spark, tmp_path):
+    """rewrite_deletes only materializes deletes the last refresh already
+    folded, so a window holding it and an append has no deleted rows:
+    even a min/max rollup refreshes incrementally and still equals the
+    full recompute."""
+    source, rollup, ir = _mk(spark, tmp_path)
+    source.append(_rows(spark, [("a", 1), ("a", 9), ("b", 4)]))
+    ir.refresh(spark)
+    source.delete(spark, spark.createDataFrame([(9,)], "v long"), ["v"])
+    assert ir.refresh(spark)["mode"] == "full"  # min/max cannot fold a delete
+    source.rewrite_deletes(spark)
+    source.append(_rows(spark, [("a", 0), ("c", 7)]))
+    s = ir.refresh(spark)
+    assert s["mode"] == "incremental"
+    assert _got(spark, rollup) == _expect(spark, source)
+
+
 def test_positional_delete_falls_back_to_full(spark, tmp_path):
     """Positional deletes can't be re-keyed as a logical delta — the
     count/sum rollup answers them with a full recompute."""
